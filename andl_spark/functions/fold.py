@@ -39,15 +39,6 @@ def fold(op: str, col: Column | str) -> Column:
         raise ValueError(f"unknown fold op {op!r}; known: {sorted(FOLD_OPS)}") from None
 
 
-def running_fold(op: str, col: Column | str, window) -> Column:
-    """fold() under .order() — running aggregate over a window frame
-    (rows unbounded-preceding → current), sample5.andl running sums."""
-    from pyspark.sql import Window
-
-    frame = window.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return fold(op, col).over(frame)
-
-
 #: non-commutative fold ops need ordered (sequential) evaluation
 _ORDERED_OPS = {
     "-": lambda acc, v: acc - v,

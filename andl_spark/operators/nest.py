@@ -36,10 +36,3 @@ def unnest(df: DataFrame, rva: str) -> DataFrame:
         df.withColumn("__t", F.explode(rva))
         .select(*others, "__t.*")
     )
-
-
-def nest_tuple(df: DataFrame, keys: list[str], tva: str) -> DataFrame:
-    """Andl ``{*}`` — embed payload as a single struct (tuple-valued
-    attribute) rather than a relation. Pure projection, no shuffle."""
-    payload = [c for c in df.columns if c not in keys]
-    return df.select(*keys, F.struct(*payload).alias(tva))

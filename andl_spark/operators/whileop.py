@@ -10,11 +10,11 @@ Spark-first design (semi-naive evaluation):
     discovered last round), not the accumulated set — the Datalog
     optimization that keeps per-iteration join input small even when
     the closure is huge.
-  * One action per iteration: the frontier is persisted and counted
-    (materialize + emptiness test in a single job). The accumulated
-    total is only checkpointed every ``checkpoint_every`` iterations —
-    enough to stop lineage explosion on deep recursions without paying
-    a materialization job per round.
+  * Every delta is a lazy localCheckpoint that the emptiness count
+    materializes, and two step applications share one count job
+    (stride-2, see _run) — about half a scheduled job per iteration.
+    The accumulated total is a flat union of those materialized deltas,
+    so lineage depth stays O(1) however deep the recursion runs.
   * The only driver-side value is the per-iteration frontier count
     (computed distributed); tuple data never hits the driver.
 """
@@ -31,8 +31,19 @@ def _run(
     produce: Callable[[DataFrame], DataFrame],
     new_only: Callable[[DataFrame, DataFrame], DataFrame],
     max_iterations: int,
-    checkpoint_every: int = 1,  # kept for API stability; deltas always checkpoint
 ) -> DataFrame:
+    """Semi-naive fixpoint: apply ``produce`` to the frontier, keep
+    ``new_only(produced, total)``, and stop on the first empty delta.
+
+    Contract: ``produce(∅) = ∅`` — an empty frontier produces nothing.
+    The stride-2 emptiness check relies on it: a non-empty second delta
+    then certifies the first was non-empty too, so one count per two
+    step applications is enough.
+
+    ``max_iterations`` budgets STEP APPLICATIONS, including the one
+    that finds the frontier closed: a closure needing n productive
+    steps returns at a budget of n + 1 and raises RuntimeError at n.
+    """
     # Invariant: every delta is a materialized localCheckpoint, so
     # `total` is always a FLAT union of materialized roots — lineage
     # depth stays O(1) regardless of recursion depth, and nothing is
@@ -51,14 +62,11 @@ def _run(
     # materializes through its lineage, so the scheduled count jobs per
     # iteration drop from 1 to ~0.5 (guide §1.2 fixed per-round
     # latency). Semantics are unchanged: delta2 non-empty ⟹ delta1
-    # non-empty (an empty frontier can only produce an empty delta), so
+    # non-empty (the produce(∅) = ∅ contract above), so
     # a positive count certifies both rounds really advanced, and on
     # count==0 the fixpoint is already closed — `total` holds every
     # tuple whether convergence happened at the odd or the even round
-    # (unioning an empty delta adds nothing). The iteration budget is
-    # counted in STEP APPLICATIONS, exactly as before: convergence at
-    # application k ≤ max_iterations returns, all-nonempty through
-    # max_iterations raises.
+    # (unioning an empty delta adds nothing).
     total = seed.localCheckpoint(eager=True)
     frontier = total
     steps = 0
@@ -118,7 +126,6 @@ def fixpoint(
     seed: DataFrame,
     step: Callable[[DataFrame], DataFrame],
     max_iterations: int = 100,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Smallest superset of ``seed`` closed under ``step`` (set
     semantics). ``step`` takes the current frontier and returns
@@ -129,7 +136,6 @@ def fixpoint(
         lambda fr: step(fr).select(*cols),
         lambda produced, total: _anti_new_only(produced, total, cols),
         max_iterations,
-        checkpoint_every,
     )
 
 
@@ -190,7 +196,6 @@ def fixpoint_with_level(
     step: Callable[[DataFrame], DataFrame],
     level_col: str = "level",
     max_iterations: int = 100,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Fixpoint keeping a 0-based iteration level (org-chart flattening,
     Sample/recursive.andl:23-27). Dedup ignores the level column — a
@@ -215,5 +220,4 @@ def fixpoint_with_level(
             .dropDuplicates(data_cols)
         ),
         max_iterations,
-        checkpoint_every,
     )

@@ -53,7 +53,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsio
@@ -67,24 +67,19 @@ from ..streaming.events import (
 from .simsearch import (
     AUTO_NLIST_MAX,
     AUTO_PROBE_FRAC,
-    NP_ASSIGN_MIN_NLIST,
-    UNROLL_MAX_DIM,
     auto_nlist,
     auto_nprobe,
     calibrate_probe,
     calibrate_probe_hier,
-    dot_expr_fixed,
-    norm_expr_fixed,
     hier_assign_np,
     hier_params,
     hier_probe_np,
-    hier_seed_centroids,
-    hier_trained_centroids,
-    nearest_lists_cosine,
-    nearest_lists_np,
-    _hof_norm_sql,
-    seed_centroids,
-    trained_centroids,
+    _assign_expr,
+    _probe_topk,
+    _query_side,
+    _rank_topk,
+    _resolve_centroids,
+    _score_exprs,
 )
 
 import math
@@ -151,25 +146,6 @@ def read_ivf_data(spark: SparkSession, path: str) -> DataFrame:
     return read_neardup_index(spark, fsio.join(path, "data"))
 
 
-def _assign_expr(vec_col: str, centroids: list[list[float]], nprobe: int,
-                 vec_norm: str | None = None):
-    """The serving assignment rule (takes column NAMES — the JVM
-    branch builds as one parsed SQL string, r11): numpy matmul at nlist ≥
-    NP_ASSIGN_MIN_NLIST, JVM literal expression below. NOTE the
-    equivalence contract with topk_ivf_det: identical for nlist < 64
-    and in the auto-scale regime; for an EXPLICIT nlist ≥ 64
-    topk_ivf_det keeps the JVM expression (oracle parity) while the
-    index uses the matmul — the two agree up to the shared 4-decimal
-    cosine rounding, so a row exactly AT a rounding boundary may
-    assign one cell apart (the same caveat nearest_lists_np documents;
-    the pinned row-identity tests run at nlist=16 where the paths are
-    bit-identical)."""
-    if len(centroids) >= NP_ASSIGN_MIN_NLIST:
-        return nearest_lists_np(centroids, nprobe)(vec_col)
-    return nearest_lists_cosine(vec_col, centroids, nprobe,
-                                vec_norm=vec_norm)
-
-
 def _flat_assigned(df: DataFrame, id_col: str, vec_col: str,
                    centroids: list[list[float]]) -> DataFrame:
     """(vec_id, embedding, list_id) with the row norm computed ONCE
@@ -177,13 +153,11 @@ def _flat_assigned(df: DataFrame, id_col: str, vec_col: str,
     re-aggregate the O(dim) norm per centroid (the dominant
     interpreted-HOF cost topk_ivf_det's two-stage projection avoids;
     review r8b). The numpy path ignores vec_norm."""
-    dim = len(centroids[0]) if centroids else 0
-    _norm = (norm_expr_fixed if 0 < dim <= UNROLL_MAX_DIM
-             else lambda name, *_: F.expr(_hof_norm_sql(name)))
+    _norm, _ = _score_exprs(len(centroids[0]) if centroids else 0)
     return (
         df.select(F.col(id_col).alias("vec_id"),
                   F.col(vec_col).alias("embedding"))
-        .withColumn("__n", _norm("embedding", dim))
+        .withColumn("__n", _norm("embedding"))
         .select("vec_id", "embedding",
                 F.element_at(_assign_expr(
                     "embedding", centroids, 1,
@@ -211,7 +185,6 @@ def _pq_augment(assigned: DataFrame, meta: dict) -> DataFrame:
     import numpy as np
 
     from . import pq as PQ
-    from .simsearch import _score_exprs
 
     _norm, _ = _score_exprs(int(meta.get("dim") or 0))
     cb = np.asarray(meta["pq"]["codebooks"], dtype=np.float64)
@@ -329,12 +302,8 @@ def build_ivf_index(
         if n1 is None or n2 is None:
             a1, a2, _ = hier_params(corpus_count or corpus.count())
             n1, n2 = n1 or a1, n2 or a2
-        if quantizer == "trained":
-            cents = hier_trained_centroids(corpus, id_col, vec_col, n1, n2)
-        elif quantizer == "seed":
-            cents = hier_seed_centroids(corpus, id_col, vec_col, n1, n2)
-        else:
-            raise ValueError(f"unknown quantizer {quantizer!r} (seed | trained)")
+        cents = _resolve_centroids(corpus, id_col, vec_col, quantizer,
+                                   n1, n2)
         C1, C2 = cents
         if not C1 or not C2:
             raise ValueError("build_ivf_index: empty corpus — an IVF "
@@ -370,12 +339,7 @@ def build_ivf_index(
         _invalidate_meta_cache(path)
         _invalidate_data_cache(path)
         return meta
-    if quantizer == "trained":
-        centroids = trained_centroids(corpus, id_col, vec_col, nlist)
-    elif quantizer == "seed":
-        centroids = seed_centroids(corpus, id_col, vec_col, nlist)
-    else:
-        raise ValueError(f"unknown quantizer {quantizer!r} (seed | trained)")
+    centroids = _resolve_centroids(corpus, id_col, vec_col, quantizer, nlist)
     if not centroids:
         # fail HERE, not as an opaque array-index error on the first
         # append/query of a meta with nlist=0 (review r8b); the
@@ -1106,6 +1070,26 @@ def maintain_ivf_index(spark: SparkSession, path: str,
     return {"gauge": gauge, "rebuilt": True, "meta": new_meta}
 
 
+def _query_probe(meta: dict, nprobe: int | None):
+    """The stored quantizer's probe for a query side (qvec, qn):
+    array<int> of probed cells. ``nprobe`` defaults to the index's
+    STORED calibration when the build measured one, else the 8% auto
+    rule; on a two-level index it means p1 — probed TOP cells, each
+    contributing all its sub-cells."""
+    hier = meta.get("kind") == "hier"
+    if nprobe is None:
+        cal = meta.get("calibration")
+        if cal:  # the stored measured operating point
+            nprobe = cal["p1"] if hier else cal["nprobe"]
+        elif hier:
+            nprobe = max(2, math.ceil(meta["n1"] * AUTO_PROBE_FRAC))
+        else:
+            nprobe = auto_nprobe(meta["nlist"])
+    if hier:
+        return hier_probe_np(meta["C1"], meta["C2"], nprobe)(F.col("qvec"))
+    return _assign_expr("qvec", meta["centroids"], nprobe, vec_norm="qn")
+
+
 def topk_ivf_index(
     spark: SparkSession,
     queries: DataFrame,
@@ -1168,33 +1152,16 @@ def topk_ivf_index(
     meta, data, has_tombs = _snapshot_full(spark, path)
     id_col = id_col or meta["id_col"]
     vec_col = vec_col or meta["vec_col"]
-    hier = meta.get("kind") == "hier"
-    if nprobe is None:
-        cal = meta.get("calibration")
-        if cal:  # the stored measured operating point
-            nprobe = cal["p1"] if hier else cal["nprobe"]
-        elif hier:  # nprobe means p1 (probed TOP cells) for hier
-            nprobe = max(2, math.ceil(meta["n1"] * AUTO_PROBE_FRAC))
-        else:
-            nprobe = auto_nprobe(meta["nlist"])
-    if hier:
-        probe_expr = hier_probe_np(meta["C1"], meta["C2"],
-                                   nprobe)(F.col("qvec"))
-    else:
-        probe_expr = _assign_expr("qvec", meta["centroids"],
-                                  nprobe, vec_norm="qn")
     # scoring: the index KNOWS its dimension, so the dot/norm unroll
     # to fixed-dim codegen'd arithmetic (r9) — bitwise identical to
     # the HOF forms (pinned row-identical to topk_ivf_det), measured
     # 20.2 → 13.9 s on the 20M serve (SCALE_r09 §2)
-    from .simsearch import _score_exprs
-
-    _norm, _cos = _score_exprs(int(meta.get("dim") or 0))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm(vec_col).alias("qn"),
-    ).withColumn("probe", probe_expr).localCheckpoint()  # probe lists computed ONCE: reused for the
-    # driver-side partition-filter collect AND the probe join
+    dim = int(meta.get("dim") or 0)
+    _norm, _ = _score_exprs(dim)
+    # probe lists computed ONCE: reused for the driver-side
+    # partition-filter collect AND the probe join
+    q = _query_side(queries, id_col, vec_col, dim).withColumn(
+        "probe", _query_probe(meta, nprobe)).localCheckpoint()
     cells = sorted({c for r in q.select(
         F.explode("probe").alias("c")).distinct().collect()
         for c in [r["c"]] if c is not None})
@@ -1231,7 +1198,6 @@ def topk_ivf_index(
                    .agg(F.sum("count").alias("p"),
                         F.max("count").alias("m")).collect()[0])
             n_pairs, max_per_cell = int(row["p"] or 0), int(row["m"] or 0)
-            dim = int(meta.get("dim") or 0)
             arrow_rows = int(spark.conf.get(
                 "spark.sql.execution.arrow.maxRecordsPerBatch",
                 "10000") or 10000)
@@ -1279,18 +1245,7 @@ def topk_ivf_index(
             "cand_id", "left_anti")
     qx = q.filter(F.col("qn") != 0).select(
         "query_id", "qvec", "qn", F.explode("probe").alias("list_id"))
-    scored = (
-        F.broadcast(qx).join(c, "list_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id",
-                _cos("qvec", "cvec", "qn", "cn").alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _probe_topk(qx, c, "list_id", k, dim)
 
 
 #: query-batch bound for mode="shared" (the topk_bruteforce contract):
@@ -1383,12 +1338,7 @@ def _topk_shared(spark: SparkSession, q: DataFrame, data: DataFrame,
     ct = data.schema["vec_id"].dataType.simpleString()
     pairs = cand.mapInPandas(
         _score, f"query_id {qt}, cand_id {ct}, cosine double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(pairs, k)
 
 
 def _topk_pq(spark: SparkSession, q: DataFrame, data: DataFrame,
@@ -1490,14 +1440,8 @@ def _topk_pq(spark: SparkSession, q: DataFrame, data: DataFrame,
     ct = data.schema["vec_id"].dataType.simpleString()
     approx_pairs = cand.mapInPandas(
         _approx, f"query_id {qt}, cand_id {ct}, approx double")
-    aw = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("cand_id"))
-    survivors = (approx_pairs
-                 .withColumn("arank", F.row_number().over(aw))
-                 .filter(F.col("arank") <= rerank)
-                 .select("query_id", "cand_id"))
-
-    from .simsearch import _score_exprs
+    survivors = _rank_topk(approx_pairs, rerank, by="approx").select(
+        "query_id", "cand_id")
 
     _norm, _cos = _score_exprs(int(meta.get("dim") or 0))
     cemb = (data.filter(F.col("list_id").isin(cells))
@@ -1510,12 +1454,7 @@ def _topk_pq(spark: SparkSession, q: DataFrame, data: DataFrame,
              .select("query_id", "cand_id",
                      _cos("qvec", "embedding", "qn", "cn")
                      .alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(exact, k)
 
 
 def _block_topk(qid, cc, vv, k, outs) -> None:
@@ -1662,34 +1601,13 @@ def knn_join(
     meta, data, has_tombs = _snapshot_full(spark, path)
     id_col = id_col or meta["id_col"]
     vec_col = vec_col or meta["vec_col"]
-    hier = meta.get("kind") == "hier"
-    if nprobe is None:
-        cal = meta.get("calibration")
-        if cal:
-            nprobe = cal["p1"] if hier else cal["nprobe"]
-        elif hier:
-            nprobe = max(2, math.ceil(meta["n1"] * AUTO_PROBE_FRAC))
-        else:
-            nprobe = auto_nprobe(meta["nlist"])
-    if hier:
-        probe_expr = hier_probe_np(meta["C1"], meta["C2"],
-                                   nprobe)(F.col("qvec"))
-    else:
-        probe_expr = _assign_expr("qvec", meta["centroids"],
-                                  nprobe, vec_norm="qn")
-    from .simsearch import _score_exprs
-
     dim = int(meta.get("dim") or 0)
-    _norm, _ = _score_exprs(dim)
     # assignment computed ONCE (the serving contract): the checkpoint
     # is distributed — O(batch × (dim + nprobe)) across executors,
     # never on the driver
-    q = (queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            _norm(vec_col).alias("qn"))
+    q = (_query_side(queries, id_col, vec_col, dim)
          .filter(F.col("qn") != 0)
-         .withColumn("probe", probe_expr)
+         .withColumn("probe", _query_probe(meta, nprobe))
          .localCheckpoint())
 
     lid_t = data.schema["list_id"].dataType
@@ -1774,12 +1692,7 @@ def knn_join(
     pairs = (qg.groupBy("list_id", "qsalt", "csalt")
              .cogroup(cg.groupBy("list_id", "qsalt", "csalt"))
              .applyInPandas(_score_grp, out_schema))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(pairs, k)
 
 
 def ivf_ingest_stream(stream: DataFrame, path: str, checkpoint: str,

@@ -1,15 +1,26 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
+Live paths (every one returns (query_id, cand_id, cosine, rank), rank
+1..k per query under cosine desc, cand_id asc — see _rank_topk):
   * topk_bruteforce — exact cosine top-k. Query set broadcast against
     the corpus; the dot product is a JVM higher-order expression
     (zip_with + aggregate), so the scan stays in whole-stage codegen.
     Correctness baseline; O(|queries| × |corpus|).
   * topk_lsh — random-hyperplane LSH: corpus bucketed by sign bits,
     queries probe their own bucket (+ optional multi-probe neighbors);
-    the join is bucket-equi, shuffle-partitionable — the 100 TB path.
-    (IVF coarse quantization would slot in the same way with learned
-    centroids; hyperplanes need no training pass.)
+    the join is bucket-equi, shuffle-partitionable.
+  * topk_ivf_det — flat IVF over a seed (smallest-id, oracle-mirrored)
+    or trained (spherical k-means) coarse quantizer.
+  * topk_ivf_hier — two-level IVF (n1·n2 cells, n1 + n2 dots per row);
+    topk_ivf_det's √N auto-scale dispatches here above the flat clamp.
+  * annindex.topk_ivf_index / knn_join — the same probe over a
+    persisted, cell-partitioned index.
+
+Every approximate operator is the same probe (_probe_topk): the
+operator builds its candidate side (_cand_side: cand_id, cvec, cn and
+a cell/bucket key) and its query side (_query_side plus the probed
+keys); the broadcast, key equi-join, self-pair filter, scoring and
+top-k window are shared.
 """
 
 from __future__ import annotations
@@ -179,6 +190,77 @@ def _score_exprs(dim: int | None):
             / (F.col(na) * F.col(nb)))
 
 
+def _rank_topk(scored: DataFrame, k: int, by: str = "cosine") -> DataFrame:
+    """THE ranking of every ANN operator: per query, ``by`` descending
+    then ``cand_id`` ascending (the deterministic tie-break the DuckDB
+    mirrors share), rank 1..k as a long column ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.col(by).desc(), F.col("cand_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _query_side(queries: DataFrame, id_col: str, vec_col: str,
+                dim: int | None) -> DataFrame:
+    """(query_id, qvec, qn) — the query side of every probe before the
+    operator adds its probed keys."""
+    _norm, _ = _score_exprs(dim)
+    return queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
+        _norm(vec_col).alias("qn"),
+    )
+
+
+def _cand_side(corpus: DataFrame, id_col: str, vec_col: str,
+               dim: int | None, key: str, assign,
+               quantize: bool = False) -> DataFrame:
+    """(cand_id, cvec, cn, ``key``) — the candidate side of every probe.
+    ``assign(vec, norm)`` builds the cell/bucket key from the RAW vector
+    column's name and, when one exists, its norm column's name.
+
+    ``quantize=True`` carries the payload as int8 codes
+    (quantize_embeddings): 8× less shuffle/broadcast, while the key
+    still reads the raw vector (bucketing is an index-build step; codes
+    are the stored payload). Cosine's per-vector scale invariance means
+    cos(q, codes) == cos(q, codes·s), so nothing is dequantized.
+    The raw payload computes its norm ONCE and hands it to ``assign`` —
+    inlining it in a per-centroid assignment would re-aggregate it
+    nlist times per row (SCALE_r05.md)."""
+    _norm, _ = _score_exprs(dim)
+    if quantize:
+        qz = quantize_embeddings(
+            corpus.select(F.col(id_col).alias("cand_id"),
+                          F.col(vec_col).alias("__raw")), "__raw")
+        return qz.select(
+            "cand_id", F.col("q_vec").alias("cvec"),
+            _norm("q_vec").alias("cn"), assign("__raw", None).alias(key))
+    return corpus.select(
+        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
+        _norm(vec_col).alias("cn"),
+    ).withColumn(key, assign("cvec", "cn"))
+
+
+def _probe_topk(q: DataFrame, c: DataFrame, key: str, k: int,
+                dim: int | None, distinct: bool = False) -> DataFrame:
+    """The probe every approximate operator shares: broadcast the query
+    side ``q`` (query_id, qvec, qn, key), equi-join the candidate side
+    ``c`` (cand_id, cvec, cn, key) on the cell/bucket ``key``, drop
+    self-pairs, score cosines (_score_exprs) and rank (_rank_topk).
+    ``distinct`` collapses a candidate reached through several probed
+    keys (LSH multi-probe) before ranking."""
+    _, _cos = _score_exprs(dim)
+    scored = (
+        F.broadcast(q).join(c, key)
+        .filter(F.col("query_id") != F.col("cand_id"))
+        .select("query_id", "cand_id",
+                _cos("qvec", "cvec", "qn", "cn").alias("cosine"))
+    )
+    if distinct:
+        scored = scored.dropDuplicates(["query_id", "cand_id"])
+    return _rank_topk(scored, k)
+
+
 def topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -199,15 +281,17 @@ def topk_bruteforce(
     |queries| x |corpus| dots. The broadcast side must stay small —
     a corpus-sized query set would OOM the executors long before the
     cross-product finished, so query sets above ``max_queries`` raise
-    instead (use ``topk_lsh`` / ``topk_ivf`` for bulk k-NN; raise the
-    cap explicitly if you truly want a bigger exact run)."""
+    instead (use ``topk_lsh`` / ``topk_ivf_det`` for bulk k-NN; raise
+    the cap explicitly if you truly want a bigger exact run). It
+    shares only the ranking with the approximate operators, so it
+    stays an independent check of their probe."""
     n_q = queries.limit(max_queries + 1).count()
     if n_q > max_queries:
         raise ValueError(
             f"topk_bruteforce: query set exceeds max_queries={max_queries} "
             "(exact brute force broadcasts the queries and scores "
-            "|queries| x |corpus| pairs). Use topk_lsh/topk_ivf for bulk "
-            "k-NN, or pass a larger max_queries deliberately."
+            "|queries| x |corpus| pairs). Use topk_lsh/topk_ivf_det for "
+            "bulk k-NN, or pass a larger max_queries deliberately."
         )
     _norm, _cos = _score_exprs(dim)  # pass dim= to unroll the scorer
     q = F.broadcast(
@@ -224,11 +308,7 @@ def topk_bruteforce(
         "query_id", "cand_id",
         _cos("qvec", "cvec", "qn", "cn").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k)
 
 
 def _hyperplanes(dim: int, bits: int, seed: int = 42) -> np.ndarray:
@@ -282,90 +362,6 @@ def hyperplane_bucket_sql(vec: str, dim: int, bits: int = 8, seed: int = 42) -> 
     return "(" + " + ".join(terms) + ")"
 
 
-def train_centroids(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    nlist: int = 16,
-    seed: int = 42,
-    train_cap: int = 100_000,
-    max_iter: int = 5,  # coarse quantization doesn't need tight convergence
-) -> list[list[float]]:
-    """IVF coarse quantizer: k-means centroids via Spark MLlib (JVM,
-    distributed Lloyd iterations). Training reads a bounded sample —
-    at 100 TB you train on ~1e5 vectors, not the corpus — and the
-    result is tiny (nlist × dim doubles on the driver)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = corpus.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    ).limit(train_cap)
-    model = KMeans(k=nlist, seed=seed, maxIter=max_iter).fit(train)
-    return [[float(x) for x in c] for c in model.clusterCenters()]
-
-
-def nearest_lists(vec_col: Column | str, centroids: list[list[float]], nprobe: int) -> Column:
-    """array<int> of the ``nprobe`` nearest centroid ids by squared-L2,
-    as a pure JVM expression: the centroid table is baked into the plan
-    as literals, so assignment is a shuffle-free, UDF-free map — the
-    property that makes IVF assignment embarrassingly parallel over a
-    100 TB corpus."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    cents = F.expr("array(" + ", ".join(_lit_vec_sql(c) for c in centroids) + ")")
-    scored = F.transform(
-        F.sequence(F.lit(1), F.lit(len(centroids))),
-        lambda i: F.struct(
-            F.aggregate(
-                F.zip_with(v, F.element_at(cents, i),
-                           lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)),
-                F.lit(0.0), lambda acc, d: acc + d,
-            ).alias("d"),
-            (i - 1).alias("list_id"),
-        ),
-    )
-    return F.transform(F.slice(F.array_sort(scored), 1, nprobe), lambda s: s["list_id"])
-
-
-def topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nlist: int = 16,
-    nprobe: int = 3,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """IVF ANN: corpus partitioned into ``nlist`` k-means cells, each
-    query scans only its ``nprobe`` nearest cells. Recall/cost dial is
-    nprobe/nlist; the candidate join is equi on list_id (bucket-
-    partitionable at scale, queries broadcast). Pass pre-trained
-    ``centroids`` to skip training (e.g. reuse across query batches)."""
-    if centroids is None:
-        centroids = train_centroids(corpus, vec_col, nlist)
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
-        F.element_at(nearest_lists(vec_col, centroids, 1), 1).alias("list_id"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        F.explode(nearest_lists(vec_col, centroids, nprobe)).alias("list_id"),
-    )
-    scored = (
-        F.broadcast(q).join(c, "list_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id",
-                F.expr(f"{_hof_dot_sql('qvec', 'cvec')} / "
-                       f"({_hof_norm_sql('qvec')} * {_hof_norm_sql('cvec')})")
-                .alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def topk_lsh(
     corpus: DataFrame,
     queries: DataFrame,
@@ -409,28 +405,10 @@ def topk_lsh(
             bits=bits, dim=dim)["multiprobe"]
     elif multiprobe is None:
         multiprobe = 1
-    _norm, _cos = _score_exprs(dim)
-    if quantize:
-        qz = quantize_embeddings(
-            corpus.select(F.col(id_col).alias("cand_id"),
-                          F.col(vec_col).alias("__raw")), "__raw")
-        c = qz.select(
-            "cand_id",
-            F.col("q_vec").alias("cvec"),
-            _norm("q_vec").alias("cn"),
-            hyperplane_bucket("__raw", dim, bits).alias("bucket"),
-        )
-    else:
-        c = corpus.select(
-            F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
-            _norm(vec_col).alias("cn"),
-            hyperplane_bucket(vec_col, dim, bits).alias("bucket"),
-        )
-    qb = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm(vec_col).alias("qn"),
-        hyperplane_bucket(vec_col, dim, bits).alias("bucket0"),
-    )
+    c = _cand_side(corpus, id_col, vec_col, dim, "bucket",
+                   lambda v, _n: hyperplane_bucket(v, dim, bits), quantize)
+    qb = _query_side(queries, id_col, vec_col, dim).withColumn(
+        "bucket0", hyperplane_bucket("qvec", dim, bits))
     # probe every bucket at Hamming distance ≤ multiprobe (r8: was
     # silently capped at 2 — on NON-clustered corpora the recall dial
     # is the probed-bucket fraction, so mp must actually extend;
@@ -447,18 +425,7 @@ def topk_lsh(
     q = qb.select(
         "query_id", "qvec", "qn", F.explode(F.array(*probes)).alias("bucket")
     )
-    scored = (
-        F.broadcast(q).join(c, "bucket")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id",
-                _cos("qvec", "cvec", "qn", "cn").alias("cosine"))
-        .dropDuplicates(["query_id", "cand_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _probe_topk(q, c, "bucket", k, dim, distinct=True)
 
 
 # ---------------------------------------------------------------------
@@ -497,8 +464,9 @@ def seed_centroids(
     balance than k-means but (a) training never touches the query path,
     (b) the centroids are exact stored values an independent SQL engine
     reproduces byte-for-byte, so the IVF result is oracle-checkable.
-    ``train_centroids`` (MLlib k-means) remains the quality-tuned
-    alternative when oracle parity isn't needed.
+    ``trained_centroids`` (spherical MLlib k-means,
+    ``quantizer='trained'``) is the quality-tuned alternative when
+    oracle parity isn't needed.
 
     Cached per (semantic key) — at scale this is a catalog artifact
     trained once per corpus version, not a per-query job. When the
@@ -600,8 +568,10 @@ def nearest_lists_cosine(
     (descending, ties to the smaller list_id). Rounding to 4 decimals
     before the argmax makes the assignment boundary identical across
     engines (raw doubles differ in the last ulp by summation order).
-    Pure literal JVM expression — shuffle-free assignment, same 100 TB
-    shape as nearest_lists.
+    Pure literal JVM expression: the centroid table is baked into the
+    plan, so assignment is a shuffle-free, UDF-free map — the property
+    that makes IVF assignment embarrassingly parallel over a 100 TB
+    corpus.
 
     Centroid norms are constants, so they are folded in Python
     (_py_norm — bitwise equal to norm_expr) instead of re-aggregated
@@ -735,6 +705,42 @@ def nearest_lists_np(centroids: list[list[float]], nprobe: int):
     return assign
 
 
+def _assign_expr(vec_col: str, centroids: list[list[float]], nprobe: int,
+                 vec_norm: str | None = None, matmul: bool | None = None):
+    """The one IVF assignment selector (takes column NAMES): array<int>
+    of each vector's ``nprobe`` nearest cells, by the numpy matmul
+    (nearest_lists_np) or the JVM literal expression
+    (nearest_lists_cosine, which reads ``vec_norm`` when given; the
+    numpy path ignores it). Each caller keeps its own rule:
+    ``matmul=None`` is the size rule of the persisted index and the
+    calibration pass (numpy at nlist ≥ NP_ASSIGN_MIN_NLIST);
+    topk_ivf_det passes its auto-scale decision, because an EXPLICIT
+    nlist keeps the expression for oracle parity at any size. The two
+    agree up to the shared 4-decimal cosine rounding, so a row exactly
+    AT a rounding boundary may assign one cell apart (the caveat
+    nearest_lists_np documents; the pinned row-identity tests run at
+    nlist=16 where the paths are bit-identical)."""
+    if matmul is None:
+        matmul = len(centroids) >= NP_ASSIGN_MIN_NLIST
+    if matmul:
+        return nearest_lists_np(centroids, nprobe)(vec_col)
+    return nearest_lists_cosine(vec_col, centroids, nprobe,
+                                vec_norm=vec_norm)
+
+
+def _resolve_centroids(corpus: DataFrame, id_col: str, vec_col: str,
+                       quantizer: str, *cells: int, version: object = None):
+    """The ``quantizer='seed'|'trained'`` dispatch: ``cells=(nlist,)``
+    gives the flat centroids, ``cells=(n1, n2)`` the two-level
+    (C1, C2)."""
+    table = {"seed": (seed_centroids, hier_seed_centroids),
+             "trained": (trained_centroids, hier_trained_centroids)}
+    if quantizer not in table:
+        raise ValueError(f"unknown quantizer {quantizer!r} (seed | trained)")
+    return table[quantizer][len(cells) - 1](
+        corpus, id_col, vec_col, *cells, version=version)
+
+
 def topk_ivf_det(
     corpus: DataFrame,
     queries: DataFrame,
@@ -746,7 +752,6 @@ def topk_ivf_det(
     centroids: list[list[float]] | None = None,
     corpus_count: int | None = None,
     quantize: bool = False,
-    use_np: bool | None = None,
     quantizer: str = "seed",
     calibrate: float | None = None,
 ) -> DataFrame:
@@ -757,9 +762,9 @@ def topk_ivf_det(
     explicit nlist ALWAYS takes the JVM literal-expression assignment
     (exact oracle parity), however large; the numpy-matmul assignment
     engages only in the √N auto-scale regime (``nlist=None`` with
-    auto_nlist ≥ NP_ASSIGN_MIN_NLIST) or under an explicit
-    ``use_np=True`` (ADVICE r6 — the old centroid-count gate silently
-    broke the documented mirror for nlist ≥ 64).
+    auto_nlist ≥ NP_ASSIGN_MIN_NLIST; ADVICE r6 — the old
+    centroid-count gate silently broke the documented mirror for
+    nlist ≥ 64).
 
     ``nlist=None`` engages the √N auto-scale (auto_nlist over
     ``corpus_count``, counted once if not supplied); ``nprobe=None``
@@ -797,16 +802,15 @@ def topk_ivf_det(
         if corpus_count is None:
             corpus_count = corpus.count()
         if (corpus_count > AUTO_NLIST_MAX ** 2
-                and nprobe is None and centroids is None
-                and use_np is None):
+                and nprobe is None and centroids is None):
             # √N exceeds the flat clamp: two-level coarse quantizer
             # (AUTO-dispatch, r7 — VERDICT r6 item 4). Only when the
             # flat-quantizer-shaped knobs are untouched — an explicit
-            # nprobe / centroids list / use_np means FLAT semantics
-            # were asked for, and silently reinterpreting (or
-            # dropping) them in the hierarchy would change recall
-            # behind the caller's back (review r7); call topk_ivf_hier
-            # directly for explicit two-level control.
+            # nprobe / centroids list means FLAT semantics were asked
+            # for, and silently reinterpreting (or dropping) them in
+            # the hierarchy would change recall behind the caller's
+            # back (review r7); call topk_ivf_hier directly for
+            # explicit two-level control.
             return topk_ivf_hier(corpus, queries, id_col, vec_col, k,
                                  corpus_count=corpus_count,
                                  quantize=quantize, quantizer=quantizer,
@@ -815,148 +819,23 @@ def topk_ivf_det(
     if nprobe is None and calibrate is None:
         nprobe = auto_nprobe(nlist)
     if centroids is None:
-        if quantizer == "trained":
-            centroids = trained_centroids(corpus, id_col, vec_col, nlist)
-        elif quantizer == "seed":
-            centroids = seed_centroids(corpus, id_col, vec_col, nlist)
-        else:
-            raise ValueError(f"unknown quantizer {quantizer!r} "
-                             "(seed | trained)")
+        centroids = _resolve_centroids(corpus, id_col, vec_col, quantizer,
+                                       nlist)
     if calibrate is not None:
         nprobe = calibrate_probe(
             corpus, id_col, vec_col, k=k, target_recall=calibrate,
             nlist=len(centroids), quantizer=quantizer,
             centroids=centroids)["nprobe"]
-    if use_np is None:
-        use_np = auto_scale and len(centroids) >= NP_ASSIGN_MIN_NLIST
-    if quantize:
-        return _topk_ivf_det_quantized(
-            corpus, queries, id_col, vec_col, k, nprobe, centroids,
-            use_np=use_np)
-    if use_np:
-        return _topk_ivf_det_np(
-            corpus, queries, id_col, vec_col, k, nprobe, centroids)
-    # Two-stage projection: the row norm is computed ONCE and fed to the
-    # assignment expression as a column — inlining norm_expr inside the
-    # per-centroid transform would re-aggregate it nlist times per row
-    # (the dominant interpreted-HOF cost of IVF assignment at corpus
-    # scale; measured 31.9s -> see SCALE_r05.md at sf10's 200k vectors).
-    _norm, _cos = _score_exprs(len(centroids[0]) if centroids else None)
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
-        _norm(vec_col).alias("cn"),
-    ).withColumn(
-        "list_id",
-        F.element_at(
-            nearest_lists_cosine("cvec", centroids, 1, vec_norm="cn"), 1),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm(vec_col).alias("qn"),
-    ).withColumn(
-        "list_id",
-        F.explode(
-            nearest_lists_cosine("qvec", centroids, nprobe, vec_norm="qn")),
-    )
-    scored = (
-        F.broadcast(q).join(c, "list_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id",
-                _cos("qvec", "cvec", "qn", "cn").alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _topk_ivf_det_np(
-    corpus, queries, id_col, vec_col, k, nprobe, centroids
-) -> DataFrame:
-    """Large-nlist IVF probe: identical join shape to the expression
-    path, assignment via nearest_lists_np (one numpy matmul per Arrow
-    batch — the only way nlist ≈ √N stays affordable; see
-    NP_ASSIGN_MIN_NLIST)."""
-    assign1 = nearest_lists_np(centroids, 1)
-    assignp = nearest_lists_np(centroids, nprobe)
-    _norm, _cos = _score_exprs(len(centroids[0]) if centroids else None)
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
-        _norm(vec_col).alias("cn"),
-        F.element_at(assign1(F.col(vec_col)), 1).alias("list_id"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm(vec_col).alias("qn"),
-        F.explode(assignp(F.col(vec_col))).alias("list_id"),
-    )
-    scored = (
-        F.broadcast(q).join(c, "list_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id",
-                _cos("qvec", "cvec", "qn", "cn").alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _topk_ivf_det_quantized(
-    corpus, queries, id_col, vec_col, k, nprobe, centroids,
-    use_np: bool = False,
-) -> DataFrame:
-    """Quantized-payload IVF probe (see topk_ivf_det quantize=True).
-    Cell assignment uses the raw vector (same cells as the float path);
-    the join payload is the int8 code array + its norm — cosine's
-    per-vector scale invariance means cos(q, codes) == cos(q, codes·s),
-    so no dequantization happens anywhere. ``use_np`` is resolved by
-    topk_ivf_det (auto-scale regime or explicit flag — never inferred
-    from the centroid count here)."""
-    big = use_np
-    if big:  # √N regime: matmul assignment (see NP_ASSIGN_MIN_NLIST)
-        assign1 = F.element_at(
-            nearest_lists_np(centroids, 1)(F.col("__raw")), 1)
-    else:
-        assign1 = F.element_at(
-            nearest_lists_cosine("__raw", centroids, 1), 1)
-    _norm, _cos = _score_exprs(len(centroids[0]) if centroids else None)
-    qz = quantize_embeddings(
-        corpus.select(F.col(id_col).alias("cand_id"),
-                      F.col(vec_col).alias("__raw")), "__raw")
-    c = qz.select(
-        "cand_id",
-        F.col("q_vec").alias("cvec"),
-        _norm("q_vec").alias("cn"),
-        assign1.alias("list_id"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm(vec_col).alias("qn"),
-    )
-    if big:
-        q = q.withColumn(
-            "list_id",
-            F.explode(nearest_lists_np(centroids, nprobe)(F.col("qvec"))))
-    else:
-        q = q.withColumn(
-            "list_id",
-            F.explode(nearest_lists_cosine(
-                "qvec", centroids, nprobe, vec_norm="qn")),
-        )
-    scored = (
-        F.broadcast(q).join(c, "list_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id",
-                _cos("qvec", "cvec", "qn", "cn").alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    matmul = auto_scale and len(centroids) >= NP_ASSIGN_MIN_NLIST
+    dim = len(centroids[0]) if centroids else None
+    c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
+                   lambda v, n: F.element_at(
+                       _assign_expr(v, centroids, 1, n, matmul), 1),
+                   quantize)
+    q = _query_side(queries, id_col, vec_col, dim).withColumn(
+        "list_id", F.explode(
+            _assign_expr("qvec", centroids, nprobe, "qn", matmul)))
+    return _probe_topk(q, c, "list_id", k, dim)
 
 
 # ---------------------------------------------------------------------
@@ -1216,8 +1095,8 @@ def topk_ivf_hier(
     assignment costs √N dots per row; the hierarchy keeps the SAME
     ≈√N total cells (n1·n2) but assigns with n1 + n2 ≈ 2·N^(1/4) dots
     — two bounded matmuls per Arrow batch, still a pure shuffle-free
-    map. Join/probe shape is identical to _topk_ivf_det_np (broadcast
-    queries, cell-equi probe join, per-query window top-k).
+    map. The probe is topk_ivf_det's (_probe_topk: broadcast queries,
+    cell-equi probe join, per-query window top-k).
     topk_ivf_det auto-dispatches here when the √N auto-scale exceeds
     the clamp; explicit small-nlist and oracle-mirrored paths are
     untouched. ``quantize=True`` carries the corpus payload as int8
@@ -1242,13 +1121,8 @@ def topk_ivf_hier(
     n1 = n1 or a1
     n2 = n2 or a2
     if cents is None:
-        if quantizer == "trained":
-            cents = hier_trained_centroids(corpus, id_col, vec_col, n1, n2)
-        elif quantizer == "seed":
-            cents = hier_seed_centroids(corpus, id_col, vec_col, n1, n2)
-        else:
-            raise ValueError(f"unknown quantizer {quantizer!r} "
-                             "(seed | trained)")
+        cents = _resolve_centroids(corpus, id_col, vec_col, quantizer,
+                                   n1, n2)
     C1, C2 = cents
     if calibrate is not None:
         p1 = calibrate_probe_hier(
@@ -1257,40 +1131,13 @@ def topk_ivf_hier(
             quantizer=quantizer, cents=cents)["p1"]
     else:
         p1 = p1 or max(2, math.ceil(n1 * AUTO_PROBE_FRAC))
-    _norm, _cos = _score_exprs(len(C1[0]) if C1 else None)
-    if quantize:
-        qz = quantize_embeddings(
-            corpus.select(F.col(id_col).alias("cand_id"),
-                          F.col(vec_col).alias("__raw")), "__raw")
-        c = qz.select(
-            "cand_id",
-            F.col("q_vec").alias("cvec"),
-            _norm("q_vec").alias("cn"),
-            hier_assign_np(C1, C2)(F.col("__raw")).alias("list_id"),
-        )
-    else:
-        c = corpus.select(
-            F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
-            _norm(vec_col).alias("cn"),
-            hier_assign_np(C1, C2)(F.col(vec_col)).alias("list_id"),
-        )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm(vec_col).alias("qn"),
-        F.explode(hier_probe_np(C1, C2, p1)(F.col(vec_col))).alias("list_id"),
-    )
-    scored = (
-        F.broadcast(q).join(c, "list_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id",
-                _cos("qvec", "cvec", "qn", "cn").alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    dim = len(C1[0]) if C1 else None
+    assign = hier_assign_np(C1, C2)
+    c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
+                   lambda v, _n: assign(F.col(v)), quantize)
+    q = _query_side(queries, id_col, vec_col, dim).withColumn(
+        "list_id", F.explode(hier_probe_np(C1, C2, p1)(F.col("qvec"))))
+    return _probe_topk(q, c, "list_id", k, dim)
 
 
 # ---------------------------------------------------------------------
@@ -1491,34 +1338,18 @@ def calibrate_probe(
     if key in _CALIB_CACHE:
         return _CALIB_CACHE[key]
     if centroids is None:
-        if quantizer == "trained":
-            centroids = trained_centroids(corpus, id_col, vec_col, nlist,
-                                          version=version)
-        elif quantizer == "seed":
-            centroids = seed_centroids(corpus, id_col, vec_col, nlist,
-                                       version=version)
-        else:
-            raise ValueError(f"unknown quantizer {quantizer!r} (seed | trained)")
+        centroids = _resolve_centroids(corpus, id_col, vec_col, quantizer,
+                                       nlist, version=version)
     n_cells = len(centroids)
-    use_np = n_cells >= NP_ASSIGN_MIN_NLIST
-    if use_np:
-        assign1 = F.element_at(nearest_lists_np(centroids, 1)(F.col(vec_col)), 1)
-    else:
-        assign1 = F.element_at(
-            nearest_lists_cosine(vec_col, centroids, 1), 1)
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
-        F.expr(_hof_norm_sql(vec_col)).alias("cn"), assign1.alias("list_id"))
+    dim = len(centroids[0]) if centroids else None
+    c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
+                   lambda v, n: F.element_at(
+                       _assign_expr(v, centroids, 1, n), 1))
     h = _calib_holdout(corpus, id_col, vec_col, n_holdout, holdout)
-    if use_np:
-        order = nearest_lists_np(centroids, n_cells)(F.col("qvec"))
-    else:
-        order = nearest_lists_cosine("qvec", centroids, n_cells,
-                                     vec_norm="qn")
+    order = _assign_expr("qvec", centroids, n_cells, "qn")
     grid = h.select("query_id", F.posexplode(order).alias("pos0", "list_id")
                     ).withColumn("probe_pos", F.col("pos0") + 1)
-    rows = _calib_pass(c, grid, h, k,
-                       dim=len(centroids[0]) if centroids else None)
+    rows = _calib_pass(c, grid, h, k, dim=dim)
     if not rows:
         raise ValueError("calibrate_probe: empty calibration pass — the "
                          "corpus has no nonzero-norm vectors to hold out")
@@ -1580,20 +1411,14 @@ def calibrate_probe_hier(
         # version= forwards to the centroid caches (ADVICE r8): an
         # in-place corpus rewrite with a bumped version must evict the
         # hier centroids exactly as calibrate_probe evicts the flat ones
-        if quantizer == "trained":
-            cents = hier_trained_centroids(corpus, id_col, vec_col, n1, n2,
-                                           version=version)
-        elif quantizer == "seed":
-            cents = hier_seed_centroids(corpus, id_col, vec_col, n1, n2,
-                                        version=version)
-        else:
-            raise ValueError(f"unknown quantizer {quantizer!r} (seed | trained)")
+        cents = _resolve_centroids(corpus, id_col, vec_col, quantizer,
+                                   n1, n2, version=version)
     C1, C2 = cents
     n1, n2 = len(C1), (len(C2[0]) if C2 else 0)
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
-        F.expr(_hof_norm_sql(vec_col)).alias("cn"),
-        hier_assign_np(C1, C2)(F.col(vec_col)).alias("list_id"))
+    dim = len(C1[0]) if C1 else None
+    assign = hier_assign_np(C1, C2)
+    c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
+                   lambda v, _n: assign(F.col(v)))
     h = _calib_holdout(corpus, id_col, vec_col, n_holdout, holdout)
     grid = h.select(
         "query_id",
@@ -1601,7 +1426,7 @@ def calibrate_probe_hier(
                      ).alias("pos0", "list_id")
     ).withColumn(  # full probe list is n1 contiguous blocks of n2
         "probe_pos", (F.col("pos0") / F.lit(n2)).cast("int") + 1)
-    rows = _calib_pass(c, grid, h, k, dim=len(C1[0]) if C1 else None)
+    rows = _calib_pass(c, grid, h, k, dim=dim)
     if not rows:
         raise ValueError("calibrate_probe_hier: empty calibration pass — "
                          "the corpus has no nonzero-norm vectors to hold out")
@@ -1653,10 +1478,8 @@ def calibrate_probe_lsh(
            seed, corpus.semanticHash(), version, hold_key)
     if key in _CALIB_CACHE:
         return _CALIB_CACHE[key]
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
-        F.expr(_hof_norm_sql(vec_col)).alias("cn"),
-        hyperplane_bucket(vec_col, dim, bits, seed).alias("list_id"))
+    c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
+                   lambda v, _n: hyperplane_bucket(v, dim, bits, seed))
     h = _calib_holdout(corpus, id_col, vec_col, n_holdout, holdout)
     grid = (
         h.withColumn("bucket0",

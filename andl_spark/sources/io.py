@@ -57,10 +57,6 @@ def read_text(spark: SparkSession, path: str, col: str = "line") -> DataFrame:
     return spark.read.text(path).withColumnRenamed("value", col)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", True).csv(path)
-
-
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
     w = df.write.mode(mode)
     if partition_by:

@@ -1243,8 +1243,9 @@ def q_ann_ivf(spark, sf_dir):
     selection) is out of the query path — centroids are a cached
     artifact, assignment is shuffle-free literal math — and the oracle
     re-derives the identical centroids, so the approximate result is
-    hash-checked. MLlib k-means (train_centroids) remains the
-    quality-tuned quantizer when parity isn't required."""
+    hash-checked. ``quantizer="trained"`` (spherical MLlib k-means,
+    trained_centroids) is the quality-tuned quantizer when parity isn't
+    required."""
     emb = _t(spark, sf_dir)["embeddings"]
     queries = emb.filter(F.col("vec_id") < 10)
     out = SS.topk_ivf_det(emb, queries, "vec_id", "embedding", k=5, nlist=16, nprobe=4)

@@ -16,6 +16,21 @@ SF_SMOKE = os.environ.get("ANDL_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+#: The C# Andl checkout the reference-suite tests read: the .andl
+#: suites and samples, Chinook.sqlite and the S/P CSVs.
+REFERENCE_TREE = "/root/reference"
+
+
+@pytest.fixture(scope="session")
+def reference_tree():
+    """Request this from any test or fixture that reads the reference
+    tree: it skips them, and only them, where the tree is absent, and
+    changes nothing where it exists."""
+    if not os.path.isdir(REFERENCE_TREE):
+        pytest.skip("reference tree absent")
+    return REFERENCE_TREE
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("andl_spark-tests", shuffle_partitions=8)

@@ -72,7 +72,7 @@ def test_cli_default_input_is_test_andl(tmp_path):
     assert "Hello world!" in proc.stdout and "12" in proc.stdout
 
 
-def test_cli_db_and_catalog_together(tmp_path):
+def test_cli_db_and_catalog_together(reference_tree, tmp_path):
     """The reference workflow `Andl setup-Chinook.andl <db>` then
     `Andl Chinook.andl <db>` (setup-chinook.andl:3-4): with --db the
     CLI attaches the SQL database AND a catalog directory at once, so

@@ -30,7 +30,7 @@ def derby_url(tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def album_jdbc(spark, derby_url):
+def album_jdbc(reference_tree, spark, derby_url):
     """Album staged behind JDBC, read back as a partitioned scan."""
     copy_to_jdbc(read_sqlite(spark, CHINOOK, "Album"), derby_url, "Album", DERBY_DRIVER)
     return read_jdbc(
@@ -40,12 +40,12 @@ def album_jdbc(spark, derby_url):
     )
 
 
-def test_catalog_lists_reference_tables():
+def test_catalog_lists_reference_tables(reference_tree):
     names = sqlite_tables(CHINOOK)
     assert {"Album", "Artist", "Track", "Invoice", "Customer"} <= set(names)
 
 
-def test_read_jdbc_partitioned_scan(spark, album_jdbc):
+def test_read_jdbc_partitioned_scan(reference_tree, spark, album_jdbc):
     """The partitioned JDBC read: same rows as the source, split into
     range partitions (the scale path — N executor connections)."""
     with sqlite3.connect(CHINOOK) as con:
@@ -55,7 +55,7 @@ def test_read_jdbc_partitioned_scan(spark, album_jdbc):
     assert album_jdbc.columns == ["AlbumId", "Title", "ArtistId"]
 
 
-def test_top_artists_via_jdbc(spark, album_jdbc):
+def test_top_artists_via_jdbc(reference_tree, spark, album_jdbc):
     """chinook.andl:25 — top artists by album count, Albums arriving via
     the JDBC scan; oracle computed independently by SQLite."""
     from pyspark.sql import functions as F
@@ -83,7 +83,7 @@ CHINOOK_TABLES = [
 ]
 
 
-def test_setup_chinook_workflow(spark, tmp_path):
+def test_setup_chinook_workflow(reference_tree, spark, tmp_path):
     """The reference's documented two-step workflow, verbatim
     (setup-chinook.andl:3-4): `Andl setup-Chinook.andl <db>` imports
     the 11 tables into the catalog via `var X(db), Y(db), ...`, then
@@ -103,7 +103,7 @@ def test_setup_chinook_workflow(spark, tmp_path):
     assert "(AlbumId, number)" in out and "(Iron Maiden, 21)" in out
 
 
-def test_chinook_andl_script(spark, derby_url, album_jdbc):
+def test_chinook_andl_script(reference_tree, spark, derby_url, album_jdbc):
     """Runs the reference's actual Sample/chinook.andl through the
     language front-end, Album arriving via the JDBC path and the other
     tables via the sqlite bridge."""
@@ -125,7 +125,7 @@ def test_chinook_andl_script(spark, derby_url, album_jdbc):
     assert "Concert" in out or "UnitPrice" in "\n".join(sess.output)
 
 
-def test_jdbc_restriction_and_projection_pushdown(spark, album_jdbc):
+def test_jdbc_restriction_and_projection_pushdown(reference_tree, spark, album_jdbc):
     """SqlGen parity, Spark-first: the reference compiles relational
     ops INTO SQL executed by the backing RDBMS
     (Andl.Runtime/SqlGen.cs:14, Andl.Postgres). Spark's JDBC source
@@ -152,7 +152,7 @@ def test_jdbc_restriction_and_projection_pushdown(spark, album_jdbc):
     assert df.count() == want > 0
 
 
-def test_jdbc_aggregate_pushdown_full_sqlgen_parity(spark, derby_url, album_jdbc):
+def test_jdbc_aggregate_pushdown_full_sqlgen_parity(reference_tree, spark, derby_url, album_jdbc):
     """FULL SqlGen parity: the aggregation itself executes inside the
     RDBMS. Album is mounted through a DSv2 JDBC catalog with aggregate
     pushdown; the per-artist COUNT runs in Derby (PushedAggregates /

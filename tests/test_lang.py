@@ -39,7 +39,7 @@ def _count_asserts(path: Path) -> int:
 
 
 @pytest.mark.parametrize("suite", sorted(SUITES))
-def test_reference_suite(spark, suite):
+def test_reference_suite(reference_tree, spark, suite):
     path = REF_TEST / suite
     session = run_file(spark, path)
     assert session.failures == [], f"{suite} failing lines: {session.failures}"
@@ -57,7 +57,7 @@ SUPPLIER_HEADINGS = {
 
 
 @pytest.fixture()
-def sample_session(spark):
+def sample_session(reference_tree, spark):
     """Catalog as produced by Sample/setup.andl: supplier CSVs loaded."""
     sess = AndlSession(spark, REF_SAMPLE, ignore_stop=True)
     for name, heading in SUPPLIER_HEADINGS.items():
@@ -65,7 +65,7 @@ def sample_session(spark):
     return sess
 
 
-def test_sample2_full_run(sample_session):
+def test_sample2_full_run(reference_tree, sample_session):
     """Sample/sample2.andl executes end-to-end (including the section
     after its #stop debug directive) and the spot values match the
     reference's documented results."""
@@ -83,7 +83,7 @@ def test_sample2_full_run(sample_session):
     assert len(sess.output) >= 60
 
 
-def test_sample2_dyadic_membership(sample_session):
+def test_sample2_dyadic_membership(reference_tree, sample_session):
     """The sub/sup/sep + join/antijoin displays after sample2's #stop."""
     sess = sample_session.run_path(REF_SAMPLE / "sample2.andl")
     # S3 sub S / S sup SX / S3 sep SX — all true (sample2.andl:139-141)
@@ -106,7 +106,7 @@ def test_scripted_while_matches_fluent(spark):
     assert (15, 610) in rows and len(rows) == 15
 
 
-def test_lang_plans_are_declarative(spark):
+def test_lang_plans_are_declarative(reference_tree, spark):
     """Scripted queries compile to the same Catalyst plans as the fluent
     API — no Python row UDFs in the pipeline."""
     sess = AndlSession(spark, REF_TEST)
@@ -288,7 +288,7 @@ def test_membership_shadowed_rhs_bails_to_general_path(spark):
     assert "LeftSemi" in plan
 
 
-def test_ungrouped_order_has_no_single_partition_window(spark):
+def test_ungrouped_order_has_no_single_partition_window(reference_tree, spark):
     """VERDICT r4 item 5: an Andl-language user running un-grouped
     .order() over a big relvar must not get a one-task global sort —
     the interpreter compiles it through the two-pass range-partition

@@ -19,7 +19,7 @@ def _asserts(path: Path) -> int:
     return len(re.findall(r"^\s*test_true\(", path.read_text(), re.MULTILINE))
 
 
-def test_suite_update_cat_roundtrip(spark, tmp_path):
+def test_suite_update_cat_roundtrip(reference_tree, spark, tmp_path):
     cat = tmp_path / "andl_catalog"
 
     s1 = AndlSession(spark, REF, catalog_path=cat)
@@ -35,7 +35,7 @@ def test_suite_update_cat_roundtrip(spark, tmp_path):
     assert len(s2.tests) == _asserts(REF / "SuiteUpdateCat2.andl") == 13
 
 
-def test_workbench_roundtrip(spark, tmp_path):
+def test_workbench_roundtrip(reference_tree, spark, tmp_path):
     """Sample/setup-workbench.andl → Sample/workbench.andl verbatim:
     the Workbench pair (run.bat F7-reload workflow). setup-workbench
     persists S/P/SP csv relvars, three operators (incl. the
@@ -80,7 +80,7 @@ def test_operator_roundtrip_minimal(spark, tmp_path):
     assert got == [2.0, 4.0, 6.0]
 
 
-def test_catalog_operators_reachable_from_spark_sql(spark, tmp_path):
+def test_catalog_operators_reachable_from_spark_sql(reference_tree, spark, tmp_path):
     """plandl/AndlPg analog (VERDICT r5 item 6; reference
     plandl/plandl.c, AndlPg/MainPg.cs — Andl hosted inside PostgreSQL
     so SQL can call Andl operators): catalog-stored operators register

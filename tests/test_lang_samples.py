@@ -25,7 +25,7 @@ SAMPLE = Path("/root/reference/Sample")
 
 
 @pytest.fixture()
-def setup_session(spark):
+def setup_session(reference_tree, spark):
     """The reference's own catalog bootstrap (Sample/setup.andl): loads
     S/P/SP/J/SPJ from the CSVs beside it and defines wait/prompt."""
     sess = AndlSession(spark, SAMPLE, ignore_stop=True)
@@ -33,7 +33,7 @@ def setup_session(spark):
     return sess
 
 
-def test_recursive_andl(spark):
+def test_recursive_andl(reference_tree, spark):
     sess = run_file(spark, SAMPLE / "recursive.andl")
     out = "\n".join(sess.output)
     # integer closure 0..9 and powers of two up to 512 (1024 filtered)
@@ -44,7 +44,7 @@ def test_recursive_andl(spark):
     assert out.count("(P1, P6)") >= 2
 
 
-def test_fibonacci_andl(spark):
+def test_fibonacci_andl(reference_tree, spark):
     sess = run_file(spark, SAMPLE / "fibonacci.andl")
     out = "\n".join(sess.output)
     # recursive fib over seq(16): fib(15) = 610
@@ -53,7 +53,7 @@ def test_fibonacci_andl(spark):
     assert any("4.2019614072748966e" in o or "420196140727489" in o for o in sess.output)
 
 
-def test_100doors_andl(spark):
+def test_100doors_andl(reference_tree, spark):
     sess = run_file(spark, SAMPLE / "100doors.andl")
     out = "\n".join(sess.output)
     # open doors are the perfect squares ≤ 100
@@ -62,7 +62,7 @@ def test_100doors_andl(spark):
     assert "(2)" not in out and "(99)" not in out
 
 
-def test_family_tree_andl(spark):
+def test_family_tree_andl(reference_tree, spark):
     """family_tree.andl: recursive relation-typed function `tranclo`
     (do-block + if + self-call) over the CSV family tree. The paternal
     closure joins out to exactly 9 (child, male ancestor) name pairs
@@ -83,7 +83,7 @@ def test_family_tree_andl(spark):
     assert any("year_of_birth" in o and "number" in o for o in sess.output)
 
 
-def test_supplier_data_andl(spark):
+def test_supplier_data_andl(reference_tree, spark):
     """Sample/SupplierData.andl verbatim — the Date & Darwen dataset as
     positional tuple-list relation literals (`{{heading} (v,...), ...}`,
     the #include-able data file). With this, every .andl script in the
@@ -97,7 +97,7 @@ def test_supplier_data_andl(spark):
     assert qty[("S5", "P6", "J4")] == 500 and qty[("S1", "P1", "J4")] == 700
 
 
-def test_include_and_source_directives(spark):
+def test_include_and_source_directives(reference_tree, spark):
     """#include inlines another script at the directive site and
     #source repoints CSV loads (Andl.grammar.peg:44,49;
     PegParser.cs:200,213) — SupplierData.andl's documented
@@ -131,7 +131,7 @@ def test_setup_andl(setup_session):
     assert any(o.startswith("{{Name, Type}}") for o in setup_session.output)
 
 
-def test_sample1_andl(setup_session):
+def test_sample1_andl(reference_tree, setup_session):
     """sample1.andl: every scalar feature — literals (hex $2a, d/h
     strings, adjacent concat), operators (div, bitwise), deferred
     assignment, do blocks, typed recursive fact(), user-defined types."""
@@ -145,7 +145,7 @@ def test_sample1_andl(setup_session):
     assert sess.output.count("42") >= 4
 
 
-def test_sample3_andl(setup_session):
+def test_sample3_andl(reference_tree, setup_session):
     """sample3.andl: nested relations, nest/unnest via fold(union),
     image relation `{{*}} rdivide SP`, and the three relvar updates."""
     sess = setup_session.run_path(SAMPLE / "sample3.andl")
@@ -161,7 +161,7 @@ def test_sample3_andl(setup_session):
     assert out.count("(S3, Blake, 30, Paris)") >= 3
 
 
-def test_sample4_andl(setup_session):
+def test_sample4_andl(reference_tree, setup_session):
     """sample4.andl: relational-typed recursive tranclo, typedemo
     (a relation collecting .type/.text/.format/.pp of every type), and
     user-defined types as relation attributes joined naturally."""
@@ -175,7 +175,7 @@ def test_sample4_andl(setup_session):
     assert "Smith" in out
 
 
-def test_sample5_andl(setup_session):
+def test_sample5_andl(reference_tree, setup_session):
     """sample5.andl: ordering and grouping — totals, per-city grouped
     folds, and the ord()/ordg()/lag/lead/nth windowed-extension blocks."""
     sess = setup_session.run_path(SAMPLE / "sample5.andl")
@@ -191,7 +191,7 @@ def test_sample5_andl(setup_session):
     assert re.search(r"\(S5, Adams, 30, Athens, \d+, \d+, 0, 0, 0\)", out)
 
 
-def test_sample6_andl(setup_session):
+def test_sample6_andl(reference_tree, setup_session):
     """sample6.andl: the date SUBTYPE — dateymd/date/time round-trips,
     year/month/day/dow accessors (dow: Sunday=0), daysdiff."""
     sess = setup_session.run_path(SAMPLE / "sample6.andl")
@@ -201,7 +201,7 @@ def test_sample6_andl(setup_session):
     assert "31/01/2015" in out and "01/01/2015" in out
 
 
-def test_spp_sample1_andl(setup_session):
+def test_spp_sample1_andl(reference_tree, setup_session):
     """SPPsample1.andl (cp1252-encoded): the CIS631 S/P/J/SPJ query set
     — membership via sub, double-join projections, antijoin minus,
     and the self-join pair query; answers pinned to the known data."""
@@ -217,7 +217,7 @@ def test_spp_sample1_andl(setup_session):
     assert "(S5, P2, P4)" in pair_line or "(S5, P2, P3)" in pair_line
 
 
-def test_99bottles_andl(spark):
+def test_99bottles_andl(reference_tree, spark):
     """99bottles.andl: generated lyric lines ordered-folded into one
     text (seq + union + if() pluralization + fold(&) over -seq)."""
     sess = run_file(spark, SAMPLE / "99bottles.andl")
@@ -270,7 +270,7 @@ def _mandel_oracle():
     return iters, rows
 
 
-def test_mandelbrot_andl_matches_fluent(spark):
+def test_mandelbrot_andl_matches_fluent(reference_tree, spark):
     """mandelbrot.andl through the LANGUAGE, checked three ways: the
     decimal 64x21 grid, per-pixel escape counts, and the running-fold
     render — all against the independent pure-Python oracle above —
@@ -301,7 +301,7 @@ def test_mandelbrot_andl_matches_fluent(spark):
     assert fluent == expect and len(fluent) == 21
 
 
-def test_sudoku_andl_verbatim(spark):
+def test_sudoku_andl_verbatim(reference_tree, spark):
     """Sample/sudoku.andl end-to-end through the LANGUAGE: the digits/
     units generator whiles (driver-side decimal fixpoint with div/mod/
     text()), possu cross join, def showb/showunk do-block functions over
@@ -323,7 +323,7 @@ def test_sudoku_andl_verbatim(spark):
         assert band in sess.output[-1]
 
 
-def test_dbix_cd_sample_andl(setup_session):
+def test_dbix_cd_sample_andl(reference_tree, setup_session):
     """DbixCdSample.andl: ord()-generated keys, update-union loads, and
     query functions printing through the `output` console variable."""
     sess = setup_session.run_path(SAMPLE / "DbixCdSample.andl")
@@ -350,7 +350,7 @@ CLIENT = Path("/root/reference/Andl.Client")
 THRIFTSP = Path("/root/reference/ThriftSupplierPart")
 
 
-def test_thriftsupplierpart_andl_verbatim(spark):
+def test_thriftsupplierpart_andl_verbatim(reference_tree, spark):
     """ThriftSupplierPart/thriftsupplierpart.andl — the catalog the
     reference serves over Thrift — runs verbatim: relation-typed
     operator params (`s:Supplier`), `update` of a global relvar inside
@@ -376,7 +376,7 @@ def test_thriftsupplierpart_andl_verbatim(spark):
     assert sess.output[-1] == "n=5"
 
 
-def test_webspapi_setup_andl_verbatim(spark):
+def test_webspapi_setup_andl_verbatim(reference_tree, spark):
     """Andl.Client/WebSpApiSetup.andl (the Web-API CRUD catalog) runs
     verbatim, including the tquery-relation-parameter operator and the
     closing andl_operator() listing."""
@@ -391,7 +391,7 @@ def test_webspapi_setup_andl_verbatim(spark):
     assert sess.output[-1] == "hit=2"
 
 
-def test_supplier_setup_andl_verbatim(spark):
+def test_supplier_setup_andl_verbatim(reference_tree, spark):
     """Andl.Client/SupplierSetup.andl: CSV loads + andl_catalog, then
     the #stop directive ends the script."""
     sess = AndlSession(spark, CLIENT)
@@ -400,7 +400,7 @@ def test_supplier_setup_andl_verbatim(spark):
     assert sess.globals["SP"].df.count() == 12
 
 
-def test_thriftsupplierpart_idl_matches_reference(spark, tmp_path):
+def test_thriftsupplierpart_idl_matches_reference(reference_tree, spark, tmp_path):
     """CLI -t over thriftsupplierpart.andl reproduces the reference's
     OWN generated IDL surface (ThriftSupplierPart.thrift): every
     service function, with relation-typed params/returns as
@@ -447,7 +447,7 @@ def test_thriftsupplierpart_idl_matches_reference(spark, tmp_path):
     assert "number refresh(" in idl3
 
 
-def test_setup_suite_andl_standalone(spark, tmp_path):
+def test_setup_suite_andl_standalone(reference_tree, spark, tmp_path):
     """Test/SetupSuite.andl — the suites' shared test_true/start/finish
     library — loads STANDALONE (VERDICT r5 missing-inventory item 2):
     the counter semantics work (test_count/error_count mutate through

@@ -2,6 +2,7 @@
 and the Relation fluent API — mirroring reference suites
 (SuiteUpdateCat*, SuiteRelWhile, SuiteRelNest, SuiteRelFold)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from andl_spark import Relation
@@ -65,6 +66,29 @@ def test_while_squares(spark):
         lambda fr: fr.select((F.col("x") * 2).alias("x")).filter(F.col("x") <= 1000),
     )
     assert sorted(r[0] for r in out.collect()) == [2**i for i in range(10)]
+
+
+@pytest.mark.parametrize("n", [4, 5])
+def test_while_budget_counts_step_applications(spark, n):
+    """The fixpoint budget counts STEP APPLICATIONS, including the one
+    that finds the frontier empty (_run's stride-2 contract). A chain
+    closure needing n productive steps (0 → 1 → … → n) returns the
+    full closure at a budget of n + 1 and raises at n — for an odd and
+    an even n, so both arms of the stride-2 loop are pinned."""
+    seed = spark.createDataFrame([(0,)], "z long")
+    calls = []
+
+    def step(fr):
+        calls.append(1)
+        return fr.select((F.col("z") + 1).alias("z")).filter(F.col("z") <= n)
+
+    out = fixpoint(seed, step, max_iterations=n + 1)
+    assert sorted(r[0] for r in out.collect()) == list(range(n + 1))
+    assert len(calls) == n + 1
+    calls.clear()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        fixpoint(seed, step, max_iterations=n)
+    assert len(calls) == n
 
 
 def test_while_null_tuples_terminate(spark):

@@ -71,7 +71,8 @@ def test_ann_ivf_recall_vs_bruteforce(emb):
     # Random vectors are the worst case for a coarse quantizer too:
     # with nlist=8 cells, probing 4 covers half the corpus, and the
     # trained cells must still beat the 50% random floor.
-    approx = SS.topk_ivf(emb, queries, k=5, nlist=8, nprobe=4)
+    approx = SS.topk_ivf_det(emb, queries, k=5, nlist=8, nprobe=4,
+                             quantizer="trained")
     e = {(r["query_id"], r["cand_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["cand_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -79,9 +80,10 @@ def test_ann_ivf_recall_vs_bruteforce(emb):
 
 
 def test_ivf_assignment_partitions_corpus(emb):
-    cents = SS.train_centroids(emb, nlist=8, train_cap=500)
+    cents = SS.trained_centroids(emb, nlist=8, train_cap=500)
     assigned = emb.select(
-        F.element_at(SS.nearest_lists("embedding", cents, 1), 1).alias("list_id")
+        F.element_at(SS.nearest_lists_cosine("embedding", cents, 1), 1)
+        .alias("list_id")
     )
     counts = {r["list_id"]: r["n"] for r in assigned.groupBy("list_id").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert sum(counts.values()) == emb.count()  # total partition, no loss
@@ -431,6 +433,19 @@ def test_ivf_auto_scale_recall_at_sf1(spark):
                 f"auto-IVF recall {recall} ({tag}, quantize={quantize})"
 
 
+def _ivf_probe_np(corpus, queries, k, nprobe, cents):
+    """topk_ivf_det's probe with the numpy assignment forced at an
+    explicit centroid list: the shared candidate/query sides and probe
+    kernel, assignment by nearest_lists_np."""
+    dim = len(cents[0])
+    c = SS._cand_side(
+        corpus, "vec_id", "embedding", dim, "list_id",
+        lambda v, _n: F.element_at(SS._assign_expr(v, cents, 1, matmul=True), 1))
+    q = SS._query_side(queries, "vec_id", "embedding", dim).withColumn(
+        "list_id", F.explode(SS._assign_expr("qvec", cents, nprobe, matmul=True)))
+    return SS._probe_topk(q, c, "list_id", k, dim)
+
+
 def test_ivf_np_assignment_matches_expression_path(emb):
     """The large-nlist assignment (nearest_lists_np — one numpy matmul
     per Arrow batch) must agree with the literal-expression path on
@@ -442,8 +457,7 @@ def test_ivf_np_assignment_matches_expression_path(emb):
     queries = emb.filter(F.col("vec_id") < 10)
     expr_out = SS.topk_ivf_det(emb, queries, k=5, nlist=8, nprobe=4,
                                centroids=cents)
-    np_out = SS._topk_ivf_det_np(emb, queries, "vec_id", "embedding",
-                                 5, 4, cents)
+    np_out = _ivf_probe_np(emb, queries, 5, 4, cents)
     key = lambda df: sorted(  # noqa: E731
         (r["query_id"], r["cand_id"], r["rank"]) for r in df.collect())
     assert key(expr_out) == key(np_out)
@@ -471,11 +485,54 @@ def test_ivf_np_assignment_tolerates_null_vectors(spark):
     got = {r["vec_id"]: r["list_id"] for r in assigned.collect()}
     assert got[99] is None
     assert all(v is not None for k, v in got.items() if k != 99)
-    out = SS._topk_ivf_det_np(
+    out = _ivf_probe_np(
         emb.filter(F.col("vec_id") != 99).unionByName(
             emb.filter(F.col("vec_id") == 99)),
-        emb.filter(F.col("vec_id") < 3), "vec_id", "embedding", 3, 2, cents)
+        emb.filter(F.col("vec_id") < 3), 3, 2, cents)
     assert out.count() > 0  # job survives the dirty row
+
+
+def _index_topk(mode):
+    def run(spark, corpus, q, tmp_path):
+        from andl_spark.pipeline import annindex as AX
+
+        path = str(tmp_path / "ivf")
+        AX.build_ivf_index(corpus, path, nlist=4)
+        return AX.topk_ivf_index(spark, q, path, k=2, nprobe=2, mode=mode)
+    return run
+
+
+@pytest.mark.parametrize("run", [
+    lambda s, c, q, t: SS.topk_bruteforce(c, q, k=2),
+    lambda s, c, q, t: SS.topk_lsh(c, q, k=2, bits=4, dim=8),
+    lambda s, c, q, t: SS.topk_lsh(c, q, k=2, bits=4, dim=8, quantize=True),
+    lambda s, c, q, t: SS.topk_ivf_det(c, q, k=2, nlist=4, nprobe=2),
+    # auto-scale at nlist >= NP_ASSIGN_MIN_NLIST: numpy assignment
+    lambda s, c, q, t: SS.topk_ivf_det(c, q, k=2, nlist=None, nprobe=None,
+                                       corpus_count=10_000),
+    lambda s, c, q, t: SS.topk_ivf_det(c, q, k=2, nlist=4, nprobe=2,
+                                       quantize=True),
+    lambda s, c, q, t: SS.topk_ivf_hier(c, q, k=2, n1=2, n2=2, p1=1),
+    _index_topk("join"),
+    _index_topk("shared"),
+], ids=["bruteforce", "lsh", "lsh_quantized", "ivf_det", "ivf_det_numpy",
+        "ivf_det_quantized", "ivf_hier", "ivf_index_join", "ivf_index_shared"])
+def test_ann_tie_break_lower_cand_id_ranks_first(spark, tmp_path, run):
+    """Every ANN operator ranks by cosine desc, then cand_id asc: two
+    candidates with bitwise-equal cosine (identical vectors, 2× the
+    query's) take ranks 1 and 2 with the LOWER cand_id first."""
+    base = [float(j + 1) for j in range(8)]
+    rows = [(i, [((i * 5 + j * 3) % 11) - 4.5 for j in range(8)])
+            for i in range(80)]
+    rows[0] = (0, base)
+    for i in (17, 40):
+        rows[i] = (i, [2.0 * x for x in base])
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = corpus.filter(F.col("vec_id") == 0)
+    got = sorted((r["rank"], r["cand_id"], r["cosine"])
+                 for r in run(spark, corpus, q, tmp_path).collect())
+    assert [(r, c) for r, c, _ in got] == [(1, 17), (2, 40)]
+    assert got[0][2] == got[1][2]
 
 
 def test_dup_clusters_transitive_and_canonical(spark):
@@ -1065,7 +1122,8 @@ def test_ivf_np_gating_and_zero_norm_alignment(spark):
     """ADVICE r6: (1) an EXPLICIT nlist — however large — keeps the
     JVM literal-expression assignment (the documented
     topk_ivf_det_sql mirror); the numpy path engages only in the √N
-    auto-scale regime or under use_np=True. (2) Zero-norm vectors get
+    auto-scale regime, and the shared probe runs it whenever the numpy
+    assignment is passed in. (2) Zero-norm vectors get
     NaN cosine on BOTH assignment paths (no clamp-to-0 divergence):
     the two paths assign every vector, including a zero one,
     identically."""
@@ -1088,9 +1146,9 @@ def test_ivf_np_gating_and_zero_norm_alignment(spark):
     auto = SS.topk_ivf_det(emb, queries, k=3, nlist=None, nprobe=8,
                            corpus_count=10_000)
     assert X.plan_report(auto)["arrow_python"] > 0
-    # use_np=True forces it at explicit nlist
-    forced = SS.topk_ivf_det(emb, queries, k=3, nlist=64, nprobe=8,
-                             use_np=True)
+    # the shared probe with the numpy assignment at explicit nlist
+    forced = _ivf_probe_np(emb, queries, 3, 8,
+                           SS.seed_centroids(emb, nlist=64))
     assert X.plan_report(forced)["arrow_python"] > 0
 
     # zero-norm alignment: both assignment paths agree on EVERY vector

@@ -127,7 +127,8 @@ def test_ivf_assignment_shuffle_free(spark):
     emb = load_tables(spark, SF_SMOKE, register_views=False)["embeddings"]
     cents = [[float(i == j) for j in range(64)] for i in range(8)]  # fixed, no training
     assigned = emb.select(
-        "vec_id", F.element_at(SS.nearest_lists("embedding", cents, 1), 1).alias("list_id")
+        "vec_id",
+        F.element_at(SS.nearest_lists_cosine("embedding", cents, 1), 1).alias("list_id")
     )
     assert X.count_shuffles(assigned) == 0
     X.assert_no_python_row_udf(assigned)

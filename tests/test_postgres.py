@@ -38,7 +38,7 @@ def _free_port() -> int:
 
 
 @pytest.fixture(scope="module")
-def pg(spark):
+def pg(reference_tree, spark):
     if not (os.path.exists(f"{PG_BIN}/initdb") and os.path.exists(f"{PG_BIN}/pg_ctl")):
         pytest.skip("postgres binaries not installed")
     try:
@@ -86,7 +86,7 @@ def test_wire_protocol_types(pg):
         "bigint", "bigint", "double", "double", "string", "boolean", "string"]
 
 
-def test_restriction_and_projection_pushdown(spark, pg):
+def test_restriction_and_projection_pushdown(reference_tree, spark, pg):
     """chinook restriction + projection: the statement Postgres
     executes carries the WHERE and the pruned SELECT list, and only
     the reduced slice crosses the wire."""
@@ -102,7 +102,7 @@ def test_restriction_and_projection_pushdown(spark, pg):
     assert got == want and len(got) == 21  # Iron Maiden's albums
 
 
-def test_aggregate_pushdown_runs_in_postgres(spark, pg):
+def test_aggregate_pushdown_runs_in_postgres(reference_tree, spark, pg):
     """Full SqlGen aggregation parity: the GROUP BY executes inside
     PostgreSQL (result arrives already reduced — one row per artist,
     not 347 albums), matching the SQLite oracle."""
@@ -136,7 +136,7 @@ def test_partitioned_range_scan(spark, pg):
     assert '"AlbumId" >=' in sqls[-1] and "<" not in sqls[-1]
 
 
-def test_top_artists_via_postgres(spark, pg):
+def test_top_artists_via_postgres(reference_tree, spark, pg):
     """chinook.andl:25's headline through the Postgres backend: Albums
     pre-aggregated in the RDBMS, joined to the Artist dim in Spark
     (broadcast), same rows as the SQLite oracle."""

@@ -185,7 +185,7 @@ def test_keyed_routes_match_in_column_type(served):
     assert sorted(r[1] for r in rows) == ["B", "z"]
 
 
-def test_webspapi_crud_over_the_wire(served):
+def test_webspapi_crud_over_the_wire(reference_tree, served):
     """The reference's Andl.Client workflow end-to-end over HTTP
     (Andl.Client/Program.cs drives the WebSpApiSetup.andl CRUD
     operators via the Web API): load the setup script through
@@ -370,7 +370,7 @@ def test_cross_site_simple_request_is_rejected(served):
         assert json.loads(resp.read())["rows"] == [[1]]
 
 
-def test_script_save_list_reload_run(served):
+def test_script_save_list_reload_run(reference_tree, served):
     """VERDICT r4 item 7: Andl.Workbench script management — save a
     named script, list it, reload its source, run it, delete it. The
     store rides the catalog dir so scripts survive server restarts."""

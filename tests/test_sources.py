@@ -26,7 +26,7 @@ def test_read_csv_with_heading(spark, tmp_path):
     assert rows[0]["STATUS"] == 20.0 and rows[1]["CITY"] == "Paris"
 
 
-def test_reference_sample_csv_loads(spark):
+def test_reference_sample_csv_loads(reference_tree, spark):
     """The reference's own S.csv must load through our csv source."""
     df = read_csv(spark, "/root/reference/Test/S.csv", heading="{S#,SNAME,STATUS:number,CITY}")
     assert df.count() == 5

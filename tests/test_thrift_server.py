@@ -121,7 +121,7 @@ class _Client:
 
 
 @pytest.fixture(scope="module")
-def served(spark):
+def served(reference_tree, spark):
     sess = AndlSession(spark, THRIFTSP)
     sess.run_path(THRIFTSP / "thriftsupplierpart.andl")
     server = AndlThriftServer(sess).start()
