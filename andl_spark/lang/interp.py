@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import joins as _joins
+from ..operators.runfold import _ANDL_OPS, RUN_OPS, grouped_running
 from ..relation import Relation, _ANDL_TYPE
 from .parser import parse
 
@@ -1540,16 +1541,20 @@ class AndlSession:
         """Running folds and lag/lead/nth under .order() — window
         functions over the declared ordering.
 
-        With a %group key the windows partition by it — one shuffle,
-        scale-safe. WITHOUT one, a naive Window.orderBy() funnels the
-        whole relation through a single task (VERDICT r4 finding 2), so
-        the un-grouped case routes through the two-pass range-partition
-        scheme (_select_windowed_global) — the same offset-broadcast
-        prefix structure pipeline/pack.py uses — except for custom or
-        non-associative fold ops (def'd folds, '-', '/'), whose
-        sequential semantics cannot be split; those keep the
-        single-partition window, acceptable for the interpreter's
-        display-bound outputs."""
+        Every combinable running fold (+ * max min &) goes through the
+        two-pass scheme of operators/runfold.grouped_running
+        (_select_windowed_two_pass), grouped or not: a plain window
+        maps a %group to ONE task (a zipf-head group becomes a
+        straggler AQE can never split — VERDICT r5 finding 1), and
+        without a %group Window.orderBy() funnels the whole relation
+        through a single task (VERDICT r4 finding 2). The plain window
+        (_select_windowed_1p) remains for what has no two-pass form:
+        sequential fold ops (def'd folds, '-', '/') — single-partition
+        when un-grouped, acceptable for the interpreter's display-bound
+        outputs — and grouped lag/lead/nth/ord/ordg, whose frame
+        semantics are positional within the group; also for a %group
+        ordering with no order keys, whose in-group order is the
+        input order."""
         parts, orders = [], []
         order_spec = []
         for name, desc, grouped in order or []:
@@ -1558,25 +1563,13 @@ class AndlSession:
             else:
                 orders.append(F.col(name).desc() if desc else F.col(name))
                 order_spec.append((name, desc))
-        if not parts and not self._has_sequential_fold(binds):
-            return self._select_windowed_global(
-                df, order_spec, star, keeps, binds, env)
-        if (
-            parts
-            and order_spec
-            and any(_contains(a, "fold") for _, a in binds)
-            and not self._has_sequential_fold(binds)
+        if not self._has_sequential_fold(binds) and (not parts or (
+            order_spec
             and not any(_contains_call(a, _WINDOW_FNS) for _, a in binds)
-        ):
-            # grouped running folds, all combinable, no sequential window
-            # functions → the skew-robust two-pass scheme (r6 auto-
-            # dispatch; VERDICT r5 finding 1). lag/lead/nth/ord/ordg stay
-            # on the plain window: their frame semantics are positional.
-            return self._select_windowed_grouped(
+        )):
+            return self._select_windowed_two_pass(
                 df, parts, order_spec, star, keeps, binds, env)
         return self._select_windowed_1p(df, parts, orders, star, keeps, binds, env)
-
-    _TWO_PASS_FOLDS = {"+", "*", "max", "min", "&"}
 
     def _has_sequential_fold(self, binds) -> bool:
         """True when any fold op lacks a two-pass combine (def'd folds,
@@ -1585,7 +1578,7 @@ class AndlSession:
 
         def scan(op, val_ast):
             nonlocal found
-            if op not in self._TWO_PASS_FOLDS:
+            if op not in _ANDL_OPS:
                 found = True
             return ("fold", op, val_ast)
 
@@ -1593,112 +1586,52 @@ class AndlSession:
             _map_folds(ast, scan)
         return found
 
-    #: Andl fold op → operators/runfold.RUN_OPS key (the combinable set)
-    _RUNFOLD_OPS = {"+": "sum", "*": "product", "max": "max",
-                    "min": "min", "&": "concat"}
+    def _select_windowed_two_pass(self, df, parts, order_spec, star, keeps,
+                                  binds, env):
+        """Combinable running folds via operators/runfold.grouped_running
+        — range-slice the (group, order) space, local prefixes per
+        slice, offsets combined over the tiny per-slice partials — so
+        no task ever owns a whole group, or the whole relation when
+        there is no %group. Row-identical to the plain window
+        (SuiteRelOrder pins it; tests/test_lang.py pins the values
+        against the plain window and the plan for the absence of a
+        single-partition or bare-group data window).
 
-    def _select_windowed_grouped(self, df, parts, order_spec, star, keeps,
-                                 binds, env):
-        """Grouped running folds via the two-pass range-slice scheme.
-
-        ``Window.partitionBy(group)`` maps a group to ONE task, so a
-        zipf-head key (one customer owning 30% of orders — measured
-        3.1× degradation in the r5 skew rehearsal) funnels the whole
-        hot group through a single straggler that AQE can never split
-        (it splits skewed joins, not windows). Every fold reaching this
-        path is combinable (+ * max min &), so we route through
-        operators/runfold.grouped_running: range-slice the
-        (group, order) space, local prefixes per slice, offsets
-        combined over the tiny per-slice partials — row-identical
-        output (SuiteRelOrder pins it; tests/test_lang.py asserts the
-        plan has no data-sized window partitioned by the bare group)."""
-        from ..operators.runfold import grouped_running
-
+        Un-grouped, a monotonic id is the last order key (it also makes
+        ties deterministic), and ord()/lag/lead/nth read the kernel's
+        global ordinal: ord() is that ordinal 0-based, lag/lead become
+        equi-joins on ordinal ± k (a shuffle on a unique long key, never
+        a one-task sort) and nth a broadcast of the k-th row. ordg() is
+        0: the group is the whole ordered input. Grouped, only running
+        folds reach here (see _select_windowed)."""
         out_cols = self._output_heading(df, star, keeps, binds)
-        ctx = _Ctx(self, df, env)
-        fold_specs: list[tuple[str, str, Column]] = []
-
-        def repl_fold(op, val_ast):
-            name = f"__gf{len(fold_specs)}"
-            fold_specs.append((name, op, self._compile(val_ast, ctx)))
-            return ("_col", F.col(name))
-
-        out_binds = [(n, _map_folds(a, repl_fold)) for n, a in binds]
         okeys = [
             F.col(n).desc() if desc else F.col(n) for n, desc in order_spec
         ]
-        folds = {
-            n: (self._RUNFOLD_OPS[op], val) for n, op, val in fold_specs
-        }
-        cur = grouped_running(df, parts, okeys, folds)
-        ctx_out = _Ctx(self, cur, env)
-        exprs = {n: self._compile(a, ctx_out) for n, a in out_binds}
-        cols = [exprs[c].alias(c) if c in exprs else F.col(c) for c in out_cols]
-        return cur.select(*cols).dropDuplicates()
-
-    def _select_windowed_global(self, df, order_spec, star, keeps, binds, env):
-        """Un-grouped .order() without a single-partition window
-        (VERDICT r4 item 5) — the two-pass range-partition scheme:
-
-        1. range-partition on the order keys (+ a monotonic-id
-           tiebreak, which also makes ties deterministic), so partition
-           p holds the p-th slice of the total order;
-        2. compute ordinals and running folds LOCALLY per partition
-           (one sort, whole-stage codegen);
-        3. per-partition totals — row count and each fold's last local
-           prefix — collect to the driver (numPartitions rows, bounded
-           by spark.sql.shuffle.partitions), prefix-combine there, and
-           broadcast back as per-partition offsets;
-        4. global value = local prefix ⊕ offset; lag/lead/nth become
-           equi-joins on the global ordinal (shuffle on a unique long
-           key — never a one-task sort).
-
-        The result is row-identical to the single-partition window
-        (SuiteRelOrder pins it), and the plan contains no partition-less
-        Window node (tests/test_lang.py asserts)."""
-        out_cols = self._output_heading(df, star, keeps, binds)
-        spark = df.sparkSession
-        try:  # "auto" under AQE auto-optimized shuffle (ADVICE r5)
-            nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            nparts = spark.sparkContext.defaultParallelism
-        skeys = [
-            F.col(n).desc() if desc else F.col(n).asc()
-            for n, desc in order_spec
-        ] + [F.col("__mono").asc()]
-        base = (
-            df.withColumn("__mono", F.monotonically_increasing_id())
-            .repartitionByRange(nparts, *skeys)
-            .withColumn("__pid", F.spark_partition_id())
-        )
-        wl = Window.partitionBy("__pid").orderBy(*skeys)
-        frame_l = wl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        base = base.withColumn("__lrn", F.row_number().over(wl))
-        ctx = _Ctx(self, base, env)
-
-        fold_specs: list[tuple[str, str, Column]] = []  # (genname, op, val)
+        if not parts:
+            df = df.withColumn("__mono", F.monotonically_increasing_id())
+            okeys.append(F.col("__mono"))
+        ctx = _Ctx(self, df, env)
+        folds: dict[str, tuple[str, Column]] = {}
         shift_specs: list[tuple[str, Column, int, object, int]] = []
         nth_specs: list[tuple[str, Column, int, object]] = []
         need_ord = False
 
         def repl_fold(op, val_ast):
-            val = self._compile(val_ast, ctx)
-            name = f"__wf{len(fold_specs)}"
-            fold_specs.append((name, op, val))
+            name = f"__wf{len(folds)}"
+            folds[name] = (_ANDL_OPS[op], self._compile(val_ast, ctx))
             return ("_col", F.col(name))
 
         def repl_win(fname, args):
             nonlocal need_ord
+            if fname == "ordg":
+                return ("_col", F.lit(0.0))
             need_ord = True
             if fname == "ord":
                 return ("_col", F.col("__gord"))
-            if fname == "ordg":
-                # no %group: the group is the whole ordered input,
-                # whose first row has ordinal 0
-                return ("_col", F.lit(0.0))
             val = self._compile(args[0], ctx)
             k = int(_as_number(self.eval(args[1], env)))
-            dtype = base.select(val.alias("__t")).schema.fields[0].dataType
+            dtype = df.select(val.alias("__t")).schema.fields[0].dataType
             default = _dtype_default(dtype)
             if fname == "nth":  # k is 0-based (SuiteRelOrder nth(A0,3))
                 name = f"__wn{len(nth_specs)}"
@@ -1715,80 +1648,20 @@ class AndlSession:
             ast = _map_calls(ast, _WINDOW_FNS, repl_win)
             out_binds.append((name, ast))
 
-        # local prefixes per fold (ONE window spec — single local sort)
-        cur = base
-        for name, op, val in fold_specs:
-            if op == "+":
-                lp = F.sum(val).over(frame_l)
-            elif op == "*":
-                lp = F.product(val).over(frame_l)
-            elif op == "max":
-                lp = F.max(val).over(frame_l)
-            elif op == "min":
-                lp = F.min(val).over(frame_l)
-            else:  # '&' — collect_list over an ordered frame keeps order
-                lp = F.concat_ws("", F.collect_list(val).over(frame_l))
-            cur = cur.withColumn(f"__lp_{name}", lp)
-
-        # per-partition totals -> driver prefix-combine -> offsets
-        aggs = [F.max("__lrn").alias("__n")] + [
-            F.max_by(f"__lp_{name}", "__lrn").alias(f"__t_{name}")
-            for name, _, _ in fold_specs
-        ]
-        partials_df = cur.groupBy("__pid").agg(*aggs)
-        partials = sorted(partials_df.collect(), key=lambda r: r["__pid"])
-        off_fields = [
-            T.StructField("__pid", T.IntegerType()),
-            T.StructField("__cnt_off", T.LongType()),
-        ]
-        ptypes = {f.name: f.dataType for f in partials_df.schema.fields}
-        for name, _, _ in fold_specs:
-            off_fields.append(
-                T.StructField(f"__off_{name}", ptypes[f"__t_{name}"]))
-        rows, cnt = [], 0
-        acc: dict[str, object] = {name: None for name, _, _ in fold_specs}
-        for p in partials:
-            rows.append(
-                (p["__pid"], cnt)
-                + tuple(acc[name] for name, _, _ in fold_specs))
-            cnt += p["__n"]
-            for name, op, _ in fold_specs:
-                t = p[f"__t_{name}"]
-                a = acc[name]
-                if a is None:
-                    acc[name] = t
-                elif t is not None:
-                    acc[name] = (
-                        a + t if op == "+" else
-                        a * t if op == "*" else
-                        max(a, t) if op == "max" else
-                        min(a, t) if op == "min" else
-                        a + t)  # '&': string concat
-        offsets = spark.createDataFrame(rows, T.StructType(off_fields))
-        cur = cur.join(F.broadcast(offsets), "__pid", "left")
-        cur = cur.withColumn(
-            "__gord",
-            (F.col("__lrn") - 1 + F.coalesce("__cnt_off", F.lit(0)))
-            .cast("double"))
-        for name, op, _ in fold_specs:
-            lp, off = F.col(f"__lp_{name}"), F.col(f"__off_{name}")
-            if op == "+":
-                c = lp + F.coalesce(off, F.lit(0))
-            elif op == "*":
-                c = lp * F.coalesce(off, F.lit(1))
-            elif op == "max":
-                c = F.greatest(lp, off)  # greatest/least skip NULLs
-            elif op == "min":
-                c = F.least(lp, off)
-            else:
-                c = F.concat(F.coalesce(off, F.lit("")), lp)
-            cur = cur.withColumn(name, c)
+        cur = grouped_running(df, parts, okeys, folds,
+                              ordinal="__gord" if need_ord else None)
+        if need_ord:
+            cur = cur.withColumn("__gord", (F.col("__gord") - 1).cast("double"))
         for name, val, k, default, sign in shift_specs:
+            # __h marks a matched row: a NULL value there stays NULL,
+            # only a shift past either end takes the default (F.lag)
             shifted = cur.select(
                 (F.col("__gord") + sign * k).alias("__gord"),
-                val.alias(f"__v_{name}"))
+                val.alias(f"__v_{name}"), F.lit(True).alias(f"__h_{name}"))
             cur = cur.join(shifted, "__gord", "left").withColumn(
-                name, F.coalesce(f"__v_{name}", F.lit(default)))
+                name,
+                F.when(F.col(f"__h_{name}"), F.col(f"__v_{name}"))
+                .otherwise(F.lit(default)))
         for name, val, k, default in nth_specs:
             kth = (
                 cur.filter(F.col("__gord") == k)
@@ -1803,9 +1676,10 @@ class AndlSession:
         return cur.select(*cols).dropDuplicates()
 
     def _select_windowed_1p(self, df, parts, orders, star, keeps, binds, env):
-        """Window-exec path: partitioned by the %group keys when
-        present; single-partition only for the sequential-fold
-        fallback (see _select_windowed)."""
+        """Plain window path for what the two-pass kernel cannot
+        compute (see _select_windowed): partitioned by the %group keys
+        when present; single-partition only for un-grouped sequential
+        folds."""
         out_cols = self._output_heading(df, star, keeps, binds)
         # ord()/ordg() need the global input ordinal (DataRow.cs:252:
         # ord = row's position in the ordered input, 0-based; ordg = the
@@ -1837,16 +1711,8 @@ class AndlSession:
 
         def repl_fold(op, val_ast):
             val = self._compile(val_ast, ctx)
-            if op == "+":
-                c = F.sum(val).over(frame)
-            elif op == "*":
-                c = F.product(val).over(frame)
-            elif op == "max":
-                c = F.max(val).over(frame)
-            elif op == "min":
-                c = F.min(val).over(frame)
-            elif op == "&":
-                c = F.concat_ws("", F.collect_list(val).over(frame))
+            if op in _ANDL_OPS:
+                c = RUN_OPS[_ANDL_OPS[op]][0](val, frame)
             else:
                 styp = self._static_type(val_ast, ctx)
                 seed, step = self._fold_seed_step(op, styp, ctx)

@@ -1,4 +1,4 @@
-"""Skew-robust grouped running folds (ord/running-total family at scale).
+"""Skew-robust running folds (ord/running-total family at scale).
 
 Andl's ``.order(%group)`` running folds (Sample/sample5.andl:27-44;
 Runtime/OrderedIndex.cs accumulators) compile naturally to
@@ -9,12 +9,13 @@ a fact table (one customer with 30% of all orders), the whole hot
 group funnels through a single task — q_window_running degraded 3.1×
 on the skewed sf1 variant while every join in the suite stayed flat
 under AQE skew handling, because AQE can split a skewed JOIN partition
-but can never split a WINDOW partition (the frame is sequential).
+but can never split a WINDOW partition (the frame is sequential). An
+un-grouped ``.order()`` is the extreme case: ``Window.orderBy(keys)``
+has no partition spec at all, so every row funnels through ONE task.
 
-This module is the escape hatch: the same two-pass
-range-partition + offset-combine scheme ``pipeline/pack.py`` and the
-language front-end's un-grouped ``.order()`` already use, generalized
-to per-GROUP running folds so a hot group is spread across many tasks:
+This module is the one escape hatch for both: a two-pass
+range-partition + offset-combine scheme that spreads the (group, order)
+space across many tasks:
 
 1. ``repartitionByRange(N, groups…, order…)`` — the total order of
    (group, order-key) is cut into N contiguous slices, so a hot group
@@ -34,45 +35,68 @@ to per-GROUP running folds so a hot group is spread across many tasks:
    and global value = local prefix ⊕ group offset (⊕-identity when the
    group starts in this partition).
 
+With ``groups=[]`` (un-grouped ``.order()``) steps 1, 2 and 4 are
+unchanged, but step 3 runs on the driver: a window over the partials
+would have no partition spec (a one-task window, which the plan pins in
+plans/explain.global_windows reject), so the ≤ N partial rows are
+collected, prefix-combined in partition order with each op's driver
+combine, and broadcast back as per-partition offsets. That collect is
+the one eager job of the un-grouped form.
+
 Only combinable folds are supported (sum, count/ordinal, min, max,
 product, ordered concat — the reference's fold(+ * max min &)
 surface); sequential folds (user-defined, ``-``/``/``) have no
 two-pass combine and must stay on the single-partition-per-group
-window. lang/interp.py auto-dispatches grouped running folds here
-whenever every fold is combinable and no lag/lead/nth/ord/ordg is
-present (r6; VERDICT r5 finding 1). lag/lead/nth across slice
-boundaries are derivable as equi-joins on the emitted group ordinal
-(``<ordinal> - k``), exactly as lang/interp.py does for the un-grouped
-case.
+window. lang/interp.py dispatches every running fold here whenever
+all its folds are combinable — grouped or not — except grouped
+lag/lead/nth/ord/ordg, which stay on the plain partitioned window.
+lag/lead/nth across slice boundaries are derivable as equi-joins on
+the emitted ordinal (``<ordinal> - k``), which is how lang/interp.py
+compiles them for the un-grouped case.
 
-Result rows are identical to the plain grouped window whenever the
-order keys are unique per group (tests/test_runfold.py pins this on
-the zipf-head distribution itself); with duplicate order keys both
-plans are frame-nondeterministic in the same way.
+pipeline/pack.chunk_sequences keeps its own prefix sum on purpose: it
+has one unique id key, so it can cut data-derived buckets (a pure
+function of the id) that a recomputation after executor loss
+reproduces exactly — the ``localCheckpoint`` pin below does not
+survive executor loss.
+
+Result rows are identical to the plain window (partitioned by the
+groups, or single-partition when there are none) whenever the order
+keys are unique per group (tests/test_runfold.py pins this on the
+zipf-head distribution itself); with duplicate order keys both plans
+are frame-nondeterministic in the same way.
 """
 
 from __future__ import annotations
 
+import decimal
+import operator
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = ["grouped_running", "RUN_OPS"]
 
 #: op → (local(col, frame) running prefix,
 #:       combine(partial_col, prefix_window) over the tiny partials,
-#:       merge(local, offset))
+#:       merge(local, offset),
+#:       driver combine(acc, partial) for ``groups=[]``)
 #
 # Merges must be NULL-SKIPPING to stay row-identical to the plain
-# grouped window: F.sum/F.product over a window skip NULL inputs, so a
-# row whose local slice-prefix is all-NULL has loc=NULL and the plain
+# window: F.sum/F.product over a window skip NULL inputs, so a row
+# whose local slice-prefix is all-NULL has loc=NULL and the plain
 # window would return the prior-slice value — coalesce(loc⊕off, loc,
 # off) reproduces that (⊕ of two non-nulls, else whichever side
-# exists, else NULL). least/greatest already skip NULLs natively.
+# exists, else NULL). least/greatest already skip NULLs natively. The
+# driver combines see only non-NULL operands (_driver_offsets skips
+# NULL partials the way the partials window does).
 RUN_OPS = {
     "sum": (
         lambda c, fr: F.sum(c).over(fr),
         lambda p, wq: F.sum(p).over(wq),
         lambda loc, off: F.coalesce(loc + off, loc, off),
+        operator.add,
     ),
     "min": (
         lambda c, fr: F.min(c).over(fr),
@@ -80,16 +104,19 @@ RUN_OPS = {
         # least/greatest skip NULLs, so a missing offset (group starts
         # in this slice) leaves the local prefix untouched
         lambda loc, off: F.least(loc, off),
+        min,
     ),
     "max": (
         lambda c, fr: F.max(c).over(fr),
         lambda p, wq: F.max(p).over(wq),
         lambda loc, off: F.greatest(loc, off),
+        max,
     ),
     "product": (
         lambda c, fr: F.product(c).over(fr),
         lambda p, wq: F.product(p).over(wq),
         lambda loc, off: F.coalesce(loc * off, loc, off),
+        operator.mul,
     ),
     "count": (
         lambda c, fr: F.count(c).over(fr),
@@ -97,18 +124,24 @@ RUN_OPS = {
         # count is never NULL locally; offset NULL only for the first
         # slice of a group
         lambda loc, off: loc + F.coalesce(off, F.lit(0)),
+        operator.add,
     ),
     # Andl fold(&, s) — ordered text concat. Associative, so it two-pass
-    # combines: collect_list over an ordered frame preserves frame order
-    # (same property lang/interp.py's un-grouped scheme relies on);
+    # combines: collect_list over an ordered frame preserves frame order;
     # partials concatenate in __pid order; earlier-slice offset prefixes
     # the local value. Null semantics match concat_ws (nulls skipped).
     "concat": (
         lambda c, fr: F.concat_ws("", F.collect_list(c).over(fr)),
         lambda p, wq: F.concat_ws("", F.collect_list(p).over(wq)),
         lambda loc, off: F.concat(F.coalesce(off, F.lit("")), loc),
+        operator.add,
     ),
 }
+
+#: Andl fold(op, …) symbol → RUN_OPS key: the combinable folds. Every
+#: other Andl fold op (def'd, '-', '/') is sequential.
+_ANDL_OPS = {"+": "sum", "*": "product", "max": "max", "min": "min",
+             "&": "concat"}
 
 
 def grouped_running(
@@ -123,9 +156,11 @@ def grouped_running(
     """Running folds per group, skew-robust.
 
     ``folds`` maps output column name → ``(op, value column)`` with op
-    in ``RUN_OPS``. ``ordinal`` optionally names an output column for
-    the 1-based within-group row number (Andl ``ord()`` under
-    ``%group``). Order keys should be unique per group for
+    in ``RUN_OPS``. ``groups`` may be empty: the folds then run over
+    the whole ordered input, and one eager job collects the per-slice
+    partials (module docstring). ``ordinal`` optionally names an output
+    column for the 1-based within-group row number (Andl ``ord()``
+    under ``%group``). Order keys should be unique per group for
     deterministic frames (same contract as the plain window).
     """
     bad = [op for op, _ in folds.values() if op not in RUN_OPS]
@@ -156,7 +191,8 @@ def grouped_running(
         # the offset join silently combines mismatched slices. The lazy
         # localCheckpoint truncates both subtrees onto ONE materialized
         # RDD: boundaries are sampled exactly once, __pid is consistent
-        # by construction, and nothing runs until the caller acts.
+        # by construction, and (grouped) nothing runs until the caller
+        # acts.
         #
         # Trade-off (reviewed r8): localCheckpoint blocks are pinned to
         # executors, so an executor loss mid-query fails the query
@@ -186,20 +222,23 @@ def grouped_running(
             for name in folds
         ],
     )
-    wq = (
-        Window.partitionBy(*groups)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = partials.select(
-        "__pid",
-        *groups,
-        F.sum("__n").over(wq).alias("__rn_off"),
-        *[
-            RUN_OPS[op][1](f"__t_{name}", wq).alias(f"__off_{name}")
-            for name, (op, _) in folds.items()
-        ],
-    )
+    if groups:
+        wq = (
+            Window.partitionBy(*groups)
+            .orderBy("__pid")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        offs = partials.select(
+            "__pid",
+            *groups,
+            F.sum("__n").over(wq).alias("__rn_off"),
+            *[
+                RUN_OPS[op][1](f"__t_{name}", wq).alias(f"__off_{name}")
+                for name, (op, _) in folds.items()
+            ],
+        )
+    else:
+        offs = F.broadcast(_driver_offsets(partials, folds))
 
     joined = cur.join(offs, on=["__pid", *groups], how="inner")
     sel = [F.col(c) for c in out_cols]
@@ -215,3 +254,34 @@ def grouped_running(
             .alias(name)
         )
     return joined.select(*sel)
+
+
+def _driver_offsets(
+    partials: DataFrame, folds: dict[str, tuple[str, str | Column]]
+) -> DataFrame:
+    """``groups=[]`` step 3: collect the ≤ nparts per-slice partials,
+    prefix-combine them on the driver in partition order and return the
+    per-slice offsets (``__pid``, ``__rn_off``, ``__off_<name>``) as a
+    local relation. NULL partials are skipped and the first slice's
+    offsets are NULL, exactly as the grouped partials window yields."""
+    schema = T.StructType(
+        [partials.schema["__pid"], T.StructField("__rn_off", T.LongType())]
+        + [
+            T.StructField(f"__off_{name}", partials.schema[f"__t_{name}"].dataType)
+            for name in folds
+        ]
+    )
+    rows, n = [], 0
+    acc: dict[str, object] = dict.fromkeys(folds)
+    # decimal sums stay exact up to twice Spark's 38-digit precision
+    with decimal.localcontext() as ctx:
+        ctx.prec = 76
+        for p in sorted(partials.collect(), key=lambda r: r["__pid"]):
+            rows.append((p["__pid"], n, *acc.values()))
+            n += p["__n"]
+            for name, (op, _) in folds.items():
+                t = p[f"__t_{name}"]
+                if t is not None:
+                    a = acc[name]
+                    acc[name] = t if a is None else RUN_OPS[op][3](a, t)
+    return partials.sparkSession.createDataFrame(rows, schema)

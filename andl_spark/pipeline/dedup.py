@@ -347,6 +347,43 @@ def _fanout_guard(
     return engaged
 
 
+def _anchored(
+    side: DataFrame, keys: list[str], order_col: str, what: str,
+    anchor_degree: int | None, auto_bound: int | None,
+    stats_out: dict | None,
+    probe: DataFrame | None = None, weight: float = 1.0,
+) -> DataFrame:
+    """The pair ops' anchor decision, in one place. ``anchor_degree``
+    <= 0 keeps exact semantics with no guard, None runs
+    :func:`_fanout_guard` over ``side`` (against ``probe`` for an
+    incremental probe×corpus join), anything else is explicit. The
+    decision is recorded in :data:`FANOUT_STATS` and ``stats_out``;
+    when anchors engage, ``side`` keeps only each bucket's
+    ``anchor_degree`` smallest ``order_col`` rows (its ``keys``
+    partitioning is the pair join's key, so the rank and the join share
+    one exchange)."""
+    if anchor_degree is not None and anchor_degree <= 0:
+        _record_fanout(what, None, "exact", stats_out)
+        return side
+    if anchor_degree is None:
+        anchor_degree = _fanout_guard(
+            side.select(*keys), keys, what, bound=auto_bound,
+            probe=None if probe is None else probe.select(*keys),
+            weight=weight, stats_out=stats_out)
+        if anchor_degree is None:
+            return side
+    else:
+        _record_fanout(what, anchor_degree, "explicit", stats_out)
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(order_col)
+    return (
+        side.withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") <= anchor_degree)
+        .drop("__rk")
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str,
@@ -385,30 +422,9 @@ def lsh_candidate_pairs(
     signature Pandas UDF runs once for the estimate and once per join
     side."""
     exploded = _band_buckets(signatures, id_col, num_bands, rows_per_band)
-    if anchor_degree is not None and anchor_degree <= 0:
-        anchor_degree = None  # explicit "no anchors, no guard"
-        _record_fanout("minhash lsh_candidate_pairs", None, "exact",
-                       stats_out)
-    elif anchor_degree is None:
-        anchor_degree = _fanout_guard(
-            exploded, ["band", "bucket"], "minhash lsh_candidate_pairs",
-            bound=auto_bound, stats_out=stats_out)
-    else:
-        _record_fanout("minhash lsh_candidate_pairs", anchor_degree,
-                       "explicit", stats_out)
-    left = exploded
-    if anchor_degree is not None:
-        from pyspark.sql import Window
-
-        # the window's (band,bucket) partitioning is the join key, so
-        # the rank and the join share one exchange
-        w = Window.partitionBy("band", "bucket").orderBy(id_col)
-        left = (
-            exploded.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= anchor_degree)
-            .drop("__rk")
-        )
-    a = left.alias("a")
+    a = _anchored(exploded, ["band", "bucket"], id_col,
+                  "minhash lsh_candidate_pairs", anchor_degree, auto_bound,
+                  stats_out).alias("a")
     # shuffle_hash hint: both sides of an LSH self-join are corpus-sized;
     # letting AQE broadcast one side rebuilds the whole signature
     # pipeline in a single-threaded broadcast-build stage (measured 10s
@@ -739,29 +755,11 @@ def simhash_near_pairs(
     e = signatures.select(id_col, "sh_lo", "sh_hi", F.explode(chunks).alias("c")).select(
         id_col, "sh_lo", "sh_hi", "c.chunk", "c.val"
     )
-    if anchor_degree is not None and anchor_degree <= 0:
-        anchor_degree = None  # explicit "no anchors, no guard"
-        _record_fanout("simhash_near_pairs", None, "exact", stats_out)
-    elif anchor_degree is None:
-        # fan-out auto-guard (r6): estimate candidates before the pair
-        # join; at sf10 dup density the exact chunk join OOMs a 128 GiB
-        # heap — engage anchors (logged) instead of crashing
-        anchor_degree = _fanout_guard(e, ["chunk", "val"],
-                                      "simhash_near_pairs", bound=auto_bound,
-                                      stats_out=stats_out)
-    else:
-        _record_fanout("simhash_near_pairs", anchor_degree, "explicit",
-                       stats_out)
-    left = e
-    if anchor_degree is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("chunk", "val").orderBy(id_col)
-        left = (
-            e.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= anchor_degree)
-            .drop("__rk")
-        )
+    # fan-out auto-guard (r6): estimate candidates before the pair
+    # join; at sf10 dup density the exact chunk join OOMs a 128 GiB
+    # heap — engage anchors (logged) instead of crashing
+    left = _anchored(e, ["chunk", "val"], id_col, "simhash_near_pairs",
+                     anchor_degree, auto_bound, stats_out)
     a, b = left.alias("a"), e.alias("b").hint("shuffle_hash")
     hamming = (
         F.bit_count(F.col("a.sh_lo").bitwiseXOR(F.col("b.sh_lo")))
@@ -1007,38 +1005,17 @@ def embedding_dup_pairs(
         e = v.select("id", "vec", "nrm", F.explode(tables).alias("tb")).select(
             "id", "vec", "nrm", "tb.tbl", "tb.bucket"
         )
-        if anchor_degree is not None and anchor_degree <= 0:
-            anchor_degree = None  # explicit "no anchors, no guard"
-            _record_fanout("embedding_dup_pairs", None, "exact", stats_out)
-        elif anchor_degree is None:
-            # fan-out auto-guard (r7): the estimate is ONE extra map
-            # pass over the corpus (the buckets derive from the
-            # vectors, so the scan itself is not avoided — only the
-            # wide shuffle is, via the (tbl,bucket) projection). That
-            # pass is the guard's price: deliberately NOT persisted —
-            # at the 100 TB scale this op targets, caching the corpus
-            # to save one scan would spill the whole table to executor
-            # disks, costing more than the scan (cf. simhash, whose
-            # 16-byte signatures ARE cheap to cache)
-            anchor_degree = _fanout_guard(
-                e.select("tbl", "bucket"), ["tbl", "bucket"],
-                "embedding_dup_pairs", bound=auto_bound,
-                weight=max(1.0, dim / 8), stats_out=stats_out)
-        else:
-            _record_fanout("embedding_dup_pairs", anchor_degree,
-                           "explicit", stats_out)
-        left = e
-        if anchor_degree is not None:
-            from pyspark.sql import Window
-
-            # the window's (tbl,bucket) partitioning is the join key,
-            # so the rank and the join share one exchange
-            w = Window.partitionBy("tbl", "bucket").orderBy("id")
-            left = (
-                e.withColumn("__rk", F.row_number().over(w))
-                .filter(F.col("__rk") <= anchor_degree)
-                .drop("__rk")
-            )
+        # fan-out auto-guard (r7): the estimate is ONE extra map pass
+        # over the corpus (the buckets derive from the vectors, so the
+        # scan itself is not avoided — only the wide shuffle is, via
+        # the (tbl,bucket) projection). That pass is the guard's price:
+        # deliberately NOT persisted — at the 100 TB scale this op
+        # targets, caching the corpus to save one scan would spill the
+        # whole table to executor disks, costing more than the scan
+        # (cf. simhash, whose 16-byte signatures ARE cheap to cache)
+        left = _anchored(e, ["tbl", "bucket"], "id", "embedding_dup_pairs",
+                         anchor_degree, auto_bound, stats_out,
+                         weight=max(1.0, dim / 8))
         # corpus-sized both sides: shuffle-hash, never AQE-broadcast
         a, b = left.alias("a"), e.alias("b").hint("shuffle_hash")
         cos = _cos("a.vec", "b.vec", "a.nrm", "b.nrm")
@@ -1227,26 +1204,9 @@ def minhash_against_index(
     )
     new_b = _band_buckets(new_sigs, id_col, num_bands, rows_per_band)
     all_b = _band_buckets(all_sigs, id_col, num_bands, rows_per_band)
-    if anchor_degree is not None and anchor_degree <= 0:
-        anchor_degree = None  # explicit "no anchors, no guard"
-        _record_fanout("minhash_against_index", None, "exact", stats_out)
-    elif anchor_degree is None:
-        anchor_degree = _fanout_guard(
-            all_b.select("band", "bucket"), ["band", "bucket"],
-            "minhash_against_index", bound=auto_bound,
-            probe=new_b.select("band", "bucket"), stats_out=stats_out)
-    else:
-        _record_fanout("minhash_against_index", anchor_degree, "explicit",
-                       stats_out)
-    if anchor_degree is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bucket").orderBy(id_col)
-        all_b = (
-            all_b.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= anchor_degree)
-            .drop("__rk")
-        )
+    all_b = _anchored(all_b, ["band", "bucket"], id_col,
+                      "minhash_against_index", anchor_degree, auto_bound,
+                      stats_out, probe=new_b)
     a = new_b.alias("a")
     b = all_b.alias("b").hint("shuffle_hash")
     pairs = (
@@ -1297,26 +1257,9 @@ def simhash_against_index(
         ).select(id_col, "sh_lo", "sh_hi", "c.chunk", "c.val")
 
     new_e, all_e = _explode(new_sigs), _explode(all_sigs)
-    if anchor_degree is not None and anchor_degree <= 0:
-        anchor_degree = None  # explicit "no anchors, no guard"
-        _record_fanout("simhash_against_index", None, "exact", stats_out)
-    elif anchor_degree is None:
-        anchor_degree = _fanout_guard(
-            all_e.select("chunk", "val"), ["chunk", "val"],
-            "simhash_against_index", bound=auto_bound,
-            probe=new_e.select("chunk", "val"), stats_out=stats_out)
-    else:
-        _record_fanout("simhash_against_index", anchor_degree, "explicit",
-                       stats_out)
-    if anchor_degree is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("chunk", "val").orderBy(id_col)
-        all_e = (
-            all_e.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= anchor_degree)
-            .drop("__rk")
-        )
+    all_e = _anchored(all_e, ["chunk", "val"], id_col,
+                      "simhash_against_index", anchor_degree, auto_bound,
+                      stats_out, probe=new_e)
     a, b = new_e.alias("a"), all_e.alias("b").hint("shuffle_hash")
     hamming = (
         F.bit_count(F.col("a.sh_lo").bitwiseXOR(F.col("b.sh_lo")))
@@ -1441,31 +1384,13 @@ def embedding_dup_against_index(
 
     corpus_side = _explode(all_index)
     new_e = _explode(new_index)
-    if anchor_degree is not None and anchor_degree <= 0:
-        anchor_degree = None  # explicit "no anchors, no guard"
-        _record_fanout("embedding_dup_against_index", None, "exact",
-                       stats_out)
-    elif anchor_degree is None:
-        # fan-out auto-guard (r7): probe×corpus estimate on the slim
-        # (tbl,bucket) projections; the corpus side's bucket counts
-        # come from the PERSISTED index — no vector re-hash
-        anchor_degree = _fanout_guard(
-            corpus_side.select("tbl", "bucket"), ["tbl", "bucket"],
-            "embedding_dup_against_index", bound=auto_bound,
-            probe=new_e.select("tbl", "bucket"),
-            weight=max(1.0, (dim or 8) / 8), stats_out=stats_out)
-    else:
-        _record_fanout("embedding_dup_against_index", anchor_degree,
-                       "explicit", stats_out)
-    if anchor_degree is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("tbl", "bucket").orderBy("id")
-        corpus_side = (
-            corpus_side.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= anchor_degree)
-            .drop("__rk")
-        )
+    # fan-out auto-guard (r7): probe×corpus estimate on the slim
+    # (tbl,bucket) projections; the corpus side's bucket counts come
+    # from the PERSISTED index — no vector re-hash
+    corpus_side = _anchored(
+        corpus_side, ["tbl", "bucket"], "id", "embedding_dup_against_index",
+        anchor_degree, auto_bound, stats_out, probe=new_e,
+        weight=max(1.0, (dim or 8) / 8))
     a = new_e.alias("a")
     b = corpus_side.alias("b").hint("shuffle_hash")
     cos = (F.expr(_hof_dot_sql("a.vec", "b.vec"))

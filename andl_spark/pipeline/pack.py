@@ -60,7 +60,7 @@ def chunk_sequences(
 
     Scale: two-pass prefix sum — no global window. The range bucket
     ``__pid`` is a PURE FUNCTION of the id (approxQuantile boundaries
-    collected once as literals), never ``spark_partition_id()``: the
+    collected once as literals), never the physical partition id: the
     physical range partitioner samples with job-dependent seeds, so two
     jobs over the same lineage may not agree on its boundaries — a
     partition-id-based formulation silently corrupts offsets exactly

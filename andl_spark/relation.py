@@ -96,13 +96,6 @@ class Relation:
         """Aggregation with no keys → single-tuple relation."""
         return Relation(self.df.agg(*[e.alias(n) for n, e in aggs.items()]))
 
-    #: declarative running-fold op aliases → operators/runfold.RUN_OPS key
-    _RUN_ALIASES = {
-        "+": "sum", "sum": "sum", "*": "product", "product": "product",
-        "max": "max", "min": "min", "count": "count",
-        "&": "concat", "concat": "concat",
-    }
-
     def ordered(
         self,
         by: list[str | Column],
@@ -139,16 +132,19 @@ class Relation:
             for c in by
         ]
 
-        def _decl(v):
-            return v == "ord" or (
-                isinstance(v, tuple) and len(v) == 2
-                and v[0] in self._RUN_ALIASES)
+        from .operators.runfold import _ANDL_OPS, RUN_OPS
 
-        if group and exprs and all(_decl(v) for v in exprs.values()):
+        def _run_op(v):
+            """RUN_OPS key of a declarative ``(op, col)`` fold, else None."""
+            if isinstance(v, tuple) and len(v) == 2:
+                return v[0] if v[0] in RUN_OPS else _ANDL_OPS.get(v[0])
+            return None
+
+        if group and exprs and all(
+                v == "ord" or _run_op(v) for v in exprs.values()):
             ordinal = next((n for n, v in exprs.items() if v == "ord"), None)
             folds = {
-                n: (self._RUN_ALIASES[v[0]], v[1])
-                for n, v in exprs.items() if v != "ord"
+                n: (_run_op(v), v[1]) for n, v in exprs.items() if v != "ord"
             }
             return self.running(group, order_cols, folds, ordinal=ordinal)
 
@@ -158,12 +154,10 @@ class Relation:
         def _mk(v):
             if v == "ord":
                 return F.row_number().over(w).cast("long")
-            if isinstance(v, tuple) and len(v) == 2 and v[0] in self._RUN_ALIASES:
+            op = _run_op(v)
+            if op:
                 # one source of truth for op → running expression:
                 # RUN_OPS[op][0] is the (col, frame) local-prefix builder
-                from .operators.runfold import RUN_OPS
-
-                op = self._RUN_ALIASES[v[0]]
                 col = F.col(v[1]) if isinstance(v[1], str) else v[1]
                 return RUN_OPS[op][0](col, frame)
             return v(w)

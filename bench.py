@@ -6,11 +6,6 @@ Default (driver) mode prints ONE JSON line:
 
 Modes:
   python bench.py              one timed pass per query (driver contract)
-  python bench.py --warm       per-query warm-up + 3 timed runs, report
-                               the MEDIAN (the truthful plan comparison:
-                               BASELINE.md documents ±40% single-shot
-                               noise on this container); adds
-                               "mode": "warm" and per-query "runs"
   python bench.py --reps N     ADDITIVE (r12, REPRO.md): run the whole
                                suite loop N times INTERLEAVED (pass 1 of
                                every query, then pass 2, ...), report
@@ -24,15 +19,13 @@ Modes:
                                per-query "runs". Default mode is
                                untouched: --reps 1 == the driver
                                single-shot, byte-for-byte.
-  python bench.py --compare [BENCH_rN.json] [--anchors r1|r5]
+  python bench.py --compare [BENCH_rN.json]
                                no Spark: read a bench result (default =
                                highest-numbered BENCH_r*.json), print
                                the per-query ratio table and the 2×-gate
-                               verdict mechanically. Default anchors are
-                               the r5 warm medians (every timed query
-                               anchored); --anchors r1 applies the
-                               historical round-1 gate with BASELINE.md's
-                               name mapping.
+                               verdict mechanically against the r10
+                               warm medians (R10_ANCHOR, every timed
+                               query anchored).
 """
 
 from __future__ import annotations
@@ -40,7 +33,6 @@ from __future__ import annotations
 import glob
 import json
 import os
-import statistics
 import sys
 import time
 
@@ -76,235 +68,13 @@ HEADLINE = [
 ]
 
 # ---------------------------------------------------------------------
-# BASELINE.md "Reference times (round 1)" as data: current suite name →
-# r1 anchor seconds (merged anchors summed per the mapping table there).
-# Queries in ANCHORLESS are timed but excluded from the mapped-total
-# ratio (new operators with no r1 measurement).
-# ---------------------------------------------------------------------
-R1_ANCHOR: dict[str, float] = {
-    "q1_pricing_summary": 1.442,
-    "q3_shipping_priority": 2.445,
-    "q5_local_supplier": 1.647,
-    "q10_returned_items": 1.011,
-    "q14_promo_revenue": 0.498,
-    "q18_large_orders": 0.953,
-    "q_text_quality": 0.625,        # r1 q_repetition_filter
-    "q_top_ngrams": 2.057,
-    "q_agg_fold": 0.321,
-    "q_topk_orders": 0.702,         # r1 q_window_grouped (same plan)
-    "q_window_running": 0.295,
-    "q_rdivide": 0.977,
-    "q_image_agg": 0.352,
-    "q_while_closure": 4.921,
-    "q_nest_unnest": 0.873,
-    "q_clean_corpus": 1.019,
-    "q_train_split": 0.390,
-    "q_corpus_profile": 0.666,      # r1 q_corpus_stats + q_source_mixture
-    "q_dedup_exact": 0.190,
-    "q_token_count": 0.145,
-    "q_lang_id": 0.258,
-    "q_ngram_jaccard": 2.493,
-    "q_ann_bruteforce": 1.424,
-    "q_dedup_minhash_prod": 4.052,  # r1 q_dedup_minhash (fast-hash impl)
-    "q_dedup_simhash_prod": 1.922,  # r1 q_dedup_simhash (lossy 4-chunk cfg)
-    "q_ann_ivf": 5.597,
-    "q_ann_lsh": 2.041,
-    "q_events_window": 1.023,       # r1 q_events_window + q_events_sliding
-    "q_events_session": 0.821,
-}
-ANCHORLESS = {"q_asof_join", "q_decontaminate", "q_pii_scrub"}
-
-# ---------------------------------------------------------------------
-# r5 anchors (VERDICT r5 item 8): the round-5 WARM MEDIANS
-# (BENCH_WARM_r05.json, sf0.1) published as the standing anchor set —
-# every timed query has an explicit anchor, including the r3 ops that
-# had none in r1. r1 anchors stay above for history
-# (``--anchors r1``). NOTE the calibration difference: driver
-# BENCH_rN.json numbers are SINGLE-SHOT (first-run planning included),
-# warm anchors are medians-after-warm-up — single-shot totals run
-# ~1.2× the warm total on this container (r5: 36.7s single-shot vs
-# 30.2s warm), which the 2× gate absorbs; like-for-like comparisons
-# use ``bench.py --warm`` output.
-# ---------------------------------------------------------------------
-R5_ANCHOR: dict[str, float] = {
-    "q1_pricing_summary": 0.593,
-    "q3_shipping_priority": 1.047,
-    "q5_local_supplier": 1.340,
-    "q10_returned_items": 0.760,
-    "q14_promo_revenue": 0.400,
-    "q18_large_orders": 0.727,
-    "q_text_quality": 0.285,
-    "q_top_ngrams": 0.765,
-    "q_agg_fold": 0.266,
-    "q_topk_orders": 0.412,
-    "q_window_running": 0.219,
-    "q_rdivide": 0.616,
-    "q_image_agg": 0.298,
-    "q_while_closure": 3.662,
-    "q_nest_unnest": 0.528,
-    "q_clean_corpus": 0.692,
-    "q_train_split": 0.221,
-    "q_corpus_profile": 0.327,
-    "q_asof_join": 0.336,
-    "q_decontaminate": 1.292,
-    "q_pii_scrub": 0.372,
-    "q_dedup_exact": 0.188,
-    "q_token_count": 0.152,
-    "q_lang_id": 0.279,
-    "q_ngram_jaccard": 3.103,
-    "q_ann_bruteforce": 1.095,
-    "q_ann_ivf": 2.383,
-    "q_ann_lsh": 1.691,
-    "q_events_window": 0.636,
-    "q_events_session": 0.617,
-    "q_dedup_minhash_prod": 2.844,
-    "q_dedup_simhash_prod": 2.058,
-    # r6 warm median (BENCH_WARM_r06.json) — q_dedup_spans landed in
-    # r6, so its anchor joins the standing set one round later
-    # (VERDICT r6 item 8)
-    "q_dedup_spans": 2.186,
-}
-
-# ---------------------------------------------------------------------
-# r7 anchors (VERDICT r7 item 7): the round-7 warm medians
-# (BENCH_WARM_r07.json, sf0.1) as the standing default — two rounds of
-# drift against the r5 set had widened the noise window a real
-# regression could hide in. r1/r5 stay above for history. The one
-# known-noisy row is q_top_ngrams (1.048 here vs 0.765 in r5): three
-# idle-machine r8 warm runs measured 0.705/0.913/0.703 — the r7 value
-# was container variance, triaged in BASELINE.md.
-# ---------------------------------------------------------------------
-R7_ANCHOR: dict[str, float] = {
-    "q1_pricing_summary": 0.620,
-    "q3_shipping_priority": 1.198,
-    "q5_local_supplier": 1.581,
-    "q10_returned_items": 0.846,
-    "q14_promo_revenue": 0.444,
-    "q18_large_orders": 0.780,
-    "q_text_quality": 0.347,
-    "q_top_ngrams": 1.048,
-    "q_agg_fold": 0.271,
-    "q_topk_orders": 0.408,
-    "q_window_running": 0.222,
-    "q_rdivide": 0.657,
-    "q_image_agg": 0.302,
-    "q_while_closure": 3.580,
-    "q_nest_unnest": 0.390,
-    "q_clean_corpus": 0.645,
-    "q_train_split": 0.238,
-    "q_corpus_profile": 0.341,
-    "q_asof_join": 0.385,
-    "q_decontaminate": 1.348,
-    "q_pii_scrub": 0.418,
-    "q_dedup_exact": 0.197,
-    "q_token_count": 0.180,
-    "q_lang_id": 0.268,
-    "q_ngram_jaccard": 2.102,
-    "q_ann_bruteforce": 0.834,
-    "q_dedup_spans": 2.106,
-    "q_ann_ivf": 2.353,
-    "q_ann_lsh": 1.284,
-    "q_events_window": 0.346,
-    "q_events_session": 0.390,
-    "q_dedup_minhash_prod": 2.396,
-    "q_dedup_simhash_prod": 2.349,
-}
-
-# ---------------------------------------------------------------------
-# r8 anchors (VERDICT r8 item 8): the round-8 warm medians
-# (BENCH_WARM_r08.json, sf0.1) — the best warm suite of any round,
-# taken idle, adopted as the standing default so drift detection keeps
-# a truthful reference (BENCH_r08's 1.81x single-shot reading was pure
-# container load; the idle re-run measured 0.93x). r1/r5/r7 stay above
-# for history.
-# ---------------------------------------------------------------------
-R8_ANCHOR: dict[str, float] = {
-    "q1_pricing_summary": 0.452,
-    "q3_shipping_priority": 0.821,
-    "q5_local_supplier": 1.315,
-    "q10_returned_items": 0.776,
-    "q14_promo_revenue": 0.318,
-    "q18_large_orders": 0.608,
-    "q_text_quality": 0.233,
-    "q_top_ngrams": 0.724,
-    "q_agg_fold": 0.203,
-    "q_topk_orders": 0.381,
-    "q_window_running": 0.163,
-    "q_rdivide": 0.503,
-    "q_image_agg": 0.235,
-    "q_while_closure": 3.055,
-    "q_nest_unnest": 0.422,
-    "q_clean_corpus": 0.553,
-    "q_train_split": 0.198,
-    "q_corpus_profile": 0.250,
-    "q_asof_join": 0.237,
-    "q_decontaminate": 1.106,
-    "q_pii_scrub": 0.310,
-    "q_dedup_exact": 0.128,
-    "q_token_count": 0.123,
-    "q_lang_id": 0.209,
-    "q_ngram_jaccard": 2.098,
-    "q_ann_bruteforce": 0.657,
-    "q_dedup_spans": 1.979,
-    "q_ann_ivf": 1.751,
-    "q_ann_lsh": 1.022,
-    "q_events_window": 0.279,
-    "q_events_session": 0.391,
-    "q_dedup_minhash_prod": 1.958,
-    "q_dedup_simhash_prod": 1.850,
-}
-
-# ---------------------------------------------------------------------
-# r9 anchors (VERDICT r9 item 7): the round-9 idle warm suite
-# (BENCH_WARM_r09.json, sf0.1, load 0.18) adopted as the standing
-# default so the drift reference stays CURRENT — 1.109× the r8 warm
-# anchors overall, inside the container's documented ±40% per-query
-# swing, with none of the r9 code changes on these queries' paths.
-# r1/r5/r7/r8 stay above for history.
-# ---------------------------------------------------------------------
-R9_ANCHOR: dict[str, float] = {
-    "q1_pricing_summary": 0.532,
-    "q3_shipping_priority": 0.905,
-    "q5_local_supplier": 1.142,
-    "q10_returned_items": 0.688,
-    "q14_promo_revenue": 0.378,
-    "q18_large_orders": 0.633,
-    "q_text_quality": 0.267,
-    "q_top_ngrams": 0.667,
-    "q_agg_fold": 0.243,
-    "q_topk_orders": 0.384,
-    "q_window_running": 0.232,
-    "q_rdivide": 0.596,
-    "q_image_agg": 0.249,
-    "q_while_closure": 3.831,
-    "q_nest_unnest": 0.438,
-    "q_clean_corpus": 0.61,
-    "q_train_split": 0.234,
-    "q_corpus_profile": 0.336,
-    "q_asof_join": 0.305,
-    "q_decontaminate": 1.052,
-    "q_pii_scrub": 0.306,
-    "q_dedup_exact": 0.162,
-    "q_token_count": 0.121,
-    "q_lang_id": 0.225,
-    "q_ngram_jaccard": 2.454,
-    "q_ann_bruteforce": 0.718,
-    "q_dedup_spans": 1.932,
-    "q_ann_ivf": 1.761,
-    "q_ann_lsh": 1.163,
-    "q_events_window": 0.325,
-    "q_events_session": 0.415,
-    "q_dedup_minhash_prod": 2.514,
-    "q_dedup_simhash_prod": 2.256,
-}
-
-# ---------------------------------------------------------------------
 # r10 anchors (VERDICT r10 item 7): the round-10 idle warm suite
 # (BENCH_WARM_r10.json, sf0.1, load <0.1 — the first warm suite to
 # land UNDER its own anchors at 0.978×) adopted as the standing
 # default. Worst r10 row was q_decontaminate 1.469 s (1.40× its r9
 # anchor) — container variance on a path untouched since r3, carried
-# as measured. r1/r5/r7/r8/r9 stay above for history.
+# as measured. The only gate; the earlier r1/r5/r7/r8/r9 sets are in
+# git history and BASELINE.md.
 # ---------------------------------------------------------------------
 R10_ANCHOR: dict[str, float] = {
     "q1_pricing_summary": 0.492,
@@ -341,17 +111,7 @@ R10_ANCHOR: dict[str, float] = {
     "q_dedup_minhash_prod": 2.427,
     "q_dedup_simhash_prod": 2.357,
 }
-
-#: anchor-set registry: name → (anchors, queries timed-but-unanchored)
-ANCHOR_SETS: dict[str, tuple[dict[str, float], set[str]]] = {
-    "r1": (R1_ANCHOR, ANCHORLESS | {"q_dedup_spans"}),
-    "r5": (R5_ANCHOR, set()),
-    "r7": (R7_ANCHOR, set()),
-    "r8": (R8_ANCHOR, set()),
-    "r9": (R9_ANCHOR, set()),
-    "r10": (R10_ANCHOR, set()),
-}
-DEFAULT_ANCHORS = "r10"
+DEFAULT_ANCHORS = "r10"  # the name R10_ANCHOR reports under
 GATE = 2.0  # BASELINE.json: mapped total must stay within 2× of anchors
 
 
@@ -379,7 +139,7 @@ def _headline():
     return list(dict.fromkeys(names))
 
 
-def run_bench(warm: bool = False, reps: int = 1) -> dict:
+def run_bench(reps: int = 1) -> dict:
     from andl_spark.session import get_spark, load_tables
     from andl_spark import workload
 
@@ -415,19 +175,14 @@ def run_bench(warm: bool = False, reps: int = 1) -> dict:
             # the oracle-parity declaration (see _headline's dedup note)
             fn = workload.BENCH_EXTRA.get(name) or workload.QUERIES.get(name)
             samples = runs.setdefault(name, [])
-            n = 0
-            n_runs = 4 if warm else 1  # warm: first run is the warm-up
-            for i in range(n_runs):
-                t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                n = df.count()  # forces full execution; results stay distributed
-                samples.append(round(time.perf_counter() - t0, 3))
-            timed = samples[1:] if warm else samples
-            times[name] = round(
-                min(timed) if reps > 1 else statistics.median(timed), 3)
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            n = df.count()  # forces full execution; results stay distributed
+            samples.append(round(time.perf_counter() - t0, 3))
+            times[name] = min(samples)
             if p == max(1, reps) - 1:
                 print(f"# {name}: {times[name]}s ({n} rows)"
-                      + (f" runs={samples}" if (warm or reps > 1) else ""),
+                      + (f" runs={samples}" if reps > 1 else ""),
                       file=sys.stderr)
 
     out = {
@@ -437,10 +192,7 @@ def run_bench(warm: bool = False, reps: int = 1) -> dict:
         "queries": times,
         "sf": sf,
     }
-    if warm:
-        out["mode"] = "warm"
-        out["runs"] = runs
-    elif reps > 1:
+    if reps > 1:
         out["mode"] = "reps"
         out["reps"] = reps
         out["runs"] = runs
@@ -469,39 +221,35 @@ def load_bench(path: str | None) -> dict:
     return doc
 
 
-def compare(doc: dict, anchors: str = DEFAULT_ANCHORS) -> dict:
-    """Per-query ratios vs the chosen anchor set + the 2× gate verdict.
-    Default anchors: r5 warm medians (every timed query anchored);
-    ``anchors='r1'`` keeps the historical round-1 gate."""
-    anchor_map, anchorless = ANCHOR_SETS[anchors]
+def compare(doc: dict) -> dict:
+    """Per-query ratios vs the r10 anchors + the 2× gate verdict."""
     qs: dict[str, float] = doc["queries"]
     rows = []
     mapped_now = mapped_anchor = 0.0
     for name, sec in qs.items():
-        anchor = anchor_map.get(name)
+        anchor = R10_ANCHOR.get(name)
         if anchor is None:
-            rows.append((name, sec, None, None,
-                         "new" if name in anchorless else "unmapped"))
+            rows.append((name, sec, None, None, "unmapped"))
             continue
         mapped_now += sec
         mapped_anchor += anchor
         rows.append((name, sec, anchor, round(sec / anchor, 2), ""))
     ratio = round(mapped_now / mapped_anchor, 3) if mapped_anchor else None
-    # the r5/r7/r8 anchors are WARM medians; a single-shot doc carries
-    # the documented ~1.2x warm->single-shot calibration on top of any
+    # the anchors are WARM medians; a single-shot doc carries the
+    # documented ~1.2x warm->single-shot calibration on top of any
     # container load (BASELINE.md) — surface the mismatch mechanically
     # so a loaded single-shot reading is triaged from the output alone
     mode_note = None
-    if anchors != "r1" and doc.get("mode") != "warm":
+    if doc.get("mode") not in ("warm", "reps"):
         mode_note = (
             "NOTE: single-shot doc vs WARM anchors — the documented "
             "~1.2x single-shot calibration (plus any container load) "
-            "applies; the like-for-like gate is a bench.py --warm run "
-            "on an idle box (BASELINE.md)")
+            "applies; the like-for-like gate is a bench.py --reps N run "
+            "(REPRO.md)")
     return {
         "bench": doc.get("_path"),
         "sf": doc.get("sf"),
-        "anchors": anchors,
+        "anchors": DEFAULT_ANCHORS,
         "rows": rows,
         "mapped_total": round(mapped_now, 3),
         "mapped_r1_total": round(mapped_anchor, 3),
@@ -509,7 +257,7 @@ def compare(doc: dict, anchors: str = DEFAULT_ANCHORS) -> dict:
         "gate": GATE,
         "gate_pass": ratio is not None and ratio <= GATE,
         "unanchored_total": round(
-            sum(s for n, s in qs.items() if n not in anchor_map), 3),
+            sum(s for n, s in qs.items() if n not in R10_ANCHOR), 3),
         "mode_note": mode_note,
     }
 
@@ -536,19 +284,12 @@ def print_compare(res: dict) -> None:
 def main() -> None:
     args = sys.argv[1:]
     if args and args[0] == "--compare":
-        anchors = DEFAULT_ANCHORS
-        if "--anchors" in args:
-            anchors = args[args.index("--anchors") + 1]
-        rest = [a for a in args[1:] if not a.startswith("--")
-                and a != anchors]
-        res = compare(load_bench(rest[0] if rest else None), anchors=anchors)
+        rest = [a for a in args[1:] if not a.startswith("--")]
+        res = compare(load_bench(rest[0] if rest else None))
         print_compare(res)
         sys.exit(0 if res["gate_pass"] else 1)
-    warm = "--warm" in args
     reps = int(args[args.index("--reps") + 1]) if "--reps" in args else 1
-    if warm and reps > 1:
-        raise SystemExit("--warm and --reps are mutually exclusive")
-    print(json.dumps(run_bench(warm=warm, reps=reps)))
+    print(json.dumps(run_bench(reps=reps)))
 
 
 if __name__ == "__main__":

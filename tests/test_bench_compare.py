@@ -1,7 +1,6 @@
 """The mechanical baseline gate (bench.py --compare, VERDICT r3 item
-8): the r1→r3 name mapping that previously lived in BASELINE.md prose
-is now data (bench.R1_ANCHOR) and the per-query ratio table + 2×-gate
-verdict are computed, not argued. No Spark needed."""
+8): the anchors are data (bench.R10_ANCHOR) and the per-query ratio
+table + 2×-gate verdict are computed, not argued. No Spark needed."""
 
 import json
 import os
@@ -11,17 +10,10 @@ import bench
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_anchor_table_matches_baseline_md_total():
-    # BASELINE.md's r1 total is 41.785 including the retired
-    # q_join_natural (0.625); the mapped anchors must sum to the rest.
-    assert round(sum(bench.R1_ANCHOR.values()) + 0.625, 3) == 41.785
-
-
 def test_r10_anchor_set_is_the_default_gate():
     """VERDICT r10 item 7: the standing default anchors are the r10
     idle warm suite (BENCH_WARM_r10.json — the first to land UNDER its
-    own anchors at 0.978×); r1/r5/r7/r8/r9 stay available for
-    history."""
+    own anchors at 0.978×)."""
     doc10 = bench.load_bench(os.path.join(REPO, "BENCH_WARM_r10.json"))
     assert bench.DEFAULT_ANCHORS == "r10"
     assert set(doc10["queries"]) == set(bench.R10_ANCHOR)
@@ -33,67 +25,6 @@ def test_r10_anchor_set_is_the_default_gate():
     assert res["anchors"] == "r10" and res["gate_pass"]
     assert abs(res["ratio"] - 1.0) < 1e-6
     assert res["unanchored_total"] == 0
-    # the r9 set remains intact for history (and was the r10 gate)
-    doc9 = bench.load_bench(os.path.join(REPO, "BENCH_WARM_r09.json"))
-    res9 = bench.compare(doc9, anchors="r9")
-    assert res9["gate_pass"] and abs(res9["ratio"] - 1.0) < 1e-6
-    res109 = bench.compare(doc10, anchors="r9")
-    assert res109["gate_pass"] and abs(res109["ratio"] - 0.978) < 0.005
-    doc8 = bench.load_bench(os.path.join(REPO, "BENCH_WARM_r08.json"))
-    res8 = bench.compare(doc8, anchors="r8")
-    assert res8["gate_pass"] and abs(res8["ratio"] - 1.0) < 1e-6
-    res98 = bench.compare(doc9, anchors="r8")
-    assert res98["gate_pass"] and abs(res98["ratio"] - 1.109) < 0.005
-    doc7 = bench.load_bench(os.path.join(REPO, "BENCH_WARM_r07.json"))
-    res7 = bench.compare(doc7, anchors="r7")
-    assert res7["gate_pass"] and abs(res7["ratio"] - 1.0) < 1e-6
-
-
-def test_r5_anchor_set_covers_every_timed_query():
-    """VERDICT r5 item 8 (history): the r5 anchors are the r5 warm
-    medians and every timed headline query has an explicit anchor — no
-    prose name map, no unanchored ops."""
-    doc = bench.load_bench(os.path.join(REPO, "BENCH_WARM_r05.json"))
-    # q_dedup_spans landed in r6; its anchor (the r6 warm median) joins
-    # the standing set one round later (VERDICT r6 item 8)
-    assert set(doc["queries"]) | {"q_dedup_spans"} == set(bench.R5_ANCHOR)
-    # the anchors ARE those warm medians
-    for k, v in bench.R5_ANCHOR.items():
-        if k == "q_dedup_spans":
-            continue
-        assert abs(doc["queries"][k] - v) < 1e-9, k
-    doc6 = bench.load_bench(os.path.join(REPO, "BENCH_WARM_r06.json"))
-    assert abs(doc6["queries"]["q_dedup_spans"]
-               - bench.R5_ANCHOR["q_dedup_spans"]) < 1e-9
-    # r6 self-comparison vs the r5 anchors: q_dedup_spans gets a
-    # RATIO, not a "new" row (VERDICT r6 item 8)
-    res = bench.compare(doc6, anchors="r5")
-    assert res["anchors"] == "r5" and res["gate_pass"]
-    assert res["unanchored_total"] == 0
-    by_name = {r[0]: r for r in res["rows"]}
-    assert by_name["q_dedup_spans"][4] != "new"
-    res = bench.compare(doc, anchors="r5")
-    assert res["gate_pass"] and abs(res["ratio"] - 1.0) < 0.05
-    assert res["unanchored_total"] == 0
-    # the r5 single-shot suite lands at the documented ~1.2x warm-vs-
-    # single-shot calibration, comfortably inside the 2x gate
-    res5 = bench.compare(bench.load_bench(os.path.join(REPO, "BENCH_r05.json")),
-                         anchors="r5")
-    assert res5["gate_pass"] and 1.0 < res5["ratio"] < 1.5
-
-
-def test_compare_r3_reproduces_judge_ratio():
-    doc = bench.load_bench(os.path.join(REPO, "BENCH_r03.json"))
-    res = bench.compare(doc, anchors="r1")
-    # VERDICT r3: "0.91 on the name-mapped subset" — now mechanical
-    assert res["gate_pass"] and abs(res["ratio"] - 0.914) < 0.005
-    by_name = {r[0]: r for r in res["rows"]}
-    assert by_name["q_dedup_simhash_prod"][3] == 1.88  # the one to watch
-    assert by_name["q_asof_join"][4] == "new"          # unanchored, excluded
-    # every anchored row contributes to both sides of the ratio
-    anchored = [r for r in res["rows"] if r[2] is not None]
-    assert res["mapped_total"] == round(sum(r[1] for r in anchored), 3)
-    assert res["mapped_r1_total"] == round(sum(r[2] for r in anchored), 3)
 
 
 def test_compare_accepts_raw_bench_line(tmp_path):
@@ -102,9 +33,6 @@ def test_compare_accepts_raw_bench_line(tmp_path):
     p.write_text(json.dumps({
         "metric": "x", "value": 9.9, "unit": "sec", "sf": 0.1,
         "queries": {"q1_pricing_summary": 9.9}}))
-    res = bench.compare(bench.load_bench(str(p)), anchors="r1")
-    assert not res["gate_pass"]  # 9.9 / 1.442 = 6.9x > 2x
-    assert res["rows"][0][3] == round(9.9 / 1.442, 2)
     res10 = bench.compare(bench.load_bench(str(p)))  # default r10 anchors
     assert not res10["gate_pass"]
     assert res10["rows"][0][3] == round(

@@ -370,3 +370,72 @@ def test_grouped_running_fold_dispatches_two_pass(spark):
     assert len(a) == len(b) == 20_000
     for ra, rb in zip(a, b):
         assert ra[:2] == rb[:2] and ra[2] == pytest.approx(rb[2], rel=1e-12)
+
+
+def test_order_running_folds_match_plain_window(spark):
+    """Interpreter .order() running folds and lag/lead/nth/ord equal the
+    plain window — single-partition un-grouped, partitioned by the group
+    when grouped — with more shuffle slices than input partitions, a
+    permuted order key, and a NULL stretch long enough that some range
+    slice starts with NULL values (the merge must inherit the earlier
+    slices' total, as the plain window's NULL-skipping fold does). Each
+    output's plan has no partition-less Window."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from andl_spark.lang.interp import RelV
+    from andl_spark.plans.explain import global_windows
+    from andl_spark.relation import Relation
+
+    n = 20_000
+    seq = F.pmod(F.col("id") * 7919, F.lit(n))  # unique, not input order
+    letter = F.substring(F.lit("abcdefghij"),
+                         (F.pmod(seq / 997, F.lit(10)) + 1).cast("int"), 1)
+    z = spark.range(0, n, 1, 8).select(
+        seq.cast("double").alias("SEQ"),
+        F.pmod(seq, F.lit(3)).cast("double").alias("G"),
+        F.when((seq >= 8_000) & (seq < 9_500), F.lit(None))
+        .otherwise(F.pmod("id", F.lit(97)) - 40).cast("double").alias("X"),
+        F.when(F.pmod(seq, F.lit(997)) == 0, letter).alias("T"),
+    )
+    sess = AndlSession(spark)
+    sess.globals["Z"] = RelV(Relation(z))
+    conf = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, "16")
+    try:
+        sess.run(
+            "u := Z .order(SEQ) .select{ SEQ, s := fold(+,X),"
+            " c := fold(&,T), hi := fold(max,X), lo := fold(min,X),"
+            " o := ord(), p := lag(X,1), nx := lead(X,1), t := nth(X,3) }\n"
+            "g := Z .order(%G, SEQ) .select{ G, SEQ, s := fold(+,X) }\n")
+        u, g = sess.globals["u"].df, sess.globals["g"].df
+        assert global_windows(u) == [] and global_windows(g) == []
+        got_u = sorted(map(tuple, u.select(
+            "SEQ", "s", "c", "hi", "lo", "o", "p", "nx", "t").collect()))
+        got_g = sorted(map(tuple, g.select("G", "SEQ", "s").collect()))
+    finally:
+        spark.conf.set(conf, prior)
+
+    w = Window.orderBy("SEQ")
+    fr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    want_u = sorted(map(tuple, z.select(
+        "SEQ",
+        F.sum("X").over(fr),
+        F.concat_ws("", F.collect_list("T").over(fr)),
+        F.max("X").over(fr),
+        F.min("X").over(fr),
+        (F.row_number().over(w) - 1).cast("double"),
+        F.lag("X", 1, 0.0).over(w),
+        F.lead("X", 1, 0.0).over(w),
+        F.coalesce(F.nth_value("X", 4).over(full), F.lit(0.0)),
+    ).collect()))
+    wg = Window.partitionBy("G").orderBy("SEQ").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
+    want_g = sorted(map(tuple, z.select(
+        "G", "SEQ", F.sum("X").over(wg)).collect()))
+    assert len(got_u) == len(want_u) == n
+    bad = [(a, b) for a, b in zip(got_u, want_u) if a != b]
+    assert not bad, (len(bad), bad[:3])
+    assert got_g == want_g

@@ -238,3 +238,47 @@ def test_relation_running_equals_ordered(spark):
     assert len(a) == len(b) == 3_000
     for ra, rb in zip(a, b):
         assert ra[:4] == rb[:4] and ra[4] == pytest.approx(rb[4], rel=1e-12)
+
+
+def test_ungrouped_matches_single_partition_window(spark):
+    """groups=[]: the partials are prefix-combined on the driver (a
+    window over them would be partition-less); values equal the
+    single-partition window for every op, across NULL-only slices, and
+    the plan has no partition-less Window."""
+    from andl_spark.plans.explain import global_windows
+
+    df = spark.range(0, 4_000, 1, 4).select(
+        F.pmod(F.col("id") * 7, F.lit(4_000)).alias("seq"),
+        F.when(F.pmod("id", F.lit(1500)) < 700,
+               F.pmod("id", F.lit(3)).cast("double") + 1.0).alias("x"),
+        F.when(F.pmod("id", F.lit(499)) == 0, F.lit("ab")).alias("s"),
+    )
+    got = grouped_running(
+        df, [], ["seq"],
+        {"run_sum": ("sum", "x"), "run_prod": ("product", "x"),
+         "run_cnt": ("count", "x"), "run_min": ("min", "x"),
+         "run_max": ("max", "x"), "cat": ("concat", "s")},
+        ordinal="ord", nparts=16,
+    )
+    assert global_windows(got) == []
+    w = Window.orderBy("seq")
+    fr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    exp = df.select(
+        "seq", "x", "s",
+        F.row_number().over(w).cast("long").alias("ord"),
+        F.sum("x").over(fr).alias("run_sum"),
+        F.product("x").over(fr).alias("run_prod"),
+        F.count("x").over(fr).alias("run_cnt"),
+        F.min("x").over(fr).alias("run_min"),
+        F.max("x").over(fr).alias("run_max"),
+        F.concat_ws("", F.collect_list("s").over(fr)).alias("cat"),
+    )
+    a = sorted(map(tuple, got.select(*exp.columns).collect()))
+    b = sorted(map(tuple, exp.collect()))
+    assert len(a) == len(b) == 4_000
+    prod = exp.columns.index("run_prod")  # float products reassociate
+    for ra, rb in zip(a, b):
+        assert ra[:prod] + ra[prod + 1:] == rb[:prod] + rb[prod + 1:]
+        assert (ra[prod] is None) == (rb[prod] is None)
+        if ra[prod] is not None:
+            assert ra[prod] == pytest.approx(rb[prod], rel=1e-9)
