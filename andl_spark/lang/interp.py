@@ -1936,7 +1936,39 @@ class AndlSession:
                 )
             raise ValueError(f"unsupported while body {kind}")
 
-        return RelV(v.rel.while_(lambda df: step_df(body, df)))
+        hop = self._while_hop(body, cols, env)
+        return RelV(v.rel.while_(hop or (lambda df: step_df(body, df))))
+
+    def _while_hop(self, body, cols, env):
+        """A whileop.Hop for ``{{ renames of the frontier }} compose
+        STATIC`` when the static side shares exactly one attribute with
+        the renamed frontier and has one other attribute, named like the
+        frontier attribute renamed onto the shared one: the compose is
+        then exactly "join on that attribute, replace it, carry the
+        rest" (the recursive-CTE reachability step). None for any other
+        body, which keeps the general ``step_df`` compiler."""
+        if not (body[0] == "dyadic" and body[1] == "compose"
+                and body[2][0] == "rel_tuples" and len(body[2][1]) == 1):
+            return None
+        binds = body[2][1][0]
+        if not all(e[0] == "name" and e[1] in cols for _, e in binds):
+            return None
+        right = self.eval(body[3], env)
+        if not isinstance(right, RelV) or len(right.cols()) != 2:
+            return None
+        shared = [n for n, _ in binds if n in right.cols()]
+        if len(shared) != 1:
+            return None
+        (src,) = shared
+        (dst,) = [c for c in right.cols() if c != src]
+        at = dict(binds)[src][1]
+        carried = [(n, e[1]) for n, e in binds if n != src]
+        if dst != at or any(n != c for n, c in carried) or \
+                sorted([at] + [n for n, _ in carried]) != sorted(cols):
+            return None
+        from ..operators.whileop import Hop
+
+        return Hop(right.df, at=at, src=src, dst=dst)
 
     # -- inline user functions (column contexts) -------------------------
     def _inline(self, ast, mapping, depth=0):

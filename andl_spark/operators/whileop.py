@@ -17,13 +17,90 @@ Spark-first design (semi-naive evaluation):
     so lineage depth stays O(1) however deep the recursion runs.
   * The only driver-side value is the per-iteration frontier count
     (computed distributed); tuple data never hits the driver.
+
+Seeded path doubling for reachability steps (:class:`Hop`):
+  * A ``Hop(edges, at, src, dst)`` step joins ``frontier[at] =
+    edges[src]``, replaces ``at`` with ``edges[dst]`` and carries every
+    other column. Semi-naive pays one round per hop of the longest
+    shortest path; Spark's fixed per-round cost (planning plus a few
+    scheduled jobs) then dominates deep, thin graphs.
+  * :func:`fixpoint` and :func:`fixpoint_with_level` first run ONE
+    aggregate over the distinct edges (NULL ``src`` dropped — it never
+    joins). If the maximum out-degree or the maximum in-degree is ≤ 1
+    they double; otherwise they run the semi-naive loop unchanged. The
+    decision (``evaluator``) and the ``rounds`` go into ``stats``. No
+    parameter or setting selects the evaluator.
+  * Doubling: R₀ = seed, P₀ = edges; round k computes
+    δ = (R ⋈ P_k)[at := dst] anti R, R += δ, P_{k+1} = P_k ∘ P_k, so
+    P_k holds the walks of exactly 2^k hops and R_k every tuple whose
+    shortest distance D from the seed is < 2^k.
+  * Stopping rule: the first empty δ ends the loop, and R is then
+    complete — a tuple with D ≥ 2^k has, on its shortest path, a node
+    at distance exactly 2^k; that node is (R_k ⋈ P_k) and not in R_k,
+    so it would be in δ. A graph of depth d (nodes on the longest
+    shortest path from the seed, seed included) closes in
+    ⌈log₂ d⌉ + 1 rounds.
+  * The degree guard bounds the work: with out-degree ≤ 1 (in-degree
+    ≤ 1) every node starts (ends) at most one walk of each length, so
+    |P_k| ≤ |edges| and P_k ∘ P_k has no duplicate pairs — P is never
+    deduplicated. R is, once, at the end (and δ each round only when
+    in-degree > 1, where two seed paths can meet). Dense graphs, where
+    the walk relation can grow quadratically, stay semi-naive.
+  * A NULL ``dst`` is a sink node, exactly as in the semi-naive join:
+    it is reached (the tuple gets ``at`` = NULL) and never left.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+# Internal column names of the edge/walk relation and the doubling hop
+# counter; fresh names keep joins against the frontier unambiguous.
+_SRC, _DST, _MID, _END, _HOPS = (
+    "__hop_src", "__hop_dst", "__hop_mid", "__hop_end", "__hop_n")
+
+#: Doubling broadcasts a join side (R, or the walks) while it holds at
+#: most this many rows — a few MB for reachability headings.
+_BROADCAST_ROWS = 200_000
+
+
+class Hop:
+    """Declarative linear `.while` step: join ``frontier[at] =
+    edges[src]``, replace ``at`` with ``edges[dst]``, carry every other
+    frontier column.
+
+    A Hop is an ordinary step (``hop(frontier)``), so every fixpoint
+    accepts it; :func:`fixpoint` and :func:`fixpoint_with_level` also
+    recognise it and close it by seeded path doubling when the degree
+    guard allows (module docstring). Under ``fixpoint_with_level`` one
+    hop adds 1 to the level."""
+
+    def __init__(self, edges: DataFrame, at: str, src: str = "src", dst: str = "dst"):
+        self.edges, self.at, self.src, self.dst = edges, at, src, dst
+
+    def __call__(self, frontier: DataFrame) -> DataFrame:
+        return _advance(frontier, self._pairs(), self.at)
+
+    def _pairs(self) -> DataFrame:
+        return self.edges.select(F.col(self.src).alias(_SRC), F.col(self.dst).alias(_DST))
+
+
+def _advance(frontier: DataFrame, pairs: DataFrame, at: str, bump: dict | None = None) -> DataFrame:
+    """``frontier ⋈ pairs`` on ``at = src``, ``at := dst``; columns in
+    ``bump`` grow by the given amount (level and hop counters)."""
+    bump = bump or {}
+    out = [
+        F.col(_DST).alias(c) if c == at
+        else (F.col(c) + bump[c]).alias(c) if c in bump
+        else F.col(c)
+        for c in frontier.columns
+    ]
+    return frontier.join(pairs, F.col(at) == F.col(_SRC)).select(*out)
 
 
 def _run(
@@ -31,6 +108,7 @@ def _run(
     produce: Callable[[DataFrame], DataFrame],
     new_only: Callable[[DataFrame, DataFrame], DataFrame],
     max_iterations: int,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Semi-naive fixpoint: apply ``produce`` to the frontier, keep
     ``new_only(produced, total)``, and stop on the first empty delta.
@@ -43,6 +121,8 @@ def _run(
     ``max_iterations`` budgets STEP APPLICATIONS, including the one
     that finds the frontier closed: a closure needing n productive
     steps returns at a budget of n + 1 and raises RuntimeError at n.
+    ``stats`` (when given) records ``evaluator`` and ``rounds`` (step
+    applications).
     """
     # Invariant: every delta is a materialized localCheckpoint, so
     # `total` is always a FLAT union of materialized roots — lineage
@@ -80,23 +160,27 @@ def _run(
             if delta2.count() == 0:
                 # closed at the odd or the even round; empty union legs
                 # are free and keep `total` a flat union of checkpoints
+                _record(stats, "semi-naive", steps)
                 return mid_total.unionByName(delta2)
             total = mid_total.unionByName(delta2)
             frontier = delta2
         else:
             if delta.count() == 0:
+                _record(stats, "semi-naive", steps)
                 return total
             total = total.unionByName(delta)
             frontier = delta
     raise RuntimeError(f"fixpoint did not converge in {max_iterations} iterations")
 
 
-def _anti_new_only(produced: DataFrame, total: DataFrame, cols: list[str]) -> DataFrame:
-    """Tuples of ``produced`` not yet in ``total`` (set semantics) as a
-    null-safe ANTI-JOIN — plan-for-plan cheaper than EXCEPT DISTINCT
-    (subtract aggregates BOTH sides before the set-difference join; the
-    anti form dedups only the produced side and streams total's keys —
-    measured 3.9s -> 3.3s over the 13-round closure at sf0.1).
+def _anti_new_only(produced: DataFrame, total: DataFrame, cols: list[str],
+                   broadcast: bool = False) -> DataFrame:
+    """Tuples of ``produced`` not yet in ``total`` as a null-safe
+    ANTI-JOIN — plan-for-plan cheaper than EXCEPT DISTINCT (subtract
+    aggregates BOTH sides before the set-difference join; the anti form
+    streams total's keys — measured 3.9s -> 3.3s over the 13-round
+    closure at sf0.1). ``produced`` is NOT deduplicated here: the
+    semi-naive callers dedup it first, doubling dedups once at the end.
     ``eqNullSafe`` keeps subtract's NULL semantics exactly: a produced
     tuple with NULLs is dropped when total holds the same tuple.
 
@@ -107,35 +191,117 @@ def _anti_new_only(produced: DataFrame, total: DataFrame, cols: list[str]) -> Da
     both sides of the condition to one attribute — silently turning the
     anti-join into drop-everything (premature convergence). Unique
     names on the probe side make resolution unambiguous by name."""
-    import functools
-    import operator
-
-    from pyspark.sql import functions as F
-
-    p = produced.dropDuplicates()
     probe_names = [f"__fix_seen_{i}" for i in range(len(cols))]
     t = total.select(*[F.col(c).alias(n) for c, n in zip(cols, probe_names)])
     cond = functools.reduce(
         operator.and_,
-        [p[c].eqNullSafe(F.col(n)) for c, n in zip(cols, probe_names)],
+        [produced[c].eqNullSafe(F.col(n)) for c, n in zip(cols, probe_names)],
     )
-    return p.join(t, on=cond, how="leftanti")
+    return produced.join(F.broadcast(t) if broadcast else t, on=cond, how="leftanti")
+
+
+def _record(stats: dict | None, evaluator: str, rounds: int) -> None:
+    if stats is not None:
+        stats.update(evaluator=evaluator, rounds=rounds)
+
+
+def _doubling_walks(hop: Hop) -> tuple[DataFrame, int, bool] | None:
+    """The distinct one-hop walks, their count, and whether two walks
+    can arrive at one node (max in-degree > 1), when the degree guard
+    admits doubling (max out-degree ≤ 1 or max in-degree ≤ 1); else
+    None. One aggregate: over distinct pairs, out-degree ≤ 1 ⟺
+    |pairs| = |distinct src| and in-degree ≤ 1 ⟺ |pairs| = |distinct
+    dst| (a NULL dst counted as one node through the struct)."""
+    walks = (
+        hop._pairs().filter(F.col(_SRC).isNotNull()).distinct()
+        .localCheckpoint(eager=False)
+    )
+    n, n_src, n_dst = walks.agg(
+        F.count(F.lit(1)), F.countDistinct(_SRC), F.countDistinct(F.struct(_DST))
+    ).first()
+    return (walks, n, n != n_dst) if n in (n_src, n_dst) else None
+
+
+def _double(
+    seed: DataFrame,
+    walks: DataFrame,
+    n_walks: int,
+    merging: bool,
+    at: str,
+    keys: list[str],
+    counters: tuple[str, ...],
+    settle: Callable[[DataFrame], DataFrame],
+    max_iterations: int,
+    stats: dict | None,
+) -> DataFrame:
+    """Seeded path doubling (module docstring). ``seed`` is duplicate-
+    free on ``keys``; ``counters`` (level, hop count) grow by 2^k with
+    the round-k walks; ``settle`` keeps one row per key. Returns
+    ``settle(R)``. ``max_iterations`` budgets doubling rounds,
+    including the one that finds δ empty; round k covers 2^k hops.
+
+    With in-degree ≤ 1 no two R rows reach one tuple in a round, so δ
+    is duplicate-free. With only out-degree ≤ 1 (``merging``), two
+    seed paths can meet, and each round settles δ so the duplicates
+    cannot compound through later rounds.
+
+    Every round is one count plus the broadcasts: R is broadcast to
+    both of its joins while small, and the walks to their self-join
+    while the guard's edge count (which bounds every |P_k|) is small.
+    Unhinted, the checkpointed inputs carry no size statistics and the
+    planner would shuffle both sides of each join."""
+    total = seed.localCheckpoint(eager=False)
+    size = total.count()
+    rounds, hops = 0, 1
+    while rounds < max_iterations:
+        rounds += 1
+        small = size <= _BROADCAST_ROWS
+        probe = F.broadcast(total) if small else total
+        produced = _advance(probe, walks, at, {c: hops for c in counters})
+        delta = _anti_new_only(produced, total, keys, broadcast=small)
+        delta = (settle(delta) if merging else delta).localCheckpoint(eager=False)
+        n = delta.count()
+        if n == 0:
+            _record(stats, "doubling", rounds)
+            return settle(total)
+        total, size = total.unionByName(delta), size + n
+        second = walks.select(F.col(_SRC).alias(_MID), F.col(_DST).alias(_END))
+        if n_walks <= _BROADCAST_ROWS:
+            second = F.broadcast(second)
+        walks = (
+            walks.join(second, F.col(_DST) == F.col(_MID))
+            .select(_SRC, F.col(_END).alias(_DST))
+            .localCheckpoint(eager=False)
+        )
+        hops *= 2
+    raise RuntimeError(f"fixpoint did not converge in {max_iterations} doubling rounds")
 
 
 def fixpoint(
     seed: DataFrame,
     step: Callable[[DataFrame], DataFrame],
     max_iterations: int = 100,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Smallest superset of ``seed`` closed under ``step`` (set
     semantics). ``step`` takes the current frontier and returns
-    candidate tuples with the same heading (column order normalized)."""
+    candidate tuples with the same heading (column order normalized).
+    A :class:`Hop` step is closed by path doubling when its degree
+    guard allows (``max_iterations`` then budgets doubling rounds);
+    ``stats`` records the ``evaluator`` and its ``rounds``."""
     cols = seed.columns
+    seed = seed.dropDuplicates()
+    if isinstance(step, Hop):
+        guarded = _doubling_walks(step)
+        if guarded is not None:
+            return _double(seed, *guarded, step.at, cols, (), DataFrame.dropDuplicates,
+                           max_iterations, stats)
     return _run(
-        seed.dropDuplicates(),
+        seed,
         lambda fr: step(fr).select(*cols),
-        lambda produced, total: _anti_new_only(produced, total, cols),
+        lambda produced, total: _anti_new_only(produced.dropDuplicates(), total, cols),
         max_iterations,
+        stats,
     )
 
 
@@ -163,7 +329,7 @@ def fixpoint_naive(
         # lazy checkpoint materialized by the next emptiness count
         # (r11); the anti-join delta matches subtract's NULL semantics
         # via _anti_new_only
-        return _anti_new_only(step(t).select(*cols), t, cols
+        return _anti_new_only(step(t).select(*cols).dropDuplicates(), t, cols
                               ).localCheckpoint(eager=False)
 
     while steps < max_iterations:
@@ -196,6 +362,7 @@ def fixpoint_with_level(
     step: Callable[[DataFrame], DataFrame],
     level_col: str = "level",
     max_iterations: int = 100,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Fixpoint keeping a 0-based iteration level (org-chart flattening,
     Sample/recursive.andl:23-27). Dedup ignores the level column — a
@@ -205,19 +372,38 @@ def fixpoint_with_level(
     level, so SQL emits a node once per distinct level it is reached
     at while this emits it once at its first level. The two agree only
     when every node has a unique reach level (shortest-path trees,
-    acyclic org charts)."""
-    from pyspark.sql import functions as F
+    acyclic org charts).
 
+    A :class:`Hop` step adds 1 to the level per hop. Doubled, each
+    round-k tuple gets its parent's level + 2^k, and each tuple keeps
+    its fewest-hops row: the same first-reach (shortest-distance) level
+    the semi-naive loop assigns."""
     data_cols = [c for c in seed.columns if c != level_col]
     if level_col not in seed.columns:
         seed = seed.withColumn(level_col, F.lit(0))
     cols = data_cols + [level_col]
+    seed = seed.select(*cols).dropDuplicates(data_cols)
+    if isinstance(step, Hop):
+        guarded = _doubling_walks(step)
+        if guarded is not None:
+
+            def fewest_hops(df: DataFrame) -> DataFrame:
+                first = df.groupBy(*data_cols).agg(F.min(F.struct(_HOPS, level_col)).alias("__first"))
+                return first.select(*data_cols, "__first.*").select(*cols, _HOPS)
+
+            return _double(
+                seed.withColumn(_HOPS, F.lit(0)), *guarded, step.at, data_cols,
+                (level_col, _HOPS), fewest_hops, max_iterations, stats,
+            ).drop(_HOPS)
+        hop = step
+        step = lambda fr: hop(fr).withColumn(level_col, F.col(level_col) + 1)  # noqa: E731
     return _run(
-        seed.select(*cols).dropDuplicates(data_cols),
+        seed,
         lambda fr: step(fr).select(*cols),
         lambda produced, total: (
             produced.join(total.select(*data_cols), on=data_cols, how="leftanti")
             .dropDuplicates(data_cols)
         ),
         max_iterations,
+        stats,
     )

@@ -439,3 +439,56 @@ def test_order_running_folds_match_plain_window(spark):
     bad = [(a, b) for a, b in zip(got_u, want_u) if a != b]
     assert not bad, (len(bad), bad[:3])
     assert got_g == want_g
+
+
+def _andl_rel(rows, names):
+    return "{" + ",".join(
+        "{" + ", ".join(f"{n}:={v}" for n, v in zip(names, r)) + "}" for r in rows) + "}"
+
+
+def test_while_compose_reachability_routes_to_hop(spark, monkeypatch):
+    """`{{ root, src := node }} compose E` — a rename-only projection of
+    the frontier composed with a static two-attribute relation — runs
+    as a whileop.Hop: a chain (out-degree 1) closes by doubling, a
+    graph with branching and merging falls back to semi-naive, and a
+    body with anything around the compose keeps the general step
+    compiler. All equal a Python BFS."""
+    from andl_spark.operators import whileop
+
+    seen = []
+    fixpoint = whileop.fixpoint
+
+    def recording(seed, step, max_iterations=100):
+        stats = {}
+        out = fixpoint(seed, step, max_iterations, stats=stats)
+        seen.append((isinstance(step, whileop.Hop), stats))
+        return out
+
+    monkeypatch.setattr(whileop, "fixpoint", recording)
+
+    def bfs(edges, start, limit=None):
+        out, frontier = {start}, [start]
+        while frontier:
+            frontier = [d for s, d in edges if s in frontier and d not in out
+                        and (limit is None or d < limit)]
+            out.update(frontier)
+        return out
+
+    chain = [(i, i + 1) for i in range(16)]
+    branching = [(0, 1), (0, 2), (1, 3), (2, 3), (3, 4), (4, 0), (4, 5)]
+    cases = [
+        (chain, "compose E", True, "doubling", None),
+        (branching, "compose E", True, "semi-naive", None),
+        (chain, "compose E) .where(node < 4", False, "semi-naive", 4),
+    ]
+    for edges, body, is_hop, evaluator, limit in cases:
+        seen.clear()
+        sess = AndlSession(spark)
+        sess.run(
+            f"E := {_andl_rel(edges, ['src', 'node'])}\n"
+            "S := {{ root := 7, node := 0 }}\n"
+            f"R := S .while(({{{{ root, src := node }}}} {body}))\n"
+        )
+        rows = {(int(r["root"]), int(r["node"])) for r in sess.globals["R"].df.collect()}
+        assert rows == {(7, n) for n in bfs(edges, 0, limit)}
+        assert [(h, st["evaluator"]) for h, st in seen] == [(is_hop, evaluator)]

@@ -241,44 +241,146 @@ def test_skip_take(spdb):
     assert S.skip(2).take(2).count() == 2
 
 
-def test_transitive_closure_matches_fixpoint_in_log_rounds(spark):
-    """Path doubling (operators/closure.py): same reachability as the
-    semi-naive `.while()` fixpoint, in O(log diameter) rounds — the
-    256-deep chain that costs the general fixpoint 256 sequential
-    rounds converges in 8 (2^8 = 256)."""
+def _reach(edges, seed, at):
+    """Python BFS oracle for a Hop fixpoint: every seed tuple, plus each
+    tuple with column ``at`` replaced by a node reachable from it, with
+    its fewest hops (``None`` is a sink node, NULL sources never match,
+    as in the equi-join)."""
+    adj = {}
+    for s, d in edges:
+        if s is not None:
+            adj.setdefault(s, set()).add(d)
+    best = {}
+    for row in seed:
+        depth, frontier = 0, [row[at]]
+        seen = {row[at]}
+        while frontier:
+            for x in frontier:
+                t = row[:at] + (x,) + row[at + 1:]
+                best[t] = min(best.get(t, depth), depth)
+            depth += 1
+            frontier = [y for x in frontier for y in adj.get(x, ()) if y not in seen]
+            seen.update(frontier)
+    return best
+
+
+def _hop_closure(spark, edges, seed, schema, at="node", with_level=False, semi=True):
+    """(rows, stats) of the Hop fixpoint and (when ``semi``) the rows of
+    the same step as a plain semi-naive lambda."""
+    from andl_spark.operators.whileop import Hop, fixpoint_with_level
+
+    e = spark.createDataFrame(edges, "src long, dst long")
+    s = spark.createDataFrame(seed, schema)
+    if with_level:
+        s = s.withColumn("level", F.lit(0).cast("long"))
+    run = fixpoint_with_level if with_level else fixpoint
+
+    hop = e.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
+
+    def plain(fr):
+        out = fr.join(hop, F.col(at) == F.col("e_src")).withColumn(at, F.col("e_dst"))
+        if with_level:
+            out = out.withColumn("level", F.col("level") + 1)
+        return out.select(*s.columns)
+
+    stats = {}
+    got = {tuple(r) for r in run(s, Hop(e, at=at), stats=stats).select(*s.columns).collect()}
+    if not semi:
+        return got, stats
+    want = {tuple(r) for r in run(s, plain).select(*s.columns).collect()}
+    return got, want, stats
+
+
+def test_hop_chain_doubles_in_log_rounds(spark):
+    """A 256-deep chain (255 hops from the seed) closes by doubling in
+    at most ⌈log₂ 256⌉ + 1 rounds, with every node reached."""
     import math
 
-    from pyspark.sql import functions as F
-
-    from andl_spark.operators import whileop as W
-    from andl_spark.operators.closure import transitive_closure
+    from andl_spark.operators.whileop import Hop
 
     n = 256
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "src long, dst long")
-    stats = {}
-    tc = transitive_closure(edges, stats=stats)
-    assert stats["rounds"] <= math.ceil(math.log2(n)) + 1
-    got = {r["dst"] for r in tc.filter(F.col("src") == 0).collect()}
-    assert got == set(range(1, n + 1))  # full chain reachable, 8 rounds
-    # equivalence vs the general fixpoint on a chain it can afford
-    # (semi-naive needs one round PER LEVEL — the very cost this
-    # operator exists to avoid, so the cross-check uses depth 48)
-    m = 48
-    short = spark.createDataFrame(
-        [(i, i + 1) for i in range(m)], "src long, dst long")
+    edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
     seed = spark.createDataFrame([(0,)], "node long")
-    step = lambda fr: fr.join(
-        short, fr["node"] == short["src"]).select(
-        F.col("dst").alias("node"))
-    want = {r["node"] for r in W.fixpoint(seed, step).collect()}
-    got = {r["dst"] for r in transitive_closure(short)
-           .filter(F.col("src") == 0).collect()} | {0}
-    assert got == want and len(want) == m + 1
-    # branching graph: full pair set, NULL edges ignored
-    g = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 4), (3, 4), (4, 5), (None, 9), (9, None)],
-        "src long, dst long")
-    pairs = {(r["src"], r["dst"]) for r in transitive_closure(g).collect()}
-    assert pairs == {(1, 2), (1, 3), (1, 4), (1, 5), (2, 4), (2, 5),
-                     (3, 4), (3, 5), (4, 5)}
+    stats = {}
+    got = {r["node"] for r in fixpoint(seed, Hop(edges, at="node"), stats=stats).collect()}
+    assert stats["evaluator"] == "doubling"
+    assert stats["rounds"] <= math.ceil(math.log2(n)) + 1
+    assert got == set(range(n))
+
+
+@pytest.mark.parametrize("with_level", [False, True])
+def test_hop_functional_cycle_with_tail(spark, with_level):
+    """Out-degree 1 with in-degree 2: a tail 0→1→2→3 into the cycle
+    3→4→5→6→3, and a second tail 20→3. The doubled fixpoint terminates
+    and equals semi-naive; with levels, node 3 keeps the fewest-hops
+    level (1, from seed 20) although seed 0 reaches it by a longer
+    path — and the walks' duplicate arrivals collapse. The BFS oracle
+    assigns semi-naive's first-reach levels."""
+    edges = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 3), (20, 3)]
+    got, *want, stats = _hop_closure(
+        spark, edges, [(0,), (20,)], "node long", with_level=with_level,
+        semi=not with_level)
+    assert stats["evaluator"] == "doubling"
+    assert want in ([], [got])
+    oracle = _reach(edges, [(0,), (20,)], 0)
+    if with_level:
+        assert got == {k + (v,) for k, v in oracle.items()}
+    else:
+        assert got == set(oracle)
+
+
+def test_hop_null_edges_match_semi_naive(spark):
+    """A NULL src never joins; a NULL dst is a sink that is reached
+    (at = NULL) and never left — exactly the semi-naive equi-join."""
+    edges = [(1, 2), (2, None), (None, 9), (9, None), (None, None)]
+    got, want, stats = _hop_closure(spark, edges, [(1,), (9,), (None,)], "node long")
+    assert stats["evaluator"] == "doubling"
+    assert got == want == {(1,), (2,), (9,), (None,)}
+
+
+def test_hop_empty_seed_and_depth_one(spark):
+    """An empty seed closes in one round; a depth-1 fan-out (in-degree
+    1, out-degree 2) in two."""
+    got, stats = _hop_closure(spark, [(1, 2), (1, 3)], [], "node long", semi=False)
+    assert got == set() and stats == {"evaluator": "doubling", "rounds": 1}
+    got, stats = _hop_closure(spark, [(1, 2), (1, 3)], [(1,)], "node long", semi=False)
+    assert got == {(1,), (2,), (3,)}
+    assert stats == {"evaluator": "doubling", "rounds": 2}
+
+
+@pytest.mark.parametrize("shape,evaluator", [
+    ("branching", "semi-naive"), ("out_tree", "doubling")])
+def test_hop_all_pairs_closure_carries_columns(spark, shape, evaluator):
+    """The all-pairs closure is ``fixpoint(edges, Hop(edges, at=dst))``:
+    ``src`` is carried. The diamond's branching graph (a node with two
+    parents and one with two children) stays semi-naive; an out-tree
+    (in-degree 1) doubles. NULL edges are seed rows and follow the
+    NULL sink rule."""
+    edges = {
+        "branching": [(1, 2), (1, 3), (2, 4), (3, 4), (4, 5), (None, 9), (9, None)],
+        "out_tree": [(1, 2), (1, 3), (2, 4), (3, 5), (5, 6), (5, 7), (None, 9), (9, None)],
+    }[shape]
+    got, stats = _hop_closure(
+        spark, edges, edges, "src long, dst long", at="dst", semi=False)
+    assert stats["evaluator"] == evaluator
+    assert got == set(_reach(edges, edges, 1))
+    if shape == "branching":  # the pairs the old path-doubling closure returned
+        assert {p for p in got if None not in p} == {
+            (1, 2), (1, 3), (1, 4), (1, 5), (2, 4), (2, 5), (3, 4), (3, 5), (4, 5)}
+
+
+@pytest.mark.parametrize("with_level", [False, True])
+def test_hop_dense_graph_stays_semi_naive(spark, with_level):
+    """The degree guard keeps dense graphs, where the walk relation can
+    grow quadratically, on the semi-naive loop: the diamond then a
+    30×30 complete bipartite layer, rows identical to the BFS (with
+    levels, each semi-naive hop adds 1)."""
+    layer_a, layer_b = range(100, 130), range(200, 230)
+    edges = ([(1, 2), (1, 3), (2, 4), (3, 4)] + [(4, a) for a in layer_a]
+             + [(a, b) for a in layer_a for b in layer_b])
+    got, stats = _hop_closure(
+        spark, edges, [(1,)], "node long", with_level=with_level, semi=False)
+    assert stats["evaluator"] == "semi-naive"
+    oracle = _reach(edges, [(1,)], 0)
+    assert got == ({k + (v,) for k, v in oracle.items()} if with_level else set(oracle))
+    assert len(got) == 4 + 30 + 30
