@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 from ..operators import joins as _joins
 from ..operators.runfold import _ANDL_OPS, RUN_OPS, grouped_running
 from ..relation import Relation, _ANDL_TYPE
+from ..util import local_frame
 from .parser import parse
 
 # ---------------------------------------------------------------------
@@ -601,7 +602,7 @@ class AndlSession:
         if name == "andl_catalog":  # catalog listing (setup.andl tail)
             rows = [(n, _andl_type_of(v) or "unknown") for n, v in self.globals.items()]
             return RelV(Relation(
-                self.spark.createDataFrame(rows or [("", "")], "Name string, Type string")
+                local_frame(self.spark, rows or [("", "")], "Name string, Type string")
             ))
         # catalog introspection relations (Catalog.cs:101-106 headings,
         # Builtin.cs:119-121 Variables/Operators/Members addins):
@@ -613,16 +614,17 @@ class AndlSession:
                  f"{n}:h" if isinstance(v, (RelV, TupV)) else "")
                 for n, v in self.globals.items()
             ]
-            return RelV(Relation(self.spark.createDataFrame(
-                rows or [("", "", "")], "Name string, Type string, Members string"
+            return RelV(Relation(local_frame(
+                self.spark, rows or [("", "", "")],
+                "Name string, Type string, Members string",
             )))
         if name == "andl_operator":
             rows = [
                 (fd.name, fd.rtype, "", f"{fd.name}:a" if fd.params else "")
                 for fds in self.defs.values() for fd in fds
             ]
-            return RelV(Relation(self.spark.createDataFrame(
-                rows or [("", "", "", "")],
+            return RelV(Relation(local_frame(
+                self.spark, rows or [("", "", "", "")],
                 "Name string, Type string, Members string, Arguments string",
             )))
         if name == "andl_member":
@@ -643,8 +645,8 @@ class AndlSession:
                 for fd in fds:
                     for i, (p, pt) in enumerate(fd.params):
                         rows.append((f"{fd.name}:a", float(i + 1), p, pt, ""))
-            return RelV(Relation(self.spark.createDataFrame(
-                rows or [("", 0.0, "", "", "")],
+            return RelV(Relation(local_frame(
+                self.spark, rows or [("", 0.0, "", "", "")],
                 "MemberOf string, Index double, Name string, Type string, Members string",
             )))
         raise NameError(f"unknown name {name!r}")
@@ -1014,14 +1016,14 @@ class AndlSession:
             (f.name, _ANDL_TYPE.get(f.dataType.simpleString(), f.dataType.simpleString()))
             for f in v.df.schema.fields
         ]
-        return RelV(Relation(self.spark.createDataFrame(rows, "Name string, Type string")))
+        return RelV(Relation(local_frame(self.spark, rows, "Name string, Type string")))
 
     # -- relation construction -----------------------------------------
     def _empty_rel(self, heading) -> RelV:
         schema = T.StructType(
             [T.StructField(n, _SPARK_TYPES[t], True) for n, t in heading]
         )
-        return RelV(Relation(self.spark.createDataFrame([], schema)))
+        return RelV(Relation(local_frame(self.spark, [], schema)))
 
     def _rel_from_tuples(self, tuples: list[TupV]):
         if any(isinstance(x, FuncVal) for t in tuples for x in t.values()):
@@ -1036,7 +1038,7 @@ class AndlSession:
         schema = T.StructType(
             [T.StructField(n, tp, True) for n, tp in zip(names, fieldtypes)]
         )
-        return RelV(Relation(self.spark.createDataFrame(rows, schema)))
+        return RelV(Relation(local_frame(self.spark, rows, schema)))
 
     def _rel_typed(self, heading, rows_ast, env) -> RelV:
         if isinstance(heading, tuple) and heading and heading[0] == "ref":
@@ -1052,14 +1054,14 @@ class AndlSession:
                     tuple(_to_spark_value(self.eval(v, env))[0] for v in row)
                     for row in rows_ast
                 ]
-                return RelV(Relation(self.spark.createDataFrame(rows, schema)))
+                return RelV(Relation(local_frame(self.spark, rows, schema)))
         schema = T.StructType(
             [T.StructField(n, _SPARK_TYPES[t], True) for n, t in heading]
         )
         rows = [
             tuple(_to_spark_value(self.eval(v, env))[0] for v in row) for row in rows_ast
         ]
-        return RelV(Relation(self.spark.createDataFrame(rows, schema)))
+        return RelV(Relation(local_frame(self.spark, rows, schema)))
 
     # -- equality -------------------------------------------------------
     def _scalarize(self, v):
@@ -1138,7 +1140,7 @@ class AndlSession:
                                env if env is not None else self.globals)
                 if _truthy(self.eval(cond_ast, scope)):
                     keep.append(r)
-            out = self.spark.createDataFrame(keep, v.df.schema)
+            out = local_frame(self.spark, keep, v.df.schema)
             return RelV(Relation(out), order=v.order)
 
     def _where_membership(self, v: RelV, cond_ast, env):
@@ -1354,7 +1356,7 @@ class AndlSession:
             rowd = r.asDict()
             for fname, elem in rva_fields.items():
                 rowd[fname] = RelV(Relation(
-                    self.spark.createDataFrame(rowd[fname] or [], elem)
+                    local_frame(self.spark, rowd[fname] or [], elem)
                 ))
             # {*} / {{*}} need the whole current tuple (sample3.andl nest)
             scope = _Chain({**rowd, "__tuple__": dict(rowd)},

@@ -76,6 +76,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..util import local_frame
+
 __all__ = ["grouped_running", "RUN_OPS"]
 
 #: op → (local(col, frame) running prefix,
@@ -284,4 +286,4 @@ def _driver_offsets(
                 if t is not None:
                     a = acc[name]
                     acc[name] = t if a is None else RUN_OPS[op][3](a, t)
-    return partials.sparkSession.createDataFrame(rows, schema)
+    return local_frame(partials.sparkSession, rows, schema)

@@ -64,6 +64,7 @@ from ..streaming.events import (
     resolve_neardup_index,
     seed_neardup_index,
 )
+from ..util import local_frame
 from .simsearch import (
     AUTO_NLIST_MAX,
     AUTO_PROBE_FRAC,
@@ -664,7 +665,7 @@ def ivf_index_delete(ids, path: str, batch_id: int,
         if spark is None:
             raise ValueError("ivf_index_delete: pass ids as a DataFrame "
                              "or provide spark= with a Python list")
-        ids = spark.createDataFrame([(int(i),) for i in ids], "vec_id long")
+        ids = local_frame(spark, [(int(i),) for i in ids], "vec_id long")
         id_col = id_col or "vec_id"
     spark = ids.sparkSession
     meta, data = read_ivf_snapshot(spark, path)
@@ -1625,7 +1626,7 @@ def knn_join(
     ct = data.schema["vec_id"].dataType.simpleString()
     out_schema = f"query_id {qt}, cand_id {ct}, cosine double"
     if not cells:
-        empty = spark.createDataFrame([], out_schema)
+        empty = local_frame(spark, [], out_schema)
         return empty.withColumn("rank", F.lit(0).cast("long"))
 
     cand = (data.filter(F.col("list_id").isin(cells))  # pruned scan
@@ -1647,8 +1648,8 @@ def knn_join(
     def width(n: int) -> int:
         return max(1, -(-n // block_rows))
 
-    wdf = F.broadcast(spark.createDataFrame(
-        [(c, width(qcnt[c]), width(ccnt.get(c, 0))) for c in cells],
+    wdf = F.broadcast(local_frame(
+        spark, [(c, width(qcnt[c]), width(ccnt.get(c, 0))) for c in cells],
         "list_id long, qw int, cw int")
         .withColumn("list_id", F.col("list_id").cast(lid_t)))
 

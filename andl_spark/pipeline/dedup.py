@@ -28,7 +28,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..util import ensure_parallelism
+from ..util import ensure_parallelism, local_frame
 from .text import fingerprint
 
 # ---------------------------------------------------------------------
@@ -1847,13 +1847,13 @@ def empty_span_index(spark, hash_fn: str | None = "xxhash64") -> DataFrame:
     key_type = {"xxhash64": "key long",
                 "xxhash128": "key struct<h1:bigint,h2:bigint>",
                 None: "key string"}[hash_fn]
-    return spark.createDataFrame([], f"{key_type}, id long, start int")
+    return local_frame(spark, [], f"{key_type}, id long, start int")
 
 
 def empty_fp_index(spark) -> DataFrame:
     """Cold-start index for :func:`exact_dedup_against_index` /
     ``neardup_ingest_stream(kind="exact")`` — empty (fp, id)."""
-    return spark.createDataFrame([], "fp string, id long")
+    return local_frame(spark, [], "fp string, id long")
 
 
 def dedup_spans_against_index(

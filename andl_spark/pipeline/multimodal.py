@@ -34,6 +34,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
     "meta struct<width:int, height:int, sample_rate:int, n_frames:int>"
@@ -241,7 +243,7 @@ def synthesize_media(spark, n: int = 64) -> DataFrame:
     container), audio is a 256-sample PCM16 WAV sine at an id-derived
     frequency, video is a BMP keyframe plus an n_frames count in meta.
     Stable across runs, so decode output is directly assertable."""
-    return spark.createDataFrame(media_rows(n), MEDIA_SCHEMA)
+    return local_frame(spark, media_rows(n), MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------

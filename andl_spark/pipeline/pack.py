@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import local_frame
 from .split import hash_bucket
 
 
@@ -112,8 +113,7 @@ def chunk_sequences(
     for r in sorted(sums, key=lambda r: (r["lo"] is None, r["lo"])):
         off[r["__pid"]] = acc
         acc += r["t"] or 0
-    off_df = part.sparkSession.createDataFrame(
-        [(p, o) for p, o in off.items()], "__pid int, __off long")
+    off_df = local_frame(part.sparkSession, list(off.items()), "__pid int, __off long")
     # pass 2: bucket-local running sum + broadcast offset
     from pyspark.sql import Window
 

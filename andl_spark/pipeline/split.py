@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 #: bucket space; 10k gives 0.01% split granularity
 N_BUCKETS = 10_000
 
@@ -85,8 +87,9 @@ def sample_by_budget(
     b = hash_bucket(
         F.concat(F.col(key).cast("string"), F.lit(f":{epoch}")))
     tagged = df.withColumn("__bucket", b)
-    budget_df = F.broadcast(tagged.sparkSession.createDataFrame(
-        list(budgets.items()), f"{source_col} string, __budget long"))
+    budget_df = F.broadcast(local_frame(
+        tagged.sparkSession, list(budgets.items()),
+        f"{source_col} string, __budget long"))
     from pyspark.sql import Window
 
     w = (

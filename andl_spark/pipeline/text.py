@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 #: tiny per-language stopword lists for the heuristic scorer.
 #: Real deployments swap in fastText-style n-gram profiles; the Spark
 #: plumbing (scored struct-array argmax) is identical.
@@ -288,8 +290,7 @@ def train_unigram_lm(
     model = top.select(
         "w", F.log10((F.col("c") + 1) / F.lit(denom)).alias("logp"),
         F.lit(False).alias("is_oov"))
-    oov = top.sparkSession.createDataFrame(
-        [(None,)], "w string").select(
+    oov = local_frame(top.sparkSession, [(None,)], "w string").select(
         "w", F.log10(F.lit(1.0) / F.lit(denom)).alias("logp"),
         F.lit(True).alias("is_oov"))
     return model.unionByName(oov)

@@ -26,6 +26,7 @@ from .operators import nest as _nest
 from .operators import setops as _setops
 from .operators import whileop as _whileop
 from .functions.fold import fold as _fold
+from .util import local_frame
 
 #: Spark type → Andl type name (Builtin.cs: number/text/bool/time/binary)
 _ANDL_TYPE = {
@@ -213,7 +214,7 @@ class Relation:
             (f.name, _ANDL_TYPE.get(f.dataType.simpleString(), f.dataType.simpleString()))
             for f in self.df.schema.fields
         ]
-        return Relation(spark.createDataFrame(rows, "name string, type string"))
+        return Relation(local_frame(spark, rows, "name string, type string"))
 
     def lift(self) -> "Relation":
         """Andl singleton lift — a 1×1 relation's value (kept relational:

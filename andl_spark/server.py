@@ -47,7 +47,11 @@ Scale note: the server is a thin control-plane veneer — every request
 compiles to a Spark plan and the LIMIT is pushed into it (CollectLimit
 over the scan), so a GET against a 100 TB table reads only what it
 returns. Mutations write a NEW catalog version (immutable snapshot
-semantics, sources/catalog.py) rather than rewriting in place.
+semantics, sources/catalog.py) rather than rewriting in place. Inserted
+rows (POST /rest/<name>) pass the relvar schema's type verifier, then
+enter the plan as a LocalRelation (util.local_frame), so the
+union-and-dedup write starts no Python worker; a wrong-typed row is an
+HTTP 400 before any version is written.
 """
 
 from __future__ import annotations
@@ -64,6 +68,8 @@ from urllib.parse import parse_qsl, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .util import local_frame
 
 DEFAULT_LIMIT = 1000
 
@@ -427,8 +433,10 @@ class _Handler(BaseHTTPRequestHandler):
                 name = parts[1]
                 with self.server.andl_lock:  # type: ignore[attr-defined]
                     base = sess.table(name).df
-                    new = sess.spark.createDataFrame(
-                        [tuple(r[c] for c in base.columns) for r in body], base.schema
+                    new = local_frame(
+                        sess.spark,
+                        [tuple(r[c] for c in base.columns) for r in body],
+                        base.schema,
                     )
                     self._replace(name, base.unionByName(new).dropDuplicates())
                 return self._send(200, {"ok": True, "inserted": len(body)})

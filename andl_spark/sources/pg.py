@@ -39,6 +39,8 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..util import local_frame
+
 # ---------------------------------------------------------------------
 # wire protocol (PostgreSQL frontend/backend protocol v3, public spec)
 # ---------------------------------------------------------------------
@@ -206,7 +208,7 @@ def pushdown_sql(
 
 
 def _to_df(spark: SparkSession, fields, rows) -> DataFrame:
-    return spark.createDataFrame(rows, T.StructType(fields))
+    return local_frame(spark, rows, T.StructType(fields))
 
 
 def read_pg(

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 
 def read_events_stream(spark, sf_dir: str, max_files_per_trigger: int = 1) -> DataFrame:
     """events.parquet as a file-source stream (schema from the batch
@@ -402,8 +404,8 @@ def read_neardup_index(spark, index_path: str) -> DataFrame:
             if ptr and "schema" in ptr:
                 from pyspark.sql.types import StructType
 
-                return spark.createDataFrame(
-                    [], StructType.fromJson(
+                return local_frame(
+                    spark, [], StructType.fromJson(
                         __import__("json").loads(ptr["schema"])))
         raise
 

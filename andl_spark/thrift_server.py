@@ -40,6 +40,8 @@ import threading
 from datetime import date, datetime, timedelta
 from decimal import Decimal
 
+from .util import local_frame
+
 # ---------------------------------------------------------------------
 # TBinaryProtocol constants (public Thrift spec)
 # ---------------------------------------------------------------------
@@ -498,5 +500,5 @@ class AndlThriftServer:
             else:
                 casts.append(lambda v: v)
         rows = [tuple(c(v) for c, v in zip(casts, row)) for row in rows]
-        df = self.sess.spark.createDataFrame(rows, schema)
+        df = local_frame(self.sess.spark, rows, schema)
         return RelV(Relation(df))

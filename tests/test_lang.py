@@ -492,3 +492,23 @@ def test_while_compose_reachability_routes_to_hop(spark, monkeypatch):
         rows = {(int(r["root"]), int(r["node"])) for r in sess.globals["R"].df.collect()}
         assert rows == {(7, n) for n in bfs(edges, 0, limit)}
         assert [(h, st["evaluator"]) for h, st in seen] == [(is_hop, evaluator)]
+
+
+def test_literal_relation_plans_locally(spark):
+    """A relation literal is a Catalyst LocalRelation (util.local_frame),
+    not a Python-mapped RDD: displaying `v.where(...)` folds the filter
+    into the literal and launches no Spark job, and the serve-shaped
+    count and fold read the same values."""
+    sc = spark.sparkContext
+    sess = AndlSession(spark)
+    sess.run("v := {{ a:=3 }, { a:=7 }, { a:=12 }, { a:=20 }}")
+    try:
+        sc.setJobGroup("lang-literal-where", "literal where")
+        sess.run("v.where(a > 5)")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sess.output == ["{{a}} (7); (12); (20)"]
+    assert list(sc.statusTracker().getJobIdsForGroup("lang-literal-where")) == []
+    sess.run("write('n=' & v.where(a > 5).count)\n"
+             "write('s=' & v.where(a > 5).select{ fold(+,a) })")
+    assert sess.output[1:] == ["n=3", "s=39"]

@@ -259,6 +259,21 @@ def test_errors_are_http_400(served):
         assert "no_such_table" in json.loads(e.read())["error"].lower()
 
 
+def test_insert_keeps_its_type_check(served):
+    """POST /rest/<name> rows pass the relvar schema's type verifier: a
+    string in a numeric column is HTTP 400 and writes nothing."""
+    sess, port = served
+    before = sorted(map(tuple, _req(port, "/rest/S")["rows"]))
+    v0 = sess.catalog.current_version("S")
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _req(port, "/rest/S", "POST",
+             [{"sno": 9, "sname": "Bad", "status": "twenty", "city": "Rome"}])
+    assert e.value.code == 400
+    assert "status" in json.loads(e.value.read())["error"]
+    assert sorted(map(tuple, _req(port, "/rest/S")["rows"])) == before
+    assert sess.catalog.current_version("S") == v0
+
+
 def test_forged_host_header_is_rejected(served):
     """DNS-rebinding / CSRF guard: a request whose Host header names a
     foreign origin must not execute (ADVICE r3) — only the bound
