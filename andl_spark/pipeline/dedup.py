@@ -12,9 +12,16 @@ Scale design:
   * ngram_jaccard: exact pairwise similarity — only sane within
     candidate buckets or small collections; a frequency cap drops
     stop-shingles that would explode the join.
-  * embedding_dup: cosine over fixed-length vectors with JVM
-    higher-order functions (zip_with/aggregate), no Python; norms
-    computed once per row, never per pair.
+  * embedding_dup: cosine over fixed-length vectors via
+    simsearch._score_exprs (unrolled for small dims, JVM higher-order
+    functions above), no Python; norms computed once per row (the
+    embedding_index row), never per pair.
+
+Every bucketed pair op — the three batch self-joins and their three
+``*_against_index`` twins — runs ONE candidate-pair kernel,
+:func:`_bucket_pairs` (anchor decision, shuffle-hash key join, id
+predicate, score filter before the pair dedup); each family has one
+key-explode helper that its batch and incremental ops share.
 
 Every approximate operator has a *_sql DuckDB mirror built from the
 same seeded constants and the same md5 primitive, so the driver's
@@ -353,15 +360,33 @@ def _anchored(
     stats_out: dict | None,
     probe: DataFrame | None = None, weight: float = 1.0,
 ) -> DataFrame:
-    """The pair ops' anchor decision, in one place. ``anchor_degree``
-    <= 0 keeps exact semantics with no guard, None runs
-    :func:`_fanout_guard` over ``side`` (against ``probe`` for an
-    incremental probe×corpus join), anything else is explicit. The
-    decision is recorded in :data:`FANOUT_STATS` and ``stats_out``;
-    when anchors engage, ``side`` keeps only each bucket's
-    ``anchor_degree`` smallest ``order_col`` rows (its ``keys``
-    partitioning is the pair join's key, so the rank and the join share
-    one exchange)."""
+    """The pair ops' anchor decision, in one place (the contract every
+    public pair op's ``anchor_degree``/``auto_bound``/``stats_out``
+    follow):
+
+    * ``None`` — exact unless unaffordable: :func:`_fanout_guard`
+      estimates the bucket join's candidate count over ``side``
+      (against ``probe`` for a probe×corpus join) and engages
+      AUTO_ANCHOR_DEGREE anchors, logged, above ``auto_bound``
+      (default AUTO_ANCHOR_BOUND, never reached at oracle scales);
+    * ``<= 0`` — exact at any cost, no guard (what strict oracle pair
+      parity needs on a corpus dup-dense enough to trip the guard);
+    * ``D > 0`` — explicit anchors.
+
+    Anchors bound the per-bucket fan-out to D·|bucket| instead of
+    |bucket|²/2: ``side`` keeps only each bucket's D smallest
+    ``order_col`` rows, so every member pairs only against those.
+    Duplicate-dense corpora make all-pairs QUADRATIC in cluster size
+    (sf10's 100-way clusters: 27M exact MinHash pairs, an OOMing
+    SimHash chunk join, ~1.3e9 matched embedding rows — SCALE_r04/r05);
+    anchored it is linear. Bucket-mates still connect through a shared
+    anchor, so the dup_clusters/keep_canonical DECISION is unchanged
+    for dense clusters, and D anchors give the downstream score D
+    chances to keep a connecting edge; exact pair semantics hold only
+    for edges through an anchor. The decision is recorded in
+    :data:`FANOUT_STATS` and ``stats_out``. The rank partitions by
+    ``keys``, the pair join's key, so rank and join share one
+    exchange."""
     if anchor_degree is not None and anchor_degree <= 0:
         _record_fanout(what, None, "exact", stats_out)
         return side
@@ -384,6 +409,61 @@ def _anchored(
     )
 
 
+def _bucket_pairs(
+    probe: DataFrame, corpus: DataFrame, keys: list[str], id_col: str,
+    what: str, score: F.Column | None = None, keep: F.Column | None = None,
+    self_join: bool = True, anchor_degree: int | None = None,
+    auto_bound: int | None = None, stats_out: dict | None = None,
+    weight: float = 1.0,
+) -> DataFrame:
+    """THE candidate-pair join of every bucketed dedup op: ``probe``
+    rows (alias ``a``) meet ``corpus`` rows (alias ``b``) that share a
+    ``keys`` bucket → (id_a < id_b[, score]), each pair once.
+
+    * ``self_join`` (the batch ops; probe and corpus are one table):
+      keeps a < b, so the join output does not double, and anchors the
+      probe (a) side — every pair is (anchor, later bucket-mate).
+    * probe mode (the ``*_against_index`` ops: the new batch against
+      index ∪ batch): keeps a != b, orders the pair with
+      least/greatest (a new id may sort before an old one), and
+      anchors the corpus (b) side against the probe×corpus estimate
+      Σ n_probe·n_corpus per shared bucket.
+
+    Anchoring and the guard follow :func:`_anchored` (``what`` labels
+    the FANOUT_STATS record; ``weight`` scales the estimate to the
+    bound's per-candidate cost unit). The corpus side carries a
+    shuffle_hash hint: it is corpus-sized, and letting AQE broadcast it
+    rebuilds its whole upstream in one single-threaded broadcast-build
+    stage (measured 10 s of a 13 s MinHash query at sf0.1). ``score``
+    (an aliased Column over ``a.``/``b.`` columns) must be determined
+    by the pair: it and its ``keep`` filter then evaluate map-side on
+    the join output BEFORE the pair dedup, result-identical, and the
+    dedup exchange carries only surviving (id, id, score) rows rather
+    than every candidate with its payload (embedding at sf1: 42 s →
+    7.4 s for the identical 93,295 pairs)."""
+    anchored = _anchored(
+        probe if self_join else corpus, keys, id_col, what, anchor_degree,
+        auto_bound, stats_out, probe=None if self_join else probe,
+        weight=weight)
+    a_id, b_id = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    if self_join:
+        a, b = anchored, corpus
+        pred, ids = a_id < b_id, [a_id.alias("id_a"), b_id.alias("id_b")]
+    else:
+        a, b = probe, anchored
+        pred = a_id != b_id
+        ids = [F.least(a_id, b_id).alias("id_a"),
+               F.greatest(a_id, b_id).alias("id_b")]
+    pairs = (
+        a.alias("a").join(b.alias("b").hint("shuffle_hash"), on=keys)
+        .filter(pred)
+        .select(*ids, *([] if score is None else [score]))
+    )
+    if keep is not None:
+        pairs = pairs.filter(keep)
+    return pairs.dropDuplicates(["id_a", "id_b"])
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str,
@@ -393,49 +473,20 @@ def lsh_candidate_pairs(
     auto_bound: int | None = None,
     stats_out: dict | None = None,
 ) -> DataFrame:
-    """Band the signatures and emit candidate pairs (a < b) that share
-    at least one band bucket. The join key is (band, band value string)
-    — shuffle-partitionable, engine-portable (no Murmur3), and bucket
-    sizes bound the pair fan-out.
-
-    ``anchor_degree=D`` bounds the per-bucket fan-out to D·|bucket|
-    instead of |bucket|²/2: each member pairs only against the bucket's
-    D smallest ids (the "anchors"). Duplicate-dense corpora make
-    all-pairs QUADRATIC in cluster size — measured at sf10 (500k docs,
-    100-way near-dup clusters) the exact pair set is 27M rows and the
-    enumeration dominates the whole suite; with anchors it is linear.
-    Use a small D when the pairs feed ``dup_clusters``/
-    ``keep_canonical``, where bucket-mates connect through a shared
-    anchor and all-pairs adds no information for DENSE clusters (each
-    member similar to the anchor). D anchors give D chances for the
-    downstream similarity verification to keep at least one connecting
-    edge per bucket-mate.
-
-    ``anchor_degree=None`` (default) means "exact unless unaffordable":
-    the fan-out auto-guard estimates the candidate count first and
-    engages anchors above ``auto_bound`` (default AUTO_ANCHOR_BOUND,
-    logged + FANOUT_STATS). Callers needing guaranteed-exact pairs AT
-    ANY COST pass ``anchor_degree=0`` (no anchors, no guard) or raise
-    ``auto_bound``. The guard's estimate is an extra aggregate over the
-    signature-derived bucket table — PERSIST the input signatures
-    (minhash_lsh_dedup, the sole internal caller, does) or the
-    signature Pandas UDF runs once for the estimate and once per join
+    """Band the signatures and emit candidate pairs (id_a < id_b) that
+    share at least one band bucket. The join key is (band, bucket), the
+    band's signature slice packed into longs (see _band_buckets) —
+    shuffle-partitionable, engine-portable, and bucket sizes bound the
+    pair fan-out. Anchors and the fan-out guard: see :func:`_anchored`.
+    The guard's estimate is an extra aggregate over the bucket table —
+    PERSIST the input signatures (minhash_lsh_dedup does) or the
+    signature pipeline runs once for the estimate and once per join
     side."""
     exploded = _band_buckets(signatures, id_col, num_bands, rows_per_band)
-    a = _anchored(exploded, ["band", "bucket"], id_col,
-                  "minhash lsh_candidate_pairs", anchor_degree, auto_bound,
-                  stats_out).alias("a")
-    # shuffle_hash hint: both sides of an LSH self-join are corpus-sized;
-    # letting AQE broadcast one side rebuilds the whole signature
-    # pipeline in a single-threaded broadcast-build stage (measured 10s
-    # of a 13s query at sf0.1).
-    b = exploded.alias("b").hint("shuffle_hash")
-    return (
-        a.join(b, on=["band", "bucket"], how="inner")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .dropDuplicates()
-    )
+    return _bucket_pairs(
+        exploded, exploded, ["band", "bucket"], id_col,
+        "minhash lsh_candidate_pairs", anchor_degree=anchor_degree,
+        auto_bound=auto_bound, stats_out=stats_out)
 
 
 def _packed_sig_sql(n: int) -> str:
@@ -519,10 +570,8 @@ def minhash_lsh_dedup(
     """End-to-end near-dup pairs: signatures → LSH buckets → estimated
     Jaccard ≥ threshold. Returns (id_a, id_b, est_jaccard).
     hash_fn='md5' only for oracle-parity runs (see _h32_expr);
-    anchor_degree caps per-bucket fan-out for duplicate-dense corpora
-    (see lsh_candidate_pairs — use when the pairs feed dup_clusters;
-    None = exact-unless-the-guard-trips, 0 = exact at any cost,
-    auto_bound overrides the guard's threshold)."""
+    anchor_degree/auto_bound: see :func:`_anchored` (anchors suit pairs
+    that feed dup_clusters)."""
     # Persist + materialize signatures: they feed candidate generation
     # AND both sides of the scoring join. Eager materialization matters
     # — the self-join's two scan stages run concurrently, and with a
@@ -697,15 +746,16 @@ def _simhash_chunks(max_hamming: int) -> list[tuple[str, int, int]]:
     return out
 
 
-def _simhash_chunk_col(max_hamming: int) -> F.Column:
-    """array<struct<chunk,val>> of the pigeonhole chunk buckets for a
-    (sh_lo, sh_hi) signature row (see _simhash_chunks)."""
-    pieces = _simhash_chunks(max_hamming)
+def _simhash_buckets(signatures: DataFrame, id_col: str,
+                     max_hamming: int) -> DataFrame:
+    """(id, sh_lo, sh_hi, chunk, val) — one row per pigeonhole chunk
+    bucket of each (sh_lo, sh_hi) signature (see _simhash_chunks); the
+    key table of both SimHash pair ops."""
     by_chunk: dict[int, list] = {}
-    for ci, half, off, width in pieces:
+    for ci, half, off, width in _simhash_chunks(max_hamming):
         expr = F.shiftrightunsigned(half, off).bitwiseAND(F.lit((1 << width) - 1))
         by_chunk.setdefault(ci, []).append(expr)
-    return F.array(*[
+    chunks = F.array(*[
         F.struct(
             F.lit(ci).alias("chunk"),
             # combine boundary-spanning pieces into one bucket value
@@ -714,6 +764,20 @@ def _simhash_chunk_col(max_hamming: int) -> F.Column:
         )
         for ci, parts in sorted(by_chunk.items())
     ])
+    return signatures.select(
+        id_col, "sh_lo", "sh_hi", F.explode(chunks).alias("c")
+    ).select(id_col, "sh_lo", "sh_hi", "c.chunk", "c.val")
+
+
+def _hamming_score(max_hamming: int) -> tuple[F.Column, F.Column]:
+    """(score, keep) of the SimHash pair ops for :func:`_bucket_pairs`:
+    the true Hamming distance of the a/b signatures, kept ≤
+    max_hamming."""
+    hamming = (
+        F.bit_count(F.col("a.sh_lo").bitwiseXOR(F.col("b.sh_lo")))
+        + F.bit_count(F.col("a.sh_hi").bitwiseXOR(F.col("b.sh_hi")))
+    ).cast("long")
+    return hamming.alias("hamming"), F.col("hamming") <= max_hamming
 
 
 def simhash_near_pairs(
@@ -722,23 +786,16 @@ def simhash_near_pairs(
     auto_bound: int | None = None,
     stats_out: dict | None = None,
 ) -> DataFrame:
-    """Near-dup pairs by TRUE Hamming distance ≤ max_hamming.
+    """Near-dup pairs (id_a, id_b, hamming) by TRUE Hamming distance ≤
+    max_hamming.
 
     LSH on max_hamming+1 pigeonhole chunks (see _simhash_chunks): the
     join is on chunk buckets, never all-pairs, and the candidate set is
     lossless for the declared distance (r1 shipped 4×16-bit chunks
     whose guarantee stopped at distance 3 while the declared query
-    asked for 8 — ADVICE r1 item 1).
-
-    ``anchor_degree=D``: duplicate-dense corpora put whole clusters in
-    one chunk bucket and all-pairs enumeration goes quadratic
-    (measured OOM at sf10's 100-way dup density); with anchors each
-    member pairs only against the bucket's D smallest ids — linear,
-    and cluster-connectivity-preserving for dense clusters (see
-    lsh_candidate_pairs). Exact pair semantics require None (the
-    losslessness guarantee above is about CANDIDATES; anchors keep it
-    only for edges through an anchor)."""
-    chunks = _simhash_chunk_col(max_hamming)
+    asked for 8 — ADVICE r1 item 1). Anchors and the fan-out guard:
+    see :func:`_anchored` (the losslessness above is about CANDIDATES;
+    anchors keep it only for edges through an anchor)."""
     # Materialize signatures before the self-join: its two scan stages
     # run concurrently and would each recompute the signature pipeline
     # (chunk explode from cache is cheap — cache pre-explode, 1 row
@@ -752,35 +809,12 @@ def simhash_near_pairs(
         signatures = signatures.persist()
         if anchor_degree is not None:
             signatures.count()
-    e = signatures.select(id_col, "sh_lo", "sh_hi", F.explode(chunks).alias("c")).select(
-        id_col, "sh_lo", "sh_hi", "c.chunk", "c.val"
-    )
-    # fan-out auto-guard (r6): estimate candidates before the pair
-    # join; at sf10 dup density the exact chunk join OOMs a 128 GiB
-    # heap — engage anchors (logged) instead of crashing
-    left = _anchored(e, ["chunk", "val"], id_col, "simhash_near_pairs",
-                     anchor_degree, auto_bound, stats_out)
-    a, b = left.alias("a"), e.alias("b").hint("shuffle_hash")
-    hamming = (
-        F.bit_count(F.col("a.sh_lo").bitwiseXOR(F.col("b.sh_lo")))
-        + F.bit_count(F.col("a.sh_hi").bitwiseXOR(F.col("b.sh_hi")))
-    ).cast("long")
-    out = (
-        a.join(b, on=["chunk", "val"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        # Hamming is determined by the pair, so filtering BEFORE the
-        # dedup exchange is result-identical and ships only true
-        # near-pairs into the shuffle — on smooth corpora most chunk
-        # collisions are distant pairs, pure dropped bytes (guide §2.3;
-        # r11 — the embedding op already scored map-side first).
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    e = _simhash_buckets(signatures, id_col, max_hamming)
+    score, keep = _hamming_score(max_hamming)
+    out = _bucket_pairs(
+        e, e, ["chunk", "val"], id_col, "simhash_near_pairs", score, keep,
+        anchor_degree=anchor_degree, auto_bound=auto_bound,
+        stats_out=stats_out)
     # Materialize the (small) pair result, then release the signature
     # cache — each invocation used to leak a cached RDD (ADVICE r2).
     out = out.localCheckpoint(eager=True)
@@ -949,100 +983,50 @@ def embedding_dup_pairs(
     auto_bound: int | None = None,
     stats_out: dict | None = None,
 ) -> DataFrame:
-    """Pairs with cosine ≥ threshold.
+    """Pairs (id_a, id_b, cosine) with cosine ≥ threshold.
 
     bucket_bits>0 — the 100 TB path: ``n_tables`` independent
-    random-hyperplane LSH tables (seeds seed..seed+n_tables-1); a pair
-    is a candidate if it collides in ANY table, then candidates are
-    verified by exact cosine. Per-pair recall at similarity s is
-    1-(1-p^bits)^n_tables with p = 1-acos(s)/π — ≥0.99 for genuine
-    near-dups (s≥0.95) at bits=8, n_tables=8. The join is bucket-equi,
-    never O(n²), and fully mirrored by embedding_dup_pairs_sql so an
-    independent engine reproduces the same candidate set.
-
-    ``anchor_degree=D`` is the duplicate-dense lever, same contract as
-    the MinHash/SimHash ops: each bucket member pairs only against
-    its bucket's D smallest ids, so candidate fan-out is D·|bucket|
-    instead of |bucket|² while every member keeps an edge to its
-    cluster's anchors — the dup_clusters/keep_canonical DECISION is
-    unchanged for dense clusters (tested). The r5 sf10 rehearsal
-    showed the join's MATCHED-ROW count is this operator's real cost
-    (SCALE_r05.md: ~1.3B matched rows at 200k vectors, and cheapening
-    per-row work measured slower) — this is the lever that shrinks it.
-
-    ``anchor_degree=None`` (default) means "exact unless unaffordable"
-    — the same fan-out auto-guard as the MinHash/SimHash siblings
-    estimates the bucket join's candidate count first and engages
-    anchors above ``auto_bound`` (default AUTO_ANCHOR_BOUND; logged
-    and recorded in FANOUT_STATS). ``anchor_degree=0`` opts out (exact
-    at any cost — what strict oracle pair parity requires if the
-    corpus is dup-dense enough to trip the guard; the default bound
-    never trips at oracle scales).
+    random-hyperplane LSH tables (seeds seed..seed+n_tables-1, keyed
+    exactly as :func:`embedding_index`); a pair is a candidate if it
+    collides in ANY table, then candidates are verified by exact
+    cosine. Per-pair recall at similarity s is 1-(1-p^bits)^n_tables
+    with p = 1-acos(s)/π — ≥0.99 for genuine near-dups (s≥0.95) at
+    bits=8, n_tables=8. The join is bucket-equi, never O(n²), and fully
+    mirrored by embedding_dup_pairs_sql so an independent engine
+    reproduces the same candidate set. Anchors and the fan-out guard:
+    see :func:`_anchored` (the join's MATCHED-ROW count is this op's
+    real cost — SCALE_r05.md: ~1.3B at 200k vectors — and anchors are
+    the lever that shrinks it; the guard weighs each candidate dim/8
+    units). The guard's estimate is one extra map pass over the corpus,
+    deliberately not persisted: at the 100 TB scale caching the corpus
+    to save one scan would spill it to executor disks.
 
     bucket_bits=0 compares all pairs (correctness baseline for tests
     only — a cartesian product, never the declared path at scale).
     """
-    from .simsearch import _score_exprs, hyperplane_bucket
+    from .simsearch import _score_exprs
 
     # fixed-dim unrolled scorer when dim is known — bitwise-identical
     # to the HOF forms (simsearch.dot_expr_fixed), so oracle pair sets
-    # and cosines are unchanged; the bucketed path always knows dim
+    # and cosines are unchanged
     _norm, _cos = _score_exprs(dim)
+    cos = _cos("a.vec", "b.vec", "a.nrm", "b.nrm").alias("cosine")
+    if bucket_bits > 0:
+        e = _embedding_buckets(embedding_index(
+            df, id_col, vec_col, bucket_bits, n_tables, dim, seed))
+        return _bucket_pairs(
+            e, e, ["tbl", "bucket"], "id", "embedding_dup_pairs", cos,
+            F.col("cosine") >= threshold, anchor_degree=anchor_degree,
+            auto_bound=auto_bound, stats_out=stats_out,
+            weight=max(1.0, dim / 8))
     v = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
         _norm(vec_col).alias("nrm"),
     )
-    if bucket_bits > 0:
-        if dim is None:
-            raise ValueError("bucket_bits>0 requires dim (no driver-side inference)")
-        tables = F.array(*[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                hyperplane_bucket("vec", dim, bucket_bits, seed + t).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ])
-        e = v.select("id", "vec", "nrm", F.explode(tables).alias("tb")).select(
-            "id", "vec", "nrm", "tb.tbl", "tb.bucket"
-        )
-        # fan-out auto-guard (r7): the estimate is ONE extra map pass
-        # over the corpus (the buckets derive from the vectors, so the
-        # scan itself is not avoided — only the wide shuffle is, via
-        # the (tbl,bucket) projection). That pass is the guard's price:
-        # deliberately NOT persisted — at the 100 TB scale this op
-        # targets, caching the corpus to save one scan would spill the
-        # whole table to executor disks, costing more than the scan
-        # (cf. simhash, whose 16-byte signatures ARE cheap to cache)
-        left = _anchored(e, ["tbl", "bucket"], "id", "embedding_dup_pairs",
-                         anchor_degree, auto_bound, stats_out,
-                         weight=max(1.0, dim / 8))
-        # corpus-sized both sides: shuffle-hash, never AQE-broadcast
-        a, b = left.alias("a"), e.alias("b").hint("shuffle_hash")
-        cos = _cos("a.vec", "b.vec", "a.nrm", "b.nrm")
-        # cosine + threshold evaluate MAP-SIDE on the bucket join's
-        # output, BEFORE any pair dedup: deduping first means shuffling
-        # every candidate pair with BOTH vectors attached (measured
-        # 8M pairs × ~1 KB at sf1 → 42 s; this shape: 7.4 s for the
-        # identical 93,295-pair result). The ≤n_tables-way duplicate
-        # cosine evals are cheap; the wide-row exchange is not.
-        # dropDuplicates then touches only surviving (id,id,cos) rows.
-        return (
-            a.join(b, on=["tbl", "bucket"])
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                cos.alias("cosine"),
-            )
-            .filter(F.col("cosine") >= threshold)
-            .dropDuplicates(["id_a", "id_b"])
-        )
     a, b = v.alias("a"), v.alias("b")
-    joined = a.crossJoin(b).filter(F.col("a.id") < F.col("b.id"))
-    cos = _cos("a.vec", "b.vec", "a.nrm", "b.nrm")
     return (
-        joined.select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), cos.alias("cosine")
-        )
+        a.crossJoin(b).filter(F.col("a.id") < F.col("b.id"))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), cos)
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -1185,16 +1169,9 @@ def minhash_against_index(
     - ``new_sigs`` — the new batch's signatures; append to the index
       (Catalog.put versioning keeps the old state time-travelable).
 
-    Join shape: the SMALL new-batch bucket list is the left side; the
-    corpus-sized index explodes band buckets on the right with a
-    shuffle_hash hint (same rationale as lsh_candidate_pairs — AQE
-    must not try to broadcast a corpus-sized side). Pair order is
-    normalized with least/greatest since a new id may sort before an
-    old one. ``anchor_degree=D`` caps fan-out per (band,bucket) on the
-    index side for duplicate-dense corpora (see lsh_candidate_pairs);
-    ``anchor_degree=None`` (default) auto-guards on the probe×corpus
-    estimate (Σ n_new·n_all per shared bucket, logged + FANOUT_STATS);
-    ``anchor_degree=0`` opts out — exact pair parity at any cost."""
+    Pairs come from the probe mode of :func:`_bucket_pairs` (the new
+    batch's band buckets against index ∪ batch); anchors and the
+    fan-out guard: see :func:`_anchored`."""
     rows_per_band = num_perm // num_bands
     new_sigs = minhash_signatures(
         new_docs, id_col, text_col, num_perm, shingle_k, hash_fn=hash_fn
@@ -1202,22 +1179,12 @@ def minhash_against_index(
     all_sigs = index_sigs.select(id_col, "signature").unionByName(
         new_sigs.select(id_col, "signature")
     )
-    new_b = _band_buckets(new_sigs, id_col, num_bands, rows_per_band)
-    all_b = _band_buckets(all_sigs, id_col, num_bands, rows_per_band)
-    all_b = _anchored(all_b, ["band", "bucket"], id_col,
-                      "minhash_against_index", anchor_degree, auto_bound,
-                      stats_out, probe=new_b)
-    a = new_b.alias("a")
-    b = all_b.alias("b").hint("shuffle_hash")
-    pairs = (
-        a.join(b, on=["band", "bucket"], how="inner")
-        .filter(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-        .select(
-            F.least(f"a.{id_col}", f"b.{id_col}").alias("id_a"),
-            F.greatest(f"a.{id_col}", f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates()
-    )
+    pairs = _bucket_pairs(
+        _band_buckets(new_sigs, id_col, num_bands, rows_per_band),
+        _band_buckets(all_sigs, id_col, num_bands, rows_per_band),
+        ["band", "bucket"], id_col, "minhash_against_index",
+        self_join=False, anchor_degree=anchor_degree, auto_bound=auto_bound,
+        stats_out=stats_out)
     scored = minhash_jaccard(all_sigs, pairs, id_col, num_perm=num_perm)
     out = scored.filter(F.col("est_jaccard") >= threshold).localCheckpoint(eager=True)
     return out, new_sigs
@@ -1239,47 +1206,23 @@ def simhash_against_index(
     (id, sh_lo, sh_hi — 2 longs per doc). Returns ``(pairs,
     new_sigs)`` where pairs is every Hamming ≤ max_hamming pair
     touching the new batch (lossless by the pigeonhole chunk cover,
-    exactly as the full recompute — pytest proves set equality).
-    ``anchor_degree``: None (default) = exact unless the probe×corpus
-    fan-out guard trips (logged + FANOUT_STATS); 0 = exact at any
-    cost; D caps the index side's per-(chunk,val) fan-out."""
-    chunks = _simhash_chunk_col(max_hamming)
+    exactly as the full recompute — pytest proves set equality), from
+    the probe mode of :func:`_bucket_pairs`; anchors and the fan-out
+    guard: see :func:`_anchored`."""
     new_sigs = simhash_signatures(
         new_docs, id_col, text_col, hash_fn=hash_fn
     ).localCheckpoint(eager=True)
     all_sigs = index_sigs.select(id_col, "sh_lo", "sh_hi").unionByName(
         new_sigs.select(id_col, "sh_lo", "sh_hi")
     )
-
-    def _explode(sigs):
-        return sigs.select(
-            id_col, "sh_lo", "sh_hi", F.explode(chunks).alias("c")
-        ).select(id_col, "sh_lo", "sh_hi", "c.chunk", "c.val")
-
-    new_e, all_e = _explode(new_sigs), _explode(all_sigs)
-    all_e = _anchored(all_e, ["chunk", "val"], id_col,
-                      "simhash_against_index", anchor_degree, auto_bound,
-                      stats_out, probe=new_e)
-    a, b = new_e.alias("a"), all_e.alias("b").hint("shuffle_hash")
-    hamming = (
-        F.bit_count(F.col("a.sh_lo").bitwiseXOR(F.col("b.sh_lo")))
-        + F.bit_count(F.col("a.sh_hi").bitwiseXOR(F.col("b.sh_hi")))
-    ).cast("long")
-    pairs = (
-        a.join(b, on=["chunk", "val"])
-        .filter(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-        .select(
-            F.least(f"a.{id_col}", f"b.{id_col}").alias("id_a"),
-            F.greatest(f"a.{id_col}", f"b.{id_col}").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        # filter-before-dedup: same reorder as simhash_near_pairs (r11)
-        # — hamming is pair-determined, so this is result-identical and
-        # the dedup exchange carries only true near-pairs.
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-        .localCheckpoint(eager=True)
-    )
+    score, keep = _hamming_score(max_hamming)
+    pairs = _bucket_pairs(
+        _simhash_buckets(new_sigs, id_col, max_hamming),
+        _simhash_buckets(all_sigs, id_col, max_hamming),
+        ["chunk", "val"], id_col, "simhash_against_index", score, keep,
+        self_join=False, anchor_degree=anchor_degree, auto_bound=auto_bound,
+        stats_out=stats_out,
+    ).localCheckpoint(eager=True)
     return pairs, new_sigs
 
 
@@ -1300,7 +1243,9 @@ def embedding_index(
     seed) are part of the index's identity: an ingest batch signed
     with different parameters lands in incompatible buckets. Persist
     with Catalog.put — versioning keeps every pre-ingest state
-    time-travelable, exactly like the MinHash signature index."""
+    time-travelable, exactly like the MinHash signature index. The
+    batch :func:`embedding_dup_pairs` keys its bucketed path from the
+    same rows."""
     from .simsearch import _hof_norm_sql, hyperplane_bucket
 
     if dim is None:
@@ -1318,6 +1263,15 @@ def embedding_index(
         F.expr(_hof_norm_sql(vec_col)).alias("nrm"),
         tables.alias("buckets"),
     )
+
+
+def _embedding_buckets(index: DataFrame) -> DataFrame:
+    """(id, vec, nrm, tbl, bucket) — one row per hyperplane table of
+    each :func:`embedding_index` row; the key table of both embedding
+    pair ops."""
+    return index.select(
+        "id", "vec", "nrm", F.explode("buckets").alias("tb")
+    ).select("id", "vec", "nrm", "tb.tbl", "tb.bucket")
 
 
 def embedding_dup_against_index(
@@ -1353,22 +1307,10 @@ def embedding_dup_against_index(
     - ``new_index`` — the new batch's index rows; append to the stored
       index for the next ingest.
 
-    Join shape mirrors embedding_dup_pairs' bucketed path: the small
-    new-batch side joins the corpus-sized exploded index
-    (shuffle_hash — AQE must not broadcast a corpus), cosine +
-    threshold evaluate map-side on the join output, and only
-    surviving (id, id, cos) rows reach the pair dedup (the wide-vector
-    exchange before filtering was the measured 5.7× regression the
-    full-recompute path already avoids). ``anchor_degree=D`` caps the
-    corpus side's fan-out per (tbl,bucket) to its D smallest ids —
-    same duplicate-dense lever and same caveat as the other
-    ``*_against_index`` ops and embedding_dup_pairs: the
-    dup-cluster DECISION is preserved for dense clusters.
-    ``anchor_degree=None`` (default) auto-guards: the probe×corpus
-    fan-out (Σ n_new·n_all per shared bucket) is estimated first and
-    anchors engage above ``auto_bound`` (logged + FANOUT_STATS);
-    ``anchor_degree=0`` opts out — exact pair parity at any cost."""
-    from .simsearch import _hof_dot_sql
+    Pairs come from the probe mode of :func:`_bucket_pairs`, scored
+    like embedding_dup_pairs; anchors and the fan-out guard: see
+    :func:`_anchored`."""
+    from .simsearch import _score_exprs
 
     new_index = embedding_index(
         new_df, id_col, vec_col, bucket_bits, n_tables, dim, seed
@@ -1376,37 +1318,14 @@ def embedding_dup_against_index(
     all_index = index.select("id", "vec", "nrm", "buckets").unionByName(
         new_index.select("id", "vec", "nrm", "buckets")
     )
-
-    def _explode(ix):
-        return ix.select(
-            "id", "vec", "nrm", F.explode("buckets").alias("tb")
-        ).select("id", "vec", "nrm", "tb.tbl", "tb.bucket")
-
-    corpus_side = _explode(all_index)
-    new_e = _explode(new_index)
-    # fan-out auto-guard (r7): probe×corpus estimate on the slim
-    # (tbl,bucket) projections; the corpus side's bucket counts come
-    # from the PERSISTED index — no vector re-hash
-    corpus_side = _anchored(
-        corpus_side, ["tbl", "bucket"], "id", "embedding_dup_against_index",
-        anchor_degree, auto_bound, stats_out, probe=new_e,
-        weight=max(1.0, (dim or 8) / 8))
-    a = new_e.alias("a")
-    b = corpus_side.alias("b").hint("shuffle_hash")
-    cos = (F.expr(_hof_dot_sql("a.vec", "b.vec"))
-           / (F.col("a.nrm") * F.col("b.nrm")))
-    pairs = (
-        a.join(b, on=["tbl", "bucket"])
-        .filter(F.col("a.id") != F.col("b.id"))
-        .select(
-            F.least("a.id", "b.id").alias("id_a"),
-            F.greatest("a.id", "b.id").alias("id_b"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .dropDuplicates(["id_a", "id_b"])
-        .localCheckpoint(eager=True)
-    )
+    cos = _score_exprs(dim)[1]("a.vec", "b.vec", "a.nrm", "b.nrm")
+    pairs = _bucket_pairs(
+        _embedding_buckets(new_index), _embedding_buckets(all_index),
+        ["tbl", "bucket"], "id", "embedding_dup_against_index",
+        cos.alias("cosine"), F.col("cosine") >= threshold, self_join=False,
+        anchor_degree=anchor_degree, auto_bound=auto_bound,
+        stats_out=stats_out, weight=max(1.0, dim / 8),
+    ).localCheckpoint(eager=True)
     return pairs, new_index
 
 

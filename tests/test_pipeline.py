@@ -675,24 +675,40 @@ def test_centroid_cache_evicts_on_version_change(spark, emb):
     SS.clear_centroid_cache()
 
 
-def test_anchor_degree_bounds_fanout_preserves_clusters(spark):
-    """Duplicate-dense corpora (the sf10 lesson: 100-way near-dup
-    clusters → quadratic pair enumeration; simhash OOM'd): with
-    anchor_degree the pair count is linear in cluster size and
-    dup_clusters/keep_canonical decide IDENTICALLY to all-pairs."""
-    n_copies = 40
-    # DENSE clusters (the guarantee's precondition): within a base the
-    # copies differ by one tail token; across bases a repeated marker
-    # dominates, so clusters are far apart under both metrics
+def _dense_docs(spark):
+    """Dup-dense text corpus: 3 DENSE clusters of 40 copies (the anchor
+    guarantee's precondition), ids base*1000 + copy. Within a base the
+    copies differ by one tail token; across bases a repeated marker
+    dominates, so clusters are far apart under both metrics."""
     marker = {0: "aardvark", 1: "kumquat", 2: "zeppelin"}
     rows = [(base * 1000 + k,
              f"the quick brown fox jumps over the lazy dog variant "
              f"{(marker[base] + ' ') * 12}"
              f"alpha beta gamma delta epsilon zeta eta theta "
              + ("tail" if k == 0 else f"tail{k % 3}"))
-            for base in range(3) for k in range(n_copies)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+            for base in range(3) for k in range(40)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
 
+
+def _dense_emb(spark):
+    """Dup-dense dim-16 vector corpus: 3 clusters of 30 copies, ids
+    base*1000 + copy — one base direction per cluster plus a tiny
+    per-copy perturbation; cross-cluster cosine ≈ 0.1."""
+    rows = []
+    for base in range(3):
+        for k in range(30):
+            vec = [1.0 if j % 3 == base else 0.05 for j in range(16)]
+            vec[k % 16] += 0.01
+            rows.append((base * 1000 + k, vec))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_anchor_degree_bounds_fanout_preserves_clusters(spark):
+    """Duplicate-dense corpora (the sf10 lesson: 100-way near-dup
+    clusters → quadratic pair enumeration; simhash OOM'd): with
+    anchor_degree the pair count is linear in cluster size and
+    dup_clusters/keep_canonical decide IDENTICALLY to all-pairs."""
+    docs = _dense_docs(spark)
     exact = D.minhash_lsh_dedup(docs, "doc_id", "text", threshold=0.5)
     capped = D.minhash_lsh_dedup(docs, "doc_id", "text", threshold=0.5,
                                  anchor_degree=4)
@@ -780,17 +796,8 @@ def test_embed_anchor_degree_bounds_fanout_preserves_clusters(spark):
     embedding op's real cost (SCALE_r05.md), and anchor_degree is the
     lever that shrinks it — pair count linear in cluster size, the
     dup_clusters decision identical, no invented edges."""
-    n_copies, dim = 30, 16
-    rows = []
-    for base in range(3):
-        for k in range(n_copies):
-            # dense clusters: one base direction per cluster + a tiny
-            # per-copy perturbation; cross-cluster cosine ≈ 0.1
-            vec = [1.0 if j % 3 == base else 0.05 for j in range(dim)]
-            vec[k % dim] += 0.01
-            rows.append((base * 1000 + k, vec))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(threshold=0.95, bucket_bits=6, n_tables=4, dim=dim)
+    emb = _dense_emb(spark)
+    kw = dict(threshold=0.95, bucket_bits=6, n_tables=4, dim=16)
     exact = D.embedding_dup_pairs(emb, "vec_id", "embedding", **kw)
     capped = D.embedding_dup_pairs(emb, "vec_id", "embedding",
                                    anchor_degree=4, **kw)
@@ -871,6 +878,87 @@ def test_embedding_fanout_auto_guard_engages_anchors(spark, monkeypatch, caplog)
     quiet = D.embedding_dup_pairs(emb, "vec_id", "embedding", **kw)
     assert _pair_set(quiet) == _pair_set(exact)
     assert D.FANOUT_STATS["embedding_dup_pairs"]["anchor_degree"] is None
+
+
+@pytest.mark.parametrize("family", ["minhash", "simhash", "embedding"])
+@pytest.mark.parametrize("mode", ["self", "probe"])
+def test_pair_kernel_anchors_the_declared_side(spark, family, mode):
+    """_bucket_pairs' anchor-side contract at anchor_degree=2, on the
+    dup-dense corpora. A self-join anchors the probe (a) side: the
+    anchored pairs are exactly the exact pairs (id_a, id_b) whose id_a
+    is among the 2 smallest ids of some bucket shared with id_b. An
+    ``*_against_index`` join anchors the corpus (b) side: exactly the
+    exact pairs with one new-batch id and one id among the 2 smallest
+    CORPUS ids (index ∪ batch) of a bucket the two share. The new
+    batch holds each cluster's highest ids, so anchoring the wrong side
+    yields a different pair set in both modes."""
+    emb_kw = dict(threshold=0.95, bucket_bits=6, n_tables=4, dim=16)
+    if family == "embedding":
+        corpus, id_col = _dense_emb(spark), "vec_id"
+        new_mask = F.col("vec_id") % 1000 >= 20
+        keys = D._embedding_buckets(D.embedding_index(
+            corpus, "vec_id", "embedding", bucket_bits=6, n_tables=4,
+            dim=16)).select(F.col("id").alias("vec_id"), "tbl", "bucket")
+    else:
+        corpus, id_col = _dense_docs(spark), "doc_id"
+        new_mask = F.col("doc_id") % 1000 >= 25
+        if family == "minhash":
+            keys = D._band_buckets(D.minhash_signatures(
+                corpus, "doc_id", "text"), "doc_id", 16, 4)
+        else:
+            keys = D._simhash_buckets(D.simhash_signatures(
+                corpus, "doc_id", "text"), "doc_id", 3).drop("sh_lo", "sh_hi")
+    old, new = corpus.filter(~new_mask), corpus.filter(new_mask)
+
+    def pairs(ad):
+        if mode == "self" and family == "minhash":
+            out = D.lsh_candidate_pairs(
+                D.minhash_signatures(corpus, "doc_id", "text"), "doc_id",
+                anchor_degree=ad)
+        elif mode == "self" and family == "simhash":
+            out = D.simhash_near_pairs(
+                D.simhash_signatures(corpus, "doc_id", "text"), "doc_id",
+                max_hamming=3, anchor_degree=ad)
+        elif mode == "self":
+            out = D.embedding_dup_pairs(corpus, "vec_id", "embedding",
+                                        anchor_degree=ad, **emb_kw)
+        elif family == "minhash":
+            out, _ = D.minhash_against_index(
+                new, D.minhash_signatures(old, "doc_id", "text"),
+                threshold=0.5, anchor_degree=ad)
+        elif family == "simhash":
+            out, _ = D.simhash_against_index(
+                new, D.simhash_signatures(old, "doc_id", "text"),
+                max_hamming=3, anchor_degree=ad)
+        else:
+            out, _ = D.embedding_dup_against_index(
+                new, D.embedding_index(old, "vec_id", "embedding",
+                                       bucket_bits=6, n_tables=4, dim=16),
+                "vec_id", "embedding", anchor_degree=ad, **emb_kw)
+        return _pair_set(out)
+
+    members: dict = {}
+    of: dict = {}
+    for r in keys.collect():
+        k = tuple(r[1:])
+        members.setdefault(k, []).append(r[0])
+        of.setdefault(r[0], set()).add(k)
+    anchors = {k: set(sorted(ids)[:2]) for k, ids in members.items()}
+    new_ids = {r[0] for r in new.select(id_col).collect()}
+
+    def through_anchor(x, y):
+        for k in of[x] & of[y]:
+            if mode == "self" and x in anchors[k]:
+                return True
+            if mode == "probe" and ((x in new_ids and y in anchors[k])
+                                    or (y in new_ids and x in anchors[k])):
+                return True
+        return False
+
+    exact = pairs(0)
+    expected = {(x, y) for x, y in exact if through_anchor(x, y)}
+    assert expected and len(expected) < len(exact)
+    assert pairs(2) == expected
 
 
 # ---------------------------------------------------------------------

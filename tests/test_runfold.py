@@ -196,6 +196,29 @@ def test_relation_ordered_declarative_dispatch(spark):
         for va, vb in zip(ra[4:], rb[4:]):
             assert va == pytest.approx(vb, rel=1e-12)
 
+    # un-grouped, descending unique key: the same dispatch runs the
+    # folds over range slices (groups=[]), never a partition-less window
+    got = rel.ordered(
+        ["-seq"], ord="ord", run_sum=("+", "x"), run_min=("min", "x"),
+    ).df
+    specs = re.findall(
+        r"windowspecdefinition\(([^)]*)\)", formatted_plan(got))
+    assert specs and not [s for s in specs if "__pid" not in s]
+    exp = rel.ordered(
+        ["-seq"],
+        ord=lambda w: F.row_number().over(w).cast("long"),
+        run_sum=lambda w: F.sum("x").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+        run_min=lambda w: F.min("x").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+    ).df.select(*got.columns)
+    a = sorted(map(tuple, got.collect()))
+    b = sorted(map(tuple, exp.collect()))
+    assert len(a) == len(b) == 3_000
+    for ra, rb in zip(a, b):
+        assert ra[:4] + ra[5:] == rb[:4] + rb[5:]
+        assert ra[4] == pytest.approx(rb[4], rel=1e-12)
+
 
 def test_relation_ordered_declarative_descending(spark):
     """Review r6: the '-col' descending syntax must survive the
