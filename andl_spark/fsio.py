@@ -36,6 +36,8 @@ import posixpath
 import re
 import shutil
 
+from .util import Memo
+
 __all__ = [
     "exists", "read_text", "write_text", "write_text_atomic",
     "write_text_create", "listdir", "delete", "mkdirs", "join", "stat",
@@ -80,9 +82,10 @@ def join(base: str, *parts: str) -> str:
 #: untouched (mutating the shared cached instance's checksum flags
 #: would silently change Spark's own file:// behavior), then kept here
 #: because instantiation is expensive on object stores (an s3a
-#: FileSystem builds an AWS client + thread pools). Never closed —
-#: they live for the process, exactly like Hadoop's own cache.
-_FS_CACHE: dict[tuple, object] = {}
+#: FileSystem builds an AWS client + thread pools). Unbounded: they
+#: live for the process, exactly like Hadoop's own cache, and are never
+#: closed, so evicting one would leak it.
+_FS_CACHE = Memo()
 
 
 def _session():
@@ -111,14 +114,15 @@ def _jvm_fs(path: str):
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     uri = jpath.toUri()
-    key = (uri.getScheme(), uri.getAuthority())
-    fs = _FS_CACHE.get(key)
-    if fs is None:
+
+    def build():
         fs = jvm.org.apache.hadoop.fs.FileSystem.newInstance(
             uri, spark._jsc.hadoopConfiguration())
         fs.setVerifyChecksum(False)
         fs.setWriteChecksum(False)
-        _FS_CACHE[key] = fs
+        return fs
+
+    fs = _FS_CACHE.get((uri.getScheme(), uri.getAuthority()), build)
     return spark, jvm, fs, jpath
 
 

@@ -64,7 +64,7 @@ from ..streaming.events import (
     resolve_neardup_index,
     seed_neardup_index,
 )
-from ..util import local_frame
+from ..util import Memo, local_frame
 from .simsearch import (
     AUTO_NLIST_MAX,
     AUTO_PROBE_FRAC,
@@ -386,27 +386,23 @@ def build_ivf_index(
     return meta
 
 
-#: parsed metas keyed by (index path, generation dir): a generation is
+#: parsed metas per (index path, generation dir): a generation is
 #: immutable once flipped to, so its meta parses once — without this,
 #: every query and every streaming micro-batch re-json.loads the
 #: quantizer (the hier C2 tensor is n1·n2·dim doubles — ~100 MB of
-#: JSON at the 16.7M+ auto-dispatch regime with dim 1024; review r8b)
-_META_CACHE: dict[tuple, tuple] = {}  # (path, gen_dir) → (file ident, meta)
-_META_CACHE_MAX = 32
+#: JSON at the 16.7M+ auto-dispatch regime with dim 1024). The
+#: fingerprint is the meta FILE's (path, mtime, length): a delete-and-
+#: rebuild at the same path restarts generation numbering, so the key
+#: alone would serve the previous index's quantizer to a process that
+#: never saw the rebuild (ADVICE r8).
+_META_CACHE = Memo(32)
 
 
 def _invalidate_meta_cache(path: str) -> None:
-    """Drop cached metas for ``path``: generation numbering restarts
-    when an index tree is deleted and rebuilt at the same path, so the
-    (path, gen dir) key would collide with the PREVIOUS index's
-    quantizer (review r8b round 2). Every build_ivf_index calls this
-    in-process; cross-PROCESS staleness (a rebuild from a different
-    long-lived driver) is closed by _meta_at validating each hit
-    against the meta file's (mtime, length) — the store's own identity
-    for the bytes — so a restarted generation numbering can never
-    serve the previous index's quantizer (ADVICE r8)."""
-    for k in [k for k in _META_CACHE if k[0] == path]:
-        _META_CACHE.pop(k, None)
+    """Drop cached metas for ``path``. Every build_ivf_index calls this
+    in-process; a rebuild by another driver is caught by the meta
+    file's fingerprint."""
+    _META_CACHE.drop(lambda k: k[0] == path)
 
 
 def _meta_at(path: str, gen_dir: str) -> dict:
@@ -416,60 +412,29 @@ def _meta_at(path: str, gen_dir: str) -> dict:
     try:
         ident = (p,) + fsio.stat(p)
     except OSError:
-        ident = (p, None, None)  # racing delete: parse uncached below
-    key = (path, gen_dir)
-    hit = _META_CACHE.get(key)
-    # validate against the FILE's identity, not just the path: a
-    # delete-and-rebuild at the same path restarts generation
-    # numbering, so (path, gen dir) alone would happily serve the
-    # previous index's quantizer from a DIFFERENT process whose cache
-    # never saw the rebuild (ADVICE r8). One stat per hit — cheap
-    # against the ~100 MB hier-quantizer parse it guards.
-    if hit is not None and hit[0] == ident:
-        return hit[1]
-    while len(_META_CACHE) >= _META_CACHE_MAX:  # bounded FIFO
-        _META_CACHE.pop(next(iter(_META_CACHE)))
-    meta = json.loads(fsio.read_text(p))
-    _META_CACHE[key] = (ident, meta)
-    return meta
+        ident = None  # racing delete: parse uncached
+    return _META_CACHE.get((path, gen_dir),
+                           lambda: json.loads(fsio.read_text(p)), ident)
 
 
-#: generation-scoped DataFrame cache (r9): at 4,489 cells the 20M
-#: rehearsal showed every fresh spark.read.parquet paying a PARALLEL
-#: PARTITION DISCOVERY job over all ~4,400 leaf dirs (one LIST per
-#: cell×batch dir — the dominant serve cost, and on an object store
-#: thousands of LIST calls per query batch). The DataFrame (whose
-#: FileIndex holds the listing) is reused keyed on the TOP-LEVEL batch
-#: dirs PLUS EACH BATCH DIR'S OWN fsio.stat IDENTITY (ADVICE r9: the
-#: batch-dir NAME set alone conflated logical content with the
-#: physical file listing Spark scans — a foreachBatch replay rewrites
-#: an existing ``_batch_id=N`` with NEW part files and deletes the old
-#: ones, and a delete committed under an existing batch id adds a
-#: tombstone leaf, BOTH leaving the name set unchanged; the first left
-#: the cached FileIndex pointing at deleted files — every read threw
-#: FileNotFoundException — and the second kept serving deleted
-#: vectors). Dynamic overwrite and tombstone commits add/remove leaf
-#: dirs under the batch dir, which bumps its mtime on every backend
-#: that has one, so the stat identity catches cross-process writers;
-#: in-process writers additionally invalidate explicitly
-#: (:func:`_invalidate_data_cache`), which also covers stores whose
-#: "directory" mtimes are synthetic (object stores) for the
-#: single-driver case. One cheap O(#batches) listing + stat pass per
-#: call replaces the O(#batches × #cells) recursive one.
-#:
-#: r11 (ADVICE r10): on URI paths those synthetic mtimes mean a
-#: MULTI-DRIVER deployment could serve a stale FileIndex indefinitely
-#: — a replay or delete committed by another driver changes neither
-#: the batch-dir name set nor any real mtime, and the other driver's
-#: explicit invalidation is in-process only. Cache entries for URI
-#: generation dirs therefore EXPIRE after :data:`_DATA_CACHE_TTL_URI`
-#: seconds: cross-process writes converge within a known window
-#: instead of "until the next generation flip". Local paths keep the
-#: pure stat identity (real mtimes catch every leaf add/remove).
-_DATA_CACHE: dict[tuple, tuple] = {}  # key → (df, has_tombs, insert time)
-_DATA_CACHE_MAX = 8
+#: generation DataFrames per (application, index path, generation
+#: dir). A fresh spark.read.parquet pays a partition-discovery job over
+#: every cell × batch leaf dir (one LIST each — the dominant serve cost
+#: at 4k+ cells, thousands of LIST calls per query on an object store);
+#: the cached frame's FileIndex holds that listing. The fingerprint is
+#: each top-level batch dir's (name, mtime, length), not the name set
+#: alone (ADVICE r9): a foreachBatch replay rewrites an existing
+#: ``_batch_id=N`` with new part files, and a delete under an existing
+#: batch id adds a tombstone leaf; both keep the names but bump the
+#: batch dir's mtime. In-process writers also drop their entries
+#: (:func:`_invalidate_data_cache`). On URI paths directory mtimes may
+#: be synthetic, so another driver's replay or delete changes no
+#: fingerprint: those entries expire after :data:`_DATA_CACHE_TTL_URI`
+#: seconds, so cross-process writes converge within a known window
+#: (ADVICE r10).
+_DATA_CACHE = Memo(8)
 
-#: staleness bound for URI-path cache entries (see _DATA_CACHE)
+#: staleness bound for URI-path entries of _DATA_CACHE
 _DATA_CACHE_TTL_URI = 30.0
 
 
@@ -478,23 +443,20 @@ def _invalidate_data_cache(path: str) -> None:
     in-process writer (build, append, delete, compact) calls this so a
     later read never serves a FileIndex listing files the write just
     replaced (ADVICE r9)."""
-    for k in [k for k in _DATA_CACHE if k[1] == path]:
-        _DATA_CACHE.pop(k, None)
+    _DATA_CACHE.drop(lambda k: k[1] == path)
 
 
 def _batch_dirs_ident(gen_dir: str) -> tuple | None:
-    """(name, mtime, length) per top-level batch dir — the physical
-    identity the data cache keys on (see _DATA_CACHE) — or None when a
-    stat raced a concurrent delete: the caller then reads UNCACHED
-    (caching under an unmatchable sentinel would evict a live entry
-    from the bounded FIFO for nothing; review r10)."""
+    """(name, mtime, length) per top-level batch dir — the data cache's
+    fingerprint — or None when a stat raced a concurrent delete, so
+    that read is served uncached."""
     out = []
     for n in sorted(n for n in fsio.listdir(gen_dir)
                     if n.startswith("_batch_id=")):
         try:
             out.append((n,) + fsio.stat(fsio.join(gen_dir, n)))
         except OSError:
-            return None  # racing writer: serve this read from disk
+            return None
     return tuple(out)
 
 
@@ -516,27 +478,13 @@ def _has_tombstones(gen_dir: str) -> bool:
 def _snapshot_full(spark: SparkSession, path: str):
     """(meta, data, has_tombstones) — read_ivf_snapshot plus the cached
     tombstone-partition flag the serve path branches on."""
-    import time as _time
-
-    data_root = fsio.join(path, "data")
-    gen_dir = resolve_neardup_index(data_root)
-    ident = _batch_dirs_ident(gen_dir)
-    if ident is None:  # mid-write race: one uncached read
-        return (_meta_at(path, gen_dir), spark.read.parquet(gen_dir),
-                _has_tombstones(gen_dir))
-    key = (spark.sparkContext.applicationId, path, gen_dir, ident)
-    hit = _DATA_CACHE.get(key)
-    if (hit is not None and fsio._is_uri(gen_dir)
-            and _time.monotonic() - hit[2] > _DATA_CACHE_TTL_URI):
-        _DATA_CACHE.pop(key, None)  # URI staleness bound (ADVICE r10)
-        hit = None
-    if hit is None:
-        while len(_DATA_CACHE) >= _DATA_CACHE_MAX:  # bounded FIFO
-            _DATA_CACHE.pop(next(iter(_DATA_CACHE)))
-        hit = (spark.read.parquet(gen_dir), _has_tombstones(gen_dir),
-               _time.monotonic())
-        _DATA_CACHE[key] = hit
-    return _meta_at(path, gen_dir), hit[0], hit[1]
+    gen_dir = resolve_neardup_index(fsio.join(path, "data"))
+    df, tombs = _DATA_CACHE.get(
+        (spark.sparkContext.applicationId, path, gen_dir),
+        lambda: (spark.read.parquet(gen_dir), _has_tombstones(gen_dir)),
+        _batch_dirs_ident(gen_dir),
+        ttl=_DATA_CACHE_TTL_URI if fsio._is_uri(gen_dir) else None)
+    return _meta_at(path, gen_dir), df, tombs
 
 
 def read_ivf_snapshot(spark: SparkSession, path: str):

@@ -34,6 +34,8 @@ import pandas as pd  # module-level: pandas_udf resolves string
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..util import Memo
+
 
 # ---------------------------------------------------------------------
 # DuckDB mirror SQL
@@ -432,15 +434,13 @@ def topk_lsh(
 # deterministic IVF (oracle-mirrorable) + full-query SQL mirrors
 # ---------------------------------------------------------------------
 
-#: Bounded FIFO cache of trained quantizers. Keyed on (applicationId,
-#: cols, nlist, semanticHash) — semanticHash is PLAN-shape based, so if
-#: the files under an identical path are rewritten within one
-#: application the entry can go stale; that is the documented
-#: invalidation assumption (at scale centroids are a catalog artifact
-#: keyed by corpus VERSION — pass them explicitly, or call
-#: clear_centroid_cache() after rewriting a corpus in place).
-_CENTROID_CACHE: dict[tuple, list[list[float]]] = {}
-_CENTROID_CACHE_MAX = 64
+#: Quantizers per (kind, application, cols, params, semanticHash,
+#: version). semanticHash is Catalyst's PLAN-shape signature, so files
+#: rewritten in place under an identical plan can go stale within one
+#: application — the documented assumption: pass the corpus
+#: ``version`` (at scale centroids are a catalog artifact keyed by
+#: corpus version) or call clear_centroid_cache() after such a rewrite.
+_CENTROID_CACHE = Memo(64)
 
 
 def clear_centroid_cache() -> None:
@@ -477,12 +477,12 @@ def seed_centroids(
     see the _CENTROID_CACHE note)."""
     key = ("seed", corpus.sparkSession.sparkContext.applicationId,
            id_col, vec_col, nlist, corpus.semanticHash(), version)
-    if key not in _CENTROID_CACHE:
-        while len(_CENTROID_CACHE) >= _CENTROID_CACHE_MAX:  # bounded FIFO
-            _CENTROID_CACHE.pop(next(iter(_CENTROID_CACHE)))
+
+    def build():
         rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(nlist).collect()
-        _CENTROID_CACHE[key] = [[float(x) for x in r[1]] for r in rows]
-    return _CENTROID_CACHE[key]
+        return [[float(x) for x in r[1]] for r in rows]
+
+    return _CENTROID_CACHE.get(key, build)
 
 
 def trained_centroids(
@@ -517,9 +517,8 @@ def trained_centroids(
     key = ("trained", corpus.sparkSession.sparkContext.applicationId,
            id_col, vec_col, nlist, train_cap, seed,
            corpus.semanticHash(), version)
-    if key not in _CENTROID_CACHE:
-        while len(_CENTROID_CACHE) >= _CENTROID_CACHE_MAX:  # bounded FIFO
-            _CENTROID_CACHE.pop(next(iter(_CENTROID_CACHE)))
+
+    def build():
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
@@ -543,8 +542,9 @@ def trained_centroids(
                        maxIter=8).fit(train)
         train.unpersist()
         cents = [[float(x) for x in c] for c in model.clusterCenters()]
-        _CENTROID_CACHE[key] = sorted(cents)
-    return _CENTROID_CACHE[key]
+        return sorted(cents)
+
+    return _CENTROID_CACHE.get(key, build)
 
 
 def _py_norm(vec: list[float]) -> float:
@@ -881,9 +881,8 @@ def hier_seed_centroids(
     key = ("hier", corpus.sparkSession.sparkContext.applicationId,
            id_col, vec_col, n1, n2, train_cap, corpus.semanticHash(),
            version)
-    if key not in _CENTROID_CACHE:
-        while len(_CENTROID_CACHE) >= _CENTROID_CACHE_MAX:  # bounded FIFO
-            _CENTROID_CACHE.pop(next(iter(_CENTROID_CACHE)))
+
+    def build():
         rows = (corpus.select(id_col, vec_col).orderBy(id_col)
                 .limit(train_cap).collect())
         if not rows:
@@ -891,9 +890,8 @@ def hier_seed_centroids(
         sample = np.asarray([r[1] for r in rows], dtype=np.float64)
         # a corpus smaller than n1 clamps level 1 to what exists
         # (review r7 — C2[t] = C1[t] indexed past len(C1) otherwise);
-        # list_id arithmetic stays t·n2 + sub with the clamped n1
+        # list_id arithmetic stays t·n2 + sub with the clamped len(C1)
         C1 = sample[:n1].copy()
-        n1 = len(C1)
         c1n = np.sqrt((C1 * C1).sum(axis=1))
         sn = np.sqrt((sample * sample).sum(axis=1))
         with np.errstate(divide="ignore", invalid="ignore"):
@@ -901,16 +899,17 @@ def hier_seed_centroids(
                            + 1e-9, 4)
         top = np.argmax(cos, axis=1)  # first max → ties to smaller id
         dim = sample.shape[1]
-        C2 = np.empty((n1, n2, dim), dtype=np.float64)
-        for t in range(n1):
+        C2 = np.empty((len(C1), n2, dim), dtype=np.float64)
+        for t in range(len(C1)):
             members = sample[top == t]
             if len(members) == 0:
                 C2[t] = C1[t]  # empty cell: sub-quantizer degenerates
             else:
                 reps = -(-n2 // len(members))  # ceil-cycle small cells
                 C2[t] = np.tile(members, (reps, 1))[:n2]
-        _CENTROID_CACHE[key] = (C1.tolist(), C2.tolist())
-    return _CENTROID_CACHE[key]
+        return (C1.tolist(), C2.tolist())
+
+    return _CENTROID_CACHE.get(key, build)
 
 
 def _np_lloyd(X: np.ndarray, k: int, seed: int, iters: int = 10) -> np.ndarray:
@@ -970,9 +969,8 @@ def hier_trained_centroids(
     key = ("hier-trained", corpus.sparkSession.sparkContext.applicationId,
            id_col, vec_col, n1, n2, train_cap, seed,
            corpus.semanticHash(), version)
-    if key not in _CENTROID_CACHE:
-        while len(_CENTROID_CACHE) >= _CENTROID_CACHE_MAX:  # bounded FIFO
-            _CENTROID_CACHE.pop(next(iter(_CENTROID_CACHE)))
+
+    def build():
         rows = (corpus.select(id_col, vec_col).orderBy(id_col)
                 .limit(train_cap).collect())
         if not rows:
@@ -981,7 +979,6 @@ def hier_trained_centroids(
         nrm = np.sqrt((sample * sample).sum(axis=1))
         sample = sample[nrm > 0] / nrm[nrm > 0, None]  # spherical
         C1 = _np_lloyd(sample, n1, seed)
-        n1 = len(C1)
         c1n = np.sqrt((C1 * C1).sum(axis=1))
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = np.round(sample @ C1.T / c1n[None, :] + 1e-9, 4)
@@ -994,8 +991,9 @@ def hier_trained_centroids(
                 C2[t] = C1[t]
             else:
                 C2[t] = _np_lloyd(members, n2, seed + 1 + t)
-        _CENTROID_CACHE[key] = (C1.tolist(), C2.tolist())
-    return _CENTROID_CACHE[key]
+        return (C1.tolist(), C2.tolist())
+
+    return _CENTROID_CACHE.get(key, build)
 
 
 def hier_assign_np(C1: list[list[float]], C2: list[list[list[float]]]):
@@ -1154,20 +1152,15 @@ def topk_ivf_hier(
 # and topk_ivf_hier.
 # ---------------------------------------------------------------------
 
-_CALIB_CACHE: dict[tuple, dict] = {}
-_CALIB_CACHE_MAX = 64
+#: Calibration records per corpus identity (the _CENTROID_CACHE key's
+#: semanticHash and version, with the same staleness assumption) plus
+#: every calibration parameter; a hit returns the same record object.
+_CALIB_CACHE = Memo(64)
 
 #: Fractions the calibration report's curve is sampled at (the
 #: SCALE_r08 §1 sweep grid). The returned probe depth itself comes
 #: from an exact integer binary search, not this grid.
 CALIB_CURVE_FRACS = (0.08, 0.16, 0.25, 0.40, 0.60, 1.0)
-
-
-def _calib_cache_put(key: tuple, rec: dict) -> dict:
-    while len(_CALIB_CACHE) >= _CALIB_CACHE_MAX:  # bounded FIFO
-        _CALIB_CACHE.pop(next(iter(_CALIB_CACHE)))
-    _CALIB_CACHE[key] = rec
-    return rec
 
 
 def _calib_pass(c: DataFrame, grid: DataFrame, hold: DataFrame,
@@ -1335,34 +1328,37 @@ def calibrate_probe(
            id_col, vec_col, k, target_recall, n_holdout, nlist,
            quantizer, cents_key, corpus.semanticHash(), version,
            hold_key, tuple(report_depths))
-    if key in _CALIB_CACHE:
-        return _CALIB_CACHE[key]
-    if centroids is None:
-        centroids = _resolve_centroids(corpus, id_col, vec_col, quantizer,
-                                       nlist, version=version)
-    n_cells = len(centroids)
-    dim = len(centroids[0]) if centroids else None
-    c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
-                   lambda v, n: F.element_at(
-                       _assign_expr(v, centroids, 1, n), 1))
-    h = _calib_holdout(corpus, id_col, vec_col, n_holdout, holdout)
-    order = _assign_expr("qvec", centroids, n_cells, "qn")
-    grid = h.select("query_id", F.posexplode(order).alias("pos0", "list_id")
-                    ).withColumn("probe_pos", F.col("pos0") + 1)
-    rows = _calib_pass(c, grid, h, k, dim=dim)
-    if not rows:
-        raise ValueError("calibrate_probe: empty calibration pass — the "
-                         "corpus has no nonzero-norm vectors to hold out")
-    nprobe, achieved, curve, at = _calib_solve(rows, k, target_recall,
-                                               n_cells, report_depths)
-    rec = {"kind": "flat", "nlist": n_cells, "nprobe": nprobe,
-           "frac": round(nprobe / n_cells, 4), "recall": achieved,
-           "target": target_recall, "curve": curve,
-           "n_holdout": len({r[0] for r in rows}), "k": k,
-           "quantizer": quantizer}
-    if at:
-        rec["at_depths"] = at
-    return _calib_cache_put(key, rec)
+
+    def build():
+        cents = (centroids if centroids is not None else
+                 _resolve_centroids(corpus, id_col, vec_col, quantizer,
+                                    nlist, version=version))
+        n_cells = len(cents)
+        dim = len(cents[0]) if cents else None
+        c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
+                       lambda v, n: F.element_at(
+                           _assign_expr(v, cents, 1, n), 1))
+        h = _calib_holdout(corpus, id_col, vec_col, n_holdout, holdout)
+        order = _assign_expr("qvec", cents, n_cells, "qn")
+        grid = h.select(
+            "query_id", F.posexplode(order).alias("pos0", "list_id")
+        ).withColumn("probe_pos", F.col("pos0") + 1)
+        rows = _calib_pass(c, grid, h, k, dim=dim)
+        if not rows:
+            raise ValueError("calibrate_probe: empty calibration pass — the "
+                             "corpus has no nonzero-norm vectors to hold out")
+        nprobe, achieved, curve, at = _calib_solve(rows, k, target_recall,
+                                                   n_cells, report_depths)
+        rec = {"kind": "flat", "nlist": n_cells, "nprobe": nprobe,
+               "frac": round(nprobe / n_cells, 4), "recall": achieved,
+               "target": target_recall, "curve": curve,
+               "n_holdout": len({r[0] for r in rows}), "k": k,
+               "quantizer": quantizer}
+        if at:
+            rec["at_depths"] = at
+        return rec
+
+    return _CALIB_CACHE.get(key, build)
 
 
 def calibrate_probe_hier(
@@ -1405,41 +1401,43 @@ def calibrate_probe_hier(
            id_col, vec_col, k, target_recall, n_holdout, n1, n2,
            quantizer, cents_key, corpus.semanticHash(), version,
            hold_key, tuple(report_depths))
-    if key in _CALIB_CACHE:
-        return _CALIB_CACHE[key]
-    if cents is None:
+
+    def build():
         # version= forwards to the centroid caches (ADVICE r8): an
         # in-place corpus rewrite with a bumped version must evict the
         # hier centroids exactly as calibrate_probe evicts the flat ones
-        cents = _resolve_centroids(corpus, id_col, vec_col, quantizer,
-                                   n1, n2, version=version)
-    C1, C2 = cents
-    n1, n2 = len(C1), (len(C2[0]) if C2 else 0)
-    dim = len(C1[0]) if C1 else None
-    assign = hier_assign_np(C1, C2)
-    c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
-                   lambda v, _n: assign(F.col(v)))
-    h = _calib_holdout(corpus, id_col, vec_col, n_holdout, holdout)
-    grid = h.select(
-        "query_id",
-        F.posexplode(hier_probe_np(C1, C2, n1)(F.col("qvec"))
-                     ).alias("pos0", "list_id")
-    ).withColumn(  # full probe list is n1 contiguous blocks of n2
-        "probe_pos", (F.col("pos0") / F.lit(n2)).cast("int") + 1)
-    rows = _calib_pass(c, grid, h, k, dim=dim)
-    if not rows:
-        raise ValueError("calibrate_probe_hier: empty calibration pass — "
-                         "the corpus has no nonzero-norm vectors to hold out")
-    p1, achieved, curve, at = _calib_solve(rows, k, target_recall, n1,
-                                           report_depths)
-    rec = {"kind": "hier", "n1": n1, "n2": n2, "p1": p1,
-           "frac": round(p1 / n1, 4), "recall": achieved,
-           "target": target_recall, "curve": curve,
-           "n_holdout": len({r[0] for r in rows}), "k": k,
-           "quantizer": quantizer}
-    if at:
-        rec["at_depths"] = at
-    return _calib_cache_put(key, rec)
+        C1, C2 = (cents if cents is not None else
+                  _resolve_centroids(corpus, id_col, vec_col, quantizer,
+                                     n1, n2, version=version))
+        m1, m2 = len(C1), (len(C2[0]) if C2 else 0)
+        dim = len(C1[0]) if C1 else None
+        assign = hier_assign_np(C1, C2)
+        c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
+                       lambda v, _n: assign(F.col(v)))
+        h = _calib_holdout(corpus, id_col, vec_col, n_holdout, holdout)
+        grid = h.select(
+            "query_id",
+            F.posexplode(hier_probe_np(C1, C2, m1)(F.col("qvec"))
+                         ).alias("pos0", "list_id")
+        ).withColumn(  # full probe list is m1 contiguous blocks of m2
+            "probe_pos", (F.col("pos0") / F.lit(m2)).cast("int") + 1)
+        rows = _calib_pass(c, grid, h, k, dim=dim)
+        if not rows:
+            raise ValueError("calibrate_probe_hier: empty calibration pass "
+                             "— the corpus has no nonzero-norm vectors to "
+                             "hold out")
+        p1, achieved, curve, at = _calib_solve(rows, k, target_recall, m1,
+                                               report_depths)
+        rec = {"kind": "hier", "n1": m1, "n2": m2, "p1": p1,
+               "frac": round(p1 / m1, 4), "recall": achieved,
+               "target": target_recall, "curve": curve,
+               "n_holdout": len({r[0] for r in rows}), "k": k,
+               "quantizer": quantizer}
+        if at:
+            rec["at_depths"] = at
+        return rec
+
+    return _CALIB_CACHE.get(key, build)
 
 
 def calibrate_probe_lsh(
@@ -1476,33 +1474,36 @@ def calibrate_probe_lsh(
     key = ("lsh", corpus.sparkSession.sparkContext.applicationId,
            id_col, vec_col, k, target_recall, n_holdout, bits, dim,
            seed, corpus.semanticHash(), version, hold_key)
-    if key in _CALIB_CACHE:
-        return _CALIB_CACHE[key]
-    c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
-                   lambda v, _n: hyperplane_bucket(v, dim, bits, seed))
-    h = _calib_holdout(corpus, id_col, vec_col, n_holdout, holdout)
-    grid = (
-        h.withColumn("bucket0",
-                     hyperplane_bucket("qvec", dim, bits, seed))
-        .select("query_id", "bucket0",
-                F.explode(F.sequence(F.lit(0), F.lit(2 ** bits - 1))
-                          ).alias("list_id"))
-        .withColumn("probe_pos", F.bit_count(
-            F.col("bucket0").bitwiseXOR(F.col("list_id"))) + 1)
-        .drop("bucket0")
-    )
-    rows = _calib_pass(c, grid, h, k, dim=dim)
-    if not rows:
-        raise ValueError("calibrate_probe_lsh: empty calibration pass — "
-                         "the corpus has no nonzero-norm vectors to hold out")
-    depth, achieved, curve, _ = _calib_solve(rows, k, target_recall, bits + 1)
-    mp = depth - 1
-    probed = sum(math.comb(bits, d) for d in range(mp + 1)) / 2 ** bits
-    rec = {"kind": "lsh", "bits": bits, "multiprobe": mp,
-           "probed_frac": round(probed, 4), "recall": achieved,
-           "target": target_recall, "curve": curve,
-           "n_holdout": len({r[0] for r in rows}), "k": k}
-    return _calib_cache_put(key, rec)
+
+    def build():
+        c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
+                       lambda v, _n: hyperplane_bucket(v, dim, bits, seed))
+        h = _calib_holdout(corpus, id_col, vec_col, n_holdout, holdout)
+        grid = (
+            h.withColumn("bucket0",
+                         hyperplane_bucket("qvec", dim, bits, seed))
+            .select("query_id", "bucket0",
+                    F.explode(F.sequence(F.lit(0), F.lit(2 ** bits - 1))
+                              ).alias("list_id"))
+            .withColumn("probe_pos", F.bit_count(
+                F.col("bucket0").bitwiseXOR(F.col("list_id"))) + 1)
+            .drop("bucket0")
+        )
+        rows = _calib_pass(c, grid, h, k, dim=dim)
+        if not rows:
+            raise ValueError("calibrate_probe_lsh: empty calibration pass "
+                             "— the corpus has no nonzero-norm vectors to "
+                             "hold out")
+        depth, achieved, curve, _ = _calib_solve(rows, k, target_recall,
+                                                 bits + 1)
+        mp = depth - 1
+        probed = sum(math.comb(bits, d) for d in range(mp + 1)) / 2 ** bits
+        return {"kind": "lsh", "bits": bits, "multiprobe": mp,
+                "probed_frac": round(probed, 4), "recall": achieved,
+                "target": target_recall, "curve": curve,
+                "n_holdout": len({r[0] for r in rows}), "k": k}
+
+    return _CALIB_CACHE.get(key, build)
 
 
 def topk_ivf_det_sql(

@@ -9,9 +9,10 @@ DataFrames registered as temp views so `spark.sql` works everywhere.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .util import Memo
 
 #: The driver-generated TPC-H-ish star schema plus pipeline tables.
 TABLES = (
@@ -94,18 +95,13 @@ class LazyTables(dict):
         return self
 
 
-#: Per-session memo of LazyTables handles (r11). Every query used to
-#: rebuild its DataFrames via spark.read.parquet, paying a footer/
-#: schema-inference job per table per call — measured ~110 ms/table at
-#: sf0.1, i.e. ~0.1-0.4 s of pure fixed overhead on EVERY bench query
-#: (and at production file counts the re-listing is far worse —
-#: guide §6). This caches the lazy PLAN HANDLE only, never data or
-#: results: every action still scans the parquet files, and the entry
-#: is fingerprinted on each lookup by the table files' (mtime_ns,
-#: size), so any rewrite of the inputs rebuilds the handles. Weak keys
-#: let stopped sessions' entries be collected.
-_TABLES_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary())
+#: LazyTables handles per (session, dir), fingerprinted by
+#: _sf_fingerprint. Each fresh handle pays a footer/schema-inference
+#: job per table it reads (~110 ms/table at sf0.1), so a repeat query
+#: reuses the lazy PLAN handles: never data or results, and any
+#: rewrite of the table files changes the fingerprint. The key holds
+#: its session; the bound is what lets a stopped one go.
+_TABLES_CACHE = Memo(16)
 
 
 def _sf_fingerprint(sf_dir: str) -> tuple:
@@ -140,32 +136,22 @@ def _sf_fingerprint(sf_dir: str) -> tuple:
 def load_tables(spark: SparkSession, sf_dir: str, register_views: bool = True) -> LazyTables:
     """Lazily-loading table map; each scan gets predicate pushdown +
     column pruning from Catalyst since every operator is declarative.
-    Call ``.load_all()`` to force-register every table as a view.
-    Handles are memoized per (session, dir, views) with stat-based
-    invalidation — see _TABLES_CACHE."""
+    With ``register_views`` every table is read and bound as a temp
+    view on each call. Handles are memoized per (session, dir) — see _TABLES_CACHE."""
     # Some testdata columns carry TIMESTAMP(NANOS), which Spark only
     # reads with this legacy conf — as raw nanosecond longs. Runtime-
     # settable, so it also covers driver-owned sessions that didn't use
     # get_spark(). _restore_nanos_timestamps rebuilds real timestamps.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (os.path.abspath(sf_dir), register_views)
-    fp = _sf_fingerprint(sf_dir)
-    per = _TABLES_CACHE.setdefault(spark, {})
-    hit = per.get(key)
-    if hit is not None and hit[0] == fp:
-        if register_views:
-            # Re-register on every hit (r12, ADVICE): another sf_dir
-            # loaded on the same session in between would have pointed
-            # the session's temp views at ITS data; re-binding the
-            # cached handles is pure py4j (no schema-inference job) and
-            # restores the pre-memo behavior for spark.sql callers.
-            for name, df in hit[1].items():
-                df.createOrReplaceTempView(name)
-        return hit[1]
-    tables = LazyTables(spark, sf_dir, register_views)
+    key = (spark, os.path.abspath(sf_dir))
+    tables = _TABLES_CACHE.get(
+        key, lambda: LazyTables(spark, sf_dir, register_views=False),
+        _sf_fingerprint(sf_dir))
     if register_views:
-        tables.load_all()
-    per[key] = (fp, tables)
+        # bound on every call, hit or miss: another sf_dir loaded on
+        # this session in between points the views at ITS data
+        for name, df in tables.load_all().items():
+            df.createOrReplaceTempView(name)
     return tables
 
 

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+import threading
+import time
+from collections.abc import Callable, Hashable, Iterable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -56,3 +58,60 @@ def local_frame(spark: SparkSession, rows: Iterable, schema: StructType | str) -
         return local_frame(spark, [(None,)] * len(internal), "_ boolean").select()
     arrow = pa.array(internal, type=pa.struct(to_arrow_schema(schema)))
     return spark.createDataFrame(pa.Table.from_struct_array(arrow), schema)
+
+
+class Memo:
+    """The driver-side memo every module-level cache in this package is.
+
+    Policy, stated once:
+
+    - ``get(key, build, fingerprint, ttl)`` serves the stored value only
+      while ``fingerprint`` equals the one it was stored with and, when
+      ``ttl`` is given, for less than ``ttl`` seconds; otherwise it calls
+      ``build()`` and the result REPLACES the entry (a changed source
+      never leaves a stale twin beside the fresh one).
+    - A ``None`` fingerprint means the source could not be identified
+      (a stat raced a delete): the value is built and not stored.
+    - Past ``maxsize`` entries the oldest stored one is dropped.
+    - One lock guards the dict; ``build()`` runs outside it, so two
+      threads missing the same key may both build, and the last store
+      wins. Callers reach these memos from server request threads and
+      streaming batches.
+
+    Each cache states why its key and fingerprint identify the value."""
+
+    def __init__(self, maxsize: int | None = None):
+        self.maxsize = maxsize
+        self._lock = threading.Lock()
+        self._entries: dict = {}  # key -> (fingerprint, stored at, value)
+
+    def get(self, key: Hashable, build: Callable, fingerprint=(),
+            ttl: float | None = None):
+        if fingerprint is None:
+            return build()
+        with self._lock:
+            hit = self._entries.get(key)
+        if (hit is not None and hit[0] == fingerprint
+                and (ttl is None or time.monotonic() - hit[1] < ttl)):
+            return hit[2]
+        value = build()
+        with self._lock:
+            self._entries.pop(key, None)
+            while (self.maxsize is not None
+                   and len(self._entries) >= self.maxsize):
+                del self._entries[next(iter(self._entries))]
+            self._entries[key] = (fingerprint, time.monotonic(), value)
+        return value
+
+    def drop(self, pred: Callable[[Hashable], bool]) -> None:
+        """Drop every entry whose key satisfies ``pred``."""
+        with self._lock:
+            for k in [k for k in self._entries if pred(k)]:
+                del self._entries[k]
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()
+
+    def __len__(self) -> int:
+        return len(self._entries)

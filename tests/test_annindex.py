@@ -199,6 +199,56 @@ def test_rebuild_commits_meta_with_its_generation(spark, emb, tmp_path):
     assert got.count() > 0
 
 
+def test_meta_cache_fingerprint_catches_delete_and_rebuild(
+        spark, emb, tmp_path, monkeypatch):
+    """ADVICE r8: a delete-and-rebuild at the same path restarts the
+    generation numbering, so the (path, gen dir) key collides with the
+    previous index's entry. With the in-process invalidation disabled
+    (a rebuild by another driver), only the meta file's fingerprint
+    can tell the new quantizer from the old one."""
+    import shutil
+
+    import andl_spark.pipeline.annindex as ax
+
+    path = str(tmp_path / "ivf")
+    AX.build_ivf_index(emb, path, nlist=8)
+    assert AX.read_ivf_meta(path)["nlist"] == 8  # cached
+    monkeypatch.setattr(ax, "_invalidate_meta_cache", lambda p: None)
+    shutil.rmtree(path)
+    AX.build_ivf_index(emb, path, nlist=24)
+    assert AX.read_ivf_meta(path)["nlist"] == 24
+
+
+def test_meta_cache_stores_nothing_when_stat_races(
+        spark, emb, tmp_path, monkeypatch):
+    """A meta whose stat fails (a racing delete) has no identity to
+    validate a later hit against: it is parsed and NOT cached. Caching
+    it under a (path, None, None) sentinel made the next racing read
+    match that sentinel and serve the previous index's quantizer."""
+    import shutil
+
+    import andl_spark.pipeline.annindex as ax
+    from andl_spark import fsio
+
+    def racing_stat(p):
+        raise FileNotFoundError(p)
+
+    def read_racing():
+        with monkeypatch.context() as m:
+            m.setattr(fsio, "stat", racing_stat)
+            return AX.read_ivf_meta(path)["nlist"]
+
+    path = str(tmp_path / "ivf")
+    AX.build_ivf_index(emb, path, nlist=8)
+    n0 = len(ax._META_CACHE)
+    assert read_racing() == 8
+    monkeypatch.setattr(ax, "_invalidate_meta_cache", lambda p: None)
+    shutil.rmtree(path)
+    AX.build_ivf_index(emb, path, nlist=24)
+    assert read_racing() == 24
+    assert len(ax._META_CACHE) == n0
+
+
 def test_hier_index_matches_per_call_operator(spark, emb, tmp_path):
     """Two-level quantizer in the persisted index (the >16.7M-vector
     regime, forced here with explicit n1/n2): same cents + same p1 →

@@ -460,3 +460,22 @@ def test_load_tables_cache_hit_rebinds_views(spark, tmp_path):
     # memo hit for d1 — the view must point back at d1's data
     load_tables(spark, str(d1), register_views=True)
     assert spark.sql("SELECT count(*) c FROM region").head()["c"] == 5
+
+
+def test_load_tables_retention_is_bounded(spark, tmp_path):
+    """The handle memo keeps a bounded number of (session, dir)
+    entries: each holds its session and lazy handles, so loading many
+    distinct dirs must not retain them all."""
+    from andl_spark import session as S
+
+    bound = S._TABLES_CACHE.maxsize
+    assert bound is not None
+    for i in range(bound + 3):
+        d = tmp_path / f"sf{i}"
+        d.mkdir()
+        S.load_tables(spark, str(d), register_views=False)
+        assert len(S._TABLES_CACHE) <= bound
+    # the newest entry is still served from the memo
+    last = str(tmp_path / f"sf{bound + 2}")
+    assert (S.load_tables(spark, last, register_views=False)
+            is S.load_tables(spark, last, register_views=False))
