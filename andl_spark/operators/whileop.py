@@ -18,18 +18,38 @@ Spark-first design (semi-naive evaluation):
   * The only driver-side value is the per-iteration frontier count
     (computed distributed); tuple data never hits the driver.
 
-Seeded path doubling for reachability steps (:class:`Hop`):
+Reachability steps (:class:`Hop`) pick one of three evaluators:
   * A ``Hop(edges, at, src, dst)`` step joins ``frontier[at] =
     edges[src]``, replaces ``at`` with ``edges[dst]`` and carries every
     other column. Semi-naive pays one round per hop of the longest
     shortest path; Spark's fixed per-round cost (planning plus a few
     scheduled jobs) then dominates deep, thin graphs.
-  * :func:`fixpoint` and :func:`fixpoint_with_level` first run ONE
-    aggregate over the distinct edges (NULL ``src`` dropped — it never
-    joins). If the maximum out-degree or the maximum in-degree is ≤ 1
-    they double; otherwise they run the semi-naive loop unchanged. The
-    decision (``evaluator``) and the ``rounds`` go into ``stats``. No
-    parameter or setting selects the evaluator.
+  * :func:`fixpoint` and :func:`fixpoint_with_level` decide once, in
+    this order, and no parameter or setting selects the evaluator:
+      1. bound — when ``at``, ``src`` and ``dst`` share one key type
+         whose equality Python can reproduce (:func:`_join_key`), ONE
+         job fetches the non-NULL-``src`` edges, at most
+         ``_BROADCAST_ROWS + 1`` of them, as Arrow. If they fit the
+         bound, the broadcast BFS closes the step in one stage.
+      2. degree guard — otherwise ONE aggregate over the distinct edges
+         (NULL ``src`` dropped — it never joins): if the maximum
+         out-degree or the maximum in-degree is ≤ 1 they double;
+      3. otherwise they run the semi-naive loop unchanged.
+
+    The decision (``evaluator``) and its ``rounds`` (for the BFS: the
+    deepest BFS distance reached) go into ``stats``.
+  * Broadcast BFS: the driver builds the adjacency from the fetched
+    edges and ships it inside the ``mapInArrow`` function; no broadcast
+    variable is made, so none needs releasing (PySpark itself ships a
+    pickled function over 1 MB as a broadcast). Each task runs a BFS per seed row, memoized
+    per start node, and emits the seed row plus one row per reached
+    node (``at`` := that node, level + BFS distance) in Arrow batches
+    of at most ``_CHUNK_ROWS`` rows; a ``distinct`` (with levels: the
+    fewest-hops row per tuple) settles the rows across seeds. A
+    broadcast join collects its small side on the driver the same way,
+    so the fetch moves no more data than doubling's broadcasts do. The
+    result is checkpointed eagerly, so ``stats`` holds the BFS depth on
+    return.
   * Doubling: R₀ = seed, P₀ = edges; round k computes
     δ = (R ⋈ P_k)[at := dst] anti R, R += δ, P_{k+1} = P_k ∘ P_k, so
     P_k holds the walks of exactly 2^k hops and R_k every tuple whose
@@ -46,8 +66,9 @@ Seeded path doubling for reachability steps (:class:`Hop`):
     deduplicated. R is, once, at the end (and δ each round only when
     in-degree > 1, where two seed paths can meet). Dense graphs, where
     the walk relation can grow quadratically, stay semi-naive.
-  * A NULL ``dst`` is a sink node, exactly as in the semi-naive join:
-    it is reached (the tuple gets ``at`` = NULL) and never left.
+  * A NULL ``dst`` is a sink node under every evaluator, exactly as in
+    the semi-naive join: it is reached (the tuple gets ``at`` = NULL)
+    and never left.
 """
 
 from __future__ import annotations
@@ -58,15 +79,24 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType, BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType,
+    FloatType, IntegerType, LongType, ShortType, StringType, StructType,
+)
 
 # Internal column names of the edge/walk relation and the doubling hop
 # counter; fresh names keep joins against the frontier unambiguous.
 _SRC, _DST, _MID, _END, _HOPS = (
     "__hop_src", "__hop_dst", "__hop_mid", "__hop_end", "__hop_n")
 
-#: Doubling broadcasts a join side (R, or the walks) while it holds at
-#: most this many rows — a few MB for reachability headings.
+#: The broadcast BFS ships edge sets of at most this many rows, and
+#: doubling broadcasts a join side (R, or the walks) while it holds at
+#: most this many — a few MB for reachability headings.
 _BROADCAST_ROWS = 200_000
+
+#: The broadcast BFS emits Arrow batches of at most this many rows, so a
+#: seed that reaches many nodes does not make one giant batch.
+_CHUNK_ROWS = 10_000
 
 
 class Hop:
@@ -76,9 +106,10 @@ class Hop:
 
     A Hop is an ordinary step (``hop(frontier)``), so every fixpoint
     accepts it; :func:`fixpoint` and :func:`fixpoint_with_level` also
-    recognise it and close it by seeded path doubling when the degree
-    guard allows (module docstring). Under ``fixpoint_with_level`` one
-    hop adds 1 to the level."""
+    recognise it and close it by a broadcast BFS when the edges fit
+    ``_BROADCAST_ROWS``, else by seeded path doubling when the degree
+    guard allows, else semi-naive (module docstring). Under
+    ``fixpoint_with_level`` one hop adds 1 to the level."""
 
     def __init__(self, edges: DataFrame, at: str, src: str = "src", dst: str = "dst"):
         self.edges, self.at, self.src, self.dst = edges, at, src, dst
@@ -205,6 +236,160 @@ def _record(stats: dict | None, evaluator: str, rounds: int) -> None:
         stats.update(evaluator=evaluator, rounds=rounds)
 
 
+def _join_key(dt: DataType) -> Callable | None:
+    """A function mapping a value of Spark type ``dt`` (as Arrow's
+    ``to_pylist`` gives it) to a dict key that two values share exactly
+    when Spark's equi-join finds them equal; None where that is not
+    guaranteed (timestamps, intervals, collated strings, complex types),
+    which keeps the step on the Spark evaluators.
+
+    Spark's join normalizes floats so that NaN = NaN and −0.0 = 0.0:
+    Python already has −0.0 == 0.0 with one hash, and every NaN maps to
+    one sentinel (a float column holds no strings). Integers, booleans,
+    decimals (one type, so one scale), dates, binary and UTF8_BINARY
+    strings compare in Python as Spark compares them."""
+    if isinstance(dt, (FloatType, DoubleType)):
+        nan = "NaN"
+        return lambda v: nan if v != v else v
+    exact = (BinaryType, BooleanType, ByteType, DateType, DecimalType, IntegerType,
+             LongType, ShortType)
+    if isinstance(dt, exact) or dt == StringType():
+        return lambda v: v
+    return None
+
+
+def _bfs_batches(pairs, key: Callable, at: str, level: str | None, schema,
+                 chunk: int, note_depth: Callable[[int], None]) -> Callable:
+    """The ``mapInArrow`` function of the broadcast BFS over the
+    ``pairs`` Arrow table (``_SRC``/``_DST``, no NULL ``src``): for each
+    seed row, the row itself (hop count 0) and one row per node its BFS
+    reaches, with ``at`` := that node's ``dst`` value and ``level`` (when
+    given) grown by the BFS distance. With a level, a trailing ``_HOPS``
+    column holds the distance. Batches have the Arrow ``schema`` and at
+    most ``chunk`` rows; ``note_depth`` receives each BFS's depth.
+
+    The adjacency is built here, on the driver, over node ids from
+    ``key``. Reach sets are memoized per start node within a task, so
+    the all-pairs closure (seed = edges) runs one BFS per distinct start
+    per task. Self-contained: executors of a driver-owned session may
+    not import andl_spark, so the returned closure names nothing from
+    this package."""
+    src = [key(v) for v in pairs.column(_SRC).to_pylist()]
+    dst = [key(v) for v in pairs.column(_DST).to_pylist()]
+    first: dict = {}  # each dst node's first row
+    for i, k in enumerate(dst):
+        first.setdefault(k, i)
+    # dst nodes get the ids below len(first): the only nodes a hop reaches
+    values = pairs.column(_DST).take(list(first.values())).combine_chunks()
+    ids = {k: n for n, k in enumerate(first)}
+    for k in src:
+        ids.setdefault(k, len(ids))
+    adj = [set() for _ in ids]
+    for s, d in zip(src, dst):
+        adj[ids[s]].add(ids[d])
+    adj = [tuple(a) for a in adj]
+
+    def run(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        memo: dict = {}
+
+        def reach(s):
+            got = memo.get(s)
+            if got is None:
+                seen, frontier, nodes, dists, d = {s}, [s], [], [], 0
+                while frontier:
+                    d += 1
+                    nxt = []
+                    for x in frontier:
+                        for y in adj[x]:
+                            if y not in seen:
+                                seen.add(y)
+                                nxt.append(y)
+                    nodes += nxt
+                    dists += [d] * len(nxt)
+                    frontier = nxt
+                got = memo[s] = (np.array(nodes, np.int64), np.array(dists, np.int32))
+                note_depth(d - 1)
+            return got
+
+        def emit(cols):
+            out = pa.RecordBatch.from_arrays(
+                [c.cast(f.type) for c, f in zip(cols, schema)], schema=schema)
+            for lo in range(0, out.num_rows, chunk):
+                yield out.slice(lo, chunk)
+
+        def reached(batch, rows, nodes, dists):
+            rows = pa.array(rows)
+            cols = [
+                values.take(nodes) if name == at
+                else pc.add_checked(batch.column(name).take(rows), pa.array(dists)) if name == level
+                else batch.column(name).take(rows)
+                for name in batch.schema.names
+            ]
+            return emit(cols + ([pa.array(dists)] if level else []))
+
+        for batch in batches:
+            n = batch.num_rows
+            yield from emit(batch.columns + ([pa.array(np.zeros(n, np.int32))] if level else []))
+            pend, size = [], 0
+            for i, v in enumerate(batch.column(at).to_pylist()):
+                s = ids.get(key(v))
+                if s is None:
+                    continue
+                nodes, dists = reach(s)
+                if len(nodes):
+                    pend.append((np.full(len(nodes), i, np.int64), nodes, dists))
+                    size += len(nodes)
+                if size >= chunk:
+                    yield from reached(batch, *(np.concatenate(p) for p in zip(*pend)))
+                    pend, size = [], 0
+            if size:
+                yield from reached(batch, *(np.concatenate(p) for p in zip(*pend)))
+
+    return run
+
+
+def _bfs_closure(seed: DataFrame, hop: Hop, schema: StructType, level: str | None,
+                 settle: Callable[[DataFrame], DataFrame], stats: dict | None
+                 ) -> DataFrame | None:
+    """The broadcast-BFS closure of ``seed`` under ``hop`` (module
+    docstring): ``settle`` of the BFS rows, which have ``schema``,
+    checkpointed; None, after at most one fetch job, when the key type
+    is not :func:`_join_key`-safe or the edges exceed
+    ``_BROADCAST_ROWS``. ``stats`` gets ``rounds`` = the deepest BFS
+    distance reached. No ``max_iterations`` budget applies: each BFS
+    visits each node of the finite adjacency at most once, so it ends by
+    construction, however deep the graph."""
+    types = {seed.schema[hop.at].dataType, hop.edges.schema[hop.src].dataType,
+             hop.edges.schema[hop.dst].dataType}
+    key = _join_key(types.pop()) if len(types) == 1 else None
+    if key is None:
+        return None
+    pairs = (hop._pairs().filter(F.col(_SRC).isNotNull())
+             .limit(_BROADCAST_ROWS + 1).toArrow())
+    if pairs.num_rows > _BROADCAST_ROWS:
+        return None
+    from pyspark.accumulators import AccumulatorParam
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    class Deepest(AccumulatorParam):  # local, so it pickles by value
+        def zero(self, value):
+            return 0
+
+        def addInPlace(self, a, b):
+            return max(a, b)
+
+    depth = seed.sparkSession.sparkContext.accumulator(0, Deepest())
+    run = _bfs_batches(pairs, key, hop.at, level, to_arrow_schema(schema),
+                       _CHUNK_ROWS, depth.add)
+    out = settle(seed.mapInArrow(run, schema)).localCheckpoint(eager=True)
+    _record(stats, "broadcast-bfs", depth.value)
+    return out
+
+
 def _doubling_walks(hop: Hop) -> tuple[DataFrame, int, bool] | None:
     """The distinct one-hop walks, their count, and whether two walks
     can arrive at one node (max in-degree > 1), when the degree guard
@@ -286,18 +471,25 @@ def fixpoint(
     """Smallest superset of ``seed`` closed under ``step`` (set
     semantics). ``step`` takes the current frontier and returns
     candidate tuples with the same heading (column order normalized).
-    A :class:`Hop` step is closed by path doubling when its degree
-    guard allows (``max_iterations`` then budgets doubling rounds);
-    ``stats`` records the ``evaluator`` and its ``rounds``."""
+    A :class:`Hop` step is closed by the broadcast BFS when its edges
+    fit ``_BROADCAST_ROWS`` (no budget applies: it ends by
+    construction), else by path doubling when its degree guard allows
+    (``max_iterations`` then budgets doubling rounds); ``stats`` records
+    the ``evaluator`` and its ``rounds``."""
     cols = seed.columns
-    seed = seed.dropDuplicates()
+    unique = seed.dropDuplicates()
     if isinstance(step, Hop):
+        # the BFS rows are deduplicated once, at the end, so the seed is not
+        schema = seed.unionByName(step(seed).select(*cols)).schema  # semi-naive's
+        closed = _bfs_closure(seed, step, schema, None, DataFrame.distinct, stats)
+        if closed is not None:
+            return closed
         guarded = _doubling_walks(step)
         if guarded is not None:
-            return _double(seed, *guarded, step.at, cols, (), DataFrame.dropDuplicates,
+            return _double(unique, *guarded, step.at, cols, (), DataFrame.dropDuplicates,
                            max_iterations, stats)
     return _run(
-        seed,
+        unique,
         lambda fr: step(fr).select(*cols),
         lambda produced, total: _anti_new_only(produced.dropDuplicates(), total, cols),
         max_iterations,
@@ -374,31 +566,40 @@ def fixpoint_with_level(
     when every node has a unique reach level (shortest-path trees,
     acyclic org charts).
 
-    A :class:`Hop` step adds 1 to the level per hop. Doubled, each
-    round-k tuple gets its parent's level + 2^k, and each tuple keeps
-    its fewest-hops row: the same first-reach (shortest-distance) level
-    the semi-naive loop assigns."""
+    A :class:`Hop` step adds 1 to the level per hop. Under the
+    broadcast BFS each reached tuple gets its seed's level + its BFS
+    distance; doubled, each round-k tuple gets its parent's level + 2^k.
+    Both keep each tuple's fewest-hops row: the same first-reach
+    (shortest-distance) level the semi-naive loop assigns."""
     data_cols = [c for c in seed.columns if c != level_col]
     if level_col not in seed.columns:
         seed = seed.withColumn(level_col, F.lit(0))
     cols = data_cols + [level_col]
-    seed = seed.select(*cols).dropDuplicates(data_cols)
+    seed = seed.select(*cols)
+    unique = seed.dropDuplicates(data_cols)
     if isinstance(step, Hop):
-        guarded = _doubling_walks(step)
-        if guarded is not None:
-
-            def fewest_hops(df: DataFrame) -> DataFrame:
-                first = df.groupBy(*data_cols).agg(F.min(F.struct(_HOPS, level_col)).alias("__first"))
-                return first.select(*data_cols, "__first.*").select(*cols, _HOPS)
-
-            return _double(
-                seed.withColumn(_HOPS, F.lit(0)), *guarded, step.at, data_cols,
-                (level_col, _HOPS), fewest_hops, max_iterations, stats,
-            ).drop(_HOPS)
         hop = step
         step = lambda fr: hop(fr).withColumn(level_col, F.col(level_col) + 1)  # noqa: E731
+
+        def fewest_hops(df: DataFrame) -> DataFrame:
+            first = df.groupBy(*data_cols).agg(F.min(F.struct(_HOPS, level_col)).alias("__first"))
+            return first.select(*data_cols, "__first.*").select(*cols, _HOPS)
+
+        # fewest_hops also settles the seed: a tuple listed at several
+        # levels keeps its lowest (the other evaluators keep any one)
+        schema = seed.unionByName(step(seed).select(*cols)).schema.add(_HOPS, IntegerType(), False)
+        closed = _bfs_closure(seed, hop, schema, level_col,
+                              lambda df: fewest_hops(df).drop(_HOPS), stats)
+        if closed is not None:
+            return closed
+        guarded = _doubling_walks(hop)
+        if guarded is not None:
+            return _double(
+                unique.withColumn(_HOPS, F.lit(0)), *guarded, hop.at, data_cols,
+                (level_col, _HOPS), fewest_hops, max_iterations, stats,
+            ).drop(_HOPS)
     return _run(
-        seed,
+        unique,
         lambda fr: step(fr).select(*cols),
         lambda produced, total: (
             produced.join(total.select(*data_cols), on=data_cols, how="leftanti")

@@ -921,6 +921,8 @@ def _np_lloyd(X: np.ndarray, k: int, seed: int, iters: int = 10) -> np.ndarray:
     ||x||² − 2x·c + ||c||² expansion (one matmul per iteration)."""
     rng = np.random.default_rng(seed)
     n = len(X)
+    if n == 0:
+        raise ValueError("k-means over an empty sample: no vector with nonzero norm")
     if n <= k:
         reps = -(-k // n)
         return np.tile(X, (reps, 1))[:k].copy()

@@ -197,8 +197,9 @@ class Relation:
     def while_(self, step: Callable[[DataFrame], DataFrame], max_iterations: int = 100) -> "Relation":
         """Andl .while(expr) — fixed point (transitive closure).
         ``step`` maps the frontier to new tuples; a ``whileop.Hop``
-        passes through as-is, so a reachability step may be closed by
-        path doubling (see whileop.fixpoint)."""
+        passes through as-is, so a reachability step is closed by a
+        broadcast BFS, path doubling or semi-naive rounds (see
+        whileop.fixpoint)."""
         return Relation(_whileop.fixpoint(self.df, step, max_iterations))
 
     # ---- metadata (Builtin.cs Count/Degree/Schema) --------------------

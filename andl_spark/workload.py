@@ -639,12 +639,14 @@ def q_while_closure(spark, sf_dir):
         .crossJoin(F.broadcast(mx))
         .filter(F.col("dst") <= F.col("__mx"))
         .select("src", "dst")
-        .persist()  # reused every iteration of the fixpoint
+        .persist()  # reused by every round past the broadcast bound
     )
     seed = cust.filter(F.col("c_custkey").isin(3, 5)).select(F.col("c_custkey").alias("node"))
-    # A declarative Hop: the doubling-chain edges have out-degree 1, so
-    # the fixpoint closes by seeded path doubling in ⌈log₂ 13⌉ + 1 = 5
-    # rounds instead of 13 semi-naive ones.
+    # A declarative Hop: its edges (one per customer key up to half the
+    # maximum: 75,000 at sf1) fit whileop._BROADCAST_ROWS, so the fixpoint
+    # closes by one broadcast-BFS stage instead of one semi-naive round
+    # per doubling of the key; from about sf3 on the edges exceed the
+    # bound and, out-degree being 1, it closes by seeded path doubling.
     return W.fixpoint(seed, W.Hop(edges, at="node"))
 
 
@@ -660,14 +662,15 @@ def q_while_paths(spark, sf_dir):
     """Andl .while() with level tracking (org-chart flattening,
     recursive.andl:23-27)."""
     cust = _t(spark, sf_dir)["customer"]
-    # same shape as q_while_closure: broadcast max, Hop step
+    # same shape as q_while_closure: broadcast max, Hop step, one
+    # broadcast-BFS stage
     mx = cust.agg(F.max("c_custkey").alias("__mx"))
     edges = (
         cust.select(F.col("c_custkey").alias("src"), (F.col("c_custkey") * 2).alias("dst"))
         .crossJoin(F.broadcast(mx))
         .filter(F.col("dst") <= F.col("__mx"))
         .select("src", "dst")
-        .persist()  # reused every iteration of the fixpoint
+        .persist()  # reused by every round past the broadcast bound
     )
     seed = (
         cust.filter(F.col("c_custkey") == 1)

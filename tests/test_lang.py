@@ -449,10 +449,11 @@ def _andl_rel(rows, names):
 def test_while_compose_reachability_routes_to_hop(spark, monkeypatch):
     """`{{ root, src := node }} compose E` — a rename-only projection of
     the frontier composed with a static two-attribute relation — runs
-    as a whileop.Hop: a chain (out-degree 1) closes by doubling, a
-    graph with branching and merging falls back to semi-naive, and a
-    body with anything around the compose keeps the general step
-    compiler. All equal a Python BFS."""
+    as a whileop.Hop: at the default bound the broadcast BFS closes it;
+    with the bound monkeypatched below the edge count, a chain
+    (out-degree 1) closes by doubling and a graph with branching and
+    merging falls back to semi-naive. A body with anything around the
+    compose keeps the general step compiler. All equal a Python BFS."""
     from andl_spark.operators import whileop
 
     seen = []
@@ -476,12 +477,16 @@ def test_while_compose_reachability_routes_to_hop(spark, monkeypatch):
 
     chain = [(i, i + 1) for i in range(16)]
     branching = [(0, 1), (0, 2), (1, 3), (2, 3), (3, 4), (4, 0), (4, 5)]
+    default = whileop._BROADCAST_ROWS
     cases = [
-        (chain, "compose E", True, "doubling", None),
-        (branching, "compose E", True, "semi-naive", None),
-        (chain, "compose E) .where(node < 4", False, "semi-naive", 4),
+        (chain, "compose E", True, "broadcast-bfs", None, default),
+        (branching, "compose E", True, "broadcast-bfs", None, default),
+        (chain, "compose E", True, "doubling", None, 0),
+        (branching, "compose E", True, "semi-naive", None, 0),
+        (chain, "compose E) .where(node < 4", False, "semi-naive", 4, default),
     ]
-    for edges, body, is_hop, evaluator, limit in cases:
+    for edges, body, is_hop, evaluator, limit, bound in cases:
+        monkeypatch.setattr(whileop, "_BROADCAST_ROWS", bound)
         seen.clear()
         sess = AndlSession(spark)
         sess.run(

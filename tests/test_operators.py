@@ -2,6 +2,9 @@
 and the Relation fluent API — mirroring reference suites
 (SuiteUpdateCat*, SuiteRelWhile, SuiteRelNest, SuiteRelFold)."""
 
+import datetime as dt
+from decimal import Decimal as D
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -264,17 +267,44 @@ def _reach(edges, seed, at):
     return best
 
 
-def _hop_closure(spark, edges, seed, schema, at="node", with_level=False, semi=True):
-    """(rows, stats) of the Hop fixpoint and (when ``semi``) the rows of
-    the same step as a plain semi-naive lambda."""
-    from andl_spark.operators.whileop import Hop, fixpoint_with_level
+def _evaluators(monkeypatch):
+    """Run a Hop test under both evaluator families: first at the
+    default ``_BROADCAST_ROWS``, where the broadcast BFS closes the step
+    (yields True), then with the bound at 0, so every non-empty edge set
+    exceeds it and the degree guard picks doubling or semi-naive
+    (yields False). The monkeypatch fixture restores the bound."""
+    from andl_spark.operators import whileop
 
-    e = spark.createDataFrame(edges, "src long, dst long")
+    yield True
+    monkeypatch.setattr(whileop, "_BROADCAST_ROWS", 0)
+    yield False
+
+
+def _frames(spark, edges, seed, schema, with_level, key):
+    e = spark.createDataFrame(edges, f"src {key}, dst {key}")
     s = spark.createDataFrame(seed, schema)
     if with_level:
         s = s.withColumn("level", F.lit(0).cast("long"))
-    run = fixpoint_with_level if with_level else fixpoint
+    return e, s
 
+
+def _hop_closure(spark, edges, seed, schema, at="node", with_level=False, key="long"):
+    """(rows, stats) of the Hop fixpoint; the edges' ``src`` and ``dst``
+    have type ``key``."""
+    from andl_spark.operators.whileop import Hop, fixpoint_with_level
+
+    e, s = _frames(spark, edges, seed, schema, with_level, key)
+    run = fixpoint_with_level if with_level else fixpoint
+    stats = {}
+    got = {tuple(r) for r in run(s, Hop(e, at=at), stats=stats).select(*s.columns).collect()}
+    return got, stats
+
+
+def _plain_closure(spark, edges, seed, schema, at="node", with_level=False, key="long"):
+    """The rows of the same step as a plain semi-naive lambda."""
+    from andl_spark.operators.whileop import fixpoint_with_level
+
+    e, s = _frames(spark, edges, seed, schema, with_level, key)
     hop = e.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
 
     def plain(fr):
@@ -283,104 +313,208 @@ def _hop_closure(spark, edges, seed, schema, at="node", with_level=False, semi=T
             out = out.withColumn("level", F.col("level") + 1)
         return out.select(*s.columns)
 
-    stats = {}
-    got = {tuple(r) for r in run(s, Hop(e, at=at), stats=stats).select(*s.columns).collect()}
-    if not semi:
-        return got, stats
-    want = {tuple(r) for r in run(s, plain).select(*s.columns).collect()}
-    return got, want, stats
+    run = fixpoint_with_level if with_level else fixpoint
+    return {tuple(r) for r in run(s, plain).select(*s.columns).collect()}
 
 
-def test_hop_chain_doubles_in_log_rounds(spark):
+def test_hop_chain_doubles_in_log_rounds(spark, monkeypatch):
     """A 256-deep chain (255 hops from the seed) closes by doubling in
-    at most ⌈log₂ 256⌉ + 1 rounds, with every node reached."""
+    at most ⌈log₂ 256⌉ + 1 rounds, with every node reached; under the
+    broadcast BFS in at most 4 Spark jobs, the collect included (the
+    edge fetch, the BFS stage, its settling, the checkpoint read; counted
+    through a job group), at depth 255 although that exceeds the default
+    budget of 100."""
     import math
 
     from andl_spark.operators.whileop import Hop
 
+    sc = spark.sparkContext
     n = 256
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
     seed = spark.createDataFrame([(0,)], "node long")
-    stats = {}
-    got = {r["node"] for r in fixpoint(seed, Hop(edges, at="node"), stats=stats).collect()}
-    assert stats["evaluator"] == "doubling"
-    assert stats["rounds"] <= math.ceil(math.log2(n)) + 1
-    assert got == set(range(n))
+    for bfs in _evaluators(monkeypatch):
+        stats = {}
+        try:
+            sc.setJobGroup(f"hop-chain-{bfs}", "Hop chain closure")
+            got = {r["node"] for r in fixpoint(seed, Hop(edges, at="node"), stats=stats).collect()}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        if bfs:
+            assert stats == {"evaluator": "broadcast-bfs", "rounds": n - 1}
+            assert len(sc.statusTracker().getJobIdsForGroup(f"hop-chain-{bfs}")) <= 4
+        else:
+            assert stats["evaluator"] == "doubling"
+            assert stats["rounds"] <= math.ceil(math.log2(n)) + 1
+        assert got == set(range(n))
 
 
 @pytest.mark.parametrize("with_level", [False, True])
-def test_hop_functional_cycle_with_tail(spark, with_level):
+def test_hop_functional_cycle_with_tail(spark, monkeypatch, with_level):
     """Out-degree 1 with in-degree 2: a tail 0→1→2→3 into the cycle
-    3→4→5→6→3, and a second tail 20→3. The doubled fixpoint terminates
-    and equals semi-naive; with levels, node 3 keeps the fewest-hops
-    level (1, from seed 20) although seed 0 reaches it by a longer
-    path — and the walks' duplicate arrivals collapse. The BFS oracle
-    assigns semi-naive's first-reach levels."""
+    3→4→5→6→3, and a second tail 20→3. The BFS and the doubled fixpoint
+    terminate and equal semi-naive; with levels, node 3 keeps the
+    fewest-hops level (1, from seed 20) although seed 0 reaches it by a
+    longer path — and the walks' duplicate arrivals collapse. The BFS
+    oracle assigns semi-naive's first-reach levels."""
     edges = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 3), (20, 3)]
-    got, *want, stats = _hop_closure(
-        spark, edges, [(0,), (20,)], "node long", with_level=with_level,
-        semi=not with_level)
-    assert stats["evaluator"] == "doubling"
-    assert want in ([], [got])
     oracle = _reach(edges, [(0,), (20,)], 0)
-    if with_level:
-        assert got == {k + (v,) for k, v in oracle.items()}
-    else:
-        assert got == set(oracle)
+    want = [] if with_level else [_plain_closure(spark, edges, [(0,), (20,)], "node long")]
+    for bfs in _evaluators(monkeypatch):
+        got, stats = _hop_closure(
+            spark, edges, [(0,), (20,)], "node long", with_level=with_level)
+        assert stats["evaluator"] == ("broadcast-bfs" if bfs else "doubling")
+        assert want in ([], [got])
+        if with_level:
+            assert got == {k + (v,) for k, v in oracle.items()}
+        else:
+            assert got == set(oracle)
 
 
-def test_hop_null_edges_match_semi_naive(spark):
+def test_hop_null_edges_match_semi_naive(spark, monkeypatch):
     """A NULL src never joins; a NULL dst is a sink that is reached
     (at = NULL) and never left — exactly the semi-naive equi-join."""
     edges = [(1, 2), (2, None), (None, 9), (9, None), (None, None)]
-    got, want, stats = _hop_closure(spark, edges, [(1,), (9,), (None,)], "node long")
-    assert stats["evaluator"] == "doubling"
-    assert got == want == {(1,), (2,), (9,), (None,)}
+    want = _plain_closure(spark, edges, [(1,), (9,), (None,)], "node long")
+    for bfs in _evaluators(monkeypatch):
+        got, stats = _hop_closure(spark, edges, [(1,), (9,), (None,)], "node long")
+        assert stats["evaluator"] == ("broadcast-bfs" if bfs else "doubling")
+        assert got == want == {(1,), (2,), (9,), (None,)}
 
 
-def test_hop_empty_seed_and_depth_one(spark):
-    """An empty seed closes in one round; a depth-1 fan-out (in-degree
-    1, out-degree 2) in two."""
-    got, stats = _hop_closure(spark, [(1, 2), (1, 3)], [], "node long", semi=False)
-    assert got == set() and stats == {"evaluator": "doubling", "rounds": 1}
-    got, stats = _hop_closure(spark, [(1, 2), (1, 3)], [(1,)], "node long", semi=False)
-    assert got == {(1,), (2,), (3,)}
-    assert stats == {"evaluator": "doubling", "rounds": 2}
+def test_hop_empty_seed_and_depth_one(spark, monkeypatch):
+    """An empty seed closes in one round (the BFS: depth 0); a depth-1
+    fan-out (in-degree 1, out-degree 2) in two (the BFS: depth 1)."""
+    for bfs in _evaluators(monkeypatch):
+        name, empty, one = ("broadcast-bfs", 0, 1) if bfs else ("doubling", 1, 2)
+        got, stats = _hop_closure(spark, [(1, 2), (1, 3)], [], "node long")
+        assert got == set() and stats == {"evaluator": name, "rounds": empty}
+        got, stats = _hop_closure(spark, [(1, 2), (1, 3)], [(1,)], "node long")
+        assert got == {(1,), (2,), (3,)}
+        assert stats == {"evaluator": name, "rounds": one}
 
 
 @pytest.mark.parametrize("shape,evaluator", [
     ("branching", "semi-naive"), ("out_tree", "doubling")])
-def test_hop_all_pairs_closure_carries_columns(spark, shape, evaluator):
+def test_hop_all_pairs_closure_carries_columns(spark, monkeypatch, shape, evaluator):
     """The all-pairs closure is ``fixpoint(edges, Hop(edges, at=dst))``:
-    ``src`` is carried. The diamond's branching graph (a node with two
-    parents and one with two children) stays semi-naive; an out-tree
-    (in-degree 1) doubles. NULL edges are seed rows and follow the
-    NULL sink rule."""
+    ``src`` is carried. Over the bound, the diamond's branching graph (a
+    node with two parents and one with two children) stays semi-naive;
+    an out-tree (in-degree 1) doubles. NULL edges are seed rows and
+    follow the NULL sink rule."""
     edges = {
         "branching": [(1, 2), (1, 3), (2, 4), (3, 4), (4, 5), (None, 9), (9, None)],
         "out_tree": [(1, 2), (1, 3), (2, 4), (3, 5), (5, 6), (5, 7), (None, 9), (9, None)],
     }[shape]
-    got, stats = _hop_closure(
-        spark, edges, edges, "src long, dst long", at="dst", semi=False)
-    assert stats["evaluator"] == evaluator
-    assert got == set(_reach(edges, edges, 1))
-    if shape == "branching":  # the pairs the old path-doubling closure returned
-        assert {p for p in got if None not in p} == {
-            (1, 2), (1, 3), (1, 4), (1, 5), (2, 4), (2, 5), (3, 4), (3, 5), (4, 5)}
+    for bfs in _evaluators(monkeypatch):
+        got, stats = _hop_closure(
+            spark, edges, edges, "src long, dst long", at="dst")
+        assert stats["evaluator"] == ("broadcast-bfs" if bfs else evaluator)
+        assert got == set(_reach(edges, edges, 1))
+        if shape == "branching":  # the pairs the old path-doubling closure returned
+            assert {p for p in got if None not in p} == {
+                (1, 2), (1, 3), (1, 4), (1, 5), (2, 4), (2, 5), (3, 4), (3, 5), (4, 5)}
 
 
 @pytest.mark.parametrize("with_level", [False, True])
-def test_hop_dense_graph_stays_semi_naive(spark, with_level):
-    """The degree guard keeps dense graphs, where the walk relation can
-    grow quadratically, on the semi-naive loop: the diamond then a
-    30×30 complete bipartite layer, rows identical to the BFS (with
-    levels, each semi-naive hop adds 1)."""
+def test_hop_dense_graph_stays_semi_naive(spark, monkeypatch, with_level):
+    """Over the bound, the degree guard keeps dense graphs, where the
+    walk relation can grow quadratically, on the semi-naive loop: the
+    diamond then a 30×30 complete bipartite layer, rows identical to
+    the BFS (with levels, each semi-naive hop adds 1). Under the bound
+    the broadcast BFS closes the same graph to the same rows."""
     layer_a, layer_b = range(100, 130), range(200, 230)
     edges = ([(1, 2), (1, 3), (2, 4), (3, 4)] + [(4, a) for a in layer_a]
              + [(a, b) for a in layer_a for b in layer_b])
-    got, stats = _hop_closure(
-        spark, edges, [(1,)], "node long", with_level=with_level, semi=False)
-    assert stats["evaluator"] == "semi-naive"
     oracle = _reach(edges, [(1,)], 0)
-    assert got == ({k + (v,) for k, v in oracle.items()} if with_level else set(oracle))
-    assert len(got) == 4 + 30 + 30
+    for bfs in _evaluators(monkeypatch):
+        got, stats = _hop_closure(
+            spark, edges, [(1,)], "node long", with_level=with_level)
+        assert stats["evaluator"] == ("broadcast-bfs" if bfs else "semi-naive")
+        assert got == ({k + (v,) for k, v in oracle.items()} if with_level else set(oracle))
+        assert len(got) == 4 + 30 + 30
+
+
+def _nan_free(rows):
+    """Rows with every float NaN replaced by a marker, so set equality
+    can match them (−0.0 and 0.0 already hash and compare equal)."""
+    return {tuple("NaN" if isinstance(x, float) and x != x else x for x in r) for r in rows}
+
+
+_NAN = float("nan")
+
+
+@pytest.mark.parametrize("key,edges,seed", [
+    # NaN = NaN and −0.0 = 0.0 join, as in Spark's normalized equi-join
+    ("double", [(1.0, _NAN), (_NAN, -0.0), (0.0, None), (-0.0, 3.0), (None, 1.0)],
+     [(1.0,), (-0.0,), (None,)]),
+    ("decimal(6,2)", [(D("1.10"), D("2.00")), (D("2"), D("3.25")), (D("3.25"), D("1.1")),
+                      (D("4"), D("5"))], [(D("1.1"),)]),
+    ("date", [(dt.date(2024, 2, 29), dt.date(2024, 3, 1)), (dt.date(2024, 3, 1), None),
+              (dt.date(1, 1, 1), dt.date(2024, 2, 29))], [(dt.date(1, 1, 1),)]),
+    # UTF8_BINARY: case and composed/decomposed forms are distinct keys
+    ("string", [("a", "b"), ("b", "\u00e9"), ("\u00e9", "c"), ("e\u0301", "x"), ("A", "y"),
+                ("", "a")], [("",), ("A",)]),
+], ids=["double", "decimal", "date", "string"])
+def test_bfs_key_equality_matches_the_equi_join(spark, key, edges, seed):
+    """The broadcast BFS compares keys as Spark's equi-join does: its
+    rows equal the plain semi-naive step's for floats (the Python
+    oracle's NaN ≠ NaN), and the BFS oracle's for the key types whose
+    Python equality is Spark's."""
+    got, stats = _hop_closure(spark, edges, seed, f"node {key}", key=key)
+    assert stats["evaluator"] == "broadcast-bfs"
+    if key == "double":
+        assert _nan_free(got) == _nan_free(_plain_closure(spark, edges, seed, f"node {key}", key=key))
+        assert _nan_free(got) == {(1.0,), ("NaN",), (0.0,), (3.0,), (None,)}
+    else:
+        assert got == set(_reach(edges, seed, 0))
+
+
+def test_bfs_carries_columns_with_the_semi_naive_schema(spark):
+    """Carried columns are copied and the output schema, nullability
+    included, is the one the semi-naive step returns; duplicate seed rows
+    collapse."""
+    from andl_spark.operators.whileop import Hop
+
+    e = spark.createDataFrame([("a", "b"), ("b", None), ("b", "c")],
+                              "src string not null, dst string")
+    seed = spark.createDataFrame(
+        [("x", "a", 1.5), ("y", "c", None), ("x", "a", 1.5), ("z", "q", 2.0)],
+        "tag string not null, node string not null, w double")
+    hop = e.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
+    stats = {}
+    got = fixpoint(seed, Hop(e, at="node"), stats=stats)
+    want = fixpoint(seed, lambda fr: fr.join(hop, F.col("node") == F.col("e_src"))
+                    .withColumn("node", F.col("e_dst")).select(*seed.columns))
+    assert stats["evaluator"] == "broadcast-bfs"
+    assert got.schema == want.schema
+    rows = {tuple(r) for r in got.collect()}
+    assert rows == {tuple(r) for r in want.collect()}
+    assert rows == {("x", n, 1.5) for n in ("a", "b", "c", None)} | {
+        ("y", "c", None), ("z", "q", 2.0)}
+
+
+def test_bfs_chunks_a_reach_larger_than_one_batch(spark, monkeypatch):
+    """One seed that reaches more nodes than an output chunk holds is
+    split across batches of at most ``_CHUNK_ROWS`` rows, and the rows
+    (with levels: seed level + BFS distance) still equal the oracle."""
+    import pyarrow as pa
+
+    from andl_spark.operators import whileop
+
+    chain = [(i, i + 1) for i in range(30)]
+    pairs = pa.table({whileop._SRC: [s for s, _ in chain], whileop._DST: [d for _, d in chain]})
+    schema = pa.schema([("node", pa.int64()), ("level", pa.int64()), (whileop._HOPS, pa.int32())])
+    depths = []
+    run = whileop._bfs_batches(pairs, lambda v: v, "node", "level", schema, 4, depths.append)
+    seed = pa.record_batch({"node": [0, 25], "level": [10, 0]})
+    out = list(run(iter([seed])))
+    assert max(b.num_rows for b in out) <= 4
+    rows = [r for b in out for r in zip(*(c.to_pylist() for c in b.columns))]
+    assert sorted(rows) == sorted([(n, 10 + n, n) for n in range(31)]
+                                  + [(n, n - 25, n - 25) for n in range(25, 31)])
+    assert max(depths) == 30
+
+    monkeypatch.setattr(whileop, "_CHUNK_ROWS", 4)
+    got, stats = _hop_closure(spark, chain, [(0,)], "node long", with_level=True)
+    assert stats == {"evaluator": "broadcast-bfs", "rounds": 30}
+    assert got == {k + (v,) for k, v in _reach(chain, [(0,)], 0).items()}

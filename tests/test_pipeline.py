@@ -1584,6 +1584,16 @@ def test_ann_recall_nonclustered_corpus(spark):
     corpus.unpersist()
 
 
+def test_hier_trained_centroids_refuses_zero_vectors(spark):
+    """A corpus whose vectors all have zero norm leaves the spherical
+    training sample empty: hier_trained_centroids raises the same kind
+    of ValueError as on an empty corpus, not a ZeroDivisionError."""
+    corpus = spark.createDataFrame(
+        [(i, [0.0] * 4) for i in range(6)], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="empty sample"):
+        SS.hier_trained_centroids(corpus, n1=2, n2=2)
+
+
 def test_calibrate_probe(spark):
     """r8: probe AUTO-CALIBRATION — the SCALE_r08 §1 closure ("the 8%
     auto fraction is a clustered-corpus calibration; the probed
