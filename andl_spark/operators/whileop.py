@@ -37,7 +37,8 @@ Reachability steps (:class:`Hop`) pick one of three evaluators:
       3. otherwise they run the semi-naive loop unchanged.
 
     The decision (``evaluator``) and its ``rounds`` (for the BFS: the
-    deepest BFS distance reached) go into ``stats``.
+    deepest BFS distance reached) are noted in the trace record
+    (``trace.note("fixpoint", ...)``, read through ``trace.recording``).
   * Broadcast BFS: the driver builds the adjacency from the fetched
     edges and ships it inside the ``mapInArrow`` function; no broadcast
     variable is made, so none needs releasing (PySpark itself ships a
@@ -48,8 +49,8 @@ Reachability steps (:class:`Hop`) pick one of three evaluators:
     fewest-hops row per tuple) settles the rows across seeds. A
     broadcast join collects its small side on the driver the same way,
     so the fetch moves no more data than doubling's broadcasts do. The
-    result is checkpointed eagerly, so ``stats`` holds the BFS depth on
-    return.
+    result is checkpointed eagerly, so the noted ``rounds`` is the BFS
+    depth.
   * Doubling: R₀ = seed, P₀ = edges; round k computes
     δ = (R ⋈ P_k)[at := dst] anti R, R += δ, P_{k+1} = P_k ∘ P_k, so
     P_k holds the walks of exactly 2^k hops and R_k every tuple whose
@@ -83,6 +84,8 @@ from pyspark.sql.types import (
     BinaryType, BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType,
     FloatType, IntegerType, LongType, ShortType, StringType, StructType,
 )
+
+from ..trace import note
 
 # Internal column names of the edge/walk relation and the doubling hop
 # counter; fresh names keep joins against the frontier unambiguous.
@@ -139,7 +142,6 @@ def _run(
     produce: Callable[[DataFrame], DataFrame],
     new_only: Callable[[DataFrame, DataFrame], DataFrame],
     max_iterations: int,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Semi-naive fixpoint: apply ``produce`` to the frontier, keep
     ``new_only(produced, total)``, and stop on the first empty delta.
@@ -152,8 +154,7 @@ def _run(
     ``max_iterations`` budgets STEP APPLICATIONS, including the one
     that finds the frontier closed: a closure needing n productive
     steps returns at a budget of n + 1 and raises RuntimeError at n.
-    ``stats`` (when given) records ``evaluator`` and ``rounds`` (step
-    applications).
+    Notes ``evaluator`` and ``rounds`` (step applications).
     """
     # Invariant: every delta is a materialized localCheckpoint, so
     # `total` is always a FLAT union of materialized roots — lineage
@@ -191,13 +192,13 @@ def _run(
             if delta2.count() == 0:
                 # closed at the odd or the even round; empty union legs
                 # are free and keep `total` a flat union of checkpoints
-                _record(stats, "semi-naive", steps)
+                note("fixpoint", evaluator="semi-naive", rounds=steps)
                 return mid_total.unionByName(delta2)
             total = mid_total.unionByName(delta2)
             frontier = delta2
         else:
             if delta.count() == 0:
-                _record(stats, "semi-naive", steps)
+                note("fixpoint", evaluator="semi-naive", rounds=steps)
                 return total
             total = total.unionByName(delta)
             frontier = delta
@@ -229,11 +230,6 @@ def _anti_new_only(produced: DataFrame, total: DataFrame, cols: list[str],
         [produced[c].eqNullSafe(F.col(n)) for c, n in zip(cols, probe_names)],
     )
     return produced.join(F.broadcast(t) if broadcast else t, on=cond, how="leftanti")
-
-
-def _record(stats: dict | None, evaluator: str, rounds: int) -> None:
-    if stats is not None:
-        stats.update(evaluator=evaluator, rounds=rounds)
 
 
 def _join_key(dt: DataType) -> Callable | None:
@@ -353,14 +349,13 @@ def _bfs_batches(pairs, key: Callable, at: str, level: str | None, schema,
 
 
 def _bfs_closure(seed: DataFrame, hop: Hop, schema: StructType, level: str | None,
-                 settle: Callable[[DataFrame], DataFrame], stats: dict | None
-                 ) -> DataFrame | None:
+                 settle: Callable[[DataFrame], DataFrame]) -> DataFrame | None:
     """The broadcast-BFS closure of ``seed`` under ``hop`` (module
     docstring): ``settle`` of the BFS rows, which have ``schema``,
     checkpointed; None, after at most one fetch job, when the key type
     is not :func:`_join_key`-safe or the edges exceed
-    ``_BROADCAST_ROWS``. ``stats`` gets ``rounds`` = the deepest BFS
-    distance reached. No ``max_iterations`` budget applies: each BFS
+    ``_BROADCAST_ROWS``. Notes ``rounds`` = the deepest BFS distance
+    reached. No ``max_iterations`` budget applies: each BFS
     visits each node of the finite adjacency at most once, so it ends by
     construction, however deep the graph."""
     types = {seed.schema[hop.at].dataType, hop.edges.schema[hop.src].dataType,
@@ -386,7 +381,7 @@ def _bfs_closure(seed: DataFrame, hop: Hop, schema: StructType, level: str | Non
     run = _bfs_batches(pairs, key, hop.at, level, to_arrow_schema(schema),
                        _CHUNK_ROWS, depth.add)
     out = settle(seed.mapInArrow(run, schema)).localCheckpoint(eager=True)
-    _record(stats, "broadcast-bfs", depth.value)
+    note("fixpoint", evaluator="broadcast-bfs", rounds=depth.value)
     return out
 
 
@@ -417,7 +412,6 @@ def _double(
     counters: tuple[str, ...],
     settle: Callable[[DataFrame], DataFrame],
     max_iterations: int,
-    stats: dict | None,
 ) -> DataFrame:
     """Seeded path doubling (module docstring). ``seed`` is duplicate-
     free on ``keys``; ``counters`` (level, hop count) grow by 2^k with
@@ -447,7 +441,7 @@ def _double(
         delta = (settle(delta) if merging else delta).localCheckpoint(eager=False)
         n = delta.count()
         if n == 0:
-            _record(stats, "doubling", rounds)
+            note("fixpoint", evaluator="doubling", rounds=rounds)
             return settle(total)
         total, size = total.unionByName(delta), size + n
         second = walks.select(F.col(_SRC).alias(_MID), F.col(_DST).alias(_END))
@@ -466,7 +460,6 @@ def fixpoint(
     seed: DataFrame,
     step: Callable[[DataFrame], DataFrame],
     max_iterations: int = 100,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Smallest superset of ``seed`` closed under ``step`` (set
     semantics). ``step`` takes the current frontier and returns
@@ -474,26 +467,25 @@ def fixpoint(
     A :class:`Hop` step is closed by the broadcast BFS when its edges
     fit ``_BROADCAST_ROWS`` (no budget applies: it ends by
     construction), else by path doubling when its degree guard allows
-    (``max_iterations`` then budgets doubling rounds); ``stats`` records
-    the ``evaluator`` and its ``rounds``."""
+    (``max_iterations`` then budgets doubling rounds). The ``evaluator``
+    and its ``rounds`` are noted in the trace record."""
     cols = seed.columns
     unique = seed.dropDuplicates()
     if isinstance(step, Hop):
         # the BFS rows are deduplicated once, at the end, so the seed is not
         schema = seed.unionByName(step(seed).select(*cols)).schema  # semi-naive's
-        closed = _bfs_closure(seed, step, schema, None, DataFrame.distinct, stats)
+        closed = _bfs_closure(seed, step, schema, None, DataFrame.distinct)
         if closed is not None:
             return closed
         guarded = _doubling_walks(step)
         if guarded is not None:
             return _double(unique, *guarded, step.at, cols, (), DataFrame.dropDuplicates,
-                           max_iterations, stats)
+                           max_iterations)
     return _run(
         unique,
         lambda fr: step(fr).select(*cols),
         lambda produced, total: _anti_new_only(produced.dropDuplicates(), total, cols),
         max_iterations,
-        stats,
     )
 
 
@@ -554,7 +546,6 @@ def fixpoint_with_level(
     step: Callable[[DataFrame], DataFrame],
     level_col: str = "level",
     max_iterations: int = 100,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Fixpoint keeping a 0-based iteration level (org-chart flattening,
     Sample/recursive.andl:23-27). Dedup ignores the level column — a
@@ -570,7 +561,8 @@ def fixpoint_with_level(
     broadcast BFS each reached tuple gets its seed's level + its BFS
     distance; doubled, each round-k tuple gets its parent's level + 2^k.
     Both keep each tuple's fewest-hops row: the same first-reach
-    (shortest-distance) level the semi-naive loop assigns."""
+    (shortest-distance) level the semi-naive loop assigns. The
+    ``evaluator`` and its ``rounds`` are noted as under :func:`fixpoint`."""
     data_cols = [c for c in seed.columns if c != level_col]
     if level_col not in seed.columns:
         seed = seed.withColumn(level_col, F.lit(0))
@@ -589,14 +581,14 @@ def fixpoint_with_level(
         # levels keeps its lowest (the other evaluators keep any one)
         schema = seed.unionByName(step(seed).select(*cols)).schema.add(_HOPS, IntegerType(), False)
         closed = _bfs_closure(seed, hop, schema, level_col,
-                              lambda df: fewest_hops(df).drop(_HOPS), stats)
+                              lambda df: fewest_hops(df).drop(_HOPS))
         if closed is not None:
             return closed
         guarded = _doubling_walks(hop)
         if guarded is not None:
             return _double(
                 unique.withColumn(_HOPS, F.lit(0)), *guarded, hop.at, data_cols,
-                (level_col, _HOPS), fewest_hops, max_iterations, stats,
+                (level_col, _HOPS), fewest_hops, max_iterations,
             ).drop(_HOPS)
     return _run(
         unique,
@@ -606,5 +598,4 @@ def fixpoint_with_level(
             .dropDuplicates(data_cols)
         ),
         max_iterations,
-        stats,
     )

@@ -35,6 +35,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..trace import note
 from ..util import ensure_parallelism, local_frame
 from .text import fingerprint
 
@@ -250,50 +251,22 @@ AUTO_ANCHOR_BOUND = 1_000_000_000
 AUTO_ANCHOR_DEGREE = 8
 
 
-#: Stats hook (ADVICE r6): every _fanout_guard run records its
-#: decision here, keyed by the op label — {"estimated_pairs", "bound",
-#: "anchor_degree"} with anchor_degree=None meaning exact semantics
-#: were kept. Pipelines that must DETECT a non-exact pair set (rather
-#: than grepping logs) read this right after building the pair plan.
-#:
-#: SINGLE-PIPELINE convenience view only (ADVICE r7 / VERDICT r7
-#: item 4): the dict is process-global and keyed by op label, so two
-#: pipelines sharing a SparkSession (concurrent REST sessions,
-#: parallel notebook cells) overwrite each other's entries. Callers
-#: that must attribute a decision to THEIR OWN call pass
-#: ``stats_out={}`` to any pair op — the op writes the same record
-#: into that dict, in-band, immune to interleaving.
-FANOUT_STATS: dict[str, dict] = {}
-
-
-def _record_fanout(what: str, anchor_degree: int | None, mode: str,
-                   stats_out: dict | None = None) -> None:
-    """Stats entry for a pair op whose guard did NOT run (explicit
-    anchors or anchor_degree<=0 opt-out) — without this, a consumer
-    reading FANOUT_STATS after an exact/explicit call would see the
-    PREVIOUS guarded call's stale decision (review r7). ``stats_out``
-    receives the same record in-band (per-call, no global aliasing)."""
-    rec = {"estimated_pairs": None, "weight": None,
-           "bound": None, "anchor_degree": anchor_degree,
-           "mode": mode}
-    FANOUT_STATS[what] = rec
-    if stats_out is not None:
-        stats_out[what] = rec
-
-
 def _fanout_guard(
     exploded: DataFrame, keys: list[str], what: str,
     bound: int | None = None,
     probe: DataFrame | None = None,
     weight: float = 1.0,
-    stats_out: dict | None = None,
 ) -> int | None:
-    """Estimate a bucket join's candidate fan-out — for a SELF-join,
+    """Estimate a bucket join's candidate fan-out in ONE aggregate
+    over the (cached upstream) bucket table(s) — for a SELF-join,
     Σ n·(n−1)/2 over bucket-key counts; for an incremental
-    probe×corpus join (``probe`` given), Σ n_probe·n_corpus per shared
-    bucket — ONE cheap aggregate over the (cached upstream) bucket
-    table(s) — and return the anchor degree to engage when
-    ``est · weight`` exceeds ``bound``, else None (exact semantics).
+    probe×corpus join (``probe`` given), Σ n_probe·n_corpus over the
+    buckets both sides share, from one groupBy of the probe rows
+    (tagged 1) unioned with the corpus rows (tagged 0) — and return
+    the anchor degree to engage when ``est · weight`` exceeds
+    ``bound``, else None (exact semantics). The estimate is None when
+    the probe and corpus share no bucket, or the self-join table is
+    empty.
 
     ``weight`` normalizes PER-CANDIDATE cost to the bound's
     calibration unit (a minhash/simhash candidate: a band compare or
@@ -310,9 +283,11 @@ def _fanout_guard(
     128 GiB heap (SCALE_r05.md). Rather than letting a data property
     crash (or dominate) the job, the guard trades exactness for the
     measured decision-identical anchored mode, LOGS the switch, and
-    records it in :data:`FANOUT_STATS` — callers needing
-    guaranteed-exact pairs at any cost pass an explicit anchor_degree
-    or raise the bound."""
+    notes the decision in the trace record (``what``: mode
+    ``guarded``, ``anchor_degree`` — None when exact semantics are
+    kept — ``estimated_pairs``, ``weight`` and ``bound``). Callers
+    needing guaranteed-exact pairs at any cost pass an explicit
+    anchor_degree or raise the bound."""
     bound = AUTO_ANCHOR_BOUND if bound is None else bound
     if probe is None:
         est = (
@@ -321,26 +296,24 @@ def _fanout_guard(
             .first()["p"]
         )
     else:
-        bc = exploded.groupBy(*keys).agg(F.count("*").alias("__nb"))
-        pc = probe.groupBy(*keys).agg(F.count("*").alias("__np"))
+        n_probe = F.sum("__probe")
+        counts = (
+            probe.withColumn("__probe", F.lit(1))
+            .unionByName(exploded.withColumn("__probe", F.lit(0)))
+            .groupBy(*keys)
+            .agg(n_probe.alias("np"), (F.count(F.lit(1)) - n_probe).alias("nc"))
+        )
         est = (
-            pc.join(bc, on=keys)
-            .agg(F.sum(F.col("__np") * F.col("__nb")).alias("p"))
+            counts.filter((F.col("np") > 0) & (F.col("nc") > 0))
+            .agg(F.sum(F.col("np") * F.col("nc")).alias("p"))
             .first()["p"]
         )
     weighted = None if est is None else float(est) * weight
     engaged = (AUTO_ANCHOR_DEGREE
                if weighted is not None and weighted > bound else None)
-    rec = {
-        "estimated_pairs": None if est is None else float(est),
-        "weight": weight,
-        "bound": float(bound),
-        "anchor_degree": engaged,
-        "mode": "guarded",
-    }
-    FANOUT_STATS[what] = rec
-    if stats_out is not None:
-        stats_out[what] = rec
+    note(what, mode="guarded", anchor_degree=engaged,
+         estimated_pairs=None if est is None else float(est),
+         weight=weight, bound=float(bound))
     if engaged is not None:
         import logging
 
@@ -357,12 +330,10 @@ def _fanout_guard(
 def _anchored(
     side: DataFrame, keys: list[str], order_col: str, what: str,
     anchor_degree: int | None, auto_bound: int | None,
-    stats_out: dict | None,
     probe: DataFrame | None = None, weight: float = 1.0,
 ) -> DataFrame:
     """The pair ops' anchor decision, in one place (the contract every
-    public pair op's ``anchor_degree``/``auto_bound``/``stats_out``
-    follow):
+    public pair op's ``anchor_degree``/``auto_bound`` follow):
 
     * ``None`` — exact unless unaffordable: :func:`_fanout_guard`
       estimates the bucket join's candidate count over ``side``
@@ -383,22 +354,23 @@ def _anchored(
     anchor, so the dup_clusters/keep_canonical DECISION is unchanged
     for dense clusters, and D anchors give the downstream score D
     chances to keep a connecting edge; exact pair semantics hold only
-    for edges through an anchor. The decision is recorded in
-    :data:`FANOUT_STATS` and ``stats_out``. The rank partitions by
-    ``keys``, the pair join's key, so rank and join share one
-    exchange."""
+    for edges through an anchor. Each call notes one decision under
+    ``what`` in the trace record: mode ``exact`` or ``explicit`` with
+    its ``anchor_degree``, or the guard's ``guarded`` record. The rank
+    partitions by ``keys``, the pair join's key, so rank and join
+    share one exchange."""
     if anchor_degree is not None and anchor_degree <= 0:
-        _record_fanout(what, None, "exact", stats_out)
+        note(what, mode="exact", anchor_degree=None)
         return side
     if anchor_degree is None:
         anchor_degree = _fanout_guard(
             side.select(*keys), keys, what, bound=auto_bound,
             probe=None if probe is None else probe.select(*keys),
-            weight=weight, stats_out=stats_out)
+            weight=weight)
         if anchor_degree is None:
             return side
     else:
-        _record_fanout(what, anchor_degree, "explicit", stats_out)
+        note(what, mode="explicit", anchor_degree=anchor_degree)
     from pyspark.sql import Window
 
     w = Window.partitionBy(*keys).orderBy(order_col)
@@ -413,8 +385,7 @@ def _bucket_pairs(
     probe: DataFrame, corpus: DataFrame, keys: list[str], id_col: str,
     what: str, score: F.Column | None = None, keep: F.Column | None = None,
     self_join: bool = True, anchor_degree: int | None = None,
-    auto_bound: int | None = None, stats_out: dict | None = None,
-    weight: float = 1.0,
+    auto_bound: int | None = None, weight: float = 1.0,
 ) -> DataFrame:
     """THE candidate-pair join of every bucketed dedup op: ``probe``
     rows (alias ``a``) meet ``corpus`` rows (alias ``b``) that share a
@@ -430,7 +401,7 @@ def _bucket_pairs(
       Σ n_probe·n_corpus per shared bucket.
 
     Anchoring and the guard follow :func:`_anchored` (``what`` labels
-    the FANOUT_STATS record; ``weight`` scales the estimate to the
+    the noted decision; ``weight`` scales the estimate to the
     bound's per-candidate cost unit). The corpus side carries a
     shuffle_hash hint: it is corpus-sized, and letting AQE broadcast it
     rebuilds its whole upstream in one single-threaded broadcast-build
@@ -443,7 +414,7 @@ def _bucket_pairs(
     7.4 s for the identical 93,295 pairs)."""
     anchored = _anchored(
         probe if self_join else corpus, keys, id_col, what, anchor_degree,
-        auto_bound, stats_out, probe=None if self_join else probe,
+        auto_bound, probe=None if self_join else probe,
         weight=weight)
     a_id, b_id = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
     if self_join:
@@ -471,7 +442,6 @@ def lsh_candidate_pairs(
     rows_per_band: int = 4,
     anchor_degree: int | None = None,
     auto_bound: int | None = None,
-    stats_out: dict | None = None,
 ) -> DataFrame:
     """Band the signatures and emit candidate pairs (id_a < id_b) that
     share at least one band bucket. The join key is (band, bucket), the
@@ -486,7 +456,7 @@ def lsh_candidate_pairs(
     return _bucket_pairs(
         exploded, exploded, ["band", "bucket"], id_col,
         "minhash lsh_candidate_pairs", anchor_degree=anchor_degree,
-        auto_bound=auto_bound, stats_out=stats_out)
+        auto_bound=auto_bound)
 
 
 def _packed_sig_sql(n: int) -> str:
@@ -784,7 +754,6 @@ def simhash_near_pairs(
     signatures: DataFrame, id_col: str, max_hamming: int = 3,
     anchor_degree: int | None = None,
     auto_bound: int | None = None,
-    stats_out: dict | None = None,
 ) -> DataFrame:
     """Near-dup pairs (id_a, id_b, hamming) by TRUE Hamming distance ≤
     max_hamming.
@@ -813,8 +782,7 @@ def simhash_near_pairs(
     score, keep = _hamming_score(max_hamming)
     out = _bucket_pairs(
         e, e, ["chunk", "val"], id_col, "simhash_near_pairs", score, keep,
-        anchor_degree=anchor_degree, auto_bound=auto_bound,
-        stats_out=stats_out)
+        anchor_degree=anchor_degree, auto_bound=auto_bound)
     # Materialize the (small) pair result, then release the signature
     # cache — each invocation used to leak a cached RDD (ADVICE r2).
     out = out.localCheckpoint(eager=True)
@@ -981,7 +949,6 @@ def embedding_dup_pairs(
     seed: int = 42,
     anchor_degree: int | None = None,
     auto_bound: int | None = None,
-    stats_out: dict | None = None,
 ) -> DataFrame:
     """Pairs (id_a, id_b, cosine) with cosine ≥ threshold.
 
@@ -1017,8 +984,7 @@ def embedding_dup_pairs(
         return _bucket_pairs(
             e, e, ["tbl", "bucket"], "id", "embedding_dup_pairs", cos,
             F.col("cosine") >= threshold, anchor_degree=anchor_degree,
-            auto_bound=auto_bound, stats_out=stats_out,
-            weight=max(1.0, dim / 8))
+            auto_bound=auto_bound, weight=max(1.0, dim / 8))
     v = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
         _norm(vec_col).alias("nrm"),
@@ -1149,7 +1115,6 @@ def minhash_against_index(
     hash_fn: str = "xxhash64",
     anchor_degree: int | None = None,
     auto_bound: int | None = None,
-    stats_out: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental MinHash near-dup: sign ONLY the new batch and join
     its band buckets against a persisted signature index — the 100 TB
@@ -1183,8 +1148,7 @@ def minhash_against_index(
         _band_buckets(new_sigs, id_col, num_bands, rows_per_band),
         _band_buckets(all_sigs, id_col, num_bands, rows_per_band),
         ["band", "bucket"], id_col, "minhash_against_index",
-        self_join=False, anchor_degree=anchor_degree, auto_bound=auto_bound,
-        stats_out=stats_out)
+        self_join=False, anchor_degree=anchor_degree, auto_bound=auto_bound)
     scored = minhash_jaccard(all_sigs, pairs, id_col, num_perm=num_perm)
     out = scored.filter(F.col("est_jaccard") >= threshold).localCheckpoint(eager=True)
     return out, new_sigs
@@ -1199,7 +1163,6 @@ def simhash_against_index(
     hash_fn: str = "xxhash64",
     anchor_degree: int | None = None,
     auto_bound: int | None = None,
-    stats_out: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental SimHash twin of :func:`minhash_against_index`:
     ``index_sigs`` is persisted :func:`simhash_signatures` output
@@ -1221,7 +1184,6 @@ def simhash_against_index(
         _simhash_buckets(all_sigs, id_col, max_hamming),
         ["chunk", "val"], id_col, "simhash_against_index", score, keep,
         self_join=False, anchor_degree=anchor_degree, auto_bound=auto_bound,
-        stats_out=stats_out,
     ).localCheckpoint(eager=True)
     return pairs, new_sigs
 
@@ -1286,7 +1248,6 @@ def embedding_dup_against_index(
     seed: int = 42,
     anchor_degree: int | None = None,
     auto_bound: int | None = None,
-    stats_out: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental embedding near-dup, the third leg of the
     ``*_against_index`` family (exact: dedup_against_index, MinHash:
@@ -1324,7 +1285,7 @@ def embedding_dup_against_index(
         ["tbl", "bucket"], "id", "embedding_dup_against_index",
         cos.alias("cosine"), F.col("cosine") >= threshold, self_join=False,
         anchor_degree=anchor_degree, auto_bound=auto_bound,
-        stats_out=stats_out, weight=max(1.0, dim / 8),
+        weight=max(1.0, dim / 8),
     ).localCheckpoint(eager=True)
     return pairs, new_index
 
@@ -1338,7 +1299,6 @@ def dup_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 50,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph: every
     node gets ``cluster_id`` = the MINIMUM id reachable from it, so
@@ -1362,8 +1322,8 @@ def dup_clusters(
     of anything corpus-sized — and each intermediate edge set is
     localCheckpoint'ed so lineage stays flat. The DuckDB mirror is a
     recursive CTE computing the same min-reachable label
-    (tests/test_pipeline.py). ``stats['rounds']`` reports the rounds
-    used when a dict is passed.
+    (tests/test_pipeline.py). The rounds used are noted in the trace
+    record (``dup_clusters``, ``rounds``).
     """
     e = (
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
@@ -1422,8 +1382,7 @@ def dup_clusters(
     else:
         raise RuntimeError(
             f"dup_clusters did not converge in {max_iter} rounds")
-    if stats is not None:
-        stats["rounds"] = rounds
+    note("dup_clusters", rounds=rounds)
     # stars: every non-centre node carries exactly one edge to its
     # component minimum; centres (and singleton nodes) label themselves
     members = d.select(F.col("big").alias("id"), F.col("small").alias("lbl"))

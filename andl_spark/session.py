@@ -72,19 +72,16 @@ class LazyTables(dict):
     spark.read until a table is actually used — a query touching two of
     the ten tables pays for two, not ten."""
 
-    def __init__(self, spark: SparkSession, sf_dir: str, register_views: bool):
+    def __init__(self, spark: SparkSession, sf_dir: str):
         super().__init__()
         self._spark = spark
         self._sf_dir = sf_dir
-        self._register = register_views
 
     def __missing__(self, name: str) -> DataFrame:
         path = os.path.join(self._sf_dir, f"{name}.parquet")
         if name not in TABLES or not os.path.exists(path):
             raise KeyError(name)
         df = _restore_nanos_timestamps(self._spark.read.parquet(path), path)
-        if self._register:
-            df.createOrReplaceTempView(name)
         self[name] = df
         return df
 
@@ -145,7 +142,7 @@ def load_tables(spark: SparkSession, sf_dir: str, register_views: bool = True) -
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = (spark, os.path.abspath(sf_dir))
     tables = _TABLES_CACHE.get(
-        key, lambda: LazyTables(spark, sf_dir, register_views=False),
+        key, lambda: LazyTables(spark, sf_dir),
         _sf_fingerprint(sf_dir))
     if register_views:
         # bound on every call, hit or miss: another sf_dir loaded on

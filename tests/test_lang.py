@@ -454,18 +454,17 @@ def test_while_compose_reachability_routes_to_hop(spark, monkeypatch):
     (out-degree 1) closes by doubling and a graph with branching and
     merging falls back to semi-naive. A body with anything around the
     compose keeps the general step compiler. All equal a Python BFS."""
+    from andl_spark import trace
     from andl_spark.operators import whileop
 
-    seen = []
-    fixpoint = whileop.fixpoint
+    built = []
 
-    def recording(seed, step, max_iterations=100):
-        stats = {}
-        out = fixpoint(seed, step, max_iterations, stats=stats)
-        seen.append((isinstance(step, whileop.Hop), stats))
-        return out
+    class SpyHop(whileop.Hop):  # the interpreter imports Hop per call
+        def __init__(self, *args, **kwargs):
+            built.append(True)
+            super().__init__(*args, **kwargs)
 
-    monkeypatch.setattr(whileop, "fixpoint", recording)
+    monkeypatch.setattr(whileop, "Hop", SpyHop)
 
     def bfs(edges, start, limit=None):
         out, frontier = {start}, [start]
@@ -487,16 +486,17 @@ def test_while_compose_reachability_routes_to_hop(spark, monkeypatch):
     ]
     for edges, body, is_hop, evaluator, limit, bound in cases:
         monkeypatch.setattr(whileop, "_BROADCAST_ROWS", bound)
-        seen.clear()
+        built.clear()
         sess = AndlSession(spark)
-        sess.run(
-            f"E := {_andl_rel(edges, ['src', 'node'])}\n"
-            "S := {{ root := 7, node := 0 }}\n"
-            f"R := S .while(({{{{ root, src := node }}}} {body}))\n"
-        )
+        with trace.recording() as rec:
+            sess.run(
+                f"E := {_andl_rel(edges, ['src', 'node'])}\n"
+                "S := {{ root := 7, node := 0 }}\n"
+                f"R := S .while(({{{{ root, src := node }}}} {body}))\n"
+            )
         rows = {(int(r["root"]), int(r["node"])) for r in sess.globals["R"].df.collect()}
         assert rows == {(7, n) for n in bfs(edges, 0, limit)}
-        assert [(h, st["evaluator"]) for h, st in seen] == [(is_hop, evaluator)]
+        assert [(bool(built), d["evaluator"]) for d in rec] == [(is_hop, evaluator)]
 
 
 def test_literal_relation_plans_locally(spark):

@@ -8,7 +8,7 @@ from decimal import Decimal as D
 import pytest
 from pyspark.sql import functions as F
 
-from andl_spark import Relation
+from andl_spark import Relation, trace
 from andl_spark.functions.fold import fold
 from andl_spark.operators.nest import nest, unnest
 from andl_spark.operators.update import Relvar
@@ -289,15 +289,24 @@ def _frames(spark, edges, seed, schema, with_level, key):
 
 
 def _hop_closure(spark, edges, seed, schema, at="node", with_level=False, key="long"):
-    """(rows, stats) of the Hop fixpoint; the edges' ``src`` and ``dst``
+    """(rows, decision) of the Hop fixpoint, the decision as
+    :func:`_fixpoint_decision` reads it; the edges' ``src`` and ``dst``
     have type ``key``."""
     from andl_spark.operators.whileop import Hop, fixpoint_with_level
 
     e, s = _frames(spark, edges, seed, schema, with_level, key)
     run = fixpoint_with_level if with_level else fixpoint
-    stats = {}
-    got = {tuple(r) for r in run(s, Hop(e, at=at), stats=stats).select(*s.columns).collect()}
-    return got, stats
+    with trace.recording() as rec:
+        got = {tuple(r) for r in run(s, Hop(e, at=at)).select(*s.columns).collect()}
+    return got, _fixpoint_decision(rec)
+
+
+def _fixpoint_decision(rec):
+    """The one fixpoint decision in the trace record ``rec``, without
+    its op label: ``{"evaluator": ..., "rounds": ...}``."""
+    (decision,) = rec
+    assert decision.pop("op") == "fixpoint"
+    return decision
 
 
 def _plain_closure(spark, edges, seed, schema, at="node", with_level=False, key="long"):
@@ -333,18 +342,19 @@ def test_hop_chain_doubles_in_log_rounds(spark, monkeypatch):
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
     seed = spark.createDataFrame([(0,)], "node long")
     for bfs in _evaluators(monkeypatch):
-        stats = {}
         try:
             sc.setJobGroup(f"hop-chain-{bfs}", "Hop chain closure")
-            got = {r["node"] for r in fixpoint(seed, Hop(edges, at="node"), stats=stats).collect()}
+            with trace.recording() as rec:
+                got = {r["node"] for r in fixpoint(seed, Hop(edges, at="node")).collect()}
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+        decision = _fixpoint_decision(rec)
         if bfs:
-            assert stats == {"evaluator": "broadcast-bfs", "rounds": n - 1}
+            assert decision == {"evaluator": "broadcast-bfs", "rounds": n - 1}
             assert len(sc.statusTracker().getJobIdsForGroup(f"hop-chain-{bfs}")) <= 4
         else:
-            assert stats["evaluator"] == "doubling"
-            assert stats["rounds"] <= math.ceil(math.log2(n)) + 1
+            assert decision["evaluator"] == "doubling"
+            assert decision["rounds"] <= math.ceil(math.log2(n)) + 1
         assert got == set(range(n))
 
 
@@ -360,9 +370,9 @@ def test_hop_functional_cycle_with_tail(spark, monkeypatch, with_level):
     oracle = _reach(edges, [(0,), (20,)], 0)
     want = [] if with_level else [_plain_closure(spark, edges, [(0,), (20,)], "node long")]
     for bfs in _evaluators(monkeypatch):
-        got, stats = _hop_closure(
+        got, decision = _hop_closure(
             spark, edges, [(0,), (20,)], "node long", with_level=with_level)
-        assert stats["evaluator"] == ("broadcast-bfs" if bfs else "doubling")
+        assert decision["evaluator"] == ("broadcast-bfs" if bfs else "doubling")
         assert want in ([], [got])
         if with_level:
             assert got == {k + (v,) for k, v in oracle.items()}
@@ -376,8 +386,8 @@ def test_hop_null_edges_match_semi_naive(spark, monkeypatch):
     edges = [(1, 2), (2, None), (None, 9), (9, None), (None, None)]
     want = _plain_closure(spark, edges, [(1,), (9,), (None,)], "node long")
     for bfs in _evaluators(monkeypatch):
-        got, stats = _hop_closure(spark, edges, [(1,), (9,), (None,)], "node long")
-        assert stats["evaluator"] == ("broadcast-bfs" if bfs else "doubling")
+        got, decision = _hop_closure(spark, edges, [(1,), (9,), (None,)], "node long")
+        assert decision["evaluator"] == ("broadcast-bfs" if bfs else "doubling")
         assert got == want == {(1,), (2,), (9,), (None,)}
 
 
@@ -386,11 +396,11 @@ def test_hop_empty_seed_and_depth_one(spark, monkeypatch):
     fan-out (in-degree 1, out-degree 2) in two (the BFS: depth 1)."""
     for bfs in _evaluators(monkeypatch):
         name, empty, one = ("broadcast-bfs", 0, 1) if bfs else ("doubling", 1, 2)
-        got, stats = _hop_closure(spark, [(1, 2), (1, 3)], [], "node long")
-        assert got == set() and stats == {"evaluator": name, "rounds": empty}
-        got, stats = _hop_closure(spark, [(1, 2), (1, 3)], [(1,)], "node long")
+        got, decision = _hop_closure(spark, [(1, 2), (1, 3)], [], "node long")
+        assert got == set() and decision == {"evaluator": name, "rounds": empty}
+        got, decision = _hop_closure(spark, [(1, 2), (1, 3)], [(1,)], "node long")
         assert got == {(1,), (2,), (3,)}
-        assert stats == {"evaluator": name, "rounds": one}
+        assert decision == {"evaluator": name, "rounds": one}
 
 
 @pytest.mark.parametrize("shape,evaluator", [
@@ -406,9 +416,9 @@ def test_hop_all_pairs_closure_carries_columns(spark, monkeypatch, shape, evalua
         "out_tree": [(1, 2), (1, 3), (2, 4), (3, 5), (5, 6), (5, 7), (None, 9), (9, None)],
     }[shape]
     for bfs in _evaluators(monkeypatch):
-        got, stats = _hop_closure(
+        got, decision = _hop_closure(
             spark, edges, edges, "src long, dst long", at="dst")
-        assert stats["evaluator"] == ("broadcast-bfs" if bfs else evaluator)
+        assert decision["evaluator"] == ("broadcast-bfs" if bfs else evaluator)
         assert got == set(_reach(edges, edges, 1))
         if shape == "branching":  # the pairs the old path-doubling closure returned
             assert {p for p in got if None not in p} == {
@@ -427,9 +437,9 @@ def test_hop_dense_graph_stays_semi_naive(spark, monkeypatch, with_level):
              + [(a, b) for a in layer_a for b in layer_b])
     oracle = _reach(edges, [(1,)], 0)
     for bfs in _evaluators(monkeypatch):
-        got, stats = _hop_closure(
+        got, decision = _hop_closure(
             spark, edges, [(1,)], "node long", with_level=with_level)
-        assert stats["evaluator"] == ("broadcast-bfs" if bfs else "semi-naive")
+        assert decision["evaluator"] == ("broadcast-bfs" if bfs else "semi-naive")
         assert got == ({k + (v,) for k, v in oracle.items()} if with_level else set(oracle))
         assert len(got) == 4 + 30 + 30
 
@@ -460,8 +470,8 @@ def test_bfs_key_equality_matches_the_equi_join(spark, key, edges, seed):
     rows equal the plain semi-naive step's for floats (the Python
     oracle's NaN ≠ NaN), and the BFS oracle's for the key types whose
     Python equality is Spark's."""
-    got, stats = _hop_closure(spark, edges, seed, f"node {key}", key=key)
-    assert stats["evaluator"] == "broadcast-bfs"
+    got, decision = _hop_closure(spark, edges, seed, f"node {key}", key=key)
+    assert decision["evaluator"] == "broadcast-bfs"
     if key == "double":
         assert _nan_free(got) == _nan_free(_plain_closure(spark, edges, seed, f"node {key}", key=key))
         assert _nan_free(got) == {(1.0,), ("NaN",), (0.0,), (3.0,), (None,)}
@@ -481,11 +491,12 @@ def test_bfs_carries_columns_with_the_semi_naive_schema(spark):
         [("x", "a", 1.5), ("y", "c", None), ("x", "a", 1.5), ("z", "q", 2.0)],
         "tag string not null, node string not null, w double")
     hop = e.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
-    stats = {}
-    got = fixpoint(seed, Hop(e, at="node"), stats=stats)
+    with trace.recording() as rec:
+        got = fixpoint(seed, Hop(e, at="node"))
+    decision = _fixpoint_decision(rec)
     want = fixpoint(seed, lambda fr: fr.join(hop, F.col("node") == F.col("e_src"))
                     .withColumn("node", F.col("e_dst")).select(*seed.columns))
-    assert stats["evaluator"] == "broadcast-bfs"
+    assert decision["evaluator"] == "broadcast-bfs"
     assert got.schema == want.schema
     rows = {tuple(r) for r in got.collect()}
     assert rows == {tuple(r) for r in want.collect()}
@@ -515,6 +526,6 @@ def test_bfs_chunks_a_reach_larger_than_one_batch(spark, monkeypatch):
     assert max(depths) == 30
 
     monkeypatch.setattr(whileop, "_CHUNK_ROWS", 4)
-    got, stats = _hop_closure(spark, chain, [(0,)], "node long", with_level=True)
-    assert stats == {"evaluator": "broadcast-bfs", "rounds": 30}
+    got, decision = _hop_closure(spark, chain, [(0,)], "node long", with_level=True)
+    assert decision == {"evaluator": "broadcast-bfs", "rounds": 30}
     assert got == {k + (v,) for k, v in _reach(chain, [(0,)], 0).items()}

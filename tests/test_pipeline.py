@@ -1,9 +1,13 @@
 """Pipeline operator behavior: dedup recall on planted near-dups,
 ANN self-consistency, multimodal plumbing."""
 
+import threading
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
+from andl_spark import trace
 from andl_spark.pipeline import dedup as D
 from andl_spark.pipeline import multimodal as M
 from andl_spark.pipeline import simsearch as SS
@@ -566,13 +570,13 @@ def test_dup_clusters_chain_converges_logarithmically(spark):
     n = 256
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
-    stats = {}
-    got = {r["id"]: r["cluster_id"]
-           for r in D.dup_clusters(chain, max_iter=40, stats=stats).collect()}
+    with trace.recording() as rec:
+        got = {r["id"]: r["cluster_id"]
+               for r in D.dup_clusters(chain, max_iter=40).collect()}
     assert set(got.values()) == {0} and len(got) == n
     # logarithmic, not diameter-bound: 2*log2(256)=16 >> rounds needed,
     # and orders of magnitude below the 255-round diameter
-    assert stats["rounds"] <= 2 * int(math.log2(n)), stats
+    assert _decision(rec, "dup_clusters")["rounds"] <= 2 * int(math.log2(n)), rec
     with __import__("pytest").raises(RuntimeError, match="converge"):
         D.dup_clusters(chain, max_iter=1)
     docs = spark.range(32).withColumnRenamed("id", "doc_id")
@@ -819,7 +823,7 @@ def test_embedding_fanout_auto_guard_engages_anchors(spark, monkeypatch, caplog)
     fan-out auto-guard as their minhash/simhash siblings —
     anchor_degree=None estimates the bucket join's candidate count
     first and auto-engages anchors above AUTO_ANCHOR_BOUND (logged +
-    FANOUT_STATS), output identical to the explicit anchored call;
+    noted in the trace record), output identical to the explicit anchored call;
     anchor_degree<=0 opts out (exact at any cost); the dup_clusters
     DECISION is identical either way for dense clusters."""
     import logging
@@ -835,11 +839,12 @@ def test_embedding_fanout_auto_guard_engages_anchors(spark, monkeypatch, caplog)
     kw = dict(threshold=0.95, bucket_bits=6, n_tables=4, dim=dim)
 
     monkeypatch.setattr(D, "AUTO_ANCHOR_BOUND", 10)
-    with caplog.at_level(logging.WARNING, logger="andl_spark.dedup"):
+    with caplog.at_level(logging.WARNING, logger="andl_spark.dedup"), \
+            trace.recording() as rec:
         guarded = D.embedding_dup_pairs(emb, "vec_id", "embedding", **kw)
         n_guarded = guarded.count()
     assert any("auto-engaging anchor_degree" in r.message for r in caplog.records)
-    st = D.FANOUT_STATS["embedding_dup_pairs"]
+    st = _decision(rec, "embedding_dup_pairs")
     assert st["anchor_degree"] == D.AUTO_ANCHOR_DEGREE and st["estimated_pairs"] > 10
     anchored = D.embedding_dup_pairs(emb, "vec_id", "embedding",
                                      anchor_degree=D.AUTO_ANCHOR_DEGREE, **kw)
@@ -857,11 +862,12 @@ def test_embedding_fanout_auto_guard_engages_anchors(spark, monkeypatch, caplog)
     index = D.embedding_index(old, "vec_id", "embedding",
                               bucket_bits=6, n_tables=4, dim=dim)
     caplog.clear()
-    with caplog.at_level(logging.WARNING, logger="andl_spark.dedup"):
+    with caplog.at_level(logging.WARNING, logger="andl_spark.dedup"), \
+            trace.recording() as rec:
         g_incr, _ = D.embedding_dup_against_index(
             new, index, "vec_id", "embedding", **kw)
     assert any("embedding_dup_against_index" in r.message for r in caplog.records)
-    assert (D.FANOUT_STATS["embedding_dup_against_index"]["anchor_degree"]
+    assert (_decision(rec, "embedding_dup_against_index")["anchor_degree"]
             == D.AUTO_ANCHOR_DEGREE)
     a_incr, _ = D.embedding_dup_against_index(
         new, index, "vec_id", "embedding",
@@ -873,11 +879,12 @@ def test_embedding_fanout_auto_guard_engages_anchors(spark, monkeypatch, caplog)
     assert e_incr.count() >= g_incr.count()
 
     # below the (restored) default bound the guard never engages:
-    # exact semantics, stats record the pass-through
+    # exact semantics, the record notes the pass-through
     monkeypatch.setattr(D, "AUTO_ANCHOR_BOUND", 1_000_000_000)
-    quiet = D.embedding_dup_pairs(emb, "vec_id", "embedding", **kw)
+    with trace.recording() as rec:
+        quiet = D.embedding_dup_pairs(emb, "vec_id", "embedding", **kw)
     assert _pair_set(quiet) == _pair_set(exact)
-    assert D.FANOUT_STATS["embedding_dup_pairs"]["anchor_degree"] is None
+    assert _decision(rec, "embedding_dup_pairs")["anchor_degree"] is None
 
 
 @pytest.mark.parametrize("family", ["minhash", "simhash", "embedding"])
@@ -967,6 +974,12 @@ def test_pair_kernel_anchors_the_declared_side(spark, family, mode):
 
 def _pair_set(df, *extra):
     return {tuple(r) for r in df.select("id_a", "id_b", *extra).collect()}
+
+
+def _decision(rec, op):
+    """The one decision ``op`` noted in the trace record ``rec``."""
+    (d,) = [r for r in rec if r["op"] == op]
+    return d
 
 
 @pytest.mark.parametrize("num_bands,rows_per_band", [(16, 4), (16, 3)])
@@ -1330,7 +1343,9 @@ def test_against_index_fanout_guard_minhash_simhash(spark, monkeypatch, caplog):
     """r7: the minhash/simhash incremental legs carry the same
     probe×corpus fan-out auto-guard as the embedding one — tripping it
     yields the explicit-anchor result, opting out restores exact
-    incremental semantics, FANOUT_STATS records both decisions."""
+    incremental semantics, the trace record notes both decisions. The
+    probe×corpus estimate is Σ n_probe·n_corpus over the shared
+    buckets, and costs one aggregate (≤ 3 jobs)."""
     import logging
 
     n_copies = 20
@@ -1346,12 +1361,43 @@ def test_against_index_fanout_guard_minhash_simhash(spark, monkeypatch, caplog):
     sh_idx = D.simhash_signatures(old, "doc_id", "text")
 
     monkeypatch.setattr(D, "AUTO_ANCHOR_BOUND", 10)
-    with caplog.at_level(logging.WARNING, logger="andl_spark.dedup"):
+    with caplog.at_level(logging.WARNING, logger="andl_spark.dedup"), \
+            trace.recording() as rec:
         g_mh, _ = D.minhash_against_index(new, mh_idx, threshold=0.5)
         g_sh, _ = D.simhash_against_index(new, sh_idx, max_hamming=3)
     for op in ("minhash_against_index", "simhash_against_index"):
         assert any(op in r.message for r in caplog.records), op
-        assert D.FANOUT_STATS[op]["anchor_degree"] == D.AUTO_ANCHOR_DEGREE
+        assert _decision(rec, op)["anchor_degree"] == D.AUTO_ANCHOR_DEGREE
+
+    # the recorded estimate is the Counter product over the collected
+    # probe (new batch) and corpus (index ∪ batch) bucket keys
+    new_mh = D.minhash_signatures(new, "doc_id", "text")
+    new_sh = D.simhash_signatures(new, "doc_id", "text")
+    key_tables = {
+        "minhash_against_index": (
+            ["band", "bucket"], D._band_buckets(new_mh, "doc_id", 16, 4),
+            D._band_buckets(mh_idx.unionByName(new_mh.select(*mh_idx.columns)),
+                            "doc_id", 16, 4)),
+        "simhash_against_index": (
+            ["chunk", "val"], D._simhash_buckets(new_sh, "doc_id", 3),
+            D._simhash_buckets(sh_idx.unionByName(new_sh.select(*sh_idx.columns)),
+                               "doc_id", 3)),
+    }
+    for op, (keys, probe, corpus) in key_tables.items():
+        n_probe, n_corpus = (Counter(tuple(r) for r in t.select(*keys).collect())
+                             for t in (probe, corpus))
+        want = sum(n * n_corpus[k] for k, n in n_probe.items())
+        assert want > 0 and _decision(rec, op)["estimated_pairs"] == want, op
+    keys, probe, corpus = key_tables["minhash_against_index"]
+    probe, corpus = (t.select(*keys).localCheckpoint(eager=True) for t in (probe, corpus))
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("probe-fanout-estimate", "probe-mode fan-out estimate")
+        D._fanout_guard(corpus, keys, "probe-estimate", probe=probe)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("probe-fanout-estimate")) <= 3
+
     a_mh, _ = D.minhash_against_index(new, mh_idx, threshold=0.5,
                                       anchor_degree=D.AUTO_ANCHOR_DEGREE)
     a_sh, _ = D.simhash_against_index(new, sh_idx, max_hamming=3,
@@ -1359,26 +1405,26 @@ def test_against_index_fanout_guard_minhash_simhash(spark, monkeypatch, caplog):
     assert _pair_set(g_mh) == _pair_set(a_mh)
     assert _pair_set(g_sh, "hamming") == _pair_set(a_sh, "hamming")
     # opt-out (exact at any cost) reproduces the r6 incremental pairs
-    # AND refreshes the stats entry — a consumer reading FANOUT_STATS
-    # after an exact call must not see the previous guarded decision
-    e_mh, _ = D.minhash_against_index(new, mh_idx, threshold=0.5,
-                                      anchor_degree=0)
+    # and notes its own decision — not the previous guarded one
+    with trace.recording() as rec:
+        e_mh, _ = D.minhash_against_index(new, mh_idx, threshold=0.5,
+                                          anchor_degree=0)
     assert _pair_set(e_mh) >= _pair_set(g_mh)
-    st = D.FANOUT_STATS["minhash_against_index"]
+    st = _decision(rec, "minhash_against_index")
     assert st["anchor_degree"] is None and st["mode"] == "exact"
     # an explicit positive anchor_degree records as such
-    D.minhash_against_index(new, mh_idx, threshold=0.5, anchor_degree=3)
-    st = D.FANOUT_STATS["minhash_against_index"]
+    with trace.recording() as rec:
+        D.minhash_against_index(new, mh_idx, threshold=0.5, anchor_degree=3)
+    st = _decision(rec, "minhash_against_index")
     assert st["anchor_degree"] == 3 and st["mode"] == "explicit"
 
 
-def test_stats_out_in_band_no_cross_talk(spark, monkeypatch):
-    """VERDICT r7 item 4 / ADVICE r7: FANOUT_STATS is a process-global
-    convenience keyed by op label, so two interleaved pipelines alias
-    each other's entries. ``stats_out`` returns the SAME record
-    in-band, per call: two calls of the same op with opposite guard
-    outcomes, interleaved, each read their OWN decision from their own
-    dict — while the global shows only the last writer."""
+def test_decision_records_are_per_thread(spark, monkeypatch):
+    """Two threads, each in its own ``trace.recording()``, run the same
+    op with opposite guard outcomes (a bound of 10 trips the guard,
+    ``anchor_degree=0`` opts out): each record holds only its own
+    decision. Raising ``auto_bound`` on both ``*_against_index`` legs
+    keeps exact semantics under the same corpus."""
     n_copies = 16
     rows = [(base * 1000 + k,
              f"inband wizard text {('statmark' + str(base) + ' ') * 8}"
@@ -1387,40 +1433,48 @@ def test_stats_out_in_band_no_cross_talk(spark, monkeypatch):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     old = docs.filter(F.col("doc_id") % 1000 < 8)
     new = docs.filter(F.col("doc_id") % 1000 >= 8)
-    idx = D.minhash_signatures(old, "doc_id", "text")
-
-    # pipeline A: tiny bound -> the guard trips (anchored)
+    idx = D.minhash_signatures(old, "doc_id", "text").localCheckpoint(eager=True)
     monkeypatch.setattr(D, "AUTO_ANCHOR_BOUND", 10)
-    st_a: dict = {}
-    pairs_a, _ = D.minhash_against_index(new, idx, threshold=0.5,
-                                         stats_out=st_a)
-    # pipeline B interleaves: explicit opt-out (exact) — overwrites the
-    # GLOBAL entry for the same op label
-    st_b: dict = {}
-    pairs_b, _ = D.minhash_against_index(new, idx, threshold=0.5,
-                                         anchor_degree=0, stats_out=st_b)
 
-    rec_a = st_a["minhash_against_index"]
-    rec_b = st_b["minhash_against_index"]
+    records, pairs, errors = {}, {}, []
+    both_in = threading.Barrier(2)
+
+    def run(name, **kw):
+        try:
+            with trace.recording() as rec:
+                both_in.wait(timeout=60)
+                pairs[name], _ = D.minhash_against_index(
+                    new, idx, threshold=0.5, **kw)
+                both_in.wait(timeout=600)
+            records[name] = rec
+        except Exception as e:  # surfaced below, not lost in the thread
+            both_in.abort()
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=("a",)),
+               threading.Thread(target=run, args=("b",), kwargs={"anchor_degree": 0})]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    (rec_a,), (rec_b,) = records["a"], records["b"]
+    assert rec_a["op"] == rec_b["op"] == "minhash_against_index"
     assert rec_a["mode"] == "guarded"
     assert rec_a["anchor_degree"] == D.AUTO_ANCHOR_DEGREE
     assert rec_a["estimated_pairs"] > 10
     assert rec_b["mode"] == "exact" and rec_b["anchor_degree"] is None
-    # the global view aliased to the LAST call — exactly the hazard the
-    # in-band records close (documented single-pipeline assumption)
-    assert D.FANOUT_STATS["minhash_against_index"] is rec_b
     # raising auto_bound on the against-index legs (ADVICE r7: the
     # family asymmetry) keeps exact semantics under the same corpus
-    st_c: dict = {}
-    pairs_c, _ = D.minhash_against_index(new, idx, threshold=0.5,
-                                         auto_bound=10**9, stats_out=st_c)
-    rec_c = st_c["minhash_against_index"]
+    with trace.recording() as rec:
+        pairs_c, _ = D.minhash_against_index(new, idx, threshold=0.5,
+                                             auto_bound=10**9)
+        D.simhash_against_index(new, D.simhash_signatures(old, "doc_id", "text"),
+                                auto_bound=10**9)
+    rec_c = _decision(rec, "minhash_against_index")
     assert rec_c["mode"] == "guarded" and rec_c["anchor_degree"] is None
-    assert _pair_set(pairs_c) == _pair_set(pairs_b)
-    st_d: dict = {}
-    D.simhash_against_index(new, D.simhash_signatures(old, "doc_id", "text"),
-                            auto_bound=10**9, stats_out=st_d)
-    rec_d = st_d["simhash_against_index"]
+    assert _pair_set(pairs_c) == _pair_set(pairs["b"])
+    rec_d = _decision(rec, "simhash_against_index")
     assert rec_d["mode"] == "guarded" and rec_d["anchor_degree"] is None
     assert rec_d["bound"] == float(10**9)
 

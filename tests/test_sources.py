@@ -415,7 +415,7 @@ def test_load_tables_fingerprint_covers_everything_servable(tmp_path):
     from andl_spark import session as S
 
     # every name LazyTables can serve is fingerprinted ...
-    lt = S.LazyTables(None, str(tmp_path), register_views=False)
+    lt = S.LazyTables(None, str(tmp_path))
     with pytest.raises(KeyError):
         lt["not_a_table"]
     # ... and the fingerprint covers directory-style tables per ENTRY:
