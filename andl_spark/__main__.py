@@ -16,6 +16,10 @@ update, /i interactive). Spark-first equivalent:
 Script output (write/expression displays) prints to stdout; test_true
 failures set a non-zero exit code, mirroring the reference's suite
 runner behavior.
+
+The session is :func:`andl_spark.session.get_spark`'s, the same one
+the server and the tests run on: ``SPARK_GRAFT_CPUS`` sets the local
+core count (every core when unset) and ``SPARK_MASTER`` the master.
 """
 
 from __future__ import annotations
@@ -36,8 +40,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="persist catalog updates (/cu)")
     ap.add_argument("-i", "--interactive", action="store_true",
                     help="interactive REPL on stdin (/i)")
-    ap.add_argument("--cpus", type=int, default=4,
-                    help="local[N] parallelism (default 4)")
     ap.add_argument("-t", "--thrift", action="store_true",
                     help="write <script>.thrift IDL for the catalog "
                          "surface after the run (Main.cs /t)")
@@ -57,15 +59,9 @@ def main(argv: list[str] | None = None) -> int:
             ap.print_help()
             return 2
 
-    from pyspark.sql import SparkSession
+    from .session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("andl")
-        .config("spark.sql.shuffle.partitions", str(max(args.cpus, 4)))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("andl")
     spark.sparkContext.setLogLevel("ERROR")
 
     from .lang.interp import AndlSession

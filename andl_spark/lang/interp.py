@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import pointer
 from ..operators import joins as _joins
 from ..operators.runfold import _ANDL_OPS, RUN_OPS, grouped_running
 from ..relation import Relation, _ANDL_TYPE
@@ -127,6 +128,10 @@ _TYPE_DEFAULTS = {"number": 0.0, "text": "", "bool": False, "time": None, "binar
 _ORDER_DEP_FOLDS = {"-", "/", "&"}
 _COMMUT_FOLDS = {"+", "*", "max", "min", "and", "or", "union"}
 _WINDOW_FNS = {"lag", "lead", "nth", "ord", "ordg"}
+
+#: pointer stem of the catalog's typed manifest (values, types, defs,
+#: relvar names) — committed as ``_lang_catalog.v<N>.json``
+_LANG_MANIFEST_STEM = "_lang_catalog"
 
 
 def _andl_num_text(v: float) -> str:
@@ -221,15 +226,17 @@ class AndlSession:
         sources.catalog.Catalog; scalars, tuples, TYPES and OPERATORS
         live in a typed JSON manifest (operators as ASTs, recompiled on
         load — the Catalog.cs parity: `def f(x) => ...` written under
-        `#catalog update` survives into any later session)."""
+        `#catalog update` survives into any later session). The manifest
+        commits as ``_lang_catalog.v<N>.json`` through the versioned
+        pointer protocol (andl_spark.pointer), so a crash mid-commit
+        leaves the previous manifest readable."""
         from ..sources.catalog import Catalog as _RelvarCatalog
 
         self._catalog = _RelvarCatalog(self.spark, str(path))
-        self._lang_manifest = path / "_lang_catalog.json"
-        if self._lang_manifest.exists():
-            import json
-
-            m = json.loads(self._lang_manifest.read_text())
+        self._catalog_dir = str(path)
+        got = pointer.read(self._catalog_dir, _LANG_MANIFEST_STEM)
+        if got is not None:
+            m = got[1]
             for name, enc in m.get("values", {}).items():
                 self.globals[name] = _decode_value(enc)
             for name, fields in m.get("types", {}).items():
@@ -246,11 +253,10 @@ class AndlSession:
     def _persist(self, kind: str, name: str, payload) -> None:
         if self._catalog is None or not self.catalog_update:
             return
-        import json
-
         m = {"values": {}, "types": {}, "defs": {}, "relvars": []}
-        if self._lang_manifest.exists():
-            m.update(json.loads(self._lang_manifest.read_text()))
+        got = pointer.read(self._catalog_dir, _LANG_MANIFEST_STEM)
+        if got is not None:
+            m.update(got[1])
         if kind == "value":
             if isinstance(payload, RelV):
                 self._catalog.put(name, payload.df)
@@ -272,7 +278,7 @@ class AndlSession:
                 for fd in payload
                 if fd.env is None  # closures over locals don't round-trip
             ]
-        self._lang_manifest.write_text(json.dumps(m, indent=1, sort_keys=True))
+        pointer.commit(self._catalog_dir, _LANG_MANIFEST_STEM, m)
 
     # -- public API ----------------------------------------------------
     @property

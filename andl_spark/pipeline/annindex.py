@@ -407,8 +407,6 @@ def _invalidate_meta_cache(path: str) -> None:
 
 def _meta_at(path: str, gen_dir: str) -> dict:
     p = fsio.join(gen_dir, "_meta.json")
-    if not fsio.exists(p):  # legacy top-level layout
-        p = fsio.join(path, "_meta.json")
     try:
         ident = (p,) + fsio.stat(p)
     except OSError:
@@ -827,7 +825,7 @@ def _incremental_fold_plan(raw: DataFrame, max_bid, src: str):
     tomb = None
     if tomb_exists:
         # tombstones from ALL batches (kept included) mask folded
-        # rows — the same set the full fold's fold_transform used
+        # rows — the same set _full_fold_plan uses
         tomb = (raw.filter(F.col("list_id") == TOMBSTONE_LIST)
                 .select("vec_id").distinct())
         dirty_df = dirty_df.unionByName(
@@ -869,6 +867,26 @@ def _incremental_fold_plan(raw: DataFrame, max_bid, src: str):
     return rows, copy_rel
 
 
+def _full_fold_plan(raw: DataFrame, max_bid, src: str):
+    """The full fold: EVERY non-kept row folds into the seed partition,
+    with each live row whose id any batch (kept included) tombstoned
+    physically removed and the tombstone rows themselves folded along;
+    the kept max batch is rewritten as-is and nothing is copied. The
+    independent reference the dirty-cell plan is pinned against, and
+    the fold that re-shapes cold cells' files after heavy churn."""
+    has_kept = max_bid is not None and max_bid >= 0
+    fold_src = (raw.filter(F.col("_batch_id") != max_bid)
+                if has_kept else raw)
+    live = (fold_src.filter(F.col("list_id") != TOMBSTONE_LIST)
+            .join(_tombstone_ids(raw), "vec_id", "left_anti"))
+    rows = (live.unionByName(
+        fold_src.filter(F.col("list_id") == TOMBSTONE_LIST))
+        .drop("_batch_id").withColumn("_batch_id", F.lit(-1)))
+    if has_kept:
+        rows = rows.unionByName(raw.filter(F.col("_batch_id") == max_bid))
+    return rows, []
+
+
 def compact_ivf_index(spark: SparkSession, path: str,
                       rows_per_task: int = SALT_ROWS_PER_TASK,
                       gauge: bool | None = None,
@@ -892,8 +910,9 @@ def compact_ivf_index(spark: SparkSession, path: str,
     DIRTY FRACTION instead of the corpus (the r9 rehearsal's 1227.8 s
     full fold at 20M is the measured number this removes). Results are
     row-identical to the full fold (``incremental=False``), pinned in
-    tests. The full fold remains the right tool after heavy churn
-    (most cells dirty) since it also re-shapes cold cells' files.
+    tests. The full fold (:func:`_full_fold_plan`) remains the right
+    tool after heavy churn (most cells dirty) since it also re-shapes
+    cold cells' files.
 
     Tombstoned vectors (ivf_index_delete) are PHYSICALLY removed from
     the folded rows here — the fold antijoins every dirty data row
@@ -939,31 +958,17 @@ def compact_ivf_index(spark: SparkSession, path: str,
                                                n_holdout=gauge_holdout)
         meta_overrides = {"_meta.json": json.dumps(new_meta)}
 
-    def _fold(folded: DataFrame, kept: DataFrame | None) -> DataFrame:
-        tomb = _tombstone_ids(folded)
-        if kept is not None:
-            tomb = tomb.unionByName(_tombstone_ids(kept)).distinct()
-        live = (folded.filter(F.col("list_id") != TOMBSTONE_LIST)
-                .join(tomb, "vec_id", "left_anti"))
-        return live.unionByName(
-            folded.filter(F.col("list_id") == TOMBSTONE_LIST))
-
     try:
         compact_neardup_index(spark, fsio.join(path, "data"),
                               part_cols=PART_COLS,
-                              fold_transform=_fold,
                               fold_plan=(_incremental_fold_plan
-                                         if incremental else None),
+                                         if incremental
+                                         else _full_fold_plan),
                               shape=lambda df: _cell_shape(df,
                                                            rows_per_task),
                               max_records_per_file=rows_per_task,
                               meta_overrides=meta_overrides,
-                              quiesce_timeout=quiesce_timeout,
-                              # the IVF index's incrementality IS the
-                              # dirty-cell fold_plan above; the flat
-                              # tiered default doesn't fit the nested
-                              # layout
-                              incremental=False)
+                              quiesce_timeout=quiesce_timeout)
     finally:
         _invalidate_data_cache(path)
 

@@ -55,10 +55,6 @@ S3-semantics fake store in tests/test_pointer.py):
   serve an older committed pointer (never torn, never None on a
   non-fresh tree).
 
-Legacy trees: a ``<stem>.json`` written by the r8 rename-based flip is
-read (as sequence 0) only when no versioned file exists, and deleted
-by the first versioned commit.
-
 Reference parity: the reference commits catalog state through SQLite/
 Postgres transactions (Andl.Sqlite, CatalogPersist.cs); this is the
 same commit boundary re-expressed for object storage.
@@ -194,7 +190,8 @@ def _probe_above(dir_path: str, stem: str, top: int,
 
 def read(dir_path: str, stem: str) -> tuple[int, dict] | None:
     """(sequence, doc) of the newest committed pointer, or None when
-    the directory holds no readable pointer at all. Tries candidates
+    the directory holds no readable pointer at all (a fresh tree; no
+    other layout is read). Tries candidates
     in descending sequence order — a MISSING (GC'd under the reader)
     or UNPARSEABLE (crashed/in-flight commit) max falls back to the
     previous committed file, which is always intact because commits
@@ -228,7 +225,7 @@ def read(dir_path: str, stem: str) -> tuple[int, dict] | None:
             if text is None:
                 # a LISTED file that is MISSING was GC'd under us —
                 # proof that newer commits exist somewhere (review
-                # r10: this tree must never read as fresh/legacy)
+                # r10: this tree must never read as fresh)
                 if kind == "missing":
                     saw_listed_missing = True
                 continue  # missing/torn: previous commit is intact
@@ -243,25 +240,19 @@ def read(dir_path: str, stem: str) -> tuple[int, dict] | None:
                     dir_path, stem, n, versions[-1])
             return n, doc
         if not versions:
-            break  # nothing resolvable at all: legacy or fresh tree
+            break  # nothing resolvable at all: a fresh tree
     if saw_listed_missing:
         # every retry lost the GC race AND files the listing promised
         # are gone: commits exist that this reader cannot see (a LIST
         # lagging so far that even the ascending probe's next version
-        # was GC'd). Returning None would make resolve fall back to a
-        # legacy/fresh tree and a Catalog initialize EMPTY over real
-        # state — refuse instead.
+        # was GC'd). Returning None would make the tree read as fresh
+        # and a Catalog initialize EMPTY over real state — refuse
+        # instead.
         raise RuntimeError(
             f"pointer {dir_path}/{stem}: listed pointer files vanished "
             f"across 8 retries (listing lags commits beyond what the "
             f"ascending probe can bridge); refusing to treat a "
             "committed tree as empty")
-    legacy = fsio.join(dir_path, stem + ".json")
-    if fsio.exists(legacy):
-        try:
-            return 0, json.loads(fsio.read_text(legacy))
-        except Exception:
-            return None
     return None
 
 
@@ -270,7 +261,7 @@ def commit(dir_path: str, stem: str, doc: dict) -> int:
     number. Never renames, never overwrites: picks a sequence above
     every existing file (parseable or torn) and creates it exclusively,
     bumping on collision. GCs pointer files more than :data:`KEEP`
-    behind the new one, plus the legacy rename-era file."""
+    behind the new one."""
     existing = _versions(dir_path, stem)
     n = (existing[-1] if existing else 0) + 1
     text = json.dumps(doc)
@@ -279,7 +270,4 @@ def commit(dir_path: str, stem: str, doc: dict) -> int:
     for old in existing:
         if old <= n - KEEP - 1:
             fsio.delete(_vpath(dir_path, stem, old))
-    legacy = fsio.join(dir_path, stem + ".json")
-    if fsio.exists(legacy):
-        fsio.delete(legacy)
     return n

@@ -18,9 +18,7 @@ from .. import fsio, pointer
 from ..operators.update import Relvar
 
 #: manifest pointer stem — committed as _catalog.v<N>.json through the
-#: rename-free versioned protocol (andl_spark.pointer); the legacy
-#: rename-era _catalog.json reads as sequence 0 and is superseded by
-#: the first new commit
+#: rename-free versioned protocol (andl_spark.pointer)
 _MANIFEST_STEM = "_catalog"
 
 
@@ -82,8 +80,6 @@ class Catalog:
             if version is not None:
                 raise ValueError(f"bucketed relvar {name!r} is not versioned")
             return self.get_bucketed(name)
-        if "versions" not in entry:  # legacy flat layout
-            return self.spark.read.parquet(fsio.join(self.path, name))
         v = version if version is not None else entry["current"]
         if v not in entry["versions"]:
             raise KeyError(f"relvar {name!r} has no version {v} (has {entry['versions']})")
@@ -178,13 +174,11 @@ class Catalog:
         # Symmetric guard to put()'s layout check (ADVICE r2): writing a
         # metastore table into a directory that still holds v*/ version
         # snapshots would orphan them and silently repoint the manifest.
-        # No default here: a legacy entry with no 'layout' key is a flat
-        # parquet table, which this overwrite would clobber just as badly.
         entry = self._names.get(name)
-        if entry is not None and entry.get("layout") != "bucketed":
+        if entry is not None and entry["layout"] != "bucketed":
             raise ValueError(
                 f"relvar {name!r} exists with "
-                f"{entry.get('layout', 'flat')!r} layout; drop() it "
+                f"{entry['layout']!r} layout; drop() it "
                 "before re-creating as a bucketed table"
             )
         target = fsio.join(self.path, name)

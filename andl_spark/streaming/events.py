@@ -211,8 +211,7 @@ def asof_enrich_stream(
 
 #: stem of the versioned pointer files inside an index root naming the
 #: CURRENT generation (``_pointer.v<N>.json`` — see andl_spark.pointer;
-#: leading underscore so Spark/Hadoop directory scans ignore them; the
-#: legacy rename-era ``_pointer.json`` is read as sequence 0)
+#: leading underscore so Spark/Hadoop directory scans ignore them)
 _GEN_POINTER_STEM = "_pointer"
 
 
@@ -249,9 +248,10 @@ def _flip_gen(index_path: str, gen: int, schema_json: str | None = None) -> None
     pointer.commit(index_path, _GEN_POINTER_STEM, doc)
 
 
-#: in-flight ingest markers (beside _pointer.json): an ingest holds
-#: one around its index commit so compaction can quiesce before its
-#: pointer flip — see commit_batch_partitions / compact_neardup_index
+#: in-flight ingest markers (beside the _pointer.v<N>.json files): an
+#: ingest holds one around its index commit so compaction can quiesce
+#: before its pointer flip — see commit_batch_partitions /
+#: compact_neardup_index
 _INFLIGHT_PREFIX = "_inflight_"
 
 #: seconds between marker mtime refreshes while a commit's write job
@@ -359,12 +359,16 @@ def resolve_neardup_index(index_path: str) -> str:
     flips the pointer to a freshly-written generation and RETAINS the
     previous one, so a reader that resolved before the flip keeps a
     fully intact tree (never a missing path, VERDICT r6 item 5).
-    Pre-generation (legacy) index trees resolve to the root itself."""
+    A path with no generation pointer raises FileNotFoundError: every
+    index is seeded first (seed_neardup_index), so an unseeded path is
+    a caller error, never a tree to write into."""
     from .. import fsio
 
     gen = _read_gen(index_path)
     if gen is None:
-        return index_path
+        raise FileNotFoundError(
+            f"{index_path}: no generation pointer — seed the index with "
+            "seed_neardup_index first")
     return fsio.join(index_path, f"gen={gen}")
 
 
@@ -483,11 +487,7 @@ def seed_neardup_index(sigs: DataFrame, index_path: str,
 def _reclaim_old_gens(index_path: str, keep_from: int) -> None:
     """Delete generation dirs STRICTLY OLDER than ``keep_from`` — the
     previous generation is always retained so in-flight readers that
-    resolved before the latest flip still see intact files. A legacy
-    (pre-generation) tree's root ``_batch_id=*`` dirs are generation 0:
-    retained through the flip that superseded them (review r7 — an
-    in-flight reader of the legacy root must not lose its files) and
-    reclaimed by the NEXT flip like any other old generation."""
+    resolved before the latest flip still see intact files."""
     from .. import fsio
 
     for name in fsio.listdir(index_path):
@@ -495,27 +495,61 @@ def _reclaim_old_gens(index_path: str, keep_from: int) -> None:
             g = int(name.split("=", 1)[1])
             if g < keep_from:
                 fsio.delete(fsio.join(index_path, name))
-        elif name.startswith("_batch_id=") and keep_from >= 1:
-            fsio.delete(fsio.join(index_path, name))
 
 
 #: seed-file growth bound for TIERED near-dup compaction: when the
 #: seed partition already holds ≥ this many × target_files files, the
-#: next incremental compaction does a full re-fold (merging the tiers)
-#: — amortized rewrite cost drops by the same factor
+#: next compaction does a full re-fold (merging the tiers) — amortized
+#: rewrite cost drops by the same factor
 TIER_MAX_FACTOR = 8
+
+
+def _tiered_fold_plan(raw: DataFrame, max_bid, src: str,
+                      target_files: int):
+    """The default fold plan of :func:`compact_neardup_index` (r10; the
+    default since r11 — VERDICT r10 item 2, after the live soak beside
+    a draining ingest and the 20M-doc measurement), for the flat
+    single-column layout. A full fold rewrites EVERY signature each
+    compaction — at a 1B-doc crawl that is a 100 GB-class seed rewrite
+    per maintenance pass. This plan instead folds ONLY the batch
+    partitions into NEW seed files (the batch-partition scan is
+    partition-pruned; seed bytes are never read) and carries the
+    existing seed files and the kept max batch by hardlink/byte-copy —
+    seed file count grows by ≤ target_files per compaction, and once it
+    reaches target_files × :data:`TIER_MAX_FACTOR` the next compaction
+    does a full re-fold that merges the tiers (amortizing the full
+    rewrite 1/TIER_MAX_FACTOR as often). Row sets are identical either
+    way (pure movement)."""
+    from .. import fsio
+
+    seed_dir = fsio.join(src, "_batch_id=-1")
+    seed_files = [n for n in fsio.listdir(seed_dir)
+                  if not n.startswith(("_", "."))]
+    has_kept = max_bid is not None and max_bid >= 0
+    fold_src = raw.filter(F.col("_batch_id") != max_bid) if has_kept else raw
+    copies = []
+    if has_kept:
+        copies.append(f"_batch_id={max_bid}")
+    if len(seed_files) >= target_files * TIER_MAX_FACTOR:
+        # tier merge: full re-fold (kept still carried verbatim)
+        rows = fold_src
+    else:
+        # fold ONLY batch partitions (pruned scan); carry the existing
+        # seed files without reading a byte of them
+        rows = fold_src.filter(F.col("_batch_id") >= 0)
+        if seed_files:
+            copies.append("_batch_id=-1")
+    return rows.drop("_batch_id").withColumn("_batch_id", F.lit(-1)), copies
 
 
 def compact_neardup_index(spark, index_path: str,
                           target_files: int = 8,
                           part_cols: tuple = ("_batch_id",),
                           quiesce_timeout: float = 120.0,
-                          fold_transform=None,
                           fold_plan=None,
                           shape=None,
                           meta_overrides: dict | None = None,
                           max_records_per_file: int | None = None,
-                          incremental: bool = True,
                           _pre_flip_hook=None) -> None:
     """Compact a streaming signature index (r6; VERDICT r5 item 7):
     every micro-batch appended its own ``_batch_id`` partition, so a
@@ -537,8 +571,7 @@ def compact_neardup_index(spark, index_path: str,
     write commits — generation N is RETAINED until the NEXT flip, so a
     reader or replayed ingest that resolved the index mid-compaction
     keeps a complete tree; there is no rmtree+move window where the
-    path is missing. Legacy (pre-generation) index roots are migrated
-    to the generation layout by their first compaction.
+    path is missing.
 
     Concurrent-ingest safety (r8; VERDICT r7 item 2): a
     ``neardup_ingest_batch`` that commits a NEW ``_batch_id`` partition
@@ -572,8 +605,8 @@ def compact_neardup_index(spark, index_path: str,
     writers at all — quiesce-then-flip with NO post-flip writer:
 
     - every ingest commit holds an ``_inflight_<batch>`` marker beside
-      the pointer, created BEFORE it resolves the generation and
-      removed after its re-resolve loop settles;
+      the pointer, created BEFORE its first write and removed after
+      its re-resolve loop settles;
     - compaction, after the fold and the first carry pass, WAITS for
       the markers to clear (bounded by ``quiesce_timeout`` — a crashed
       ingest's stale marker must not wedge maintenance; its
@@ -610,47 +643,28 @@ def compact_neardup_index(spark, index_path: str,
     Run compaction from one maintenance job, the same discipline as
     Catalog.compact.
 
-    Hooks (r9, for the persisted IVF index's delete/salt/gauge plane —
-    compact_ivf_index): ``fold_transform(folded_rows, kept_df)`` maps
-    the to-be-folded rows (already re-labelled ``_batch_id=-1``) given
-    the kept max-batch frame (None when only the seed exists) — the
-    tombstone fold plugs in here; ``shape(df)`` replaces the default
-    write-shaping repartition for BOTH the fold and late carries (the
-    hot-cell salting plugs in here); ``meta_overrides`` (name → text)
-    replaces/extends the carried ``_meta*`` sidecars in the new
-    generation (the recall-decay gauge records itself this way —
-    committed WITH the generation, never mutating a flipped one).
-
-    ``fold_plan(raw, max_bid, src)`` (r10, incremental compaction —
-    VERDICT r9 item 1) REPLACES the whole default fold composition
-    (kept-batch split, relabel, fold_transform): it returns
-    ``(rows_df, copy_rel_dirs)`` — the rows to WRITE into the new
-    generation (already carrying their final ``_batch_id`` values)
-    plus a list of src-relative leaf directories to carry into the new
-    generation VERBATIM via :func:`andl_spark.fsio.copy_tree` (no
-    decode, no shuffle; hardlinks on POSIX). The quiesce/carry/flip
-    protocol around the fold is unchanged — late batches still land by
+    ``fold_plan(raw, max_bid, src)`` is the one fold entry: given the
+    snapshot read, its highest batch id and the source generation
+    directory, it returns ``(rows_df, copy_rel_dirs)`` — the rows to
+    WRITE into the new generation (already carrying their final
+    ``_batch_id`` values) plus a list of src-relative leaf directories
+    to carry into the new generation VERBATIM via
+    :func:`andl_spark.fsio.copy_tree` (no decode, no shuffle; hardlinks
+    on POSIX). None means :func:`_tiered_fold_plan`, which needs the
+    flat single-column layout: a nested ``part_cols`` with no plan
+    raises ValueError (the IVF index passes its dirty-cell or full-fold
+    plan — compact_ivf_index). The quiesce/carry/flip protocol around
+    the fold is the same for every plan — late batches still land by
     dynamic overwrite, which composes with copied dirs because copied
     and written leaves are disjoint by the plan's own construction.
 
-    ``incremental=True`` (r10, the flat-layout TIERED fold; the
-    DEFAULT since r11 — VERDICT r10 item 2, after the live soak beside
-    a draining ingest and the 20M-doc measurement): the full fold
-    rewrites EVERY signature each compaction — at a 1B-doc crawl that
-    is a 100 GB-class seed rewrite per maintenance pass. Tiered
-    instead folds ONLY the batch partitions into NEW seed files (the
-    batch-partition scan is partition-pruned; seed bytes are never
-    read) and carries the existing seed files by hardlink/byte-copy —
-    seed file count grows by ≤ target_files per compaction, and once it
-    reaches target_files × :data:`TIER_MAX_FACTOR` the next compaction
-    does a full re-fold that merges the tiers (amortizing the full
-    rewrite 1/TIER_MAX_FACTOR as often). Row sets are identical either
-    way (pure movement); the tiered plan requires the flat
-    single-column layout and no fold_transform, so callers with nested
-    layouts or fold hooks must pass ``incremental=False`` (or their
-    own ``fold_plan`` — the IVF index passes its dirty-cell plan).
-    ``incremental=False`` remains the right call after heavy churn: it
-    also re-shapes cold files down to target_files.
+    Hooks (r9, for the persisted IVF index's salt/gauge plane):
+    ``shape(df)`` replaces the default write-shaping repartition for
+    BOTH the fold and late carries (the hot-cell salting plugs in
+    here); ``meta_overrides`` (name → text) replaces/extends the
+    carried ``_meta*`` sidecars in the new generation (the
+    recall-decay gauge records itself this way — committed WITH the
+    generation, never mutating a flipped one).
 
     ``part_cols`` mirrors seed_neardup_index (r8b): extra partition
     columns nest under the leading ``_batch_id`` — the snapshot and
@@ -661,46 +675,27 @@ def compact_neardup_index(spark, index_path: str,
     the remaining leaf renames land (acceptable for ANN serving; the
     near-dup legs keep the single-column layout and its whole-batch
     atomicity)."""
+    import functools
+
     from .. import fsio
 
     if part_cols[0] != "_batch_id":
         raise ValueError("part_cols must lead with _batch_id "
                          "(the generation protocol keys on it)")
+    if fold_plan is None:
+        if len(part_cols) != 1:
+            raise ValueError(
+                "the default tiered fold needs the flat single-column "
+                "layout; pass a fold_plan for a nested part_cols (the "
+                "IVF index passes its own)")
+        fold_plan = functools.partial(_tiered_fold_plan,
+                                      target_files=target_files)
 
     cur = _read_gen(index_path)
-    src = resolve_neardup_index(index_path)
+    src = resolve_neardup_index(index_path)  # raises when unseeded
     if not any(n.startswith("_batch_id=")
                for n in fsio.listdir(src)):  # no data partitions at all
         return
-
-    if incremental and fold_plan is None:
-        if fold_transform is not None or len(part_cols) != 1:
-            raise ValueError(
-                "incremental=True needs the flat single-column layout "
-                "with no fold_transform (the IVF index passes its own "
-                "dirty-cell fold_plan instead)")
-
-        def fold_plan(raw, max_bid, src2):  # the tiered plan
-            seed_dir = fsio.join(src2, "_batch_id=-1")
-            seed_files = [n for n in fsio.listdir(seed_dir)
-                          if not n.startswith(("_", "."))]
-            has_kept = max_bid is not None and max_bid >= 0
-            fold_src = (raw.filter(F.col("_batch_id") != max_bid)
-                        if has_kept else raw)
-            copies = []
-            if has_kept:
-                copies.append(f"_batch_id={max_bid}")
-            if len(seed_files) >= target_files * TIER_MAX_FACTOR:
-                # tier merge: full re-fold (kept still carried verbatim)
-                rows = fold_src
-            else:
-                # fold ONLY batch partitions (pruned scan); carry the
-                # existing seed files without reading a byte of them
-                rows = fold_src.filter(F.col("_batch_id") >= 0)
-                if seed_files:
-                    copies.append("_batch_id=-1")
-            return (rows.drop("_batch_id")
-                    .withColumn("_batch_id", F.lit(-1)), copies)
     raw = read_neardup_index(spark, index_path)
     # the snapshot is the read's OWN file index — exactly the partition
     # set the fold below will consume (see the docstring's protocol)
@@ -723,25 +718,10 @@ def compact_neardup_index(spark, index_path: str,
             return df.repartition(*part_cols[1:])
         return df.coalesce(target_files)
 
-    copy_rel: list[str] = []
-    if fold_plan is not None:
-        rows, copy_rel = fold_plan(raw, max_bid, src)
-        df = _shape(rows).localCheckpoint(eager=True)
-    else:
-        if max_bid is not None and max_bid >= 0:
-            fold_src = raw.filter(F.col("_batch_id") != max_bid)
-            kept = raw.filter(F.col("_batch_id") == max_bid)
-        else:
-            fold_src, kept = raw, None
-        folded_rows = (fold_src.drop("_batch_id")
-                       .withColumn("_batch_id", F.lit(-1)))
-        if fold_transform is not None:
-            folded_rows = fold_transform(folded_rows, kept)
-        folded = _shape(folded_rows)
-        df = (
-            folded.unionByName(kept) if kept is not None else folded
-        ).localCheckpoint(eager=True)  # materialize BEFORE the rewrite
-    new_gen = (cur or 0) + 1
+    rows, copy_rel = fold_plan(raw, max_bid, src)
+    # materialize BEFORE the rewrite
+    df = _shape(rows).localCheckpoint(eager=True)
+    new_gen = cur + 1
     target = fsio.join(index_path, f"gen={new_gen}")
     writer = df.write
     if max_records_per_file:
@@ -899,10 +879,9 @@ def compact_neardup_index(spark, index_path: str,
             # triple coincidence where the original ADVICE r9 hole
             # needed only the listing-gap publish.
             _write_carry([name])
-    # the superseded tree (generation `cur`, or the legacy root dirs
-    # when cur is None) is RETAINED until the next flip — in-flight
-    # readers keep intact files either way; older generations reclaim
-    _reclaim_old_gens(index_path, keep_from=cur or 0)
+    # the superseded generation `cur` is RETAINED until the next flip —
+    # in-flight readers keep intact files; older generations reclaim
+    _reclaim_old_gens(index_path, keep_from=cur)
 
 
 def _is_vanished_file_error(e: Exception) -> bool:
@@ -1012,8 +991,10 @@ def commit_batch_partitions(
     what guarantees this loop and compaction's carry never write the
     same partition concurrently (r8b; see the compact docstring for
     the measured duplication that forced this)."""
+    # resolved before the marker exists, so an unseeded path raises
+    # and leaves nothing behind; the loop re-resolves after every write
+    data_path = initial_path or resolve_neardup_index(index_path)
     with _held_marker(index_path, batch_id):
-        data_path = initial_path or resolve_neardup_index(index_path)
         while True:
             (
                 df.withColumn("_batch_id", F.lit(batch_id))
@@ -1045,7 +1026,8 @@ def neardup_ingest_stream(
     recompute (SCALE_r05.md).
 
     ``index_path`` must be seeded first (:func:`seed_neardup_index`,
-    possibly with an empty signature relation for a cold start). Because
+    possibly with an empty signature relation for a cold start; an
+    unseeded path raises FileNotFoundError). Because
     batch N's signatures land in the index before batch N+1 runs,
     cross-micro-batch new×new pairs are found exactly as a one-shot
     ``*_against_index`` over the concatenated batches would find them

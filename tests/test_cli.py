@@ -57,6 +57,35 @@ def test_cli_catalog_persists_across_invocations(tmp_path):
     assert "t=42" in p2.stdout and "n=2" in p2.stdout
 
 
+def test_cli_session_is_get_spark_session(tmp_path):
+    """The CLI runs on session.get_spark's session — UTC session time
+    zone and Arrow on, the config the server and the tests run on —
+    even where the host's own time zone is not UTC."""
+    script = tmp_path / "t.andl"
+    script.write_text("x := 1\nx\n")
+    probe = (
+        "import sys\n"
+        "from pyspark.sql import SparkSession\n"
+        "stop = SparkSession.stop\n"
+        "def shown(self):\n"
+        "    for k in ('spark.sql.session.timeZone',\n"
+        "              'spark.sql.execution.arrow.pyspark.enabled'):\n"
+        "        print(k + '=' + self.conf.get(k))\n"
+        "    stop(self)\n"
+        "SparkSession.stop = shown\n"
+        "from andl_spark.__main__ import main\n"
+        "sys.exit(main(sys.argv[1:]))\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", probe, str(script)],
+        capture_output=True, text=True, timeout=300, cwd=REPO,
+        env={**os.environ, "TZ": "America/New_York"},
+    )
+    assert proc.returncode == 0, proc.stderr[-800:]
+    assert "spark.sql.session.timeZone=UTC" in proc.stdout
+    assert "spark.sql.execution.arrow.pyspark.enabled=true" in proc.stdout
+
+
 def test_cli_default_input_is_test_andl(tmp_path):
     """With no input path the reference runs ./test.andl
     (Andl/Main.cs:32,108; Sample/test.andl is that default script)."""

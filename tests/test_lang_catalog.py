@@ -80,6 +80,22 @@ def test_operator_roundtrip_minimal(spark, tmp_path):
     assert got == [2.0, 4.0, 6.0]
 
 
+def test_lang_manifest_survives_a_torn_commit(spark, tmp_path):
+    """The typed manifest commits through the versioned pointer
+    protocol: a torn newest commit falls back to the previous one, and
+    no in-place ``_lang_catalog.json`` is ever written."""
+    cat = tmp_path / "cat"
+    s1 = AndlSession(spark, catalog_path=cat)
+    s1.run("#catalog update\ndef first_def(n:0) => n + 1\n")
+    s1.run("#catalog update\ndef second_def(n:0) => n + 2\n")
+    newest = max(cat.glob("_lang_catalog.v*.json"),
+                 key=lambda f: int(f.name[len("_lang_catalog.v"):-5]))
+    newest.write_text('{"defs": {"second_')  # a crash mid-commit
+    s2 = AndlSession(spark, catalog_path=cat)
+    assert "first_def" in s2.defs and "second_def" not in s2.defs
+    assert not (cat / "_lang_catalog.json").exists()
+
+
 def test_catalog_operators_reachable_from_spark_sql(reference_tree, spark, tmp_path):
     """plandl/AndlPg analog (VERDICT r5 item 6; reference
     plandl/plandl.c, AndlPg/MainPg.cs — Andl hosted inside PostgreSQL

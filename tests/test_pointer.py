@@ -2,8 +2,8 @@
 
 The generation/manifest flips no longer depend on atomic rename —
 copy+delete on S3/object stores, the likely 100 TB substrate. Pins:
-the protocol's resolve/commit/GC/torn-max semantics, legacy-tree
-migration, the FULL index + catalog lifecycle with rename deliberately
+the protocol's resolve/commit/GC/torn-max semantics, the FULL index +
+catalog lifecycle with rename deliberately
 DISABLED (fsio.write_text_atomic raises — proving no hidden
 dependence), and a concurrent reader/flip stress run."""
 
@@ -59,19 +59,6 @@ def test_torn_max_falls_back_to_previous_commit(tmp_path):
     n = pointer.commit(root, "_pointer", {"current": 3})
     assert n == 5
     assert pointer.read(root, "_pointer") == (5, {"current": 3})
-
-
-def test_legacy_rename_era_pointer_migrates(tmp_path):
-    """An r8 tree holds a single rename-committed ``_pointer.json``:
-    read as sequence 0 when no versioned file exists; the first new
-    commit supersedes AND deletes it."""
-    root = str(tmp_path / "ptr")
-    fsio.mkdirs(root)
-    (tmp_path / "ptr" / "_pointer.json").write_text('{"current": 9}')
-    assert pointer.read(root, "_pointer") == (0, {"current": 9})
-    pointer.commit(root, "_pointer", {"current": 10})
-    assert pointer.read(root, "_pointer") == (1, {"current": 10})
-    assert not (tmp_path / "ptr" / "_pointer.json").exists()
 
 
 def test_create_only_write_is_exclusive(tmp_path):
@@ -183,29 +170,6 @@ def test_catalog_lifecycle_with_rename_disabled(spark, tmp_path, no_rename):
     assert cat.gc("t", keep_last=1) == [1]
     cat2 = Catalog(spark, str(tmp_path / "cat"))  # reopen: manifest back
     assert cat2.names() == ["t"] and cat2.current_version("t") == 2
-
-
-def test_catalog_legacy_manifest_migrates(spark, tmp_path):
-    """An r8 catalog directory (rename-era ``_catalog.json``) opens
-    cleanly; the first mutation commits the versioned manifest and
-    deletes the legacy file."""
-    from andl_spark.sources.catalog import Catalog
-
-    root = tmp_path / "cat"
-    cat = Catalog(spark, str(root))
-    cat.put("t", spark.range(3).withColumnRenamed("id", "x"))
-    # rewrite the manifest as a legacy rename-era file
-    manifest = json.loads(
-        (root / "_catalog.v1.json").read_text())
-    for f in root.glob("_catalog.v*.json"):
-        f.unlink()
-    (root / "_catalog.json").write_text(json.dumps(manifest))
-
-    cat2 = Catalog(spark, str(root))
-    assert cat2.names() == ["t"] and cat2.get("t").count() == 3
-    cat2.put("t", spark.range(7).withColumnRenamed("id", "x"))
-    assert not (root / "_catalog.json").exists()
-    assert Catalog(spark, str(root)).get("t").count() == 7
 
 
 # ---------------------------------------------------------------------

@@ -73,12 +73,6 @@ def test_layout_guards_are_symmetric(spark, tmp_path):
             cat.put("bucketed_rv", df)
     finally:
         spark.sql("DROP TABLE IF EXISTS bucketed_rv")
-    # a LEGACY entry (pre-versioning: no 'layout' key) is a flat
-    # parquet table — put_bucketed must refuse it too, not default
-    # the missing key to 'bucketed' and clobber the directory
-    cat._names["legacy_rv"] = {}
-    with pytest.raises(ValueError, match="flat"):
-        cat.put_bucketed("legacy_rv", df, ["k"], n_buckets=4)
 
 
 def test_zipfian_orders_salted_join_equivalence(spark):

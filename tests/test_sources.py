@@ -318,7 +318,7 @@ def test_catalog_refuses_to_open_empty_on_manifest_io_error(
 
 def test_tiered_neardup_compaction_bounds_rewrites(spark, tmp_path,
                                                    monkeypatch):
-    """r10: compact_neardup_index(incremental=True) — the flat-layout
+    """r10: compact_neardup_index's default fold plan — the flat-layout
     tiered fold. Each compaction folds ONLY the batch partitions into
     new seed files and carries the existing seed files by hardlink
     (proven by inode identity), so the per-compaction rewrite is the
@@ -354,8 +354,7 @@ def test_tiered_neardup_compaction_bounds_rewrites(spark, tmp_path,
             docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
             j, idx, pairs, kind="minhash", threshold=0.5)
         before = seed_inodes()
-        E.compact_neardup_index(spark, idx, target_files=1,
-                                incremental=True)
+        E.compact_neardup_index(spark, idx, target_files=1)
         after = seed_inodes()
         # growth bound: tiers never exceed the merge threshold + 1 fold
         assert len(after) <= 1 * 2 + 1, after

@@ -851,6 +851,43 @@ def test_compact_cold_start_noop(spark, tmp_path):
     assert read_neardup_index(spark, idx).count() == 6
 
 
+def test_unseeded_index_path_is_refused(spark, tmp_path):
+    """Every index reader and writer refuses a path that holds no
+    generation pointer — absent, or an existing empty directory — with
+    a FileNotFoundError naming seed_neardup_index, and writes nothing
+    under it. The default tiered fold refuses a nested layout."""
+    import os
+
+    from andl_spark.pipeline import dedup as D
+    from andl_spark.streaming import events as E
+
+    docs = spark.createDataFrame(
+        [(i, f"unseeded body {i}") for i in range(4)],
+        "doc_id long, text string")
+    sigs = D.minhash_signatures(docs, "doc_id", "text")
+    pairs = str(tmp_path / "pairs")
+    absent, empty = str(tmp_path / "absent"), str(tmp_path / "empty")
+    os.mkdir(empty)
+    for idx in (absent, empty):
+        for call in (
+            lambda: E.neardup_ingest_batch(docs, 0, idx, pairs,
+                                           kind="minhash", threshold=0.5),
+            lambda: E.commit_batch_partitions(sigs, 0, idx),
+            lambda: E.read_neardup_index(spark, idx),
+            lambda: E.compact_neardup_index(spark, idx),
+        ):
+            with pytest.raises(FileNotFoundError,
+                               match="seed_neardup_index"):
+                call()
+    assert not os.path.exists(absent) and os.listdir(empty) == []
+    assert not os.path.exists(pairs)
+
+    E.seed_neardup_index(sigs, empty)
+    with pytest.raises(ValueError, match="flat single-column"):
+        E.compact_neardup_index(spark, empty,
+                                part_cols=("_batch_id", "doc_id"))
+
+
 def test_read_neardup_index_damaged_tree_reraises(spark, tmp_path):
     """ADVICE r7: the cold-start schema fallback engages ONLY when the
     resolved generation directory exists and is empty of data — a
