@@ -32,7 +32,11 @@ tested protocol rather than re-implemented, with
 under the batch dirs so probe-time partition pruning keeps working.
 Appended vectors quantize against the STORED centroids (standard IVF
 practice — cells drift as the corpus grows; rebuild when the recall
-gauge says so).
+gauge says so). The quantizer — flat or two-level — is one
+:class:`~andl_spark.pipeline.simsearch.CoarseQuantizer`: build resolves
+it and writes its meta keys, and append, gauge, serve, kNN join and
+the PQ code paths read it back with ``CoarseQuantizer.from_meta``, so
+no function here branches on the quantizer kind.
 
 Lifecycle (r9): the pointer commits RENAME-FREE
 (:mod:`andl_spark.pointer` — object-store safe); ``ivf_index_delete``
@@ -66,24 +70,13 @@ from ..streaming.events import (
 )
 from ..util import Memo, local_frame
 from .simsearch import (
-    AUTO_NLIST_MAX,
-    AUTO_PROBE_FRAC,
-    auto_nlist,
-    auto_nprobe,
+    CoarseQuantizer,
     calibrate_probe,
-    calibrate_probe_hier,
-    hier_assign_np,
-    hier_params,
-    hier_probe_np,
-    _assign_expr,
     _probe_topk,
     _query_side,
     _rank_topk,
-    _resolve_centroids,
     _score_exprs,
 )
-
-import math
 
 META_VERSION = 1
 
@@ -147,56 +140,46 @@ def read_ivf_data(spark: SparkSession, path: str) -> DataFrame:
     return read_neardup_index(spark, fsio.join(path, "data"))
 
 
-def _flat_assigned(df: DataFrame, id_col: str, vec_col: str,
-                   centroids: list[list[float]]) -> DataFrame:
-    """(vec_id, embedding, list_id) with the row norm computed ONCE
-    and fed to the expression-path assignment — inlining it would
-    re-aggregate the O(dim) norm per centroid (the dominant
-    interpreted-HOF cost topk_ivf_det's two-stage projection avoids;
-    review r8b). The numpy path ignores vec_norm."""
-    _norm, _ = _score_exprs(len(centroids[0]) if centroids else 0)
+def _assigned(df: DataFrame, id_col: str, vec_col: str,
+              qz: CoarseQuantizer) -> DataFrame:
+    """(vec_id, embedding, list_id) under the quantizer ``qz``, with the
+    row norm computed ONCE and fed to the flat expression kernel —
+    inlining it would re-aggregate the O(dim) norm per centroid (the
+    dominant interpreted-HOF cost topk_ivf_det's two-stage projection
+    avoids; review r8b). The numpy kernels ignore it, and the optimizer
+    prunes the unused column."""
+    _norm, _ = _score_exprs(qz.dim)
     return (
         df.select(F.col(id_col).alias("vec_id"),
                   F.col(vec_col).alias("embedding"))
         .withColumn("__n", _norm("embedding"))
         .select("vec_id", "embedding",
-                F.element_at(_assign_expr(
-                    "embedding", centroids, 1,
-                    vec_norm="__n"), 1).alias("list_id"))
+                qz.assign("embedding", "__n").alias("list_id"))
     )
 
 
-def _cent_by_cell(meta: dict):
-    """(nlist, dim) numpy table mapping cell id → its centroid — flat
-    centroids directly; hier cells t·n2+j map to C2[t][j] (absolute
-    vectors — see hier_seed_centroids)."""
-    import numpy as np
-
-    if meta.get("kind") == "hier":
-        return np.asarray(meta["C2"], dtype=np.float64).reshape(
-            -1, meta["dim"])
-    return np.asarray(meta["centroids"], dtype=np.float64)
-
-
-def _pq_augment(assigned: DataFrame, meta: dict) -> DataFrame:
+def _pq_augment(assigned: DataFrame, qz: CoarseQuantizer,
+                pqm: dict) -> DataFrame:
     """Add the PQ columns the write path stores beside each vector:
-    ``pq_code`` (m-byte residual code) and ``vnorm`` (the exact norm
-    the ADC denominator divides by). Shared by build, append and the
+    ``pq_code`` (m-byte residual code against the cell centroid, under
+    the meta's ``pq`` record ``pqm``) and ``vnorm`` (the exact norm the
+    ADC denominator divides by). Shared by build, append and the
     streaming ingest (which goes through append)."""
     import numpy as np
 
     from . import pq as PQ
 
-    _norm, _ = _score_exprs(int(meta.get("dim") or 0))
-    cb = np.asarray(meta["pq"]["codebooks"], dtype=np.float64)
-    enc = PQ.encode_udf(cb, _cent_by_cell(meta))
+    _norm, _ = _score_exprs(qz.dim)
+    cb = np.asarray(pqm["codebooks"], dtype=np.float64)
+    enc = PQ.encode_udf(cb, qz.cell_centroids())
     return (assigned
             .withColumn("vnorm", _norm("embedding"))
             .withColumn("pq_code", enc(F.col("embedding"),
                                        F.col("list_id"))))
 
 
-def _pq_train_meta(assigned: DataFrame, pq_m: int, meta: dict) -> dict:
+def _pq_train_meta(assigned: DataFrame, pq_m: int,
+                   qz: CoarseQuantizer) -> dict:
     """Train the residual codebooks on a bounded deterministic sample
     of the assigned corpus (smallest-id rows — the trained_centroids
     seed-rule contract; driver-side numpy, build-time only) and return
@@ -212,8 +195,8 @@ def _pq_train_meta(assigned: DataFrame, pq_m: int, meta: dict) -> dict:
         raise ValueError("build_ivf_index(pq_m=...): empty corpus")
     X = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
     L = np.asarray([r["list_id"] for r in rows], dtype=np.int64)
-    cc = _cent_by_cell(meta)
-    codebooks = PQ.train_codebooks(X - cc[L], pq_m, seed=42)
+    codebooks = PQ.train_codebooks(X - qz.cell_centroids()[L], pq_m,
+                                   seed=42)
     return {"m": pq_m, "ks": PQ.PQ_KS, "dsub": X.shape[1] // pq_m,
             "trained_n": len(rows),
             "codebooks": codebooks.tolist()}
@@ -235,13 +218,15 @@ def build_ivf_index(
     rows_per_task: int = SALT_ROWS_PER_TASK,
     pq_m: int | None = None,
 ) -> dict:
-    """Build the index: resolve the quantizer (same rules as
+    """Build the index: resolve the CoarseQuantizer (same rules as
     topk_ivf_det — √N auto-scale via ``nlist=None``), assign every
     corpus vector to its cell, write cell-partitioned parquet and the
-    meta JSON. ``calibrate=<target recall>`` additionally runs the
-    matching calibrator and stores the measured probe depth in the
-    meta, so every future query of this index defaults to the measured
-    operating point instead of the 8% clustered-corpus rule.
+    meta JSON (the quantizer's own keys — CoarseQuantizer.meta — plus
+    id/vector columns, dim and calibration). ``calibrate=<target
+    recall>`` additionally runs calibrate_probe and stores the measured
+    probe depth in the meta, so every future query of this index
+    defaults to the measured operating point instead of the 8%
+    clustered-corpus rule.
 
     REBUILD CONTRACT (ADVICE r8): calling this on an existing index
     seeds a fresh generation from ``corpus`` ALONE — vectors added
@@ -257,12 +242,14 @@ def build_ivf_index(
     way to CLEAR tombstones and start from a curated corpus.
 
     Above the flat clamp (auto-scale with √N > 4096, i.e. N > 16.7M)
-    the build AUTO-DISPATCHES to the TWO-LEVEL quantizer — same rule
-    as topk_ivf_det: ≈√N total cells as n1·n2 with n1 ≈ n2 ≈ N^(1/4),
-    assignment two bounded matmuls per row instead of √N dots; the
-    combined cell id keeps the identical partition layout, so probes
-    prune the same way. Explicit ``n1``/``n2`` force the hierarchy at
-    any size. Returns the meta dict (kind: flat | hier).
+    the quantizer is TWO-LEVEL — same rule as topk_ivf_det: ≈√N total
+    cells as n1·n2 with n1 ≈ n2 ≈ N^(1/4), assignment two bounded
+    matmuls per row instead of √N dots; the combined cell id keeps the
+    identical partition layout, so probes prune the same way. Explicit
+    ``n1``/``n2`` force the hierarchy at any size. Every later reader
+    and writer (append, gauge, serve, PQ) rebuilds the quantizer from
+    the stored meta (CoarseQuantizer.from_meta). Returns the meta dict
+    (kind: flat | hier).
 
     ``pq_m`` (r11; VERDICT r10 item 6): store an IVF-PQ residual code
     beside each vector — ``m`` bytes per vector (plus the exact norm)
@@ -291,57 +278,9 @@ def build_ivf_index(
             )
             corpus = corpus.select(id_col, vec_col).unionByName(live)
             corpus_count = None  # force a recount of the union
-    hier = n1 is not None or n2 is not None
-    if nlist is None and not hier:
-        if corpus_count is None:
-            corpus_count = corpus.count()
-        if corpus_count > AUTO_NLIST_MAX ** 2:
-            hier = True
-        else:
-            nlist = auto_nlist(corpus_count)
-    if hier:
-        if n1 is None or n2 is None:
-            a1, a2, _ = hier_params(corpus_count or corpus.count())
-            n1, n2 = n1 or a1, n2 or a2
-        cents = _resolve_centroids(corpus, id_col, vec_col, quantizer,
-                                   n1, n2)
-        C1, C2 = cents
-        if not C1 or not C2:
-            raise ValueError("build_ivf_index: empty corpus — an IVF "
-                             "index needs at least one vector to "
-                             "quantize against")
-        n1, n2 = len(C1), (len(C2[0]) if C2 else 0)
-        calibration = None
-        if calibrate is not None:
-            calibration = calibrate_probe_hier(
-                corpus, id_col, vec_col, k=k, target_recall=calibrate,
-                n1=n1, n2=n2, quantizer=quantizer, cents=cents)
-        assigned = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("embedding"),
-            hier_assign_np(C1, C2)(F.col(vec_col)).alias("list_id"),
-        )
-        meta = {
-            "version": META_VERSION, "kind": "hier",
-            "nlist": n1 * n2, "n1": n1, "n2": n2,
-            "C1": C1, "C2": C2,
-            "quantizer": quantizer, "id_col": id_col, "vec_col": vec_col,
-            "dim": len(C1[0]) if C1 else 0,
-            "calibration": calibration,
-        }
-        if pq_m:
-            meta["pq"] = _pq_train_meta(assigned, pq_m, meta)
-            assigned = _pq_augment(assigned, meta)
-        assigned = _cell_shape(assigned, rows_per_task)
-        seed_neardup_index(assigned, fsio.join(path, "data"),
-                           part_cols=PART_COLS,
-                           meta_files={"_meta.json": json.dumps(meta)},
-                           max_records_per_file=rows_per_task)
-        _invalidate_meta_cache(path)
-        _invalidate_data_cache(path)
-        return meta
-    centroids = _resolve_centroids(corpus, id_col, vec_col, quantizer, nlist)
-    if not centroids:
+    qz = CoarseQuantizer.resolve(corpus, id_col, vec_col, nlist, n1, n2,
+                                 corpus_count, quantizer)
+    if not qz.top:
         # fail HERE, not as an opaque array-index error on the first
         # append/query of a meta with nlist=0 (review r8b); the
         # cold-start pattern for ANN is build-on-first-corpus, unlike
@@ -350,24 +289,14 @@ def build_ivf_index(
                          "needs at least one vector to quantize against")
     calibration = None
     if calibrate is not None:
-        calibration = calibrate_probe(
-            corpus, id_col, vec_col, k=k, target_recall=calibrate,
-            nlist=len(centroids), quantizer=quantizer, centroids=centroids)
-    assigned = _flat_assigned(corpus, id_col, vec_col, centroids)
-    meta = {
-        "version": META_VERSION,
-        "kind": "flat",
-        "nlist": len(centroids),
-        "centroids": centroids,
-        "quantizer": quantizer,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "dim": len(centroids[0]) if centroids else 0,
-        "calibration": calibration,
-    }
+        calibration = calibrate_probe(corpus, id_col, vec_col, k=k,
+                                      target_recall=calibrate, quantizer=qz)
+    assigned = _assigned(corpus, id_col, vec_col, qz)
+    meta = {"version": META_VERSION, **qz.meta(), "id_col": id_col,
+            "vec_col": vec_col, "dim": qz.dim, "calibration": calibration}
     if pq_m:
-        meta["pq"] = _pq_train_meta(assigned, pq_m, meta)
-        assigned = _pq_augment(assigned, meta)
+        meta["pq"] = _pq_train_meta(assigned, pq_m, qz)
+        assigned = _pq_augment(assigned, qz, meta["pq"])
     # one shuffle on the cell id so each cell is written by exactly
     # one task: without it every map task writes every cell — measured
     # 32,000 files (32 tasks x 1000 cells) at 1M vectors, a listing/
@@ -533,14 +462,22 @@ def ivf_index_append(
     from ..streaming.events import _held_marker
 
     data_root = fsio.join(path, "data")
+    # resolved before the marker exists (as commit_batch_partitions
+    # does), so an unbuilt path raises and leaves nothing behind
+    try:
+        gen_dir = resolve_neardup_index(data_root)
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"{path}: no IVF index — build it with build_ivf_index "
+            "first") from None
     # in-flight marker: the quiesce signal compact waits on before its
     # flip — the same no-double-writer protocol as the near-dup ingest
     # (see compact_neardup_index's r8b hardening note); _held_marker
     # refreshes the mtime during long write jobs (ADVICE r9)
     try:
         with _held_marker(data_root, batch_id):
-            _append_loop(batch, path, data_root, batch_id, id_col,
-                         vec_col, rows_per_task)
+            _append_loop(batch, path, data_root, gen_dir, batch_id,
+                         id_col, vec_col, rows_per_task)
     finally:
         # in a FINALLY (review r10): a failure after the write already
         # replaced this batch's files must still drop the cached
@@ -549,24 +486,16 @@ def ivf_index_append(
         _invalidate_data_cache(path)
 
 
-def _append_loop(batch, path, data_root, batch_id, id_col, vec_col,
-                 rows_per_task=SALT_ROWS_PER_TASK):
+def _append_loop(batch, path, data_root, gen_dir, batch_id, id_col,
+                 vec_col, rows_per_task):
     while True:
-        gen_dir = resolve_neardup_index(data_root)
         meta = _meta_at(path, gen_dir)
-        if meta.get("kind") == "hier":
-            assigned = batch.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).alias("embedding"),
-                hier_assign_np(meta["C1"], meta["C2"])(
-                    F.col(vec_col)).alias("list_id"))
-        else:
-            assigned = _flat_assigned(batch, id_col, vec_col,
-                                      meta["centroids"])
+        qz = CoarseQuantizer.from_meta(meta)
+        assigned = _assigned(batch, id_col, vec_col, qz)
         if meta.get("pq"):
             # encode against the STORED codebooks — the same frozen-
             # quantizer contract appends already follow for centroids
-            assigned = _pq_augment(assigned, meta)
+            assigned = _pq_augment(assigned, qz, meta["pq"])
         (
             _cell_shape(assigned, rows_per_task)
             .withColumn("_batch_id", F.lit(batch_id))
@@ -576,8 +505,10 @@ def _append_loop(batch, path, data_root, batch_id, id_col, vec_col,
             .partitionBy(*PART_COLS)
             .parquet(gen_dir)
         )
-        if resolve_neardup_index(data_root) == gen_dir:
+        cur = resolve_neardup_index(data_root)
+        if cur == gen_dir:
             return
+        gen_dir = cur
 
 
 def ivf_index_delete(ids, path: str, batch_id: int,
@@ -720,30 +651,18 @@ def measure_ivf_recall(spark: SparkSession, path: str,
             corpus = corpus.filter(
                 F.pmod(F.xxhash64(F.col("vec_id")), F.lit(denom)) < thresh)
             sampled_n = corpus.count()
-    hier = meta.get("kind") == "hier"
-    if hier:
-        stored = cal["p1"] if cal else None
-        rec = calibrate_probe_hier(
-            corpus, "vec_id", "embedding", k=k, target_recall=target,
-            n_holdout=n_holdout, n1=meta["n1"], n2=meta["n2"],
-            quantizer=meta["quantizer"], cents=(meta["C1"], meta["C2"]),
-            holdout=holdout,
-            report_depths=(stored,) if stored else ())
-        fresh = rec["p1"]
-    else:
-        stored = cal["nprobe"] if cal else None
-        rec = calibrate_probe(
-            corpus, "vec_id", "embedding", k=k, target_recall=target,
-            n_holdout=n_holdout, nlist=meta["nlist"],
-            quantizer=meta["quantizer"], centroids=meta["centroids"],
-            holdout=holdout,
-            report_depths=(stored,) if stored else ())
-        fresh = rec["nprobe"]
+    qz = CoarseQuantizer.from_meta(meta)
+    stored = cal[qz.depth_key] if cal else None
+    rec = calibrate_probe(
+        corpus, "vec_id", "embedding", k=k, target_recall=target,
+        n_holdout=n_holdout, quantizer=qz, holdout=holdout,
+        report_depths=(stored,) if stored else ())
+    fresh = rec[qz.depth_key]
     at_stored = (rec.get("at_depths", {}).get(stored)
                  if stored is not None else None)
     gauge = {
         "kind": rec["kind"],
-        ("measured_p1" if hier else "measured_nprobe"): fresh,
+        "measured_" + qz.depth_key: fresh,
         "stored": stored,
         "recall_at_stored": at_stored,
         "target": target, "k": k,
@@ -943,14 +862,11 @@ def compact_ivf_index(spark: SparkSession, path: str,
     measure_ivf_recall), so it no longer dominates compaction."""
     do_gauge = gauge
     if do_gauge is None:
-        try:
-            meta = read_ivf_meta(path)
-            do_gauge = (meta.get("calibration") is not None and any(
-                n.startswith("_batch_id=") and not n.endswith("=-1")
-                for n in fsio.listdir(
-                    resolve_neardup_index(fsio.join(path, "data")))))
-        except Exception:
-            do_gauge = False
+        do_gauge = (read_ivf_meta(path).get("calibration") is not None
+                    and any(n.startswith("_batch_id=")
+                            and not n.endswith("=-1")
+                            for n in fsio.listdir(resolve_neardup_index(
+                                fsio.join(path, "data")))))
     meta_overrides = None
     if do_gauge:
         new_meta = dict(read_ivf_meta(path))
@@ -976,8 +892,7 @@ def compact_ivf_index(spark: SparkSession, path: str,
 def maintain_ivf_index(spark: SparkSession, path: str,
                        target: float | None = None,
                        gauge_holdout: int = 32,
-                       rows_per_task: int = SALT_ROWS_PER_TASK,
-                       incremental: bool = True) -> dict:
+                       rows_per_task: int = SALT_ROWS_PER_TASK) -> dict:
     """The ONE-CALL maintenance pass (r11; VERDICT r10 item 3): the
     recall-decay gauge committed a number into each generation's meta,
     but nothing ACTED on it — 'rebuild when recall decays' was a human
@@ -1001,8 +916,7 @@ def maintain_ivf_index(spark: SparkSession, path: str,
     Returns ``{"gauge": <gauge or None>, "rebuilt": bool,
     "meta": <current meta after the pass>}``."""
     compact_ivf_index(spark, path, rows_per_task=rows_per_task,
-                      gauge_holdout=gauge_holdout,
-                      incremental=incremental)
+                      gauge_holdout=gauge_holdout)
     meta = read_ivf_meta(path)
     gauge = meta.get("gauge")
     cal = meta.get("calibration") or {}
@@ -1024,26 +938,6 @@ def maintain_ivf_index(spark: SparkSession, path: str,
     return {"gauge": gauge, "rebuilt": True, "meta": new_meta}
 
 
-def _query_probe(meta: dict, nprobe: int | None):
-    """The stored quantizer's probe for a query side (qvec, qn):
-    array<int> of probed cells. ``nprobe`` defaults to the index's
-    STORED calibration when the build measured one, else the 8% auto
-    rule; on a two-level index it means p1 — probed TOP cells, each
-    contributing all its sub-cells."""
-    hier = meta.get("kind") == "hier"
-    if nprobe is None:
-        cal = meta.get("calibration")
-        if cal:  # the stored measured operating point
-            nprobe = cal["p1"] if hier else cal["nprobe"]
-        elif hier:
-            nprobe = max(2, math.ceil(meta["n1"] * AUTO_PROBE_FRAC))
-        else:
-            nprobe = auto_nprobe(meta["nlist"])
-    if hier:
-        return hier_probe_np(meta["C1"], meta["C2"], nprobe)(F.col("qvec"))
-    return _assign_expr("qvec", meta["centroids"], nprobe, vec_norm="qn")
-
-
 def topk_ivf_index(
     spark: SparkSession,
     queries: DataFrame,
@@ -1062,10 +956,13 @@ def topk_ivf_index(
     batch, ≤ nlist ints) and applied as a LITERAL partition filter, so
     the parquet scan prunes unprobed cells before reading a byte
     (plan-asserted: PartitionFilters carries the list_id predicate).
-    ``nprobe`` defaults to the index's STORED calibration when the
-    build measured one, else the 8% auto rule; on a two-level index it
-    means p1 — probed TOP cells, each contributing all its sub-cells. Join shape and
-    tie-breaking are identical to topk_ivf_det — on an unchanged corpus
+    ``nprobe`` defaults to the stored quantizer's default depth — the
+    build's measured calibration when it ran one, else the 8% auto rule
+    over the stored cell count; on a two-level index it means p1 —
+    probed TOP cells, each contributing all its sub-cells. Every mode
+    scans the probed cells through one helper (_probed_scan). Join
+    shape and tie-breaking are identical to topk_ivf_det — on an
+    unchanged corpus
     the two return the same rows (pinned in tests).
 
     The query batch is broadcast (the topk_bruteforce contract): bulk
@@ -1110,12 +1007,13 @@ def topk_ivf_index(
     # to fixed-dim codegen'd arithmetic (r9) — bitwise identical to
     # the HOF forms (pinned row-identical to topk_ivf_det), measured
     # 20.2 → 13.9 s on the 20M serve (SCALE_r09 §2)
-    dim = int(meta.get("dim") or 0)
+    qz = CoarseQuantizer.from_meta(meta)
+    dim = qz.dim
     _norm, _ = _score_exprs(dim)
     # probe lists computed ONCE: reused for the driver-side
     # partition-filter collect AND the probe join
     q = _query_side(queries, id_col, vec_col, dim).withColumn(
-        "probe", _query_probe(meta, nprobe)).localCheckpoint()
+        "probe", qz.probe("qvec", nprobe, "qn")).localCheckpoint()
     cells = sorted({c for r in q.select(
         F.explode("probe").alias("c")).distinct().collect()
         for c in [r["c"]] if c is not None})
@@ -1127,7 +1025,7 @@ def topk_ivf_index(
             raise ValueError(
                 "topk_ivf_index(use_pq=True): this index stores no PQ "
                 "codes — build with build_ivf_index(pq_m=...)")
-        return _topk_pq(spark, q, data, cells, k, has_tombs, meta,
+        return _topk_pq(spark, q, data, cells, k, has_tombs, qz, pq,
                         int(rerank) if rerank else max(32, 4 * k))
     if mode is None or mode == "shared":
         # the shared path is bounded by BYTES, not just query count
@@ -1177,26 +1075,14 @@ def topk_ivf_index(
         return _topk_shared(spark, q, data, cells, k, has_tombs)
     if mode != "join":
         raise ValueError(f"unknown mode {mode!r} (join | shared)")
-    c = (
-        data  # same generation as the meta above (one pointer read)
-        .filter(F.col("list_id").isin(cells))  # partition pruning
-        .select(F.col("vec_id").alias("cand_id"),
-                F.col("embedding").alias("cvec"),
-                _norm("embedding").alias("cn"), "list_id")
-        # zero-norm vectors (padding/null-embedding artifacts) have no
-        # defined cosine — under ANSI mode the division would ABORT
-        # the whole serve (review r10); they are unservable by
-        # contract, in both modes
-        .filter(F.col("cn") != 0)
-    )
-    # deleted vectors never surface (ivf_index_delete): antijoin the
-    # tombstone set — its scan prunes to the list_id=-1 dirs alone.
-    # Skipped entirely when the generation's (cached) file listing
-    # shows no tombstone partition — the common case pays nothing.
-    if has_tombs:
-        c = c.join(
-            _tombstone_ids(data).withColumnRenamed("vec_id", "cand_id"),
-            "cand_id", "left_anti")
+    # same generation as the meta above (one pointer read); zero-norm
+    # vectors (padding/null-embedding artifacts) have no defined cosine
+    # — under ANSI mode the division would ABORT the whole serve
+    # (review r10); they are unservable by contract, in every mode
+    c = _probed_scan(data, cells, has_tombs,
+                     F.col("embedding").alias("cvec"),
+                     _norm("embedding").alias("cn"), "list_id"
+                     ).filter(F.col("cn") != 0)
     qx = q.filter(F.col("qn") != 0).select(
         "query_id", "qvec", "qn", F.explode("probe").alias("list_id"))
     return _probe_topk(qx, c, "list_id", k, dim)
@@ -1214,6 +1100,24 @@ SHARED_MAX_QUERIES = 10_000
 #: either exceeds its bound
 SHARED_MAX_BC_BYTES = 256 << 20
 SHARED_MAX_CHUNK_BYTES = 256 << 20
+
+
+def _probed_scan(data: DataFrame, cells: list, has_tombs: bool,
+                 *cols) -> DataFrame:
+    """The probed cells' live rows as (cand_id, *cols) — the scan every
+    serve path starts from. The ``list_id`` isin lands in the parquet
+    scan's PartitionFilters, so unprobed cells are never opened; deleted
+    vectors (ivf_index_delete) are antijoined against the tombstone set,
+    whose scan prunes to the list_id=-1 dirs alone, and only when the
+    generation's (cached) listing shows a tombstone partition — the
+    common case pays nothing."""
+    c = (data.filter(F.col("list_id").isin(cells))
+         .select(F.col("vec_id").alias("cand_id"), *cols))
+    if has_tombs:
+        c = c.join(
+            _tombstone_ids(data).withColumnRenamed("vec_id", "cand_id"),
+            "cand_id", "left_anti")
+    return c
 
 
 def _topk_shared(spark: SparkSession, q: DataFrame, data: DataFrame,
@@ -1263,13 +1167,7 @@ def _topk_shared(spark: SparkSession, q: DataFrame, data: DataFrame,
     }
     bc = spark.sparkContext.broadcast(cellmap)
 
-    cand = (data.filter(F.col("list_id").isin(cells))
-            .select(F.col("vec_id").alias("cand_id"), "embedding",
-                    "list_id"))
-    if has_tombs:
-        cand = cand.join(
-            _tombstone_ids(data).withColumnRenamed("vec_id", "cand_id"),
-            "cand_id", "left_anti")
+    cand = _probed_scan(data, cells, has_tombs, "embedding", "list_id")
 
     def _score(batches):
         m = bc.value
@@ -1296,8 +1194,8 @@ def _topk_shared(spark: SparkSession, q: DataFrame, data: DataFrame,
 
 
 def _topk_pq(spark: SparkSession, q: DataFrame, data: DataFrame,
-             cells: list, k: int, has_tombs: bool, meta: dict,
-             rerank: int) -> DataFrame:
+             cells: list, k: int, has_tombs: bool, qz: CoarseQuantizer,
+             pqm: dict, rerank: int) -> DataFrame:
     """ADC + exact-re-rank serve for a PQ-built index (see
     topk_ivf_index's ``use_pq``). Two passes:
 
@@ -1321,14 +1219,13 @@ def _topk_pq(spark: SparkSession, q: DataFrame, data: DataFrame,
 
     from . import pq as PQ
 
-    pqm = meta["pq"]
     qrows = q.limit(SHARED_MAX_QUERIES + 1).collect()
     if len(qrows) > SHARED_MAX_QUERIES:
         raise ValueError(
             f"topk_ivf_index(use_pq): query batch exceeds "
             f"{SHARED_MAX_QUERIES}. Use knn_join for bulk corpus-scale "
             "top-k.")
-    cc = _cent_by_cell(meta)
+    cc = qz.cell_centroids()
     percell: dict = {}
     for r in qrows:
         vec = np.asarray(r["qvec"], dtype=np.float64)
@@ -1350,15 +1247,9 @@ def _topk_pq(spark: SparkSession, q: DataFrame, data: DataFrame,
     cb = np.asarray(pqm["codebooks"], dtype=np.float64)
     bc = spark.sparkContext.broadcast((cellmap, cb))
 
-    cand = (data.filter(F.col("list_id").isin(cells))
-            .select(F.col("vec_id").alias("cand_id"), "pq_code",
-                    "vnorm", "list_id")
-            .filter(F.col("pq_code").isNotNull()
-                    & (F.col("vnorm") != 0)))
-    if has_tombs:
-        cand = cand.join(
-            _tombstone_ids(data).withColumnRenamed("vec_id", "cand_id"),
-            "cand_id", "left_anti")
+    cand = _probed_scan(data, cells, has_tombs, "pq_code", "vnorm",
+                        "list_id").filter(F.col("pq_code").isNotNull()
+                                          & (F.col("vnorm") != 0))
 
     def _approx(batches):
         m_cellmap, m_cb = bc.value
@@ -1397,11 +1288,11 @@ def _topk_pq(spark: SparkSession, q: DataFrame, data: DataFrame,
     survivors = _rank_topk(approx_pairs, rerank, by="approx").select(
         "query_id", "cand_id")
 
-    _norm, _cos = _score_exprs(int(meta.get("dim") or 0))
-    cemb = (data.filter(F.col("list_id").isin(cells))
-            .select(F.col("vec_id").alias("cand_id"), "embedding",
-                    _norm("embedding").alias("cn"))
-            .filter(F.col("cn") != 0))
+    _norm, _cos = _score_exprs(qz.dim)
+    # survivors are already masked: no tombstone antijoin here
+    cemb = _probed_scan(data, cells, False, "embedding",
+                        _norm("embedding").alias("cn")
+                        ).filter(F.col("cn") != 0)
     qv = q.select("query_id", "qvec", "qn")
     exact = (F.broadcast(survivors).join(cemb, "cand_id")
              .join(F.broadcast(qv), "query_id")
@@ -1561,7 +1452,8 @@ def knn_join(
     # never on the driver
     q = (_query_side(queries, id_col, vec_col, dim)
          .filter(F.col("qn") != 0)
-         .withColumn("probe", _query_probe(meta, nprobe))
+         .withColumn("probe", CoarseQuantizer.from_meta(meta).probe(
+             "qvec", nprobe, "qn"))
          .localCheckpoint())
 
     lid_t = data.schema["list_id"].dataType
@@ -1582,13 +1474,7 @@ def knn_join(
         empty = local_frame(spark, [], out_schema)
         return empty.withColumn("rank", F.lit(0).cast("long"))
 
-    cand = (data.filter(F.col("list_id").isin(cells))  # pruned scan
-            .select(F.col("vec_id").alias("cand_id"), "embedding",
-                    "list_id"))
-    if has_tombs:
-        cand = cand.join(
-            _tombstone_ids(data).withColumnRenamed("vec_id", "cand_id"),
-            "cand_id", "left_anti")
+    cand = _probed_scan(data, cells, has_tombs, "embedding", "list_id")
     ccnt = {int(r["list_id"]): int(r["count"]) for r in
             cand.groupBy("list_id").count().collect()}
 

@@ -9,10 +9,10 @@ Live paths (every one returns (query_id, cand_id, cosine, rank), rank
   * topk_lsh — random-hyperplane LSH: corpus bucketed by sign bits,
     queries probe their own bucket (+ optional multi-probe neighbors);
     the join is bucket-equi, shuffle-partitionable.
-  * topk_ivf_det — flat IVF over a seed (smallest-id, oracle-mirrored)
-    or trained (spherical k-means) coarse quantizer.
-  * topk_ivf_hier — two-level IVF (n1·n2 cells, n1 + n2 dots per row);
-    topk_ivf_det's √N auto-scale dispatches here above the flat clamp.
+  * topk_ivf_det — IVF over a CoarseQuantizer: flat (nlist cells) or
+    two-level (n1·n2 cells, n1 + n2 dots per row — explicit n1/n2, or
+    the √N auto-scale above the flat clamp), each trained by the seed
+    (smallest-id, oracle-mirrored) or trained (spherical k-means) rule.
   * annindex.topk_ivf_index / knn_join — the same probe over a
     persisted, cell-partitioned index.
 
@@ -20,12 +20,17 @@ Every approximate operator is the same probe (_probe_topk): the
 operator builds its candidate side (_cand_side: cand_id, cvec, cn and
 a cell/bucket key) and its query side (_query_side plus the probed
 keys); the broadcast, key equi-join, self-pair filter, scoring and
-top-k window are shared.
+top-k window are shared. The IVF operators, calibrate_probe and the
+persisted index differ from each other only in where their
+CoarseQuantizer comes from; everything that differs between flat and
+two-level lives in that one type.
 """
 
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass, replace
+from functools import cached_property
 
 import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves string
@@ -626,8 +631,8 @@ AUTO_PROBE_FRAC = 0.08
 #: auto_nlist clamp: below 16 cells probing saves nothing; above 4096
 #: flat assignment (√N dots per row) is the wrong tool — the √N
 #: auto-scale AUTO-DISPATCHES to the two-level coarse quantizer
-#: (topk_ivf_hier, r7: n1·n2 ≈ √N cells at n1+n2 ≈ 2·N^(1/4) dots per
-#: row; recall@5 = 1.0 pinned at 20M vectors, SCALE_r07.md).
+#: (CoarseQuantizer.resolve, r7: n1·n2 ≈ √N cells at n1+n2 ≈ 2·N^(1/4)
+#: dots per row; recall@5 = 1.0 pinned at 20M vectors, SCALE_r07.md).
 AUTO_NLIST_MIN, AUTO_NLIST_MAX = 16, 4096
 
 
@@ -645,6 +650,15 @@ def auto_nprobe(nlist: int) -> int:
     (recall-preserving as nlist scales with √N), never below the
     driver-checked 4."""
     return max(4, math.ceil(nlist * AUTO_PROBE_FRAC))
+
+
+def _auto_depth(cells: int, two_level: bool) -> int:
+    """THE default probe depth of every IVF path: AUTO_PROBE_FRAC of
+    ``cells`` top-level cells, at least 4 flat cells (auto_nprobe) or
+    2 two-level top cells (each probes all its n2 sub-cells)."""
+    if two_level:
+        return max(2, math.ceil(cells * AUTO_PROBE_FRAC))
+    return auto_nprobe(cells)
 
 
 #: Above this nlist the literal-expression assignment (nlist
@@ -711,11 +725,9 @@ def _assign_expr(vec_col: str, centroids: list[list[float]], nprobe: int,
     of each vector's ``nprobe`` nearest cells, by the numpy matmul
     (nearest_lists_np) or the JVM literal expression
     (nearest_lists_cosine, which reads ``vec_norm`` when given; the
-    numpy path ignores it). Each caller keeps its own rule:
-    ``matmul=None`` is the size rule of the persisted index and the
-    calibration pass (numpy at nlist ≥ NP_ASSIGN_MIN_NLIST);
-    topk_ivf_det passes its auto-scale decision, because an EXPLICIT
-    nlist keeps the expression for oracle parity at any size. The two
+    numpy path ignores it). ``matmul=None`` is the size rule (numpy at
+    nlist ≥ NP_ASSIGN_MIN_NLIST); a flat CoarseQuantizer passes its
+    ``matmul`` field, fixed where it was built. The two kernels
     agree up to the shared 4-decimal cosine rounding, so a row exactly
     AT a rounding boundary may assign one cell apart (the caveat
     nearest_lists_np documents; the pinned row-identity tests run at
@@ -726,116 +738,6 @@ def _assign_expr(vec_col: str, centroids: list[list[float]], nprobe: int,
         return nearest_lists_np(centroids, nprobe)(vec_col)
     return nearest_lists_cosine(vec_col, centroids, nprobe,
                                 vec_norm=vec_norm)
-
-
-def _resolve_centroids(corpus: DataFrame, id_col: str, vec_col: str,
-                       quantizer: str, *cells: int, version: object = None):
-    """The ``quantizer='seed'|'trained'`` dispatch: ``cells=(nlist,)``
-    gives the flat centroids, ``cells=(n1, n2)`` the two-level
-    (C1, C2)."""
-    table = {"seed": (seed_centroids, hier_seed_centroids),
-             "trained": (trained_centroids, hier_trained_centroids)}
-    if quantizer not in table:
-        raise ValueError(f"unknown quantizer {quantizer!r} (seed | trained)")
-    return table[quantizer][len(cells) - 1](
-        corpus, id_col, vec_col, *cells, version=version)
-
-
-def topk_ivf_det(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nlist: int | None = 16,
-    nprobe: int | None = 4,
-    centroids: list[list[float]] | None = None,
-    corpus_count: int | None = None,
-    quantize: bool = False,
-    quantizer: str = "seed",
-    calibrate: float | None = None,
-) -> DataFrame:
-    """IVF ANN over the deterministic seed quantizer: corpus rows are
-    assigned to their rounded-cosine-nearest centroid (shuffle-free
-    literal math), queries probe their ``nprobe`` nearest cells.
-    Fully mirrored by topk_ivf_det_sql at explicit nlist/nprobe — an
-    explicit nlist ALWAYS takes the JVM literal-expression assignment
-    (exact oracle parity), however large; the numpy-matmul assignment
-    engages only in the √N auto-scale regime (``nlist=None`` with
-    auto_nlist ≥ NP_ASSIGN_MIN_NLIST; ADVICE r6 — the old
-    centroid-count gate silently broke the documented mirror for
-    nlist ≥ 64).
-
-    ``nlist=None`` engages the √N auto-scale (auto_nlist over
-    ``corpus_count``, counted once if not supplied); ``nprobe=None``
-    auto-tunes to hold the probed fraction (auto_nprobe).
-    ``quantize=True`` carries the corpus payload as int8 codes
-    (quantize_embeddings) through the candidate join — 8× less
-    shuffle/broadcast bytes; cosine is scale-invariant so ranking
-    changes only by the quantization noise (recall pinned ≥0.9 in
-    tests). Assignment still reads the raw vector (bucketing is an
-    index-build step; codes are the stored payload).
-
-    ``quantizer='trained'`` (r8; VERDICT r7 item 3) resolves the
-    centroids with MLlib k-means (trained_centroids — same caching /
-    determinism contract as the seed rule) instead of the smallest-id
-    seed. On duplicate-clustered corpora the two are recall-identical;
-    on SMOOTH corpora trained holds a better recall/probe curve
-    (measured in SCALE_r08.md), and on such corpora the recall dial is
-    ``nprobe`` — the 8% auto fraction is calibrated for clustered
-    data, non-clustered corpora need ~40% for recall@5 ≈ 0.95.
-
-    ``calibrate=<target recall>`` (r8) replaces the guessing entirely:
-    nprobe is resolved by calibrate_probe — the smallest depth whose
-    measured recall@k on a deterministic holdout reaches the target
-    (one bounded index-build-time pass, cached per corpus identity).
-    Requires ``nprobe=None`` — an explicit nprobe plus a calibration
-    target is two dials for the same knob, an error not a precedence
-    rule."""
-    if calibrate is not None and nprobe is not None:
-        raise ValueError(
-            "topk_ivf_det: pass nprobe=None with calibrate=<target> — "
-            "an explicit nprobe and a calibration target are two dials "
-            "for the same knob")
-    auto_scale = nlist is None
-    if nlist is None:
-        if corpus_count is None:
-            corpus_count = corpus.count()
-        if (corpus_count > AUTO_NLIST_MAX ** 2
-                and nprobe is None and centroids is None):
-            # √N exceeds the flat clamp: two-level coarse quantizer
-            # (AUTO-dispatch, r7 — VERDICT r6 item 4). Only when the
-            # flat-quantizer-shaped knobs are untouched — an explicit
-            # nprobe / centroids list means FLAT semantics were asked
-            # for, and silently reinterpreting (or dropping) them in
-            # the hierarchy would change recall behind the caller's
-            # back (review r7); call topk_ivf_hier directly for
-            # explicit two-level control.
-            return topk_ivf_hier(corpus, queries, id_col, vec_col, k,
-                                 corpus_count=corpus_count,
-                                 quantize=quantize, quantizer=quantizer,
-                                 calibrate=calibrate)
-        nlist = auto_nlist(corpus_count)
-    if nprobe is None and calibrate is None:
-        nprobe = auto_nprobe(nlist)
-    if centroids is None:
-        centroids = _resolve_centroids(corpus, id_col, vec_col, quantizer,
-                                       nlist)
-    if calibrate is not None:
-        nprobe = calibrate_probe(
-            corpus, id_col, vec_col, k=k, target_recall=calibrate,
-            nlist=len(centroids), quantizer=quantizer,
-            centroids=centroids)["nprobe"]
-    matmul = auto_scale and len(centroids) >= NP_ASSIGN_MIN_NLIST
-    dim = len(centroids[0]) if centroids else None
-    c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
-                   lambda v, n: F.element_at(
-                       _assign_expr(v, centroids, 1, n, matmul), 1),
-                   quantize)
-    q = _query_side(queries, id_col, vec_col, dim).withColumn(
-        "list_id", F.explode(
-            _assign_expr("qvec", centroids, nprobe, "qn", matmul)))
-    return _probe_topk(q, c, "list_id", k, dim)
 
 
 # ---------------------------------------------------------------------
@@ -851,8 +753,7 @@ def hier_params(corpus_count: int) -> tuple[int, int, int]:
     probed, so probed corpus fraction ≈ p1/n1, the same operating point
     the flat auto-scale holds)."""
     n1 = max(AUTO_NLIST_MIN, int(round(corpus_count ** 0.25)))
-    p1 = max(2, math.ceil(n1 * AUTO_PROBE_FRAC))
-    return n1, n1, p1
+    return n1, n1, _auto_depth(n1, two_level=True)
 
 
 def hier_seed_centroids(
@@ -962,10 +863,11 @@ def hier_trained_centroids(
     cell's sample members (cycled when small, degenerate for empty
     cells). All training is driver-side numpy on the ≤262k-row sample
     — a build-time artifact, never on the query path. Engage with
-    ``topk_ivf_hier(quantizer='trained')`` on smooth (non-clustered)
-    corpora, where the seed quantizer's recall/probe curve is measured
-    worse (SCALE_r08.md); on duplicate-clustered corpora both are
-    recall-1.0 and the seed rule stays the cheap default."""
+    ``topk_ivf_det(n1=, n2=, quantizer='trained')`` on smooth
+    (non-clustered) corpora, where the seed quantizer's recall/probe
+    curve is measured worse (SCALE_r08.md); on duplicate-clustered
+    corpora both are recall-1.0 and the seed rule stays the cheap
+    default."""
     if train_cap is None:
         train_cap = min(262_144, max(4 * n1 * n2, 65_536))
     key = ("hier-trained", corpus.sparkSession.sparkContext.applicationId,
@@ -1075,69 +977,259 @@ def hier_probe_np(C1: list[list[float]], C2: list[list[list[float]]],
     return probe
 
 
-def topk_ivf_hier(
+# ---------------------------------------------------------------------
+# the coarse quantizer — flat and two-level behind one type
+# ---------------------------------------------------------------------
+
+@dataclass(frozen=True, eq=False)
+class CoarseQuantizer:
+    """The coarse quantizer every IVF path layers on (the coarse stage
+    of IVF-ADC, Jégou et al., TPAMI 2011). FLAT: ``top`` holds the
+    nlist centroids and a vector's cell is its nearest one. TWO-LEVEL:
+    ``top`` holds the n1 level-1 centroids (C1), ``sub`` the n1 × n2
+    sub-centroids (C2), and cell ``t·n2 + j`` is sub-centroid j of top
+    cell t. Everything that differs between the two lives here —
+    resolution, assignment, probe sets, the calibration probe position,
+    per-cell centroids, the meta codec and the cache fingerprint — so
+    topk_ivf_det, calibrate_probe and the persisted index
+    (annindex) each run one body for both.
+
+    ``rule`` is the training rule (``'seed'`` | ``'trained'``).
+    ``matmul`` picks the flat kernel — nearest_lists_np or the JVM
+    literal nearest_lists_cosine (see _assign_expr); two-level always
+    runs the numpy kernels. It is fixed where the quantizer is built:
+    resolve and from_meta take the size rule (numpy at ≥
+    NP_ASSIGN_MIN_NLIST cells), and topk_ivf_det turns it off for an
+    explicit nlist. ``default_depth`` is the probe depth used when a
+    caller passes none: _auto_depth over the cell count asked for
+    (resolve), or the stored calibration's depth, else _auto_depth over
+    the stored count (from_meta). The two counts differ only when the
+    corpus holds fewer vectors than were asked for."""
+
+    top: list
+    sub: list | None
+    rule: str
+    matmul: bool
+    default_depth: int
+
+    @classmethod
+    def resolve(cls, corpus: DataFrame, id_col: str = "vec_id",
+                vec_col: str = "embedding", nlist: int | None = None,
+                n1: int | None = None, n2: int | None = None,
+                corpus_count: int | None = None, quantizer: str = "seed",
+                version: object = None,
+                centroids: list[list[float]] | None = None,
+                auto_two_level: bool = True) -> "CoarseQuantizer":
+        """Resolve from a caller's knobs. Explicit ``n1``/``n2`` mean
+        two-level (a missing one from hier_params); an explicit
+        ``nlist`` or ``centroids`` list means flat; otherwise the √N
+        auto-scale counts the corpus (once, unless ``corpus_count`` is
+        given) and, with ``auto_two_level``, goes two-level above the
+        flat clamp (N > AUTO_NLIST_MAX², n1 = n2 ≈ N^(1/4)), else flat
+        at auto_nlist. Centroids come from the ``quantizer`` rule's
+        training function (cached per corpus identity)."""
+        two = n1 is not None or n2 is not None
+        if not two and nlist is None:
+            if corpus_count is None:
+                corpus_count = corpus.count()
+            two = (auto_two_level and centroids is None
+                   and corpus_count > AUTO_NLIST_MAX ** 2)
+            if not two:
+                nlist = auto_nlist(corpus_count)
+        if centroids is None and quantizer not in _TRAIN:
+            raise ValueError(
+                f"unknown quantizer {quantizer!r} (seed | trained)")
+        if two:
+            if n1 is None or n2 is None:
+                a1, a2, _ = hier_params(
+                    corpus.count() if corpus_count is None else corpus_count)
+                n1, n2 = n1 or a1, n2 or a2
+            top, sub = _TRAIN[quantizer][1](corpus, id_col, vec_col, n1, n2,
+                                            version=version)
+            asked = n1
+        else:
+            top, sub, asked = centroids, None, nlist
+            if top is None:
+                top = _TRAIN[quantizer][0](corpus, id_col, vec_col, nlist,
+                                           version=version)
+        return cls(top, sub, quantizer, len(top) >= NP_ASSIGN_MIN_NLIST,
+                   _auto_depth(asked, two))
+
+    @classmethod
+    def from_meta(cls, meta: dict) -> "CoarseQuantizer":
+        """The stored quantizer of an index generation's ``_meta.json``
+        (the keys :meth:`meta` writes; the calibration record holds
+        ``nprobe`` or ``p1``)."""
+        two = meta["kind"] == "hier"
+        top = meta["C1"] if two else meta["centroids"]
+        cal = meta.get("calibration")
+        depth = (cal["p1" if two else "nprobe"] if cal
+                 else _auto_depth(len(top), two))
+        return cls(top, meta["C2"] if two else None, meta["quantizer"],
+                   len(top) >= NP_ASSIGN_MIN_NLIST, depth)
+
+    @property
+    def two_level(self) -> bool:
+        return self.sub is not None
+
+    @property
+    def depth_key(self) -> str:
+        """The probe-depth key of calibration records and gauges."""
+        return "p1" if self.two_level else "nprobe"
+
+    @property
+    def dim(self) -> int:
+        return len(self.top[0]) if self.top else 0
+
+    def _counts(self) -> dict:
+        if self.two_level:
+            return {"n1": len(self.top), "n2": len(self.sub[0])}
+        return {"nlist": len(self.top)}
+
+    def meta(self) -> dict:
+        """The quantizer's ``_meta.json`` keys, in their stored order."""
+        if self.two_level:
+            n = self._counts()
+            return {"kind": "hier", "nlist": n["n1"] * n["n2"], **n,
+                    "C1": self.top, "C2": self.sub, "quantizer": self.rule}
+        return {"kind": "flat", **self._counts(), "centroids": self.top,
+                "quantizer": self.rule}
+
+    def calibration(self, depth: int) -> dict:
+        """The head of a calibration record measured at ``depth``."""
+        return {"kind": "hier" if self.two_level else "flat",
+                **self._counts(), self.depth_key: depth}
+
+    @cached_property
+    def fingerprint(self) -> int:
+        """Hash of the centroid tables — the calibration cache's
+        quantizer identity, computed once per quantizer."""
+        sub = (None if self.sub is None
+               else tuple(tuple(map(tuple, s)) for s in self.sub))
+        return hash((tuple(map(tuple, self.top)), sub))
+
+    def assign(self, vec: str, norm: str | None = None) -> Column:
+        """Each vector's cell id (int), from the vector column's NAME
+        and, when one exists, its norm column's NAME (the flat
+        expression kernel reads it; the numpy kernels ignore it)."""
+        if self.two_level:
+            return hier_assign_np(self.top, self.sub)(F.col(vec))
+        return F.element_at(
+            _assign_expr(vec, self.top, 1, norm, self.matmul), 1)
+
+    def probe(self, vec: str, depth: int | None = None,
+              norm: str | None = None) -> Column:
+        """array<int> of probed cells: the ``depth`` nearest cells
+        (flat), or every sub-cell of the ``depth`` nearest top cells
+        (two-level); ``depth=None`` probes ``default_depth``."""
+        depth = self.default_depth if depth is None else depth
+        if self.two_level:
+            return hier_probe_np(self.top, self.sub, depth)(F.col(vec))
+        return _assign_expr(vec, self.top, depth, norm, self.matmul)
+
+    def calib_pos(self, pos0: Column) -> Column:
+        """The probe depth (1-based) that first reaches position
+        ``pos0`` of the full probe list: the cell's own rank (flat), or
+        its top cell's rank — the full two-level list is len(top)
+        contiguous blocks of n2."""
+        if self.two_level:
+            return (pos0 / F.lit(len(self.sub[0]))).cast("int") + 1
+        return pos0 + 1
+
+    def cell_centroids(self) -> np.ndarray:
+        """(nlist, dim) float64 table mapping cell id → its centroid;
+        two-level cells hold absolute sub-centroids (see
+        hier_seed_centroids)."""
+        return np.asarray(self.top if self.sub is None else self.sub,
+                          dtype=np.float64).reshape(-1, self.dim)
+
+
+#: training functions per ``quantizer=`` rule: (flat, two-level)
+_TRAIN = {"seed": (seed_centroids, hier_seed_centroids),
+          "trained": (trained_centroids, hier_trained_centroids)}
+
+
+def topk_ivf_det(
     corpus: DataFrame,
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n1: int | None = None,
-    n2: int | None = None,
-    p1: int | None = None,
+    nlist: int | None = 16,
+    nprobe: int | None = 4,
+    centroids: list[list[float]] | None = None,
     corpus_count: int | None = None,
-    cents: tuple | None = None,
     quantize: bool = False,
     quantizer: str = "seed",
     calibrate: float | None = None,
+    n1: int | None = None,
+    n2: int | None = None,
 ) -> DataFrame:
-    """Two-level IVF ANN — the regime ABOVE the flat quantizer's 4096
-    clamp (VERDICT r6 item 4): at √N > AUTO_NLIST_MAX cells, flat
-    assignment costs √N dots per row; the hierarchy keeps the SAME
-    ≈√N total cells (n1·n2) but assigns with n1 + n2 ≈ 2·N^(1/4) dots
-    — two bounded matmuls per Arrow batch, still a pure shuffle-free
-    map. The probe is topk_ivf_det's (_probe_topk: broadcast queries,
-    cell-equi probe join, per-query window top-k).
-    topk_ivf_det auto-dispatches here when the √N auto-scale exceeds
-    the clamp; explicit small-nlist and oracle-mirrored paths are
-    untouched. ``quantize=True`` carries the corpus payload as int8
-    codes through the candidate join (8× smaller shuffle/broadcast;
-    cell assignment still reads the raw vector), the same contract as
-    topk_ivf_det's flat quantized path. ``quantizer='trained'`` (r8)
-    resolves the two-level centroids with spherical k-means
-    (hier_trained_centroids) — the smooth-corpus option; the recall
-    dial on such corpora is ``p1`` (probed top-cell fraction), see
-    trained_centroids / SCALE_r08.md — or pass ``calibrate=<target
-    recall>`` (r8) and p1 is resolved by calibrate_probe_hier, the
-    smallest depth whose measured holdout recall@k reaches the target
-    (requires ``p1=None``)."""
-    if calibrate is not None and p1 is not None:
+    """IVF ANN over a CoarseQuantizer: corpus rows are assigned to
+    their rounded-cosine-nearest cell (a shuffle-free map), queries
+    probe ``nprobe`` cells — on a two-level quantizer ``nprobe`` counts
+    TOP cells (p1), each probing all its n2 sub-cells.
+
+    The flat seed quantizer is fully mirrored by topk_ivf_det_sql at
+    explicit nlist/nprobe — an explicit nlist ALWAYS takes the JVM
+    literal-expression assignment (exact oracle parity), however large;
+    the numpy-matmul assignment engages only in the √N auto-scale
+    regime (``nlist=None`` with auto_nlist ≥ NP_ASSIGN_MIN_NLIST;
+    ADVICE r6 — the old centroid-count gate silently broke the
+    documented mirror for nlist ≥ 64).
+
+    ``nlist=None`` engages the √N auto-scale (auto_nlist over
+    ``corpus_count``, counted once if not supplied); above the flat
+    clamp (√N > AUTO_NLIST_MAX, i.e. N > 16.7M) it AUTO-DISPATCHES to
+    the two-level quantizer (r7 — VERDICT r6 item 4: ≈√N cells as
+    n1·n2 at n1 + n2 ≈ 2·N^(1/4) dots per row), but only with
+    ``nprobe=None`` and no ``centroids`` — an explicit flat depth or
+    centroid list means flat semantics were asked for. Explicit
+    ``n1``/``n2`` force the two-level quantizer at any size.
+    ``nprobe=None`` auto-tunes to hold the probed fraction
+    (_auto_depth). ``quantize=True`` carries the corpus payload as int8
+    codes (quantize_embeddings) through the candidate join — 8× less
+    shuffle/broadcast bytes; cosine is scale-invariant so ranking
+    changes only by the quantization noise (recall pinned ≥0.9 in
+    tests). Assignment still reads the raw vector (bucketing is an
+    index-build step; codes are the stored payload).
+
+    ``quantizer='trained'`` (r8; VERDICT r7 item 3) resolves the
+    centroids with k-means (trained_centroids / hier_trained_centroids
+    — same caching / determinism contract as the seed rule) instead of
+    the smallest-id seed. On duplicate-clustered corpora the two are
+    recall-identical; on SMOOTH corpora trained holds a better
+    recall/probe curve (measured in SCALE_r08.md), and on such corpora
+    the recall dial is ``nprobe`` — the 8% auto fraction is calibrated
+    for clustered data, non-clustered corpora need ~40% for recall@5 ≈
+    0.95.
+
+    ``calibrate=<target recall>`` (r8) replaces the guessing entirely:
+    nprobe is resolved by calibrate_probe — the smallest depth whose
+    measured recall@k on a deterministic holdout reaches the target
+    (one bounded index-build-time pass, cached per corpus identity).
+    Requires ``nprobe=None`` — an explicit nprobe plus a calibration
+    target is two dials for the same knob, an error not a precedence
+    rule."""
+    if calibrate is not None and nprobe is not None:
         raise ValueError(
-            "topk_ivf_hier: pass p1=None with calibrate=<target> — an "
-            "explicit p1 and a calibration target are two dials for "
-            "the same knob")
-    if corpus_count is None and (n1 is None or n2 is None):
-        corpus_count = corpus.count()
-    a1, a2, ap = hier_params(corpus_count or 0)
-    n1 = n1 or a1
-    n2 = n2 or a2
-    if cents is None:
-        cents = _resolve_centroids(corpus, id_col, vec_col, quantizer,
-                                   n1, n2)
-    C1, C2 = cents
+            "topk_ivf_det: pass nprobe=None with calibrate=<target> — "
+            "an explicit nprobe and a calibration target are two dials "
+            "for the same knob")
+    qz = CoarseQuantizer.resolve(
+        corpus, id_col, vec_col, nlist, n1, n2, corpus_count, quantizer,
+        centroids=centroids, auto_two_level=nprobe is None)
     if calibrate is not None:
-        p1 = calibrate_probe_hier(
+        nprobe = calibrate_probe(
             corpus, id_col, vec_col, k=k, target_recall=calibrate,
-            n1=len(C1), n2=(len(C2[0]) if C2 else 0),
-            quantizer=quantizer, cents=cents)["p1"]
-    else:
-        p1 = p1 or max(2, math.ceil(n1 * AUTO_PROBE_FRAC))
-    dim = len(C1[0]) if C1 else None
-    assign = hier_assign_np(C1, C2)
-    c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
-                   lambda v, _n: assign(F.col(v)), quantize)
-    q = _query_side(queries, id_col, vec_col, dim).withColumn(
-        "list_id", F.explode(hier_probe_np(C1, C2, p1)(F.col("qvec"))))
-    return _probe_topk(q, c, "list_id", k, dim)
+            quantizer=qz)[qz.depth_key]
+    if nlist is not None:  # the oracle-mirrored JVM expression
+        qz = replace(qz, matmul=False)
+    c = _cand_side(corpus, id_col, vec_col, qz.dim, "list_id", qz.assign,
+                   quantize)
+    q = _query_side(queries, id_col, vec_col, qz.dim).withColumn(
+        "list_id", F.explode(qz.probe("qvec", nprobe, "qn")))
+    return _probe_topk(q, c, "list_id", k, qz.dim)
 
 
 # ---------------------------------------------------------------------
@@ -1151,7 +1243,7 @@ def topk_ivf_hier(
 # deterministic holdout yields the exact recall@k of EVERY probe depth
 # at once, and a driver-side binary search returns the smallest depth
 # reaching the target. Wired as ``calibrate=<target>`` on topk_ivf_det
-# and topk_ivf_hier.
+# and build_ivf_index, for flat and two-level quantizers alike.
 # ---------------------------------------------------------------------
 
 #: Calibration records per corpus identity (the _CENTROID_CACHE key's
@@ -1293,148 +1385,71 @@ def calibrate_probe(
     n_holdout: int = 32,
     nlist: int | None = None,
     corpus_count: int | None = None,
-    quantizer: str = "seed",
-    centroids: list[list[float]] | None = None,
+    quantizer: "str | CoarseQuantizer" = "seed",
     version: object = None,
     holdout: DataFrame | None = None,
     report_depths: tuple = (),
 ) -> dict:
-    """Measure, don't guess, the flat-IVF probe depth: returns a record
-    whose ``nprobe`` is the SMALLEST depth whose recall@k on a
-    deterministic holdout reaches ``target_recall``, plus the measured
-    curve. Wired into topk_ivf_det as ``calibrate=<target>``.
+    """Measure, don't guess, the IVF probe depth: returns a record
+    whose depth (``nprobe`` flat, ``p1`` two-level — the quantizer's
+    depth_key) is the SMALLEST depth whose recall@k on a deterministic
+    holdout reaches ``target_recall``, plus the measured curve. Wired
+    into topk_ivf_det and build_ivf_index as ``calibrate=<target>``.
+
+    ``quantizer`` is a CoarseQuantizer, or a training rule name
+    (``'seed'`` | ``'trained'``) resolved flat at ``nlist`` (default:
+    auto_nlist over ``corpus_count``, counted if not supplied).
 
     Method — ONE distributed pass, exact for every depth at once: the
-    holdout probes ALL cells in full preference order (probe_pos
-    tagged); per-(query, cell) top-k survivors are collected
-    (≤ n_holdout·nlist·k tiny scalar rows) and the served top-k at ANY
-    depth p is the first k survivors with cell rank ≤ p (_calib_solve).
+    holdout probes ALL top-level cells in full preference order, each
+    probed cell tagged with the depth that reaches it
+    (CoarseQuantizer.calib_pos); per-(query, depth) top-k survivors are
+    collected (≤ n_holdout·cells·k tiny scalar rows — a two-level
+    quantizer needs only the top-k within each whole top-cell block)
+    and the served top-k at ANY depth p is the first k survivors with
+    depth ≤ p (_calib_solve).
 
     Scale posture: cluster-side cost is one corpus scan scoring
     ``n_holdout`` cosines per row — the same O(h·N) class as
     topk_bruteforce over h queries, an index-BUILD cost amortized over
     every query the index serves and cached per corpus identity like
-    the quantizers. Assignment follows the serving path's auto rule
-    (numpy matmul at nlist ≥ NP_ASSIGN_MIN_NLIST, literal expression
-    below — the two agree to the 4-decimal rounding)."""
+    the quantizers. Assignment follows the quantizer's kernel (numpy
+    matmul at nlist ≥ NP_ASSIGN_MIN_NLIST, literal expression below —
+    the two agree to the 4-decimal rounding)."""
     if not (0.0 < target_recall <= 1.0):
         raise ValueError(f"target_recall must be in (0, 1], got {target_recall}")
-    if nlist is None:
-        if corpus_count is None:
-            corpus_count = corpus.count()
-        nlist = auto_nlist(corpus_count)
-    cents_key = (None if centroids is None
-                 else hash(tuple(tuple(c) for c in centroids)))
+    qz = quantizer
+    if not isinstance(qz, CoarseQuantizer):
+        qz = CoarseQuantizer.resolve(corpus, id_col, vec_col, nlist,
+                                     corpus_count=corpus_count,
+                                     quantizer=quantizer, version=version,
+                                     auto_two_level=False)
     hold_key = None if holdout is None else holdout.semanticHash()
-    key = ("flat", corpus.sparkSession.sparkContext.applicationId,
-           id_col, vec_col, k, target_recall, n_holdout, nlist,
-           quantizer, cents_key, corpus.semanticHash(), version,
-           hold_key, tuple(report_depths))
+    key = ("ivf", corpus.sparkSession.sparkContext.applicationId,
+           id_col, vec_col, k, target_recall, n_holdout, qz.rule,
+           qz.fingerprint, corpus.semanticHash(), version, hold_key,
+           tuple(report_depths))
 
     def build():
-        cents = (centroids if centroids is not None else
-                 _resolve_centroids(corpus, id_col, vec_col, quantizer,
-                                    nlist, version=version))
-        n_cells = len(cents)
-        dim = len(cents[0]) if cents else None
-        c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
-                       lambda v, n: F.element_at(
-                           _assign_expr(v, cents, 1, n), 1))
+        cells = len(qz.top)
+        c = _cand_side(corpus, id_col, vec_col, qz.dim, "list_id",
+                       qz.assign)
         h = _calib_holdout(corpus, id_col, vec_col, n_holdout, holdout)
-        order = _assign_expr("qvec", cents, n_cells, "qn")
         grid = h.select(
-            "query_id", F.posexplode(order).alias("pos0", "list_id")
-        ).withColumn("probe_pos", F.col("pos0") + 1)
-        rows = _calib_pass(c, grid, h, k, dim=dim)
+            "query_id", F.posexplode(qz.probe("qvec", cells, "qn"))
+            .alias("pos0", "list_id")
+        ).withColumn("probe_pos", qz.calib_pos(F.col("pos0")))
+        rows = _calib_pass(c, grid, h, k, dim=qz.dim)
         if not rows:
             raise ValueError("calibrate_probe: empty calibration pass — the "
                              "corpus has no nonzero-norm vectors to hold out")
-        nprobe, achieved, curve, at = _calib_solve(rows, k, target_recall,
-                                                   n_cells, report_depths)
-        rec = {"kind": "flat", "nlist": n_cells, "nprobe": nprobe,
-               "frac": round(nprobe / n_cells, 4), "recall": achieved,
+        depth, achieved, curve, at = _calib_solve(rows, k, target_recall,
+                                                  cells, report_depths)
+        rec = {**qz.calibration(depth),
+               "frac": round(depth / cells, 4), "recall": achieved,
                "target": target_recall, "curve": curve,
                "n_holdout": len({r[0] for r in rows}), "k": k,
-               "quantizer": quantizer}
-        if at:
-            rec["at_depths"] = at
-        return rec
-
-    return _CALIB_CACHE.get(key, build)
-
-
-def calibrate_probe_hier(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    target_recall: float = 0.9,
-    n_holdout: int = 32,
-    n1: int | None = None,
-    n2: int | None = None,
-    corpus_count: int | None = None,
-    quantizer: str = "seed",
-    cents: tuple | None = None,
-    version: object = None,
-    holdout: DataFrame | None = None,
-    report_depths: tuple = (),
-) -> dict:
-    """calibrate_probe for the two-level quantizer: the dial is ``p1``
-    (how many TOP cells a query probes — every sub-cell of a probed top
-    cell is scanned, so eligible sets grow in whole l1 blocks). Same
-    one-pass method with probe_pos = the candidate's l1 rank in the
-    query's preference order; the collect shrinks to
-    n_holdout·n1·k rows because top-k WITHIN an l1 block suffices.
-    Wired into topk_ivf_hier as ``calibrate=<target>``."""
-    if not (0.0 < target_recall <= 1.0):
-        raise ValueError(f"target_recall must be in (0, 1], got {target_recall}")
-    if corpus_count is None and (n1 is None or n2 is None):
-        corpus_count = corpus.count()
-    a1, a2, _ = hier_params(corpus_count or 0)
-    n1 = n1 or a1
-    n2 = n2 or a2
-    cents_key = None
-    if cents is not None:
-        cents_key = hash((tuple(tuple(c) for c in cents[0]),
-                          tuple(tuple(tuple(s) for s in sub)
-                                for sub in cents[1])))
-    hold_key = None if holdout is None else holdout.semanticHash()
-    key = ("hier", corpus.sparkSession.sparkContext.applicationId,
-           id_col, vec_col, k, target_recall, n_holdout, n1, n2,
-           quantizer, cents_key, corpus.semanticHash(), version,
-           hold_key, tuple(report_depths))
-
-    def build():
-        # version= forwards to the centroid caches (ADVICE r8): an
-        # in-place corpus rewrite with a bumped version must evict the
-        # hier centroids exactly as calibrate_probe evicts the flat ones
-        C1, C2 = (cents if cents is not None else
-                  _resolve_centroids(corpus, id_col, vec_col, quantizer,
-                                     n1, n2, version=version))
-        m1, m2 = len(C1), (len(C2[0]) if C2 else 0)
-        dim = len(C1[0]) if C1 else None
-        assign = hier_assign_np(C1, C2)
-        c = _cand_side(corpus, id_col, vec_col, dim, "list_id",
-                       lambda v, _n: assign(F.col(v)))
-        h = _calib_holdout(corpus, id_col, vec_col, n_holdout, holdout)
-        grid = h.select(
-            "query_id",
-            F.posexplode(hier_probe_np(C1, C2, m1)(F.col("qvec"))
-                         ).alias("pos0", "list_id")
-        ).withColumn(  # full probe list is m1 contiguous blocks of m2
-            "probe_pos", (F.col("pos0") / F.lit(m2)).cast("int") + 1)
-        rows = _calib_pass(c, grid, h, k, dim=dim)
-        if not rows:
-            raise ValueError("calibrate_probe_hier: empty calibration pass "
-                             "— the corpus has no nonzero-norm vectors to "
-                             "hold out")
-        p1, achieved, curve, at = _calib_solve(rows, k, target_recall, m1,
-                                               report_depths)
-        rec = {"kind": "hier", "n1": m1, "n2": m2, "p1": p1,
-               "frac": round(p1 / m1, 4), "recall": achieved,
-               "target": target_recall, "curve": curve,
-               "n_holdout": len({r[0] for r in rows}), "k": k,
-               "quantizer": quantizer}
+               "quantizer": qz.rule}
         if at:
             rec["at_depths"] = at
         return rec

@@ -252,9 +252,9 @@ def test_meta_cache_stores_nothing_when_stat_races(
 def test_hier_index_matches_per_call_operator(spark, emb, tmp_path):
     """Two-level quantizer in the persisted index (the >16.7M-vector
     regime, forced here with explicit n1/n2): same cents + same p1 →
-    row-identical to topk_ivf_hier; calibrate= stores the measured p1
-    as the default; appends assign via the stored two-level
-    quantizer."""
+    row-identical to topk_ivf_det(n1=, n2=); calibrate= stores the
+    measured p1 as the default; appends assign via the stored
+    two-level quantizer."""
     path = str(tmp_path / "ivf")
     meta = AX.build_ivf_index(emb, path, n1=4, n2=4, calibrate=0.9)
     assert meta["kind"] == "hier" and (meta["n1"], meta["n2"]) == (4, 4)
@@ -262,7 +262,8 @@ def test_hier_index_matches_per_call_operator(spark, emb, tmp_path):
     assert cal is not None and cal["recall"] >= 0.9 and cal["kind"] == "hier"
     queries = emb.filter(F.col("vec_id") < 6)
     got = AX.topk_ivf_index(spark, queries, path, k=5)  # default = cal p1
-    want = SS.topk_ivf_hier(emb, queries, k=5, n1=4, n2=4, p1=cal["p1"])
+    want = SS.topk_ivf_det(emb, queries, k=5, n1=4, n2=4,
+                           nprobe=cal["p1"])
     assert _rows(got) == _rows(want) and len(_rows(got)) > 0
     AX.ivf_index_append(emb.limit(10), path, batch_id=0)
     after = AX.read_ivf_data(spark, path)
@@ -319,11 +320,42 @@ def test_append_requantizes_when_rebuild_flips_mid_batch(
     data = AX.read_ivf_data(spark, path)
     got = {(r["vec_id"], r["list_id"]) for r in data.filter(
         F.col("_batch_id") == 0).select("vec_id", "list_id").collect()}
-    want = {(r["vec_id"], r["list_id"]) for r in ax._flat_assigned(
-        batch, "vec_id", "embedding", meta["centroids"]).collect()}
+    want = {(r["vec_id"], r["list_id"]) for r in ax._assigned(
+        batch, "vec_id", "embedding",
+        SS.CoarseQuantizer.from_meta(meta)).collect()}
     # appended rows present in the NEW generation, quantized by the
     # NEW centroids — not the stale gen-1 assignment
     assert got == want and len(got) == 40
+
+
+def test_append_to_unbuilt_path_raises_and_leaves_no_marker(spark, emb,
+                                                             tmp_path):
+    """An append to a path whose data dir exists but was never built
+    resolves the generation before it takes its in-flight marker: the
+    error names build_ivf_index and nothing is left behind."""
+    data = tmp_path / "ivf" / "data"
+    data.mkdir(parents=True)
+    with pytest.raises(FileNotFoundError, match="build_ivf_index"):
+        AX.ivf_index_append(emb.limit(3), str(tmp_path / "ivf"), 3)
+    assert list(data.iterdir()) == []
+
+
+def test_compaction_raises_on_corrupt_meta(spark, emb, tmp_path):
+    """An unreadable live _meta.json fails compaction loudly; the
+    generation pointer does not move, so the corrupt meta is never
+    carried into a new generation."""
+    from andl_spark.streaming.events import _read_gen
+
+    path = str(tmp_path / "ivf")
+    AX.build_ivf_index(emb, path, nlist=8, calibrate=0.9)
+    AX.ivf_index_append(emb.limit(10).withColumn(
+        "vec_id", F.col("vec_id") + 100_000), path, batch_id=0)
+    data_root = str(tmp_path / "ivf" / "data")
+    (tmp_path / "ivf" / "data" / "gen=1" / "_meta.json").write_text(
+        "{not json")
+    with pytest.raises(ValueError):
+        AX.compact_ivf_index(spark, path)
+    assert _read_gen(data_root) == 1
 
 
 def test_build_empty_corpus_raises(spark, emb, tmp_path):
@@ -410,7 +442,7 @@ def test_ivf_ingest_stream_drained_equals_batch(spark, emb, tmp_path):
     meta = AX.read_ivf_meta(path)
     want = {(r["vec_id"], r["list_id"]) for r in new.select(
         F.col("vec_id"),
-        F.element_at(AX._assign_expr(
+        F.element_at(SS._assign_expr(
             "embedding", meta["centroids"], 1), 1).alias("list_id")
     ).collect()}
     assert got == want
@@ -468,8 +500,9 @@ def test_ivf_live_compaction_beside_streaming_ingest(spark, emb, tmp_path):
     got = {(r["vec_id"], r["list_id"])
            for r in data.select("vec_id", "list_id").collect()}
     want = {(r["vec_id"], r["list_id"])
-            for r in AX._flat_assigned(
-                emb, "vec_id", "embedding", meta["centroids"]).collect()}
+            for r in AX._assigned(
+                emb, "vec_id", "embedding",
+                SS.CoarseQuantizer.from_meta(meta)).collect()}
     assert got == want
 
 
@@ -1751,3 +1784,53 @@ def test_pq_approx_scan_never_reads_embeddings(spark, emb, tmp_path):
     for s in code_scans:
         head = s[:2000]
         assert "embedding" not in head.split("PushedFilters")[0], head
+
+
+def test_hier_index_append_gauge_and_pq_lifecycle(spark, tmp_path):
+    """The two-level quantizer through the whole maintenance plane at
+    tier-1 size: build with calibration and PQ codes, append, compact.
+    The compaction gauge reads the stored p1, appended rows carry the
+    stored two-level assignment, and the ADC serve keeps ≥ 0.9 of the
+    exact path's top-k."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    centers = rng.normal(size=(12, 8))
+    X = centers[np.arange(340) % 12] + rng.normal(scale=0.3, size=(340, 8))
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in X[i]]) for i in range(300)], schema)
+    batch = spark.createDataFrame(
+        [(1000 + i, [float(x) for x in X[300 + i]]) for i in range(40)],
+        schema)
+    path = str(tmp_path / "ivf_hpq")
+    meta = AX.build_ivf_index(corpus, path, n1=3, n2=3, calibrate=0.9,
+                              pq_m=4)
+    AX.ivf_index_append(batch, path, batch_id=0)
+    AX.compact_ivf_index(spark, path)
+
+    meta2 = AX.read_ivf_meta(path)
+    g = meta2["gauge"]
+    assert g["kind"] == "hier" and "measured_p1" in g
+    assert g["stored"] == meta["calibration"]["p1"]
+
+    appended = AX.read_ivf_data(spark, path).filter(
+        F.col("_batch_id") == 0)
+    got = {(r["vec_id"], r["list_id"]) for r in appended.select(
+        "vec_id", "list_id").collect()}
+    want = {(r["vec_id"], r["lid"]) for r in batch.select(
+        "vec_id", SS.hier_assign_np(meta2["C1"], meta2["C2"])(
+            F.col("embedding")).alias("lid")).collect()}
+    assert got == want and len(got) == 40
+
+    k = 5
+    queries = corpus.filter(F.col("vec_id") < 16)
+    approx = AX.topk_ivf_index(spark, queries, path, k=k)
+    exact = AX.topk_ivf_index(spark, queries, path, k=k, use_pq=False)
+    a = {(r["query_id"], r["cand_id"]) for r in approx.collect()}
+    e = {(r["query_id"], r["cand_id"]) for r in exact.collect()}
+    per_q = {}
+    for q, _ in a:
+        per_q[q] = per_q.get(q, 0) + 1
+    assert per_q == {q: k for q in range(16)}
+    assert len(a & e) / len(e) >= 0.9

@@ -516,7 +516,7 @@ def _index_topk(mode):
                                        corpus_count=10_000),
     lambda s, c, q, t: SS.topk_ivf_det(c, q, k=2, nlist=4, nprobe=2,
                                        quantize=True),
-    lambda s, c, q, t: SS.topk_ivf_hier(c, q, k=2, n1=2, n2=2, p1=1),
+    lambda s, c, q, t: SS.topk_ivf_det(c, q, k=2, n1=2, n2=2, nprobe=1),
     _index_topk("join"),
     _index_topk("shared"),
 ], ids=["bruteforce", "lsh", "lsh_quantized", "ivf_det", "ivf_det_numpy",
@@ -1328,9 +1328,9 @@ def test_ivf_hier_quantized_payload(spark):
             for i in range(300)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = emb.filter(F.col("vec_id") < 10)
-    kw = dict(k=5, n1=6, n2=6, p1=3, corpus_count=300)
-    fl = SS.topk_ivf_hier(emb, queries, **kw)
-    qz = SS.topk_ivf_hier(emb, queries, quantize=True, **kw)
+    kw = dict(k=5, n1=6, n2=6, nprobe=3, corpus_count=300)
+    fl = SS.topk_ivf_det(emb, queries, **kw)
+    qz = SS.topk_ivf_det(emb, queries, quantize=True, **kw)
     a = {(r["query_id"], r["cand_id"]) for r in fl.collect()}
     b = {(r["query_id"], r["cand_id"]) for r in qz.collect()}
     assert a and len(a & b) / len(a) >= 0.9
@@ -1610,8 +1610,10 @@ def test_ann_recall_nonclustered_corpus(spark):
         corpus_count=N, quantizer="seed"))
     assert r_flat >= r_seed - 0.025, (r_flat, r_seed)
 
-    r_hier = recall(SS.topk_ivf_hier(
-        corpus, queries, k=K, corpus_count=N, quantizer="trained", p1=10))
+    h1, h2, _ = SS.hier_params(N)
+    r_hier = recall(SS.topk_ivf_det(
+        corpus, queries, k=K, n1=h1, n2=h2, quantizer="trained",
+        nprobe=10))
     assert r_hier >= 0.9, r_hier
 
     r_lsh = recall(SS.topk_lsh(
@@ -1655,7 +1657,7 @@ def test_calibrate_probe(spark):
     measured feature. calibrate_probe runs ONE exhaustive distributed
     pass for a deterministic smallest-id holdout and binary-searches
     the smallest probe depth whose exact recall@k reaches the target;
-    ``calibrate=<target>`` on topk_ivf_det / topk_ivf_hier wires it
+    ``calibrate=<target>`` on topk_ivf_det (flat and two-level) wires it
     into serving.
 
     Pins: (a) on a SMOOTH mixture corpus the calibrated depth meets
@@ -1719,11 +1721,13 @@ def test_calibrate_probe(spark):
         quantizer="trained", calibrate=0.9))
     assert r_flat >= 0.8, r_flat  # holdout-chosen knob generalizes
 
-    resh = SS.calibrate_probe_hier(corpus, k=K, target_recall=0.9,
-                                   n1=8, n2=8, quantizer="trained")
+    resh = SS.calibrate_probe(
+        corpus, k=K, target_recall=0.9,
+        quantizer=SS.CoarseQuantizer.resolve(corpus, n1=8, n2=8,
+                                             quantizer="trained"))
     assert resh["recall"] >= 0.9 and resh["p1"] <= resh["n1"]
-    r_hier = recall(SS.topk_ivf_hier(
-        corpus, queries, k=K, n1=8, n2=8, quantizer="trained",
+    r_hier = recall(SS.topk_ivf_det(
+        corpus, queries, k=K, n1=8, n2=8, nprobe=None, quantizer="trained",
         calibrate=0.9))
     assert r_hier >= 0.8, r_hier
 
@@ -1757,7 +1761,8 @@ def test_calibrate_probe(spark):
     with pytest.raises(ValueError, match="two dials"):
         SS.topk_ivf_det(corpus, queries, nlist=16, nprobe=4, calibrate=0.9)
     with pytest.raises(ValueError, match="two dials"):
-        SS.topk_ivf_hier(corpus, queries, n1=8, n2=8, p1=2, calibrate=0.9)
+        SS.topk_ivf_det(corpus, queries, n1=8, n2=8, nprobe=2,
+                        calibrate=0.9)
     with pytest.raises(ValueError, match="two dials"):
         SS.topk_lsh(corpus, queries, multiprobe=2, calibrate=0.9)
     with pytest.raises(ValueError, match="target_recall"):
