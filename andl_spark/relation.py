@@ -204,6 +204,11 @@ class Relation:
 
     # ---- metadata (Builtin.cs Count/Degree/Schema) --------------------
     def count(self) -> int:
+        # a plan Catalyst folds to a LocalRelation (a literal, or a filter
+        # over one) holds its rows on the driver: collecting them runs no
+        # job, where count() runs two
+        if self.df._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation":
+            return len(self.df.collect())
         return self.df.count()
 
     def degree(self) -> int:

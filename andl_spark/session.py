@@ -8,10 +8,16 @@ DataFrames registered as temp views so `spark.sql` works everywhere.
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow as pa
+import pyarrow.types as pa_types
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
+from . import trace
 from .util import Memo
 
 #: The driver-generated TPC-H-ish star schema plus pipeline tables.
@@ -68,9 +74,11 @@ def get_spark(app_name: str = "andl_spark", shuffle_partitions: int | None = Non
 
 
 class LazyTables(dict):
-    """Mapping table name → DataFrame that defers the (footer-reading)
-    spark.read until a table is actually used — a query touching two of
-    the ten tables pays for two, not ten."""
+    """Mapping table name → DataFrame that defers each spark.read until a
+    table is actually used. A handle takes its schema from the table's
+    parquet footer on the driver (:func:`footer_schema`), so opening one
+    launches no Spark job; the read itself costs a file listing and an
+    analysis."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         super().__init__()
@@ -81,7 +89,9 @@ class LazyTables(dict):
         path = os.path.join(self._sf_dir, f"{name}.parquet")
         if name not in TABLES or not os.path.exists(path):
             raise KeyError(name)
-        df = _restore_nanos_timestamps(self._spark.read.parquet(path), path)
+        schema, nanos = footer_schema(self._spark, path, name)
+        reader = self._spark.read if schema is None else self._spark.read.schema(schema)
+        df = restore_nanos(reader.parquet(path), nanos)
         self[name] = df
         return df
 
@@ -93,11 +103,11 @@ class LazyTables(dict):
 
 
 #: LazyTables handles per (session, dir), fingerprinted by
-#: _sf_fingerprint. Each fresh handle pays a footer/schema-inference
-#: job per table it reads (~110 ms/table at sf0.1), so a repeat query
-#: reuses the lazy PLAN handles: never data or results, and any
-#: rewrite of the table files changes the fingerprint. The key holds
-#: its session; the bound is what lets a stopped one go.
+#: _sf_fingerprint. A fresh handle costs a file listing and an analysis
+#: per table it reads (~15 ms/table), so a repeat query reuses the lazy
+#: PLAN handles: never data or results, and any rewrite of the table
+#: files changes the fingerprint. The key holds its session; the bound
+#: is what lets a stopped one go.
 _TABLES_CACHE = Memo(16)
 
 
@@ -138,7 +148,7 @@ def load_tables(spark: SparkSession, sf_dir: str, register_views: bool = True) -
     # Some testdata columns carry TIMESTAMP(NANOS), which Spark only
     # reads with this legacy conf — as raw nanosecond longs. Runtime-
     # settable, so it also covers driver-owned sessions that didn't use
-    # get_spark(). _restore_nanos_timestamps rebuilds real timestamps.
+    # get_spark(). restore_nanos rebuilds real timestamps.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = (spark, os.path.abspath(sf_dir))
     tables = _TABLES_CACHE.get(
@@ -152,27 +162,130 @@ def load_tables(spark: SparkSession, sf_dir: str, register_views: bool = True) -
     return tables
 
 
-def _restore_nanos_timestamps(df: DataFrame, path: str) -> DataFrame:
-    """Columns stored as timestamp[ns] surface as nanosecond longs under
-    nanosAsLong; rebuild TIMESTAMP_NTZ via pure ntz arithmetic
-    (timestampadd from a literal ntz epoch) — deliberately independent
-    of the session timezone so driver-owned sessions in any tz agree
-    with the DuckDB oracle's naive timestamps."""
-    import glob as _glob
+#: Footer key under which Spark stores the schema it wrote.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
+#: Arrow leaf types whose Spark type, as Spark's parquet reader infers
+#: it, is exactly what ``from_arrow_schema`` gives.
+_EXACT_LEAVES = (
+    pa_types.is_boolean, pa_types.is_int8, pa_types.is_int16, pa_types.is_int32,
+    pa_types.is_int64, pa_types.is_float32, pa_types.is_float64,
+    pa_types.is_decimal128, pa_types.is_string, pa_types.is_large_string,
+    pa_types.is_date32,
+)
+
+
+def footer_schema(spark: SparkSession, path: str, table: str) -> tuple[StructType | None, list[str]]:
+    """Spark schema of a generated table file, read from its parquet
+    footer on the driver, and its naive TIMESTAMP(NANOS) columns.
+
+    The rules are Spark's own inference: a part-file directory takes its
+    first part file in path order; a schema Spark stored at write time
+    wins; otherwise the Arrow schema converts with ``from_arrow_schema``
+    (``prefer_timestamp_ntz`` from ``spark.sql.parquet.inferTimestampNTZ
+    .enabled``, timestamps by their parquet UTC adjustment); every field
+    is nullable. NANOS columns read as LongType, which needs
+    ``spark.sql.legacy.parquet.nanosAsLong`` (load_tables sets it);
+    :func:`restore_nanos` rebuilds the naive ones.
+
+    The schema is ``None`` where Spark could infer something else:
+    summary files, partition subdirectories, ``mergeSchema``, an
+    unreadable footer, or a column the conversion cannot map exactly
+    (unsigned ints, INT96, ...). A ``trace.note`` then records why, and
+    the caller reads with Spark's inference, one job, as before."""
     import pyarrow.parquet as pq
+
+    nanos: list[str] = []
+
+    def inferred(reason: str) -> tuple[None, list[str]]:
+        # Spark's inference reads NANOS columns as LongType too
+        trace.note("load_tables", table=table, schema="inferred", reason=reason)
+        return None, nanos
+
+    file = path
+    if os.path.isdir(path):
+        names = sorted(os.listdir(path))
+        data = [n for n in names if not n.startswith(("_", ".")) and not n.endswith("._COPYING_")]
+        if not data:
+            return inferred("no data files")
+        if any(os.path.isdir(os.path.join(path, n)) for n in data):
+            return inferred("partition subdirectories")
+        file = os.path.join(path, data[0])
+    try:
+        footer = pq.read_metadata(file)
+    except (OSError, ValueError) as e:
+        return inferred(f"unreadable footer: {e}")
+    arrow = footer.schema.to_arrow_schema()
+    stamps = {c.path: json.loads(c.logical_type.to_json())
+              for c in map(footer.schema.column, range(len(footer.schema)))
+              if c.path in arrow.names and c.logical_type.type == "TIMESTAMP"}
+    nanos += [n for n, ts in stamps.items()
+              if ts["timeUnit"] == "nanoseconds" and not ts["isAdjustedToUTC"]]
+    if file != path:
+        if any(n.startswith(("_metadata", "_common_metadata")) for n in names):
+            return inferred("summary file")
+        if spark.conf.get("spark.sql.parquet.mergeSchema") == "true":
+            return inferred("mergeSchema")
+    stored = (footer.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:
+        try:
+            return _nullable(StructType.fromJson(json.loads(stored))), nanos
+        except (ValueError, KeyError, TypeError) as e:
+            return inferred(f"unparsed Spark schema: {e}")
+
+    fields, inexact = [], []
+    for f in arrow:
+        ts = stamps.get(f.name)
+        if ts is not None and ts["timeUnit"] == "nanoseconds":
+            fields.append(f.with_type(pa.int64()))
+        elif ts is not None:
+            fields.append(f.with_type(pa.timestamp("us", "UTC" if ts["isAdjustedToUTC"] else None)))
+        elif _exact(f.type, spark):
+            fields.append(f)
+        else:
+            inexact.append(f"{f.name}: {'INT96' if pa_types.is_timestamp(f.type) else f.type}")
+    if inexact:
+        return inferred("; ".join(inexact))
+    ntz = bool(stamps) and spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    return _nullable(from_arrow_schema(pa.schema(fields), prefer_timestamp_ntz=ntz)), nanos
+
+
+def _exact(t, spark: SparkSession) -> bool:
+    """True when Spark's parquet reader infers exactly ``from_arrow_type(t)``."""
+    if any(is_type(t) for is_type in _EXACT_LEAVES):
+        return True
+    if pa_types.is_binary(t) or pa_types.is_large_binary(t):
+        return spark.conf.get("spark.sql.parquet.binaryAsString") != "true"
+    if pa_types.is_list(t) or pa_types.is_large_list(t) or pa_types.is_dictionary(t):
+        return _exact(t.value_type, spark)
+    if pa_types.is_struct(t):
+        return all(_exact(f.type, spark) for f in t)
+    return False
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable, as the file
+    source makes every schema it reads."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def restore_nanos(df: DataFrame, nanos: list[str]) -> DataFrame:
+    """Rebuild the naive TIMESTAMP(NANOS) columns ``nanos``, which read
+    as nanosecond longs under nanosAsLong, as TIMESTAMP_NTZ via pure ntz
+    arithmetic (timestampadd from a literal ntz epoch) — deliberately
+    independent of the session timezone so driver-owned sessions in any
+    tz agree with the DuckDB oracle's naive timestamps."""
     from pyspark.sql import functions as F
 
-    if os.path.isdir(path):  # generated scale dirs hold part files
-        parts = _glob.glob(os.path.join(path, "*.parquet"))
-        if not parts:
-            return df
-        path = parts[0]
-    ns_cols = [f.name for f in pq.read_schema(path) if str(f.type) == "timestamp[ns]"]
-    for c in ns_cols:
-        if dict(df.dtypes).get(c) == "bigint":
-            df = df.withColumn(
-                c,
-                F.expr(f"timestampadd(MICROSECOND, {c} div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"),
-            )
+    for c in nanos:
+        df = df.withColumn(
+            c,
+            F.expr(f"timestampadd(MICROSECOND, `{c}` div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"),
+        )
     return df

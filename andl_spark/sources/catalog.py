@@ -13,6 +13,7 @@ table at any scale, not an export.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .. import fsio, pointer
 from ..operators.update import Relvar
@@ -62,6 +63,13 @@ class Catalog:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(target)
+        # the data columns' schema and the first version written with
+        # it, so get() reads those versions with no inference job;
+        # partition columns stay inferred from the directory names
+        parts = {c.lower() for c in partition_by or []}
+        schema = StructType([f for f in df.schema if f.name.lower() not in parts]).jsonValue()
+        if entry.get("schema") != schema:
+            entry.update({"schema": schema, "schema_since": version})
         entry.update({
             "layout": "versioned",
             "partition_by": partition_by or [],
@@ -72,7 +80,13 @@ class Catalog:
         self._flush()
 
     def get(self, name: str, version: int | None = None) -> DataFrame:
-        """Current version by default; pass ``version`` to time-travel."""
+        """Current version by default; pass ``version`` to time-travel.
+
+        A version written with the data schema that put() recorded in the
+        entry reads with it, so the read runs no schema-inference job;
+        partition columns are still inferred from the directory names.
+        Older versions under another schema, and entries written before
+        put() recorded one, keep Spark's inferred read."""
         if name not in self._names:
             raise KeyError(f"no relvar {name!r} in catalog {self.path}")
         entry = self._names[name]
@@ -83,7 +97,10 @@ class Catalog:
         v = version if version is not None else entry["current"]
         if v not in entry["versions"]:
             raise KeyError(f"relvar {name!r} has no version {v} (has {entry['versions']})")
-        return self.spark.read.parquet(fsio.join(self.path, name, f"v{v}"))
+        reader = self.spark.read
+        if v >= entry.get("schema_since", v + 1):
+            reader = reader.schema(StructType.fromJson(entry["schema"]))
+        return reader.parquet(fsio.join(self.path, name, f"v{v}"))
 
     def history(self, name: str) -> list[int]:
         return list(self._names.get(name, {}).get("versions", []))

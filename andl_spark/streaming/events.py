@@ -16,15 +16,18 @@ from ..util import local_frame
 
 
 def read_events_stream(spark, sf_dir: str, max_files_per_trigger: int = 1) -> DataFrame:
-    """events.parquet as a file-source stream (schema from the batch
-    read; pathGlobFilter isolates the table inside the shared dir)."""
-    from ..session import _restore_nanos_timestamps
+    """events.parquet as a file-source stream (schema from the table's
+    parquet footer, as for a batch handle, so starting a stream runs no
+    job; pathGlobFilter isolates the table inside the shared dir)."""
+    from ..session import footer_schema, restore_nanos
 
     import os
 
     path = f"{sf_dir}/events.parquet"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    schema, nanos = footer_schema(spark, path, "events")
+    if schema is None:
+        schema = spark.read.parquet(path).schema
     if os.path.isdir(path):
         # generated scale dirs: events.parquet IS a directory of part
         # files — stream it directly (one micro-batch per part file)
@@ -40,7 +43,7 @@ def read_events_stream(spark, sf_dir: str, max_files_per_trigger: int = 1) -> Da
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(sf_dir)
         )
-    return _restore_nanos_timestamps(stream, path)
+    return restore_nanos(stream, nanos)
 
 
 def _watermarked(events: DataFrame, watermark: str) -> tuple[DataFrame, bool]:

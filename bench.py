@@ -152,11 +152,10 @@ def run_bench(reps: int = 1) -> dict:
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm-up: JVM + parquet footer caches, one full scan. load_all()
-    # pre-pays the per-table schema-inference job for EVERY table (r12):
-    # it is per-session metadata work, and without it the first query to
-    # touch each table carried that table's footer job inside ITS timed
-    # window — fixed overhead mis-attributed to whichever query ran
-    # first, exactly the burst surface REPRO.md is trying to shrink.
+    # opens a handle for EVERY table: no Spark job (the schema comes
+    # from the footer), but each still costs a file listing and an
+    # analysis, per-session work that would otherwise land inside the
+    # timed window of whichever query touched the table first.
     # The timed loop below is untouched (same single-shot methodology).
     load_tables(spark, sf_dir, register_views=False).load_all()
     workload.QUERIES["q1_pricing_summary"](spark, sf_dir).collect()

@@ -16,6 +16,18 @@ SF_SMOKE = os.environ.get("ANDL_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def jobs_run(spark, group: str, fn):
+    """Call ``fn()`` under Spark job group ``group``; return its result
+    and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 #: The C# Andl checkout the reference-suite tests read: the .andl
 #: suites and samples, Chinook.sqlite and the S/P CSVs.
 REFERENCE_TREE = "/root/reference"

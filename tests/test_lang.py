@@ -504,16 +504,31 @@ def test_literal_relation_plans_locally(spark):
     not a Python-mapped RDD: displaying `v.where(...)` folds the filter
     into the literal and launches no Spark job, and the serve-shaped
     count and fold read the same values."""
-    sc = spark.sparkContext
+    from conftest import jobs_run
+
     sess = AndlSession(spark)
     sess.run("v := {{ a:=3 }, { a:=7 }, { a:=12 }, { a:=20 }}")
-    try:
-        sc.setJobGroup("lang-literal-where", "literal where")
-        sess.run("v.where(a > 5)")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    _, jobs = jobs_run(spark, "lang-literal-where", lambda: sess.run("v.where(a > 5)"))
     assert sess.output == ["{{a}} (7); (12); (20)"]
-    assert list(sc.statusTracker().getJobIdsForGroup("lang-literal-where")) == []
+    assert jobs == 0
     sess.run("write('n=' & v.where(a > 5).count)\n"
              "write('s=' & v.where(a > 5).select{ fold(+,a) })")
     assert sess.output[1:] == ["n=3", "s=39"]
+
+
+def test_count_over_literal_runs_no_job(spark):
+    """`count` of a relation whose optimized plan is a LocalRelation
+    reads the driver-held rows: no Spark job (count() would run two).
+    A count over a scan still counts through Spark."""
+    from andl_spark.lang.interp import RelV
+    from andl_spark.relation import Relation
+    from conftest import jobs_run
+
+    sess = AndlSession(spark)
+    sess.run("v := {{ a:=3 }, { a:=7 }, { a:=12 }, { a:=20 }}")
+    _, jobs = jobs_run(spark, "lang-literal-count",
+                       lambda: sess.run("write('n=' & v.where(a > 5).count)"))
+    assert (sess.output, jobs) == (["n=3"], 0)
+    sess.globals["r"] = RelV(Relation(spark.range(9).toDF("a")))
+    sess.run("write('m=' & r.where(a > 5).count)")
+    assert sess.output[-1] == "m=3"

@@ -337,21 +337,19 @@ def test_hop_chain_doubles_in_log_rounds(spark, monkeypatch):
 
     from andl_spark.operators.whileop import Hop
 
-    sc = spark.sparkContext
+    from conftest import jobs_run
+
     n = 256
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
     seed = spark.createDataFrame([(0,)], "node long")
     for bfs in _evaluators(monkeypatch):
-        try:
-            sc.setJobGroup(f"hop-chain-{bfs}", "Hop chain closure")
-            with trace.recording() as rec:
-                got = {r["node"] for r in fixpoint(seed, Hop(edges, at="node")).collect()}
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+        with trace.recording() as rec:
+            got, jobs = jobs_run(spark, f"hop-chain-{bfs}", lambda: {
+                r["node"] for r in fixpoint(seed, Hop(edges, at="node")).collect()})
         decision = _fixpoint_decision(rec)
         if bfs:
             assert decision == {"evaluator": "broadcast-bfs", "rounds": n - 1}
-            assert len(sc.statusTracker().getJobIdsForGroup(f"hop-chain-{bfs}")) <= 4
+            assert jobs <= 4
         else:
             assert decision["evaluator"] == "doubling"
             assert decision["rounds"] <= math.ceil(math.log2(n)) + 1

@@ -13,7 +13,7 @@ from andl_spark.pipeline import multimodal as M
 from andl_spark.pipeline import simsearch as SS
 from andl_spark.session import load_tables
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, jobs_run
 
 
 @pytest.fixture(scope="module")
@@ -1390,13 +1390,9 @@ def test_against_index_fanout_guard_minhash_simhash(spark, monkeypatch, caplog):
         assert want > 0 and _decision(rec, op)["estimated_pairs"] == want, op
     keys, probe, corpus = key_tables["minhash_against_index"]
     probe, corpus = (t.select(*keys).localCheckpoint(eager=True) for t in (probe, corpus))
-    sc = spark.sparkContext
-    try:
-        sc.setJobGroup("probe-fanout-estimate", "probe-mode fan-out estimate")
-        D._fanout_guard(corpus, keys, "probe-estimate", probe=probe)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("probe-fanout-estimate")) <= 3
+    _, jobs = jobs_run(spark, "probe-fanout-estimate",
+                       lambda: D._fanout_guard(corpus, keys, "probe-estimate", probe=probe))
+    assert jobs <= 3
 
     a_mh, _ = D.minhash_against_index(new, mh_idx, threshold=0.5,
                                       anchor_degree=D.AUTO_ANCHOR_DEGREE)

@@ -376,7 +376,7 @@ def test_tiered_neardup_compaction_bounds_rewrites(spark, tmp_path,
 
 def test_load_tables_handle_cache_and_stat_invalidation(spark, tmp_path):
     """r11: load_tables memoizes the lazy table HANDLES per (session,
-    dir, views) so repeated queries stop paying a schema-inference job
+    dir) so repeated queries stop paying a file listing and an analysis
     per table per call — but the memo must be a plan cache, never a
     data cache: rewriting a table's files must produce a rebuilt handle
     that reads the NEW data on the same session and path."""
@@ -478,3 +478,112 @@ def test_load_tables_retention_is_bounded(spark, tmp_path):
     last = str(tmp_path / f"sf{bound + 2}")
     assert (S.load_tables(spark, last, register_views=False)
             is S.load_tables(spark, last, register_views=False))
+
+
+def test_table_handles_take_footer_schema_and_run_no_job(spark, tmp_path):
+    """A table handle takes its schema from the parquet footer on the
+    driver: it equals the schema Spark infers, for every smoke table and
+    for part-file directories (Spark- and pyarrow-written), and opening
+    it runs no Spark job."""
+    import pyarrow.parquet as pq
+
+    from andl_spark import trace
+    from andl_spark.session import TABLES, LazyTables, load_tables
+    from conftest import SF_SMOKE, jobs_run
+
+    load_tables(spark, SF_SMOKE, register_views=False)  # sets nanosAsLong
+    spark.read.parquet(f"{SF_SMOKE}/orders.parquet").repartition(3).write.parquet(
+        str(tmp_path / "orders.parquet"))
+    lineitem = pq.read_table(f"{SF_SMOKE}/lineitem.parquet")
+    (tmp_path / "lineitem.parquet").mkdir()
+    pq.write_table(lineitem.slice(0, 100), tmp_path / "lineitem.parquet" / "part-00001.parquet")
+    pq.write_table(lineitem.slice(100), tmp_path / "lineitem.parquet" / "part-00000.parquet")
+
+    for sf_dir, names in ((SF_SMOKE, TABLES), (str(tmp_path), ("orders", "lineitem"))):
+        with trace.recording() as rec:
+            handles, jobs = jobs_run(spark, f"footer-schema-{len(names)}",
+                                     lambda: {n: LazyTables(spark, sf_dir)[n] for n in names})
+        assert jobs == 0 and rec == []
+        for name, df in handles.items():
+            assert df.schema == spark.read.parquet(f"{sf_dir}/{name}.parquet").schema, name
+    assert handles["lineitem"].count() == lineitem.num_rows
+
+
+def test_load_tables_rebuilds_nanos_timestamps(spark, tmp_path):
+    """A naive TIMESTAMP(NANOS) column reads back as TIMESTAMP_NTZ
+    truncated to microseconds, whatever the session timezone; a NANOS
+    column adjusted to UTC stays the raw nanosecond long."""
+    from datetime import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from andl_spark.session import load_tables
+
+    ns = [1_700_000_000_123_456_789, None, 86_400_000_999_000]
+    pq.write_table(pa.table({
+        "event_id": pa.array([1, 2, 3], pa.int64()),
+        "ts": pa.array(ns, pa.timestamp("ns")),
+        "ts_utc": pa.array(ns, pa.timestamp("ns", tz="UTC")),
+    }), tmp_path / "events.parquet")
+    df = load_tables(spark, str(tmp_path), register_views=False)["events"]
+    assert df.dtypes == [("event_id", "bigint"), ("ts", "timestamp_ntz"), ("ts_utc", "bigint")]
+    assert [tuple(r) for r in df.orderBy("event_id").collect()] == [
+        (1, datetime(2023, 11, 14, 22, 13, 20, 123456), ns[0]),
+        (2, None, None),
+        (3, datetime(1970, 1, 2, 0, 0, 0, 999), ns[2]),
+    ]
+
+
+def test_inexact_footer_schema_falls_back_to_inferred_read(spark, tmp_path):
+    """A column the Arrow conversion cannot map exactly (an unsigned
+    int; an INT96 timestamp, which pyarrow shows as timestamp[ns]) takes
+    Spark's inferred read, and the fallback is noted in the trace; a
+    NANOS column beside it is still rebuilt."""
+    from datetime import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from andl_spark import trace
+    from andl_spark.session import LazyTables, load_tables
+
+    pq.write_table(pa.table({
+        "event_id": pa.array([1, 4_000_000_000], pa.uint32()),
+        "ts": pa.array([0, 1_500], pa.timestamp("ns")),
+    }), tmp_path / "events.parquet")
+    pq.write_table(pa.table({"o_orderdate": pa.array([0, 10**15], pa.timestamp("ns"))}),
+                   tmp_path / "orders.parquet", use_deprecated_int96_timestamps=True)
+    load_tables(spark, str(tmp_path), register_views=False)
+    with trace.recording() as rec:
+        lt = LazyTables(spark, str(tmp_path))
+        events, orders = lt["events"], lt["orders"]
+    assert [(n["op"], n["table"], n["schema"]) for n in rec] == [
+        ("load_tables", "events", "inferred"), ("load_tables", "orders", "inferred")]
+    assert "uint32" in rec[0]["reason"] and "INT96" in rec[1]["reason"]
+    assert events.dtypes == [("event_id", "bigint"), ("ts", "timestamp_ntz")]
+    assert sorted(tuple(r) for r in events.collect()) == [
+        (1, datetime(1970, 1, 1)), (4_000_000_000, datetime(1970, 1, 1, 0, 0, 0, 1))]
+    assert orders.schema == spark.read.parquet(str(tmp_path / "orders.parquet")).schema
+
+
+@pytest.mark.parametrize("partition_by", [None, ["c_mktsegment"]])
+def test_catalog_reads_recorded_schema_without_jobs(spark, tmp_path, partition_by):
+    """Catalog.put records the data columns' schema, so get() and
+    register_views() run no schema-inference job and read the schema
+    Spark infers (partition columns still from the directory names).
+    A version written under an earlier schema keeps the inferred read."""
+    from conftest import SF_SMOKE, jobs_run
+
+    cust = spark.read.parquet(f"{SF_SMOKE}/customer.parquet")
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    cat.put("c", cust.select("c_custkey", "c_mktsegment"), partition_by)
+    cat.put("c", cust.select("c_custkey", "c_name", "c_mktsegment"), partition_by)
+    cat = Catalog(spark, str(tmp_path / "cat"))  # reopened from the manifest
+    _, jobs = jobs_run(spark, f"catalog-views-{bool(partition_by)}", cat.register_views)
+    assert jobs == 0
+    for v in (1, 2):
+        got = cat.get("c", v)
+        assert got.schema == spark.read.parquet(str(tmp_path / "cat" / "c" / f"v{v}")).schema
+        assert got.count() == cust.count()
+    assert spark.table("c").columns == ["c_custkey", "c_name", "c_mktsegment"]

@@ -1313,3 +1313,14 @@ def test_tiered_compaction_soaks_beside_draining_ingest(spark, tmp_path):
     idx_df = E.read_neardup_index(spark, idx)
     assert idx_df.count() == docs.count()
     assert idx_df.count() == idx_df.select("doc_id").distinct().count()
+
+
+def test_stream_start_runs_no_job(spark):
+    """The stream takes its schema from the events footer, as a batch
+    handle does: building it runs no Spark job, and its schema is the
+    batch table's."""
+    from conftest import jobs_run
+
+    stream, jobs = jobs_run(spark, "events-stream-start", lambda: read_events_stream(spark, SF_SMOKE))
+    assert jobs == 0
+    assert stream.schema == load_tables(spark, SF_SMOKE, register_views=False)["events"].schema
